@@ -86,7 +86,7 @@ def main() -> int:
 
     # --- A: current fold (compute side only, same write) ---
     def fold_a_df():
-        return t._resolve_bucketed(t._raw(paths))
+        return t._resolve_bucketed(t._raw(paths), n_l0)
 
     sc.setJobDescription("fold A: wide shuffle resolve")
     out["A_noop"] = _med(lambda: noop(fold_a_df()))
@@ -122,7 +122,7 @@ def main() -> int:
         cols = j.columns
         winner = F.max_by(F.struct(*[F.col(c) for c in cols]), ordering).alias("w")
         return (
-            j.repartition(t._write_partitions(), "_bucket")
+            j.repartition(t._write_partitions(n_l0), "_bucket")
             .groupBy("_bucket", "doc_id").agg(winner).select("w.*")
         )
 

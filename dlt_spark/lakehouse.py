@@ -88,6 +88,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 from dlt_spark.schemas import MANIFEST_SCHEMA, TARGET_SCHEMA
+from dlt_spark.session import partitions_for_rows
 
 _SNAP_DIR = "_snapshots"
 _DATA_DIR = "data"
@@ -502,22 +503,25 @@ class LakehouseTable:
         reclaims them past the grace window; a closed window raises."""
         if to_version is None:
             to_version = self.version
-        # filter BEFORE collect: the driver receives O(window) manifest
-        # rows, not O(commits) — the predicate pushes into the spill
-        # parquet scan, so a 10^5-commit table pays for the rows it
-        # asked about (VERDICT r3 minor-#4)
-        rows = [
-            m
-            for m in self.manifests_df(from_version, to_version)
-            .where(
+        # Only sidecars whose version range meets the window are read,
+        # filtered BEFORE collect: the driver receives O(window) spilled
+        # rows, not O(commits) — the predicate pushes into the parquet
+        # scan (VERDICT r3 minor-#4).  The in-snapshot tail is filtered
+        # here in Python, so a window inside the tail runs no job.
+        spilled = self._spilled_manifests_df(from_version, to_version)
+        rows = [] if spilled is None else (
+            spilled.where(
                 (F.col("snapshot_version") > from_version)
                 & (F.col("snapshot_version") <= to_version)
             )
-            .select("snapshot_version", "delta_files")
+            .select("delta_files")
             .collect()
-            if m["delta_files"]
+        )
+        rows += [
+            m for m in self._snap["manifests"]
+            if from_version < m["snapshot_version"] <= to_version
         ]
-        files = [p for m in rows for p in m["delta_files"]]
+        files = [p for m in rows if m["delta_files"] for p in m["delta_files"]]
         missing = [
             p for p in files
             if not self.fs.exists(os.path.join(self.path, p))
@@ -648,8 +652,6 @@ class LakehouseTable:
         if snap is None:
             snap = self._snap
         l1 = snap.get("l1", {})
-        files: list[str] = []
-        rows: int | None = 0
         if buckets is None:
             l1_keys = list(l1)
         else:
@@ -657,16 +659,9 @@ class LakehouseTable:
             l1_keys = [
                 k for k in l1 if _key_matches_residues(k, residues)
             ]
-        for k in l1_keys:
-            e = l1.get(k)
-            if not e:
-                continue
-            files.extend(e["files"])
-            rows = None if (rows is None or e["rows"] is None) else rows + e["rows"]
-        for e in snap["deltas"]:
-            files.extend(e["files"])
-            rows = None if (rows is None or e["rows"] is None) else rows + e["rows"]
-        return files, rows
+        entries = [l1[k] for k in l1_keys if l1[k]] + snap["deltas"]
+        files = [p for e in entries for p in e["files"]]
+        return files, _sum_rows(e["rows"] for e in entries)
 
     def read(
         self,
@@ -899,6 +894,15 @@ class LakehouseTable:
         still row-filter, this only guarantees every in-window row is
         present.  Legacy entries without a range are always read."""
         tail = self.spark.createDataFrame(self._snap["manifests"], MANIFEST_SCHEMA)
+        spilled = self._spilled_manifests_df(from_version, to_version)
+        return tail if spilled is None else spilled.unionByName(tail)
+
+    def _spilled_manifests_df(
+        self, from_version: int | None, to_version: int | None
+    ) -> DataFrame | None:
+        """The spilled half of manifests_df (see there): rows of the
+        sidecars whose version range may intersect the window, minus
+        superseded rows; None when no sidecar qualifies."""
         spill = self._snap.get("manifest_spill", [])
         if from_version is not None or to_version is not None:
             spill = [
@@ -911,7 +915,7 @@ class LakehouseTable:
                 )
             ]
         if not spill:
-            return tail
+            return None
         spilled = self.spark.read.schema(MANIFEST_SCHEMA).parquet(
             *self._abs([e["path"] for e in spill])
         )
@@ -927,7 +931,7 @@ class LakehouseTable:
                 )
                 cond = stale if cond is None else (cond | stale)
             spilled = spilled.where(~cond)
-        return spilled.unionByName(tail)
+        return spilled
 
     def _find_manifest(self, job_id: str, batch_id: int) -> dict | None:
         """Latest manifest row for (job_id, batch_id): tail first (newest
@@ -1466,28 +1470,38 @@ class LakehouseTable:
         )
         return int(got or 0) == m["data_hash"]
 
-    def _write_partitions(self) -> int:
-        """Reduce-partition count for bucket-clustered writes: 4× the
-        bucket count, NOT min(n_buckets, conf) (round 6, guide §2.5
-        "synthetic keys with too few distinct values").  Hashing B
-        distinct bucket ids into ≈B partitions stacks buckets on
-        colliding reducers while others sit empty — at B=64, p=32 puts
-        5 of 64 buckets on one task (a 5× straggler); measured on the
-        sf0.1 L0 fold (medians of 3): p=32 3.02 s / 64 2.86 / 128 2.78
-        / **256 2.75** / 501 (injective, zero collisions) 3.34 — the
-        injective count loses its win to ~440 empty-but-scheduled
-        tasks (an explicit repartition opts out of AQE coalescing).
-        4× keeps the expected max load ≈2 at any modulus.  A bucket
-        never splits across reducers regardless of this count, so
-        per-task memory stays bounded by bucket size either way."""
-        return 4 * self.n_buckets
+    def _write_partitions(self, rows: int | None) -> int:
+        """Reduce-partition count for a bucket-clustered write of
+        ``rows`` rows (None = unknown): partitions_for_rows, floored at
+        defaultParallelism and capped at 4× the bucket count.  Callers
+        pass counts they already hold (snapshot ``rows``, parquet
+        footers), so sizing runs no job.  The repartition is explicit,
+        so AQE cannot coalesce it: every reduce task is scheduled even
+        when empty, and a small write at the cap spends its time on task
+        waves while holding every core.  The cap keeps the round-6
+        collision bound: hashing B bucket ids into ≈B partitions stacks
+        colliding buckets on one reducer (B=64, p=32: 5 buckets on one
+        task), 4× keeps the expected max load ≈2 (sf0.1 L0 fold at
+        local[32], medians of 3: p=32 3.02 s / 64 2.86 / 128 2.78 / 256
+        2.75).  The layout is the same at any count: a bucket never
+        splits across reducers, so each write stays bucket-pure with one
+        file per bucket, and per-task memory stays bounded by bucket
+        size."""
+        return partitions_for_rows(
+            rows, self.spark.sparkContext.defaultParallelism, 4 * self.n_buckets
+        )
 
     def _write_bucketed(
-        self, df: DataFrame, prefix: str, pre_partitioned: bool = False
+        self, df: DataFrame, prefix: str, pre_partitioned: bool = False,
+        rows: int | None = None,
     ) -> dict[str, list[str]]:
+        """Write ``df`` partitioned by bucket; returns bucket key →
+        written file paths.  Unless ``df`` is already clustered by
+        bucket, it is repartitioned first, sized by ``rows`` (about how
+        many rows ``df`` holds; None = unknown)."""
         commit_abs = os.path.join(self.path, _DATA_DIR, f"{prefix}-{uuid.uuid4().hex}")
         if not pre_partitioned:
-            df = df.repartition(self._write_partitions(), "_bucket")
+            df = df.repartition(self._write_partitions(rows), "_bucket")
         (
             df.write.mode("overwrite")
             .option("parquet.enable.dictionary", "false")
@@ -1499,7 +1513,7 @@ class LakehouseTable:
             for b, ps in _list_bucket_files(commit_abs, self.path).items()
         }
 
-    def _resolve_bucketed(self, df: DataFrame) -> DataFrame:
+    def _resolve_bucketed(self, df: DataFrame, rows: int | None) -> DataFrame:
         """Single-shuffle resolve + bucket-cluster (VERDICT r2 next-#8):
         repartition on _bucket (the ONE exchange), then group by
         (_bucket, doc_id).  _bucket is a pure function of the bucket
@@ -1511,7 +1525,8 @@ class LakehouseTable:
         moved the L0 volume over the wire twice; this moves it once.
         Output rows stay physically clustered by _bucket, so the
         partitionBy write that follows emits one file per (task, bucket)
-        with no further movement — pass pre_partitioned=True."""
+        with no further movement — pass pre_partitioned=True.  ``rows``
+        (the input row count, None = unknown) sizes the exchange."""
         cols = df.columns
         ordering = F.struct(
             F.col("_commit_seq").alias("_s"),
@@ -1520,7 +1535,7 @@ class LakehouseTable:
         )
         winner = F.max_by(F.struct(*[F.col(c) for c in cols]), ordering).alias("w")
         return (
-            df.repartition(self._write_partitions(), "_bucket")
+            df.repartition(self._write_partitions(rows), "_bucket")
             .groupBy("_bucket", "doc_id")
             .agg(winner)
             .select("w.*")
@@ -1585,7 +1600,7 @@ class LakehouseTable:
                 self._abs([p for b in old_base for p in buckets_map[b]])
             )
             compacted = self._major_compact(
-                buckets_map, l1_map, sorted(comp), extras=new_extras
+                buckets_map, l1_map, sorted(comp), old_rows, extras=new_extras
             )
             for b in old_base:
                 del buckets_map[b]
@@ -1653,7 +1668,10 @@ class LakehouseTable:
         [...], "rows": n} with exact row counts read from the parquet
         footers (driver-side metadata, no Spark job)."""
         paths = [p for e in deltas for p in e["files"]]
-        resolved = self._resolve_bucketed(self._raw(self._abs(paths), extras=extras))
+        resolved = self._resolve_bucketed(
+            self._raw(self._abs(paths), extras=extras),
+            _sum_rows(e["rows"] for e in deltas),
+        )
         out = self._write_bucketed(resolved, "l1", pre_partitioned=True)
         return {
             b: {"files": ps, "rows": _parquet_rows(self._abs(ps))}
@@ -1662,17 +1680,22 @@ class LakehouseTable:
 
     def _major_compact(
         self, buckets_map: dict, l1_map: dict, buckets: list[str],
-        extras: list | None = None,
+        base_rows: int, extras: list | None = None,
     ) -> dict[str, list[str]]:
         """Bucket-local major compaction: fold base+L1 of ONLY the given
         bucket entries into fresh bases at the CURRENT modulus.
         O(selected component), never O(table), one exchange.  Caller
         passes a closed set (every entry whose residue class intersects
         the set is in it) and must have folded L0 first (L0 rows are
-        unbucketed and could otherwise supersede rows of these buckets)."""
+        unbucketed and could otherwise supersede rows of these buckets).
+        ``base_rows`` is the row count of those buckets' base files."""
         paths = [p for b in buckets for p in buckets_map.get(b, [])]
         paths += [p for b in buckets for p in l1_map.get(b, {}).get("files", [])]
-        resolved = self._resolve_bucketed(self._raw(self._abs(paths), extras=extras))
+        l1_rows = _sum_rows(l1_map[b]["rows"] for b in buckets if b in l1_map)
+        resolved = self._resolve_bucketed(
+            self._raw(self._abs(paths), extras=extras),
+            None if l1_rows is None else base_rows + l1_rows,
+        )
         return self._write_bucketed(resolved, "base", pre_partitioned=True)
 
     def _commit_noop(self, job_id, batch_id, seq_from, seq_to, events_read,
@@ -1940,7 +1963,10 @@ class LakehouseTable:
                 f"bucket {key!r} is already at the current modulus "
                 f"{snap['n_buckets']}; call split_buckets() first"
             )
-        out = self._write_bucketed(self._raw(self._abs(files)), "base")
+        out = self._write_bucketed(
+            self._raw(self._abs(files)), "base",
+            rows=_parquet_rows(self._abs(files)),
+        )
         del bm[key]
         bm.update(out)
         new_snap = dict(snap, version=snap["version"] + 1, buckets=bm)
@@ -1959,13 +1985,15 @@ class LakehouseTable:
         final snapshot build must surface as a version conflict at
         _publish, never as a base built from a MIX of two snapshots."""
         snap = self._snap  # pin ONE snapshot — see _pending docstring
-        pend_files, _ = self._pending(snap=snap)
+        pend_files, pend_rows = self._pending(snap=snap)
         if not pend_files:
             return
         paths = [p for ps in snap["buckets"].values() for p in ps]
         paths += pend_files
         resolved = self._resolve(self._raw(self._abs(paths)))
-        buckets_map = self._write_bucketed(resolved, "base")
+        buckets_map = self._write_bucketed(
+            resolved, "base", rows=_sum_rows([snap.get("base_rows"), pend_rows])
+        )
         new_snap = dict(
             snap,
             version=snap["version"] + 1,
@@ -1997,7 +2025,10 @@ class LakehouseTable:
         kept = all_rows.observe(
             obs, F.sum(purge.cast("long")).alias("n_purged")
         ).where(~purge)
-        buckets_map = self._write_bucketed(kept, "base")
+        buckets_map = self._write_bucketed(
+            kept, "base",
+            rows=_sum_rows([snap.get("base_rows"), self._pending(snap=snap)[1]]),
+        )
         n_purged = int(obs.get["n_purged"] or 0)
         if n_purged == 0:
             # nothing purged: drop the just-written redundant base copy
@@ -2170,6 +2201,12 @@ class SnapshotConflict(RuntimeError):
 # ---------------------------------------------------------------------------
 # snapshot file helpers
 # ---------------------------------------------------------------------------
+def _sum_rows(counts) -> int | None:
+    """Sum of row counts; None when any count is unknown."""
+    counts = list(counts)
+    return None if None in counts else sum(counts)
+
+
 def _parquet_rows(paths: list[str]) -> int:
     """Exact row count from parquet footers — driver-side metadata read,
     no Spark job (the footer is O(KB) regardless of file size)."""

@@ -27,6 +27,7 @@ from dlt_spark.adapters import MASS_DELETE, get_adapter
 from dlt_spark.lakehouse import LakehouseTable
 from dlt_spark.operators.dedup import dedup_lww
 from dlt_spark.operators.salt import salted_repartition
+from dlt_spark.session import partitions_for_rows
 from dlt_spark.sources.changelog import open_change_log, slice_change_log
 
 
@@ -180,9 +181,10 @@ def run_incremental(
     # measurement): derive the reduce-partition count from the batch
     # input size instead of running every batch at the configured
     # ceiling.  A 50 MB steady-tick batch at 128 partitions pays ~0.15 s
-    # of AQE coalescing + task-wave latency per query; sized to ~16 MB
-    # per partition (~1.2 KB/event), snapped to a power-of-two multiple
-    # of defaultParallelism//4 so reduce waves divide the cores evenly
+    # of AQE coalescing + task-wave latency per query; sized to ~16k
+    # events per partition (partitions_for_rows), snapped to a
+    # power-of-two multiple of defaultParallelism//4 so reduce waves
+    # divide the cores evenly
     # (measured: 48 partitions on 32 cores is SLOWER than both 32 and
     # 128 — a 1.5-wave straggler tail), it runs at 8 (ticks) / 32 (the
     # 394k-event driver batches).  The CONFIGURED value stays the
@@ -192,11 +194,11 @@ def run_incremental(
     # Restored in the finally below — the derivation is per run, not a
     # session mutation.
     _shuf_prev = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    _est = max(1, min(batch_width, seq_to - seq_from + 1)) // 16_000 + 1
-    _p = max(1, spark.sparkContext.defaultParallelism // 4)
-    while _p < _est and _p < _shuf_prev:
-        _p *= 2
-    _p = min(_p, _shuf_prev)
+    _p = partitions_for_rows(
+        min(batch_width, seq_to - seq_from + 1),
+        spark.sparkContext.defaultParallelism // 4,
+        _shuf_prev,
+    )
     spark.conf.set("spark.sql.shuffle.partitions", str(_p))
     try:
         t0 = time.monotonic()
@@ -590,16 +592,19 @@ def run_incremental(
         # prepare pool sits idle.  Instead, once enough commits have
         # landed that a fold is inevitable this run (d + remaining ≥
         # max_deltas), fold at the half-max_deltas point: the fold's
-        # Spark job backfills cores behind the remaining batches'
-        # prepares (FIFO scheduling — the in-flight prepares keep
-        # priority, the fold soaks up their straggler tails), and a
-        # final fold after the last commit leaves the run fully folded
-        # (L0 empty — same end state a fold-at-max run would reach,
-        # reached cheaper).  Steady single-batch ticks never trigger
-        # this (remaining = 0), so the deployment hot path is
-        # untouched; folds are opportunistic (a SnapshotConflict from a
-        # concurrent writer skips the fold — the commit-path trigger
-        # still bounds L0 at max_deltas regardless).
+        # Spark job runs beside the remaining batches' prepares instead
+        # of after them.  It does NOT yield to them: a prepare runs
+        # several jobs, and under FIFO scheduling every job submitted
+        # after the fold's queues behind it, so a fold stage can hold
+        # every core while prepare stages wait; sizing the fold's
+        # exchange to its rows (_write_partitions) keeps that stall to
+        # a few task waves.  A final fold after the last commit
+        # leaves the run fully folded (L0 empty — same end state a
+        # fold-at-max run would reach, reached cheaper).  Steady
+        # single-batch ticks never trigger this (remaining = 0), so the
+        # deployment hot path is untouched; folds are opportunistic (a
+        # SnapshotConflict from a concurrent writer skips the fold — the
+        # commit-path trigger still bounds L0 at max_deltas regardless).
         from dlt_spark.lakehouse import SnapshotConflict
 
         fold_at = (

@@ -52,6 +52,10 @@ _BASE_CONF: dict[str, str] = {
     # effective.
     "spark.sql.files.maxPartitionBytes": "64m",
     "spark.sql.files.openCostInBytes": "1m",
+    # Table reads pass exact data-file paths taken from a snapshot, so
+    # the distributed listing job Spark starts above 32 paths is wasted
+    # (change-log opens list seq_part directories on the driver too).
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": "1000000",
     # Timestamps in the change log are UTC by definition
     # (reference stamps RFC3339 UTC at loader/service.go:144).
     "spark.sql.session.timeZone": "UTC",
@@ -77,6 +81,24 @@ _BASE_CONF: dict[str, str] = {
     # on a real cluster executor memory is sized per node as usual.
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
 }
+
+
+# Rows (or events) per reduce partition for ``partitions_for_rows``.
+ROWS_PER_PARTITION = 16_000
+
+
+def partitions_for_rows(rows: int | None, floor: int, ceiling: int) -> int:
+    """Reduce-partition count for an exchange over ``rows`` rows: about
+    ROWS_PER_PARTITION rows per partition, doubled up from ``floor``
+    (a power-of-two multiple of the floor keeps reduce waves dividing
+    the cores evenly) and capped at ``ceiling``.  Unknown ``rows`` gets
+    the ceiling."""
+    if rows is None:
+        return ceiling
+    p = max(1, floor)
+    while p < rows // ROWS_PER_PARTITION + 1 and p < ceiling:
+        p *= 2
+    return min(p, ceiling)
 
 
 def _default_local_dir() -> str | None:

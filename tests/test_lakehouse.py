@@ -497,6 +497,124 @@ def test_fold_pending_state_equivalent_and_bounded(spark, tmp_path):
     assert t.fold_pending() == 0  # nothing pending → no new snapshot
 
 
+def test_write_partitions_sized_from_rows(spark, tmp_path):
+    """The bucket-clustered write exchange is sized from the rows it
+    writes: defaultParallelism for a small write, doubled per ~16k
+    rows, 4× n_buckets as the ceiling and for unknown row counts."""
+    from dlt_spark.session import ROWS_PER_PARTITION, partitions_for_rows
+
+    dp = spark.sparkContext.defaultParallelism
+    t = LakehouseTable.create(spark, str(tmp_path / "t"), n_buckets=16)
+    assert t._write_partitions(0) == dp
+    assert t._write_partitions(dp * ROWS_PER_PARTITION) == 2 * dp
+    assert t._write_partitions(None) == 64
+    assert t._write_partitions(10**9) == 64
+    # the floor never lifts the count above the ceiling
+    t1 = LakehouseTable.create(spark, str(tmp_path / "t1"), n_buckets=1)
+    assert t1._write_partitions(0) == min(dp, 4)
+    # the runner's shuffle sizing shares the rule: a 394k-event batch
+    # at local[32] with 128 configured partitions runs at 32
+    assert partitions_for_rows(394_000, 32 // 4, 128) == 32
+
+
+def test_small_fold_exchange_and_one_l1_file_per_bucket(spark, tmp_path, monkeypatch):
+    """A small L0→L1 fold plans hashpartitioning(_bucket,
+    defaultParallelism), not 4× n_buckets, and the layout is unchanged:
+    each fold adds exactly one L1 file to every bucket it touches."""
+    import re
+
+    dp = spark.sparkContext.defaultParallelism
+    path = str(tmp_path / "t")
+    t = LakehouseTable.create(spark, path, n_buckets=16)
+    plans = []
+    write_bucketed = LakehouseTable._write_bucketed
+
+    def spy(self, df, *a, **kw):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return write_bucketed(self, df, *a, **kw)
+
+    monkeypatch.setattr(LakehouseTable, "_write_bucketed", spy)
+    for fold in range(2):
+        for b in range(3):
+            lo = (fold * 3 + b) * 300
+            t.merge(_updates(spark, lo, lo + 299), "job", fold * 3 + b)
+        t = t.refresh()
+        assert t.fold_pending() == 3
+        t = t.refresh()
+        counts = {len(e["files"]) for e in t._snap["l1"].values() if e["files"]}
+        assert counts == {fold + 1}, counts
+    assert len(plans) == 2
+    for plan in plans:
+        assert re.findall(r"hashpartitioning\(_bucket#\d+, (\d+)\)", plan) == [
+            str(dp)
+        ], plan
+
+
+def _jobs_started(spark, build, action):
+    """Number of Spark jobs ``build()`` starts, and how many the
+    ``action`` on its result starts.  Job events reach the status store
+    through the listener bus in order, so once the action's jobs are
+    visible every job the build started is visible too."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    g_build, g_action = (f"{n}-{uuid.uuid4().hex}" for n in ("build", "action"))
+    try:
+        sc.setJobGroup(g_build, g_build)
+        df = build()
+        sc.setJobGroup(g_action, g_action)
+        action(df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(g_action) and time.monotonic() < deadline:
+        time.sleep(0.05)
+    return (
+        len(tracker.getJobIdsForGroup(g_build)),
+        len(tracker.getJobIdsForGroup(g_action)),
+    )
+
+
+def test_read_over_many_files_starts_no_listing_job(spark, tmp_path):
+    """read() hands Spark exact data-file paths from the snapshot, so
+    building it over more than 32 files (Spark's parallel-listing
+    threshold by default) starts no Spark job before the action."""
+    t = LakehouseTable.create(spark, str(tmp_path / "t"), n_buckets=64)
+    t.merge(_updates(spark, 0, 999), "job", 0)
+    t.compact()
+    t.merge(_updates(spark, 1_000, 1_999), "job", 1)
+    t = t.refresh()
+    files, _ = t._pending()
+    files += [p for ps in t._snap["buckets"].values() for p in ps]
+    assert len(files) > 32
+    build_jobs, action_jobs = _jobs_started(
+        spark, t.read, lambda df: df.count()
+    )
+    assert action_jobs > 0
+    assert build_jobs == 0
+
+
+def test_changes_between_tail_window_starts_no_job(spark, tmp_path):
+    """A change-feed window inside the in-snapshot manifest tail (no
+    spill sidecar) is planned without a Spark job."""
+    t = LakehouseTable.create(spark, str(tmp_path / "t"), n_buckets=4)
+    v0 = t.version
+    for b in range(3):
+        t.merge(_updates(spark, b * 500, b * 500 + 499), "job", b)
+    t = t.refresh()
+    assert not t._snap["manifest_spill"]
+    build_jobs, action_jobs = _jobs_started(
+        spark, lambda: t.changes_between(v0 + 1), lambda df: df.count()
+    )
+    assert action_jobs > 0
+    assert build_jobs == 0
+    expected = sum(e["rows"] for e in t._snap["deltas"][1:])
+    assert t.changes_between(v0 + 1).count() == expected
+
+
 def test_fold_pending_runs_major_compaction_check(spark, tmp_path):
     """fold_pending() must include the commit-path's staggered major
     check — a scheduler folding via fold_pending alone (no commit ever
