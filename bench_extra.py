@@ -166,7 +166,7 @@ def main() -> int:
         t2 = t2.refresh()
         assert len(t2._snap["deltas"]) == 7
         t2.read().write.format("noop").mode("overwrite").save()  # warm cache
-        for tier in (None, 1, 2, 3):
+        for tier in (None, 2, 3):
             name = f"mor_read_tier{tier or 'auto'}"
             out[name] = _med(
                 name,

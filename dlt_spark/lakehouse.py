@@ -27,16 +27,6 @@ semantics rely on, on plain Parquet:
        streams and resolve touched ∪ pending — base is scanned, never
        exchanged; measured fastest above ~600k base rows (constants in
        the cost-model comment below);
-     tier 1 (opt-in, I/O-bound object stores): resolve pending ONCE
-       (localCheckpoint — the subtree's three consumers need different
-       exchange kinds, so ReuseExchange can't dedupe it), broadcast the
-       resolved delta FULL rows and LEFT-join onto base with an inline
-       per-row LWW struct comparison — ONE full-width base scan (tier 2
-       takes two) plus a doc_id-only probe, zero base exchange.  With
-       the single resolve it ties/edges tier 2 locally (677k base:
-       1.93s vs 2.05s median-of-5); tier 2 stays the auto default for
-       its smaller broadcast (keys, not rows) — opt into tier 1 when
-       base bytes rescanned is the dominant cost;
      tier 3 (small base / unknown metadata / pending >20M keys): the
        plain full resolve — the only tier that shuffles base, chosen
        exactly when that shuffle is cheap or unavoidable.
@@ -112,10 +102,8 @@ _FILELIST_DIR = "_filelists"
 MANIFEST_TAIL = 64
 
 # Tiered-read thresholds (pending rows, from snapshot metadata — no job
-# runs to choose the plan).  Tier 1 broadcasts FULL resolved delta rows
-# (payload included, ~300 B/row with tokens → ≤ ~300 MB); tier 2
-# broadcasts only the key set (~30 B/key → ≤ ~600 MB at the cap).
-BROADCAST_ROWS_T1 = 1_000_000
+# runs to choose the plan).  Tier 2 broadcasts only the pending key set
+# (~30 B/key → ≤ ~600 MB at the cap).
 BROADCAST_KEYS_T2 = 20_000_000
 # Merge path pays extra stages + O(pending) resolves; a full resolve
 # pays one shuffle of base∪pending.  Measured crossovers (local[32],
@@ -677,8 +665,8 @@ class LakehouseTable:
         job: the merge tiers only pay off when base ≫ pending (cost
         model above BASE_OVER_PENDING_MIN) — on a small or delta-heavy
         table the plain resolve is both simpler and faster.  ``tier``
-        overrides the choice (diagnostics/tests).  Tombstones filtered
-        unless ``include_deleted``.
+        (2 or 3) overrides the choice (diagnostics/tests).  Tombstones
+        filtered unless ``include_deleted``.
 
         ``columns`` projects the read BEFORE the LWW resolve: the
         winner per key is decided by (_commit_seq, _deleted, _row_id)
@@ -689,6 +677,8 @@ class LakehouseTable:
         arrays at all (~10× less I/O on this table's row shape).
         System columns needed by the resolve/tombstone filter are kept
         automatically."""
+        if tier not in (None, 2, 3):
+            raise ValueError(f"read tier must be 2, 3 or None, got {tier!r}")
         snap = self._snap  # pin ONE snapshot — see _pending docstring
         bm = snap["buckets"]
         if buckets is None:
@@ -743,21 +733,7 @@ class LakehouseTable:
                     tier = 2  # default merge path (measured fastest)
                 else:
                     tier = 3  # writer outran compaction by >20M keys
-            if tier == 1 and (
-                pend_rows is None or pend_rows > BROADCAST_ROWS_T1
-            ):
-                # tier 1 broadcasts FULL resolved rows; above the cap (or
-                # with unknown counts) that can OOM the driver/executors —
-                # enforce the documented bound by degrading to the
-                # key-broadcast tier (or the full resolve when even the
-                # key count is unknown).  (ADVICE.md)
-                tier = 2 if pend_rows is not None else 3
-            if tier == 1:
-                out = self._read_merge_t1(
-                    _base_filter(self._raw(self._abs(base_files))),
-                    _bucket_filter(self._raw(self._abs(pend_files))),
-                )
-            elif tier == 2:
+            if tier == 2:
                 out = self._read_merge_t2(
                     _base_filter(self._raw(self._abs(base_files))),
                     _bucket_filter(self._raw(self._abs(pend_files))),
@@ -811,58 +787,6 @@ class LakehouseTable:
             ))
             df = df.select(*[c for c in keep if c in df.columns])
         return df
-
-    def _read_merge_t1(self, base: DataFrame, pending: DataFrame) -> DataFrame:
-        """Tier-1 read: broadcast the RESOLVED delta (full rows) and
-        LEFT-join it onto base with an inline LWW struct comparison.
-        Base is scanned once full-width and once doc_id-only (insert
-        detection); neither scan shuffles.
-
-        The resolve(pending) subtree appears three times below (merge
-        broadcast, insert-probe broadcast, insert anti-join) and
-        ReuseExchange can NOT dedupe it — the consumers need different
-        exchange kinds (Broadcast vs Shuffle), so without intervention
-        the O(pending) resolve executes 3×.  localCheckpoint
-        materializes it ONCE as executor-memory blocks (eager: the job
-        runs here); all three consumers then scan the checkpointed RDD.
-        Block lifetime = this DataFrame's lifetime (ContextCleaner frees
-        them on GC), and size is bounded by the tier-1 admission cap
-        (BROADCAST_ROWS_T1 full rows) enforced in read()."""
-        d = self._resolve(pending).localCheckpoint(eager=True)
-        cols = [c for c in base.columns if c != "doc_id"]
-        d2 = F.broadcast(
-            d.select(
-                F.col("doc_id").alias("__k"),
-                *[F.col(c).alias(f"__d_{c}") for c in cols],
-            )
-        )
-        j = base.join(d2, base["doc_id"] == F.col("__k"), "left")
-        d_wins = F.col("__k").isNotNull() & (
-            F.struct(
-                F.col("__d__commit_seq"),
-                F.col("__d__deleted").cast("int"),
-                F.col("__d__row_id"),
-            )
-            > F.struct(
-                F.col("_commit_seq"),
-                F.col("_deleted").cast("int"),
-                F.col("_row_id"),
-            )
-        )
-        merged = j.select(
-            "doc_id",
-            *[
-                F.when(d_wins, F.col(f"__d_{c}")).otherwise(F.col(c)).alias(c)
-                for c in cols
-            ],
-        )
-        # delta keys absent from base = inserts; the base probe here is
-        # column-pruned to doc_id only (cheap scan, still no exchange)
-        in_base = base.select("doc_id").join(
-            F.broadcast(d.select("doc_id")), "doc_id", "left_semi"
-        )
-        d_new = d.join(in_base, "doc_id", "left_anti")
-        return merged.unionByName(d_new.select(*merged.columns))
 
     def _read_merge_t2(self, base: DataFrame, pending: DataFrame) -> DataFrame:
         """Tier-2 read: broadcast only the pending KEY SET; base splits
@@ -964,7 +888,6 @@ class LakehouseTable:
         seq_to: int | None = None,
         events_read: int | None = None,
         force: bool = False,
-        markers_delta: dict | None = None,
     ) -> dict:
         """Apply a deduped update set (unique doc_id; columns doc_id, op,
         tokens, n_tok, source, commit_seq, optional _n_events) exactly
@@ -991,10 +914,6 @@ class LakehouseTable:
         if self.is_applied(job_id, batch_id) and not force:
             return self._find_manifest(job_id, batch_id)
         prepared = self.prepare_delta(updates, job_id, batch_id)
-        if markers_delta is not None:
-            # cascade equality-delete markers (opt-in mode) ride the
-            # same atomic commit — see prepare_markers
-            prepared["markers_delta"] = markers_delta
         return self.commit_delta(
             prepared, job_id, batch_id, seq_from, seq_to, events_read, force
         )

@@ -21,7 +21,8 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from dlt_spark.adapters import MASS_DELETE, get_adapter
 from dlt_spark.lakehouse import LakehouseTable
@@ -81,6 +82,129 @@ def plan_batches(seq_from: int, seq_to: int, batch_width: int) -> list[tuple[int
     return out
 
 
+def check_cascade_mode(cascade_mode: str) -> None:
+    if cascade_mode not in ("eager", "markers"):
+        raise ValueError(
+            f"cascade_mode must be 'eager' or 'markers', got {cascade_mode!r}"
+        )
+
+
+def _parent_deletes(
+    events: DataFrame, n_buckets: int, batch_width: int | None = None
+) -> DataFrame:
+    """Distinct parent deletes of a raw events slice as (p, del_seq,
+    del_source, b) rows — ``b`` is the parent's bucket residue, and with
+    ``batch_width`` a leading ``bid`` column names the batch."""
+    bid = (
+        [F.floor(F.col("commit_seq") / batch_width).cast("long").alias("bid")]
+        if batch_width is not None else []
+    )
+    return (
+        events.where(F.col("op") == "D")
+        .select(
+            *bid,
+            F.col("doc_id").alias("p"),
+            F.col("commit_seq").alias("del_seq"),
+            F.col("source").alias("del_source"),
+            F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int").alias("b"),
+        )
+        .distinct()
+    )
+
+
+def prefetch_deletes(events: DataFrame, adapter, table: LakehouseTable,
+                     batch_width: int | None = None):
+    """Delete prefetch for a ONE-batch slice (the steady-tick and
+    streaming-epoch shape): a single cap-guarded collect decides
+    small-vs-mass directly, with no per-batch count job.  Returns the
+    collected parent-delete rows, ``MASS_DELETE`` above the adapter's
+    ``MAX_PRUNED_PARENTS``, or None when the adapter does not cascade
+    or the slice has no deletes — the ``del_rows`` of prepare_batch."""
+    if not getattr(adapter, "cascade_deletes", False):
+        return None
+    cap = getattr(adapter, "MAX_PRUNED_PARENTS", 65_536)
+    rows = (
+        _parent_deletes(events, table.n_buckets, batch_width)
+        .limit(cap + 1).collect()
+    )
+    if len(rows) > cap:
+        return MASS_DELETE
+    return rows or None
+
+
+def prepare_batch(
+    events: DataFrame,
+    adapter,
+    table: LakehouseTable,
+    job_id: str,
+    batch_id: int,
+    del_rows=None,
+    cascade_mode: str = "eager",
+    use_arrow_udf: bool = False,
+    materialize: bool = False,
+    table_candidates=None,
+    salt: bool = False,
+    salt_partitions: int | None = None,
+) -> dict:
+    """The per-batch ingest core shared by ``run_incremental`` (one call
+    per planned batch) and streaming sync (one per epoch): normalize →
+    cascade deletes → LWW dedup → delta write.  Returns the prepared
+    delta for ``table.commit_delta``; touches no table state.
+
+    ``del_rows`` is the batch's prefetched parent deletes: None (no
+    deletes, or a non-cascading adapter), the collected rows, or
+    ``MASS_DELETE`` (too many to collect — derived from ``events`` as a
+    DataFrame).  ``materialize`` and ``table_candidates`` pass through to
+    ``expand_deletes`` (eager mode only)."""
+    normalized = adapter.normalize(events, use_arrow_udf=use_arrow_udf)
+    markers_delta = None
+    if del_rows is not None and cascade_mode == "markers":
+        # Equality-delete markers (opt-in): ONE tiny parquet write of
+        # (parent, del_seq, source) rides the batch's atomic commit; no
+        # candidate scan, no tombstone rows, no phase B.
+        if del_rows is MASS_DELETE:
+            dels = (
+                events.where(F.col("op") == "D")
+                .select(
+                    F.col("doc_id").alias("p"),
+                    F.col("commit_seq").alias("del_seq"),
+                    F.col("source").alias("del_source"),
+                )
+                .distinct()
+            )
+        else:
+            # collected sparse path: hand the rows straight to the
+            # driver-side pyarrow writer — zero Spark jobs
+            dels = [(r["p"], r["del_seq"], r["del_source"]) for r in del_rows]
+        markers_delta = table.prepare_markers(dels)
+    elif del_rows is not None:
+        # Eager cascade: tombstones for the table's and this batch's own
+        # children are unioned into the batch, riding the dedup + write
+        # job (the runner adds its phase-B gap delta at commit).
+        normalized = adapter.expand_deletes(
+            normalized, table, del_rows=del_rows, materialize=materialize,
+            table_candidates=table_candidates,
+        )
+    # Salting is OFF by default: the LWW dedup is a hash aggregate
+    # with map-side partial aggregation, which already collapses a
+    # hot key inside each map task before the shuffle — the classic
+    # "hot key floods one reducer" failure mode does not apply.
+    # salt=True adds an explicit spreading shuffle for stages that
+    # DO need balanced key-local work (e.g. order-dependent grouped
+    # UDFs); it costs one extra shuffle per batch (SURVEY §2.7 X4).
+    spread = (
+        salted_repartition(normalized, num_partitions=salt_partitions)
+        if salt
+        else normalized
+    )
+    prepared = table.prepare_delta(
+        dedup_lww(spread, with_counts=True), job_id, batch_id
+    )
+    if markers_delta is not None:
+        prepared["markers_delta"] = markers_delta
+    return prepared
+
+
 def run_incremental(
     spark: SparkSession,
     log_path: str,
@@ -136,10 +260,7 @@ def run_incremental(
       load.go:62-86); here a stop leaves the table at a committed batch
       boundary and the next run resumes from the watermark.
     """
-    if cascade_mode not in ("eager", "markers"):
-        raise ValueError(
-            f"cascade_mode must be 'eager' or 'markers', got {cascade_mode!r}"
-        )
+    check_cascade_mode(cascade_mode)
     adapter = get_adapter(schema)
     table = LakehouseTable.create(
         spark, table_path, n_buckets=n_buckets,
@@ -155,8 +276,6 @@ def run_incremental(
         # filter-free aggregate qualifies for parquet aggregate
         # pushdown (session conf), so the job reads FOOTER STATS
         # instead of the commit_seq column of the whole log.
-        from pyspark.sql import functions as F
-
         log_df = open_change_log(spark, log_path)
         row = log_df.agg(F.max("commit_seq").alias("m")).collect()[0]
         if row["m"] is None or (not force and int(row["m"]) < seq_from):
@@ -222,35 +341,11 @@ def run_incremental(
             raise last  # type: ignore[misc]
 
         def _prepare_once(batch_id: int, lo: int, hi: int) -> dict:
-            events = slice_change_log(log_df, lo, hi, log_part_width)
-            normalized = adapter.normalize(events, use_arrow_udf=use_arrow_udf)
-            cascade_ctx = None
-            markers_delta = None
-            if batch_id in del_batches and cascade_mode == "markers":
-                # Equality-delete markers (opt-in): ONE tiny parquet write
-                # of (parent, del_seq, source) rides the batch's atomic
-                # commit; no candidate scan, no tombstone rows, no phase B.
-                from pyspark.sql import functions as F
-
-                dr = del_batches[batch_id]
-                if dr is MASS_DELETE:
-                    dels = (
-                        slice_change_log(log_df, lo, hi, log_part_width)
-                        .where(F.col("op") == "D")
-                        .select(
-                            F.col("doc_id").alias("p"),
-                            F.col("commit_seq").alias("del_seq"),
-                            F.col("source").alias("del_source"),
-                        )
-                        .distinct()
-                    )
-                else:
-                    # collected sparse path: hand the rows straight to the
-                    # driver-side pyarrow writer — zero Spark jobs
-                    dels = [(r["p"], r["del_seq"], r["del_source"]) for r in dr]
-                markers_delta = table.prepare_markers(dels)
-            elif batch_id in del_batches:
-                # TWO-PHASE cascade (VERDICT r3 next-#2).  Phase A (here):
+            del_rows = del_batches.get(batch_id)
+            eager = del_rows is not None and cascade_mode == "eager"
+            wm0 = None
+            if eager:
+                # TWO-PHASE cascade (VERDICT r3 next-#2).  Phase A (prepare_batch):
                 # expand_deletes unions tombstones for the table snapshot +
                 # this batch's own children into the batch — riding the
                 # already-running dedup+write job.  Phase B (gap pool):
@@ -273,33 +368,19 @@ def run_incremental(
                 # watermark at the run start; the wider (wm, lo) gap is
                 # served by the earlier batches' prepared delta files.
                 wm0 = shared_wm if shared_wm is not None else table.watermark()
-                normalized = adapter.expand_deletes(
-                    normalized, table, del_rows=del_batches[batch_id],
-                    # concurrent-prepare shape iff the gap is non-empty —
-                    # the materialization A/B in expand_deletes
-                    materialize=wm0 + 1 <= lo - 1,
-                    table_candidates=shared_cand if shared_wm is not None
-                    else None,
-                )
-                cascade_ctx = (wm0,)
-            # Salting is OFF by default: the LWW dedup is a hash aggregate
-            # with map-side partial aggregation, which already collapses a
-            # hot key inside each map task before the shuffle — the classic
-            # "hot key floods one reducer" failure mode does not apply.
-            # salt=True adds an explicit spreading shuffle for stages that
-            # DO need balanced key-local work (e.g. order-dependent grouped
-            # UDFs); it costs one extra shuffle per batch (SURVEY §2.7 X4).
-            spread = (
-                salted_repartition(normalized, num_partitions=salt_partitions)
-                if salt
-                else normalized
+            prepared = prepare_batch(
+                slice_change_log(log_df, lo, hi, log_part_width),
+                adapter, table, job_id, batch_id, del_rows,
+                cascade_mode=cascade_mode, use_arrow_udf=use_arrow_udf,
+                # concurrent-prepare shape iff the gap is non-empty —
+                # the materialization A/B in expand_deletes
+                materialize=eager and wm0 + 1 <= lo - 1,
+                table_candidates=shared_cand if shared_wm is not None
+                else None,
+                salt=salt, salt_partitions=salt_partitions,
             )
-            updates = dedup_lww(spread, with_counts=True)
-            prepared = table.prepare_delta(updates, job_id, batch_id)
-            if cascade_ctx is not None:
-                prepared["_cascade_ctx"] = cascade_ctx
-            if markers_delta is not None:
-                prepared["markers_delta"] = markers_delta
+            if eager:
+                prepared["_cascade_ctx"] = (wm0,)
             return prepared
 
         def _gap_task(batch_id: int, lo: int, hi: int):
@@ -340,8 +421,6 @@ def run_incremental(
             at read-resolve by (_commit_seq, D-rank, _row_id)."""
             if wm + 1 > lo - 1:
                 return None
-            from pyspark.sql import functions as F
-
             reused: list[str] = []
             pend_ranges: list[tuple[int, int]] = []
             for b in range((wm + 1) // batch_width, batch_id):
@@ -456,41 +535,21 @@ def run_incremental(
         # LWW-idempotent, so the lookup reads stale table state and the
         # gap is settled by phase B at commit (see _gap_tombstones).
         del_batches: dict[int, object] = {}
-        mass_delete_parents = getattr(adapter, "MAX_PRUNED_PARENTS", 65_536)
         if getattr(adapter, "cascade_deletes", False) and work:
-            from pyspark.sql import functions as F
-
             rng = slice_change_log(
                 log_df, min(w[1] for w in work), max(w[2] for w in work),
                 log_part_width,
             )
-            d = (
-                rng.where(F.col("op") == "D")
-                .select(
-                    F.floor(F.col("commit_seq") / batch_width)
-                    .cast("long")
-                    .alias("bid"),
-                    F.col("doc_id").alias("p"),
-                    F.col("commit_seq").alias("del_seq"),
-                    F.col("source").alias("del_source"),
-                    F.pmod(F.xxhash64("doc_id"), F.lit(table.n_buckets))
-                    .cast("int")
-                    .alias("b"),
-                )
-                .distinct()
-            )
             if len(work) == 1:
                 # single-batch run (the steady-tick shape): skip the
-                # per-batch count job — one cap-guarded collect decides
-                # small-vs-mass directly, halving the prefetch's driver
+                # per-batch count job, halving the prefetch's driver
                 # jobs on the latency-sensitive path
-                rows = d.limit(mass_delete_parents + 1).collect()
-                if len(rows) > mass_delete_parents:
-                    del_batches[work[0][0]] = MASS_DELETE
-                else:
-                    for r in rows:
-                        del_batches.setdefault(int(r["bid"]), []).append(r)
+                rows = prefetch_deletes(rng, adapter, table, batch_width)
+                if rows is not None:
+                    del_batches[work[0][0]] = rows
             else:
+                mass_delete_parents = getattr(adapter, "MAX_PRUNED_PARENTS", 65_536)
+                d = _parent_deletes(rng, table.n_buckets, batch_width)
                 counts = {
                     int(r["bid"]): r["c"]
                     for r in d.groupBy("bid").agg(F.count("*").alias("c")).collect()
@@ -532,8 +591,6 @@ def run_incremental(
             and len(work) <= _SHARED_CAND_MAX_BATCHES
             and _table_rows >= _SHARED_CAND_MIN_ROWS
         ):
-            from pyspark.sql import functions as F
-
             shared_wm = table.watermark()
             tdf = table.scan_raw(
                 columns=["doc_id", "kind", "array_index", "parent_doc_id"]

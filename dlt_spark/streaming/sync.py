@@ -1,9 +1,10 @@
 """Structured Streaming sync — the `dlt sync` daemon analog.
 
 The reference schedules the batch loader under cron with a global
-single-flight mutex (cmd/dlt/commands/sync.go:91-148).  Here the same
-per-batch pipeline (normalize → LWW dedup → MoR MERGE → manifest)
-runs under Structured Streaming's file source:
+single-flight mutex (cmd/dlt/commands/sync.go:91-148).  Here the batch
+runner's per-batch core (``runner.prepare_batch``: normalize → cascade →
+LWW dedup → MoR delta, then ``commit_delta``) runs once per epoch under
+Structured Streaming's file source:
 
 - ``Trigger.AvailableNow`` drains everything currently in the log and
   stops — the supervised-catch-up semantics of `dlt sync`'s cron tick;
@@ -31,7 +32,9 @@ from pyspark.sql.types import LongType, StructField, StructType
 
 from dlt_spark.adapters import get_adapter
 from dlt_spark.lakehouse import LakehouseTable
-from dlt_spark.operators.dedup import dedup_lww
+from dlt_spark.plans.runner import (
+    check_cascade_mode, prefetch_deletes, prepare_batch,
+)
 from dlt_spark.schemas import CHANGE_EVENT_SCHEMA
 
 # NB: StructType.add mutates in place — always copy.
@@ -65,10 +68,7 @@ def run_stream_sync(
     equality-delete markers per epoch instead of eager child tombstones
     (same opt-in CDC-out trade-off; see runner.run_incremental).
     """
-    if cascade_mode not in ("eager", "markers"):
-        raise ValueError(
-            f"cascade_mode must be 'eager' or 'markers', got {cascade_mode!r}"
-        )
+    check_cascade_mode(cascade_mode)
     adapter = get_adapter(schema)
     table = LakehouseTable.create(
         spark, table_path, n_buckets=n_buckets,
@@ -86,27 +86,12 @@ def run_stream_sync(
         t = LakehouseTable.load(spark, table_path)
         if t.is_applied(job_id, epoch_id):
             return  # checkpoint replay of an already-committed epoch
-        normalized = adapter.normalize(batch_df, use_arrow_udf=use_arrow_udf)
-        markers_delta = None
-        cascading = getattr(adapter, "cascade_deletes", False)
-        if cascading and cascade_mode == "markers":
-            from pyspark.sql import functions as F
-
-            dels = (
-                normalized.where(F.col("op") == "D")
-                .select(
-                    F.col("parent_doc_id").alias("p"),
-                    F.col("commit_seq").alias("del_seq"),
-                    F.col("source").alias("del_source"),
-                )
-                .distinct()
-            )
-            markers_delta = t.prepare_markers(dels)
-        elif hasattr(adapter, "expand_deletes"):
-            normalized = adapter.expand_deletes(normalized, t)
-        updates = dedup_lww(normalized, with_counts=True)
-        t.merge(updates, job_id=job_id, batch_id=epoch_id,
-                markers_delta=markers_delta)
+        prepared = prepare_batch(
+            batch_df, adapter, t, job_id, epoch_id,
+            prefetch_deletes(batch_df, adapter, t),
+            cascade_mode=cascade_mode, use_arrow_udf=use_arrow_udf,
+        )
+        t.commit_delta(prepared, job_id, epoch_id)
 
     writer = events.writeStream.foreachBatch(_apply).option(
         "checkpointLocation", checkpoint_path

@@ -68,10 +68,10 @@ def test_concurrent_commit_auto_retry(spark, tmp_path):
 
 def test_tiered_read_plan_no_base_shuffle(spark, tmp_path):
     """VERDICT r1 next-#1: with a materialized base and pending deltas,
-    read() must not shuffle the base — tier 1 broadcasts the resolved
-    delta onto a streamed base scan (BroadcastHashJoin only; the only
-    exchanges are the O(pending) resolve), plus a doc_id-pruned base
-    probe for insert detection.  Result must equal the full resolve."""
+    read() must not shuffle the base — tier 2 broadcasts the pending key
+    set and splits base into anti/semi streams (BroadcastHashJoin only;
+    the only exchange is the O(pending) resolve of touched ∪ pending).
+    Result must equal the full resolve."""
     path = str(tmp_path / "t")
     t = LakehouseTable.create(spark, path, n_buckets=8, max_deltas=8)
     t.merge(_updates(spark, 0, 999), "j", 0, 0, 999)
@@ -81,14 +81,10 @@ def test_tiered_read_plan_no_base_shuffle(spark, tmp_path):
     assert len(t._snap["deltas"]) == 2 and t._snap["buckets"]
     assert t._snap["base_rows"] and t._snap["base_rows"] > 0
 
-    df = t.read(tier=1)
+    df = t.read(tier=2)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
-    assert plan.count("BroadcastHashJoin") == 3  # merge + semi + anti
-    # insert-detection probe is column-pruned to the key
-    assert "ReadSchema: struct<doc_id:string>" in plan
-    # exchanges = the pending-resolve subtrees only (3 instantiations)
-    assert plan.count("Exchange hashpartitioning") <= 3
+    assert plan.count("BroadcastHashJoin") == 2  # anti + semi
 
     # value parity with the unconditional full resolve (tier 3)
     pend_files, pend_rows = t._pending()
@@ -98,16 +94,14 @@ def test_tiered_read_plan_no_base_shuffle(spark, tmp_path):
     a = {tuple(r) for r in df.select("doc_id", "_commit_seq").collect()}
     b = {tuple(r) for r in full.select("doc_id", "_commit_seq").collect()}
     assert a == b and a
-    # tier 2 (key-set broadcast, anti/semi split) agrees too
-    c = {
-        tuple(r)
-        for r in t.read(tier=2).select("doc_id", "_commit_seq").collect()
-    }
-    assert c == b
     # cost model: base ≈ pending here, so the DEFAULT choice is the
     # plain resolve (merge tiers only pay off when base ≫ pending)
     dplan = t.read()._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" not in dplan
+    # only tiers 2 and 3 exist to force
+    for bad in (0, 1, 4):
+        with pytest.raises(ValueError, match="read tier"):
+            t.read(tier=bad)
 
 
 def test_compaction_preserves_state_and_prunes_files(spark, tmp_path):
@@ -258,27 +252,6 @@ def test_forced_reapply_of_spilled_manifest_supersedes(spark, tmp_path, monkeypa
     # the supersession survives reload
     t2 = LakehouseTable.load(spark, path)
     assert t2._find_manifest("j", 0)["snapshot_version"] == m["snapshot_version"]
-
-
-def test_tier1_broadcast_cap_enforced(spark, tmp_path, monkeypatch):
-    """ADVICE.md: an explicit tier=1 read above BROADCAST_ROWS_T1 must
-    degrade to the key-broadcast tier instead of broadcasting unbounded
-    full rows."""
-    import dlt_spark.lakehouse as lh
-
-    path = str(tmp_path / "t")
-    t = LakehouseTable.create(spark, path, n_buckets=4, max_deltas=100)
-    t.merge(_updates(spark, 0, 999), "j", 0, 0, 999)
-    t.compact()
-    t.merge(_updates(spark, 1000, 1099, seed=7), "j", 1, 1000, 1099)
-    expected = {
-        tuple(r) for r in t.read(tier=3).select("doc_id", "_commit_seq").collect()
-    }
-    monkeypatch.setattr(lh, "BROADCAST_ROWS_T1", 0)
-    got = {
-        tuple(r) for r in t.read(tier=1).select("doc_id", "_commit_seq").collect()
-    }
-    assert got == expected
 
 
 def test_scan_raw_lww_fold_equals_read(spark, tmp_path):

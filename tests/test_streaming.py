@@ -287,3 +287,93 @@ def test_stream_sync_cascade_markers_mode(spark, tmp_path):
     table.materialize_markers()
     assert table._snap["markers"] == []
     assert state(table) == expected
+
+
+def test_stream_sync_matches_runner_under_cascade(spark, tmp_path):
+    """Streaming sync and the batch runner share one per-batch ingest
+    core: over one exploded_cascade log with parent deletes, one log file
+    per runner batch and one file per epoch, eager mode yields the same
+    live state AND the same CDC-out feed (cascade-deleted children
+    included).  Within a batch no parent has an event after its delete,
+    so the runner's un-deduped phase-B gap tombstones coincide with the
+    epoch's deduped ones."""
+    import os
+    import time
+
+    from pyspark.sql import Row
+
+    from dlt_spark.lakehouse import LakehouseTable
+    from dlt_spark.plans.runner import run_incremental
+    from dlt_spark.schemas import CHANGE_EVENT_SCHEMA
+
+    ops = [  # (doc_id, op, payload) at commit_seq = list index
+        ("a", "I", '{"block": [1], "txs": [[10], [11]]}'),
+        ("b", "I", '{"block": [2], "txs": [[20]], "events": [[200]]}'),
+        ("c", "I", '{"block": [3], "txs": [[30], [31], [32]]}'),
+        ("a", "U", '{"block": [4], "txs": [[12]]}'),
+        ("d", "I", '{"block": [5], "txs": [[50]]}'),
+        ("b", "D", None),
+        ("c", "U", '{"block": [6], "txs": [[33]]}'),
+        ("a", "D", None),
+        ("a", "I", '{"block": [7], "txs": [[70]]}'),
+        ("b", "I", '{"block": [8], "events": [[80], [81]]}'),
+        ("d", "U", '{"block": [9], "txs": [[51], [52]]}'),
+        ("c", "D", None),
+        ("e", "I", '{"block": [1], "txs": [[1]]}'),
+        ("a", "D", None),
+        ("c", "I", '{"block": [2]}'),
+        ("b", "U", '{"block": [3], "events": [[82]]}'),
+        ("f", "I", '{"block": [4], "txs": [[4], [5]]}'),
+        ("f", "D", None),
+        ("d", "D", None),
+        ("e", "U", '{"block": [5], "txs": [[6], [7]]}'),
+        ("d", "I", '{"block": [6]}'),
+        ("e", "D", None),
+        ("a", "I", '{"block": [8], "txs": [[9]]}'),
+        ("c", "U", '{"block": [9], "txs": [[90]]}'),
+    ]
+    rows = [
+        Row(commit_seq=i, doc_id=d, op=op, tokens=None, payload=pl,
+            payload_version=1, source="s", extracted_at=None)
+        for i, (d, op, pl) in enumerate(ops)
+    ]
+    log = str(tmp_path / "log")
+    write_change_log(
+        spark.createDataFrame(rows, CHANGE_EVENT_SCHEMA), log, part_width=4
+    )
+    # the file source orders epochs by modification time: make it the
+    # seq order so epoch k is runner batch k
+    now = time.time()
+    for p in sorted(os.listdir(log)):
+        if p.startswith("seq_part="):
+            k = int(p.split("=", 1)[1])
+            for f in os.listdir(os.path.join(log, p)):
+                os.utime(os.path.join(log, p, f), (now + k, now + k))
+
+    run_incremental(spark, log, str(tmp_path / "batch"),
+                    schema="exploded_cascade", batch_width=4, n_buckets=8,
+                    log_part_width=4)
+    run_stream_sync(spark, log, str(tmp_path / "stream"),
+                    str(tmp_path / "ckpt"), schema="exploded_cascade",
+                    n_buckets=8, max_files_per_trigger=1)
+
+    def live(t):
+        return sorted(
+            (r["doc_id"], r["_commit_seq"], tuple(r["tokens"] or []))
+            for r in t.read().collect()
+        )
+
+    def feed(t):
+        return {
+            (r["doc_id"], r["_commit_seq"], r["_deleted"])
+            for r in t.changes_between(0, t.version)
+            .select("doc_id", "_commit_seq", "_deleted").collect()
+        }
+
+    bt = LakehouseTable.load(spark, str(tmp_path / "batch"))
+    st = LakehouseTable.load(spark, str(tmp_path / "stream"))
+    assert len(st._snap["manifests"]) == 6  # one epoch per runner batch
+    assert live(st) == live(bt)
+    assert feed(st) == feed(bt)
+    # children committed in an earlier batch are cascaded into the feed
+    assert {("b/tx/0", 5, True), ("a/tx/1", 13, True)} <= feed(bt)
