@@ -164,15 +164,14 @@ class ExplodedAdapter:
 
 
     def expand_deletes(
-        self, normalized: DataFrame, table, del_rows=None,
-        materialize: bool = False, table_candidates=None,
+        self, normalized: DataFrame, table, del_rows,
+        materialize: bool = False,
     ) -> DataFrame:
         """Cascade expansion as ONE DataFrame: ``normalized`` ∪ the
         tombstones of cascade_tombstones (table snapshot + this batch's
         own children).  This is phase A of the eager cascade in
         ``runner.prepare_batch``; the tombstones ride the batch's dedup
-        and write job.  ``del_rows`` and ``table_candidates`` are as in
-        cascade_tombstones."""
+        and write job.  ``del_rows`` is as in cascade_tombstones."""
         if not self.cascade_deletes:
             return normalized
         # The batch feeds both the output union and the candidate
@@ -187,169 +186,127 @@ class ExplodedAdapter:
         # (ticks 20.0 vs 22.4 s).  The runner passes gap-nonempty.
         if materialize:
             normalized = normalized.localCheckpoint(eager=True)
-        tombs = self.cascade_tombstones(
-            normalized, table, del_rows=del_rows,
-            table_candidates=table_candidates,
-        )
+        tombs = self.cascade_tombstones(normalized, table, del_rows)
         if tombs is None:
             return normalized
         return normalized.unionByName(tombs)
 
     def cascade_tombstones(
-        self,
-        normalized: DataFrame,
-        table,
-        del_rows=None,
-        table_candidates=None,
+        self, normalized: DataFrame, table, del_rows
     ) -> DataFrame | None:
-        """For each parent-delete event in ``normalized``, one tombstone
-        per candidate child key at the delete's seq; None when the
-        batch has no deletes (zero table I/O).
+        """Phase A of the eager cascade: for each of the batch's parent
+        deletes, one tombstone per candidate child key — every child the
+        table has stored plus the batch's own children — built by
+        ``cascade_tombstone_rows``.  None when the adapter does not
+        cascade or ``del_rows`` is empty (zero table I/O).
 
-        Tombstones are LWW-IDEMPOTENT — one at del_seq only takes
-        effect where it is the newest version of its key (re-deleting a
-        dead child is a no-op; a child re-inserted or force-replayed at
-        seq > del_seq outranks it) — which buys two structural wins:
+        ``del_rows`` is the batch's parent deletes as the runner's
+        delete prefetch found them (``runner.prefetch_deletes``, the one
+        capped collect): either the collected (p, del_seq, del_source, b)
+        rows or ``MASS_DELETE``.
 
-        - the table lookup is the RESOLVE-FREE ``scan_raw``: blanket-
-          tombstoning every historical child key converges to the same
-          state as a resolved live-children lookup, so the scan never
-          exchanges a row.  It is BUCKET-PRUNED (the table buckets
-          child rows by parent via ``bucket_expr``, so the batch's
-          delete-parents map to a residue set) and COLUMN-PROJECTED
-          (key + provenance only — token arrays never leave the parquet
-          ReadSchema);
-        - the lookup does NOT need current table state, so delete
-          batches PIPELINE like any other: candidates = table at
-          whatever watermark was committed when this call started plus
-          this batch's own children; the runner covers batches still
-          in flight with its phase-B gap delta.  Overlap double-covers
-          keys; duplicate tombstones settle at read-resolve by
-          (_commit_seq, D-rank, _row_id).
+        - Collected rows are broadcast, and the table lookup is
+          BUCKET-PRUNED to their residues ``b`` (the table buckets child
+          rows by parent via ``bucket_expr``).
+        - ``MASS_DELETE`` never touches the driver: the parent set is
+          derived from ``normalized`` and stays a DataFrame, the lookup
+          reads the whole table (a purge of >64k parents touches most
+          buckets anyway) and the join is a plain shuffle join (VERDICT
+          r3 wrong-#1).
 
-        ``normalized`` is consumed by several subtrees (in-batch
-        candidates, derived parent set, and the caller's own use) —
-        callers should pass a materialized (localCheckpoint'ed)
-        DataFrame or the normalize re-executes per consumer.
+        The lookup is the RESOLVE-FREE, column-projected ``scan_raw``
+        (key + provenance only; token arrays never leave the parquet
+        ReadSchema).  Tombstones are LWW-IDEMPOTENT — one at del_seq
+        only takes effect where it is the newest version of its key —
+        so blanket-tombstoning every historical child key converges to
+        the resolved-lookup state without a shuffle, and the lookup
+        needs no current table state: delete batches pipeline, the
+        runner's phase-B gap delta covers batches still in flight, and
+        double-covered keys settle at read-resolve by (_commit_seq,
+        D-rank, _row_id).
 
-        ``del_rows`` — (p, del_seq, del_source, b) rows prefetched by
-        the runner's single range scan (residue b computed in the same
-        job) — saves the per-batch collect; without it (direct adapter
-        use) the lookup derives them itself, collecting ONLY if the
-        parent count fits under ``MAX_PRUNED_PARENTS`` (the collect
-        buys bucket pruning + a broadcast join, worth it only for
-        sparse deletes).  ``del_rows=MASS_DELETE`` skips the driver
-        entirely: the parent set stays a DataFrame, the lookup reads
-        the whole table (a purge of >64k parents touches most buckets
-        anyway), and the candidate join is a plain shuffle join — no
-        driver-side materialization at ANY parent cardinality (VERDICT
-        r3 wrong-#1).
-
-        ``table_candidates`` — run-scoped SHARED candidate snapshot
-        (VERDICT r4 next-#1).  ``None`` (default): this call runs its
-        own bucket-pruned ``scan_raw``.  A DataFrame: the runner
-        already materialized ONE key-projected scan of the table
-        (columns doc_id/kind/array_index/parent_doc_id + child_seq=-1,
-        localCheckpoint'ed) at the run's starting watermark and every
-        delete batch reuses it — the per-batch scan disappears; rows
-        committed after that watermark reach this batch through the
-        runner's phase-B gap delta.  ``False``: the table was EMPTY at
-        the run's starting watermark — skip the scan entirely.
-        """
-        if not self.cascade_deletes:
+        ``normalized`` feeds several subtrees (in-batch candidates, the
+        mass-delete parent set, the caller's own use); callers should
+        pass a materialized DataFrame or the normalize re-executes per
+        consumer."""
+        if not self.cascade_deletes or not del_rows:
             return None
-        spark = normalized.sparkSession
-        dels_df = None  # distributed parent set (mass-delete path)
-        if del_rows is None or del_rows is MASS_DELETE:
-            derived = (
+        in_batch = normalized.where(F.col("op") != "D").select(
+            "doc_id", "kind", "array_index", "parent_doc_id",
+            F.col("commit_seq").alias("child_seq"),
+        )
+        if del_rows is MASS_DELETE:
+            dels = (
                 normalized.where(F.col("op") == "D")
                 .select(
                     F.col("parent_doc_id").alias("p"),
                     F.col("commit_seq").alias("del_seq"),
                     F.col("source").alias("del_source"),
-                    F.pmod(F.xxhash64("parent_doc_id"), F.lit(table.n_buckets))
-                    .cast("int")
-                    .alias("b"),
                 )
                 .distinct()
             )
-            if del_rows is MASS_DELETE:
-                dels_df = derived
-            else:
-                # cap-guarded collect: fetch at most cap+1 rows; spill
-                # over the cap → stay distributed
-                del_rows = derived.limit(self.MAX_PRUNED_PARENTS + 1).collect()
-                if len(del_rows) > self.MAX_PRUNED_PARENTS:
-                    dels_df = derived
-        if dels_df is not None:
-            dels = dels_df.select("p", "del_seq", "del_source")
-        elif not del_rows:
-            return None  # delete-free batch: no lookup at all
-        else:
-            dels = F.broadcast(
-                spark.createDataFrame(
-                    [(r["p"], r["del_seq"], r["del_source"]) for r in del_rows],
-                    "p string, del_seq long, del_source string",
-                )
-            )
-        in_batch = normalized.where(F.col("op") != "D").select(
-            "doc_id", "kind", "array_index", "parent_doc_id",
-            F.col("commit_seq").alias("child_seq"),
-        )
-        if table_candidates is False:
-            cand = in_batch  # table empty at the run's start watermark
-        elif table_candidates is not None:
-            cand = table_candidates.unionByName(in_batch)
-        else:
             buckets = None
-            if dels_df is None and table.bucket_expr == self.bucket_expr:
-                # collected (sparse) path: prune the table scan to the
-                # parents' bucket residues
-                buckets = sorted(
-                    {int(r["b"]) % table.n_buckets for r in del_rows}
-                )
-            # RESOLVE-FREE lookup (scan_raw): blanket-tombstoning every
-            # historical child key is LWW-idempotent — a tombstone at
-            # del_seq loses to any newer version of the key (re-insert,
-            # forced replay) and re-deleting a dead key is a no-op — so
-            # the candidate scan needs no winner resolution and
-            # therefore no shuffle; its whole plan is the pruned,
-            # projected parquet scan.
-            tdf = table.scan_raw(
-                buckets=buckets,
-                columns=["doc_id", "kind", "array_index", "parent_doc_id"],
+        else:
+            dels = del_rows
+            buckets = (
+                sorted({int(r["b"]) % table.n_buckets for r in del_rows})
+                if table.bucket_expr == self.bucket_expr else None
             )
-            if "kind" in tdf.columns:  # empty fresh table: no extras yet
-                in_table = tdf.select(
-                    "doc_id", "kind", "array_index", "parent_doc_id"
-                ).withColumn("child_seq", F.lit(-1).cast("long"))
-                cand = in_table.unionByName(in_batch)
-            else:
-                cand = in_batch
-        return (
-            cand.join(dels, cand["parent_doc_id"] == dels["p"])
-            .where(F.col("child_seq") < F.col("del_seq"))
-            .select(
-                "doc_id",
-                F.lit("D").alias("op"),
-                F.lit(None).cast("array<int>").alias("tokens"),
-                F.lit(None).cast("int").alias("n_tok"),
-                F.col("del_source").alias("source"),
-                F.col("del_seq").alias("commit_seq"),
-                "kind",
-                "array_index",
-                "parent_doc_id",
+        stored = stored_children(table, buckets)
+        cand = in_batch if stored is None else stored.unionByName(in_batch)
+        # NO dropDuplicates/dedup here: duplicate or rival tombstones for
+        # one key settle at read-resolve by (_commit_seq, D-rank,
+        # _row_id) exactly as a pre-shuffled winner would; a pre-shuffle
+        # was one whole extra stage per delete batch.  Consequence: a
+        # delete batch's _n_events counts candidate multiplicity (every
+        # stored version / in-flight copy of a child yields one synthetic
+        # tombstone row); final state is unaffected.
+        return cascade_tombstone_rows(cand, dels)
+
+
+def stored_children(table, buckets=None) -> DataFrame | None:
+    """Every child key the table has stored (all versions, unresolved —
+    ``scan_raw``), optionally bucket-pruned, as cascade candidates
+    (doc_id, kind, array_index, parent_doc_id, child_seq=-1).  None for
+    a fresh table that has no child columns yet."""
+    cols = ["doc_id", "kind", "array_index", "parent_doc_id"]
+    tdf = table.scan_raw(buckets=buckets, columns=cols)
+    if "kind" not in tdf.columns:
+        return None
+    return tdf.select(*cols).withColumn("child_seq", F.lit(-1).cast("long"))
+
+
+def cascade_tombstone_rows(cand: DataFrame, dels) -> DataFrame:
+    """The one cascade-delete rule: a parent delete at ``del_seq``
+    tombstones every candidate child of that parent with ``child_seq <
+    del_seq``, at the delete's seq and source, in the canonical
+    update-set columns.
+
+    ``cand`` is (doc_id, kind, array_index, parent_doc_id, child_seq);
+    ``dels`` is (p, del_seq, del_source) — a DataFrame (joined as given)
+    or collected rows (broadcast)."""
+    if not isinstance(dels, DataFrame):
+        dels = F.broadcast(
+            cand.sparkSession.createDataFrame(
+                [(r["p"], r["del_seq"], r["del_source"]) for r in dels],
+                "p string, del_seq long, del_source string",
             )
-            # NO dropDuplicates/dedup here: duplicate or rival
-            # tombstones for one key settle at read-resolve by
-            # (_commit_seq, D-rank, _row_id) exactly as a pre-shuffled
-            # winner would; a pre-shuffle was one whole extra stage per
-            # delete batch for nothing but metric cosmetics.
-            # Consequence: a delete batch's _n_events counts candidate
-            # multiplicity (every stored version / in-flight copy of a
-            # child yields one synthetic tombstone row); final state is
-            # unaffected (identical rows tie-break identically).
         )
+    return (
+        cand.join(dels, cand["parent_doc_id"] == dels["p"])
+        .where(F.col("child_seq") < F.col("del_seq"))
+        .select(
+            "doc_id",
+            F.lit("D").alias("op"),
+            F.lit(None).cast("array<int>").alias("tokens"),
+            F.lit(None).cast("int").alias("n_tok"),
+            F.col("del_source").alias("source"),
+            F.col("del_seq").alias("commit_seq"),
+            "kind",
+            "array_index",
+            "parent_doc_id",
+        )
+    )
 
 
 ADAPTERS: dict[str, SchemaAdapter] = {

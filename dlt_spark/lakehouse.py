@@ -73,6 +73,7 @@ from datetime import datetime, timezone
 from pyspark import StorageLevel  # noqa: F401  (re-export for callers)
 from pyspark.sql import DataFrame, SparkSession
 
+from dlt_spark.adapters import cascade_tombstone_rows, stored_children
 from dlt_spark.metafs import LocalMetaFS, MetaFS
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
@@ -1114,31 +1115,15 @@ class LakehouseTable:
         total = sum(e["rows"] or 0 for e in entries)
         if total <= MARKER_BROADCAST_ROWS:
             mk = F.broadcast(mk)
-        cand = self.scan_raw(
-            columns=["doc_id", "kind", "array_index", "parent_doc_id"]
-        )
-        if "parent_doc_id" not in cand.columns:
+        cand = stored_children(self)
+        if cand is None:
             raise ValueError(
                 "markers present but table has no parent_doc_id column"
             )
         # blanket tombstones over every historical child key, exactly
-        # the eager phase-A shape: LWW-idempotent, duplicates settle at
-        # read-resolve, a re-insert newer than del_seq outranks them.
-        upd = (
-            cand.join(mk, cand["parent_doc_id"] == mk["p"])
-            .select(
-                "doc_id",
-                F.lit("D").alias("op"),
-                F.lit(None).cast("array<int>").alias("tokens"),
-                F.lit(None).cast("int").alias("n_tok"),
-                F.col("del_source").alias("source"),
-                F.col("del_seq").alias("commit_seq"),
-                "kind",
-                "array_index",
-                "parent_doc_id",
-            )
-            .dropDuplicates(["doc_id"])
-        )
+        # the eager phase-A shape: LWW-idempotent, a re-insert newer
+        # than del_seq outranks them.
+        upd = cascade_tombstone_rows(cand, mk).dropDuplicates(["doc_id"])
         prepared = self.prepare_delta(upd, "_markers", snap["version"])
         # clear exactly the entries this pass materialized; markers
         # committed concurrently survive for the next pass
@@ -1154,11 +1139,12 @@ class LakehouseTable:
     def merge_prepared(a: dict, b: dict) -> dict:
         """Fuse two prepared deltas into ONE commit unit (files + merged
         stats) so they publish in a single atomic snapshot swap — used
-        by the runner's two-phase cascade deletes, where the batch's
-        main delta is prepared in the pipeline and a small gap-tombstone
-        delta is prepared at commit time.  Every stat is a sum/min/max
-        of per-row quantities, so merging is exact: verify_batch
-        recomputes Σ hash over ALL delta_files, matching dh_a + dh_b.
+        by the runner's two-phase cascade deletes: the batch's main
+        delta is prepared in the pipeline, a small gap-tombstone delta
+        is prepared in the gap pool, and the commit merges the two.
+        Every stat is a sum/min/max of per-row quantities, so merging is
+        exact: verify_batch recomputes Σ hash over ALL delta_files,
+        matching dh_a + dh_b.
 
         A ZERO-ROW delta counts as empty even when it carries files:
         Spark writes a schema-only parquet part for an empty DataFrame,

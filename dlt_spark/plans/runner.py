@@ -24,31 +24,12 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dlt_spark.adapters import MASS_DELETE, get_adapter
+from dlt_spark.adapters import MASS_DELETE, cascade_tombstone_rows, get_adapter
 from dlt_spark.lakehouse import LakehouseTable
 from dlt_spark.operators.dedup import dedup_lww
 from dlt_spark.operators.salt import salted_repartition
 from dlt_spark.session import partitions_for_rows
 from dlt_spark.sources.changelog import open_change_log, slice_change_log
-
-
-# Shared-candidate-snapshot bounds: one materialized key-projected
-# table scan amortizes across at most this many batches; longer runs
-# fall back to per-batch pruned scans (the gap windows, which the
-# shared mode widens to (run-start, batch-start), stay O(this) deltas
-# deep).  The row floor makes engagement SCALE-CONDITIONAL — measured
-# crossover (pre-loaded table, 8 delete-bearing catch-up batches,
-# interleaved ×3, BENCH/BASELINE.md r5 addendum):
-#   ~0.6M table rows: shared 1.05× per-batch (the upfront eager
-#     localCheckpoint + wider phase-B gaps outweigh the tiny scans)
-#   ~1.2M table rows: shared 0.945× per-batch (the amortized scan
-#     starts paying)
-# so the floor sits at the crossover; above it the N repeated
-# key-projection scans dominate and the gap to per-batch widens with
-# table size.  Both shapes are locked state-equivalent by test, so the
-# switch is purely a cost choice.
-_SHARED_CAND_MAX_BATCHES = 16
-_SHARED_CAND_MIN_ROWS = 1_000_000
 
 
 @dataclass
@@ -142,7 +123,6 @@ def prepare_batch(
     cascade_mode: str = "eager",
     use_arrow_udf: bool = False,
     materialize: bool = False,
-    table_candidates=None,
     salt: bool = False,
     salt_partitions: int | None = None,
 ) -> dict:
@@ -154,8 +134,8 @@ def prepare_batch(
     ``del_rows`` is the batch's prefetched parent deletes: None (no
     deletes, or a non-cascading adapter), the collected rows, or
     ``MASS_DELETE`` (too many to collect — derived from ``events`` as a
-    DataFrame).  ``materialize`` and ``table_candidates`` pass through to
-    ``expand_deletes`` (eager mode only)."""
+    DataFrame).  ``materialize`` passes through to ``expand_deletes``
+    (eager mode only)."""
     normalized = adapter.normalize(events, use_arrow_udf=use_arrow_udf)
     markers_delta = None
     if del_rows is not None and cascade_mode == "markers":
@@ -163,15 +143,7 @@ def prepare_batch(
         # (parent, del_seq, source) rides the batch's atomic commit; no
         # candidate scan, no tombstone rows, no phase B.
         if del_rows is MASS_DELETE:
-            dels = (
-                events.where(F.col("op") == "D")
-                .select(
-                    F.col("doc_id").alias("p"),
-                    F.col("commit_seq").alias("del_seq"),
-                    F.col("source").alias("del_source"),
-                )
-                .distinct()
-            )
+            dels = _parent_deletes(events, table.n_buckets)
         else:
             # collected sparse path: hand the rows straight to the
             # driver-side pyarrow writer — zero Spark jobs
@@ -183,7 +155,6 @@ def prepare_batch(
         # job (the runner adds its phase-B gap delta at commit).
         normalized = adapter.expand_deletes(
             normalized, table, del_rows=del_rows, materialize=materialize,
-            table_candidates=table_candidates,
         )
     # Salting is OFF by default: the LWW dedup is a hash aggregate
     # with map-side partial aggregation, which already collapses a
@@ -237,10 +208,6 @@ def run_incremental(
     # speed, but changes_between no longer carries cascade-deleted
     # children — only for consumers without CDC-out.
     cascade_mode: str = "eager",
-    # Early-fold threshold for bulk runs (None → max_deltas // 2): once
-    # a fold is inevitable this run, fold when L0 reaches this count so
-    # the fold overlaps the remaining prepares; see the commit loop.
-    early_fold_at: int | None = None,
 ) -> RunResult:
     """One catch-up run (the `dlt load` analog, SURVEY §3.1/§3.3).
 
@@ -364,10 +331,7 @@ def run_incremental(
                 # unioning phase-A tombstones AFTER dedup_lww in the same
                 # write job 15.0s (skipping the shuffle writes candidate
                 # multiplicity raw — the dedup collapse pays for itself).
-                # Shared-snapshot mode pins EVERY delete batch's candidate
-                # watermark at the run start; the wider (wm, lo) gap is
-                # served by the earlier batches' prepared delta files.
-                wm0 = shared_wm if shared_wm is not None else table.watermark()
+                wm0 = table.watermark()
             prepared = prepare_batch(
                 slice_change_log(log_df, lo, hi, log_part_width),
                 adapter, table, job_id, batch_id, del_rows,
@@ -375,8 +339,6 @@ def run_incremental(
                 # concurrent-prepare shape iff the gap is non-empty —
                 # the materialization A/B in expand_deletes
                 materialize=eager and wm0 + 1 <= lo - 1,
-                table_candidates=shared_cand if shared_wm is not None
-                else None,
                 salt=salt, salt_partitions=salt_partitions,
             )
             if eager:
@@ -468,39 +430,19 @@ def run_incremental(
             cand = parts[0]
             for p in parts[1:]:
                 cand = cand.unionByName(p)
-            # delete parents of THIS batch, straight from the raw log slice
-            # (parent deletes are parent-level rows — no normalize needed);
-            # broadcast only on the sparse (collected) path, a mass delete
-            # stays a shuffle join
-            dels = (
-                slice_change_log(log_df, lo, hi, log_part_width)
-                .where(F.col("op") == "D")
-                .select(
-                    F.col("doc_id").alias("p"),
-                    F.col("commit_seq").alias("del_seq"),
-                    F.col("source").alias("del_source"),
+            # delete parents of THIS batch: the prefetched rows (broadcast,
+            # no log re-scan); a mass delete derives them from the raw log
+            # slice and stays a shuffle join
+            dels = del_batches[batch_id]
+            if dels is MASS_DELETE:
+                dels = _parent_deletes(
+                    slice_change_log(log_df, lo, hi, log_part_width),
+                    table.n_buckets,
                 )
-                .distinct()
-            )
-            if del_batches.get(batch_id) is not MASS_DELETE:
-                dels = F.broadcast(dels)
-            tombs = (
-                cand.join(dels, cand["parent_doc_id"] == dels["p"])
-                .where(F.col("child_seq") < F.col("del_seq"))
-                .select(
-                    "doc_id",
-                    F.lit("D").alias("op"),
-                    F.lit(None).cast("array<int>").alias("tokens"),
-                    F.lit(None).cast("int").alias("n_tok"),
-                    F.col("del_source").alias("source"),
-                    F.col("del_seq").alias("commit_seq"),
-                    "kind",
-                    "array_index",
-                    "parent_doc_id",
-                    # counts column so the merged commit keeps exact
-                    # events_read semantics without an LWW pass here
-                    F.lit(1).cast("long").alias("_n_events"),
-                )
+            # counts column so the merged commit keeps exact events_read
+            # semantics without an LWW pass here
+            tombs = cascade_tombstone_rows(cand, dels).withColumn(
+                "_n_events", F.lit(1).cast("long")
             )
             # coalesce keeps the slim delta at a few files instead of one
             # per gap-scan partition
@@ -562,48 +504,6 @@ def run_incremental(
                     for r in d.where(F.col("bid").isin(small)).collect():
                         del_batches.setdefault(int(r["bid"]), []).append(r)
 
-        # Run-scoped SHARED candidate snapshot (VERDICT r4 next-#1): with
-        # deletes in SEVERAL batches of one run, each phase A used to pay
-        # its own key-projected table scan — the dominant residual in the
-        # bulk-cascade decomposition (BENCH/BASELINE.md r4).  Here ONE
-        # unpruned key-projected scan_raw is materialized (localCheckpoint,
-        # one upfront job) at the run's starting watermark and reused by
-        # every delete batch; rows committed after that watermark reach
-        # each batch through its phase-B gap candidates, whose machinery
-        # (_gap_tombstones over the earlier batches' PREPARED delta files)
-        # already covers exactly the (run-start, batch-start) window.
-        # Bounded to runs of <= _SHARED_CAND_MAX_BATCHES batches — beyond
-        # that the widening gap windows outgrow the saved scans — and to
-        # >= 2 delete batches (a single delete batch's bucket-pruned scan
-        # is cheaper than an unpruned materialization).
-        shared_wm: int | None = None
-        shared_cand = None
-        # pin ONE snapshot for both numbers (VERDICT r5 next-#2): the
-        # gate is a cost heuristic, but reading base_rows and pending
-        # from different snapshots is the torn-view pattern the pinning
-        # work eliminated everywhere else — keep the invariant uniform.
-        _snap = table._snap
-        _pend = table._pending(snap=_snap)[1]
-        _table_rows = (_snap.get("base_rows") or 0) + (_pend or 0)
-        if (
-            cascade_mode != "markers"
-            and len(del_batches) >= 2
-            and len(work) <= _SHARED_CAND_MAX_BATCHES
-            and _table_rows >= _SHARED_CAND_MIN_ROWS
-        ):
-            shared_wm = table.watermark()
-            tdf = table.scan_raw(
-                columns=["doc_id", "kind", "array_index", "parent_doc_id"]
-            )
-            if "kind" in tdf.columns:  # empty fresh table has no extras yet
-                shared_cand = (
-                    tdf.select("doc_id", "kind", "array_index", "parent_doc_id")
-                    .withColumn("child_seq", F.lit(-1).cast("long"))
-                    .localCheckpoint(eager=True)
-                )
-            else:
-                shared_cand = False  # sentinel: table empty — skip the scan
-
         from concurrent.futures import ThreadPoolExecutor
 
         def _commit_one(batch_id: int, lo: int, hi: int, prepared: dict) -> None:
@@ -664,11 +564,7 @@ def run_incremental(
         # commit-path trigger still bounds L0 at max_deltas regardless).
         from dlt_spark.lakehouse import SnapshotConflict
 
-        fold_at = (
-            max(1, table.max_deltas // 2)
-            if early_fold_at is None
-            else max(1, early_fold_at)
-        )
+        fold_at = max(1, table.max_deltas // 2)
         did_early_fold = False
 
         futs: dict = {}

@@ -451,16 +451,13 @@ def test_cascade_empty_gap_delta_commits(spark, tmp_path):
     assert out == {"a/block/0", "a/tx/0", "b/block/0", "b/tx/0"}
 
 
-def test_shared_candidate_snapshot_equals_per_batch_path(spark, tmp_path, monkeypatch):
-    """VERDICT r4 next-#1: with >= 2 delete batches the runner
-    materializes ONE key-projected candidate scan at the run's starting
-    watermark and every delete batch reuses it (per-batch table scans
-    disappear; post-watermark rows arrive via the phase-B gap).  The
-    final state must be IDENTICAL to the per-batch-scan path, including
-    across a resume boundary (non-empty table at run start)."""
-    from dlt_spark import plans
+def test_cascade_resume_bulk_equals_serial_ticks(spark, tmp_path):
+    """Cascade coverage across a resume boundary: a table seeded to seq
+    749, then bulk-loaded pipelined from its watermark (phase A reads
+    real table-state candidates, phase B covers the in-flight gap), must
+    end in exactly the state of strictly serial one-batch ticks over
+    the same log from the same seed."""
     from dlt_spark.lakehouse import LakehouseTable
-    from dlt_spark.plans import runner as R
     from dlt_spark.plans.runner import run_incremental
     from dlt_spark.sources.changelog import write_change_log
     from dlt_spark.sources.generator import generate_change_log
@@ -484,27 +481,89 @@ def test_shared_candidate_snapshot_equals_per_batch_path(spark, tmp_path, monkey
             for r in LakehouseTable.load(spark, tbl).read().collect()
         )
 
-    def load(tbl):
-        # resume shape: seed the table first so the run starts at a
-        # non-zero watermark with real table-state candidates
+    def seed(tbl):
+        # resume shape: the later runs start at a non-zero watermark
         run_incremental(spark, log, tbl, schema="exploded_cascade",
                         seq_to=749, batch_width=750, n_buckets=8,
                         log_part_width=500, max_inflight=4)
-        run_incremental(spark, log, tbl, schema="exploded_cascade",
-                        batch_width=500, n_buckets=8, log_part_width=500,
-                        max_inflight=4)
 
-    # engagement is scale-conditional (row floor) — drop the floor so
-    # the fixture-sized table takes the shared path
-    monkeypatch.setattr(R, "_SHARED_CAND_MIN_ROWS", 0)
-    shared = str(tmp_path / "shared")
-    load(shared)  # >=2 delete batches + floor met -> shared snapshot
+    bulk = str(tmp_path / "bulk")
+    seed(bulk)
+    run_incremental(spark, log, bulk, schema="exploded_cascade",
+                    batch_width=500, n_buckets=8, log_part_width=500,
+                    max_inflight=4)
 
-    monkeypatch.setattr(R, "_SHARED_CAND_MAX_BATCHES", 0)  # force per-batch
-    per_batch = str(tmp_path / "per_batch")
-    load(per_batch)
+    serial = str(tmp_path / "serial")
+    seed(serial)
+    for lo in (750, *range(1000, n, 500)):
+        run_incremental(spark, log, serial, schema="exploded_cascade",
+                        seq_from=lo, seq_to=(lo // 500 + 1) * 500 - 1,
+                        batch_width=500, n_buckets=8, log_part_width=500)
 
-    assert state(shared) == state(per_batch)
+    assert state(bulk) == state(serial)
+
+
+def test_gap_tombstones_take_prefetched_parents(spark, tmp_path, monkeypatch):
+    """Phase B of a pipelined run takes its delete parents from the
+    runner's prefetched rows: with a non-empty gap and collected
+    deletes it reads no log slice, and the cascade still kills the
+    deleted parent's children that live only in the gap batch."""
+    import sys
+
+    from dlt_spark.lakehouse import LakehouseTable
+    from dlt_spark.plans import runner as R
+    from dlt_spark.sources.changelog import write_change_log
+
+    rows = [
+        Row(commit_seq=1, doc_id="a", op="I", tokens=None,
+            payload='{"block": [1], "txs": [[10]]}',
+            payload_version=1, source="s", extracted_at=None),
+        Row(commit_seq=2, doc_id="b", op="I", tokens=None,
+            payload='{"block": [2], "txs": [[20]]}',
+            payload_version=1, source="s", extracted_at=None),
+        # batch 1 deletes a, whose children sit in batch 0 — still in
+        # flight when batch 1's phase A captures the watermark
+        Row(commit_seq=3, doc_id="a", op="D", tokens=None,
+            payload=None, payload_version=1, source="s", extracted_at=None),
+    ]
+    log = str(tmp_path / "log")
+    tbl = str(tmp_path / "tbl")
+    write_change_log(_ev(spark, rows), log, part_width=2)
+
+    def in_phase_b():
+        f = sys._getframe(2)
+        while f is not None:
+            if f.f_code.co_name == "_gap_tombstones":
+                return True
+            f = f.f_back
+        return False
+
+    gap_slices, gap_deltas = [], []
+    orig_slice = R.slice_change_log
+    orig_prepare = LakehouseTable.prepare_delta
+
+    def spy_slice(*a, **kw):
+        if in_phase_b():
+            gap_slices.append(a[1:3])
+        return orig_slice(*a, **kw)
+
+    def spy_prepare(self, *a, **kw):
+        out = orig_prepare(self, *a, **kw)
+        if in_phase_b():
+            gap_deltas.append(out)
+        return out
+
+    monkeypatch.setattr(R, "slice_change_log", spy_slice)
+    monkeypatch.setattr(LakehouseTable, "prepare_delta", spy_prepare)
+    R.run_incremental(spark, log, tbl, schema="exploded_cascade",
+                      batch_width=2, n_buckets=4, log_part_width=2,
+                      max_inflight=2)
+    monkeypatch.undo()
+
+    assert gap_deltas, "phase B did not run over a non-empty gap"
+    assert gap_slices == [], f"phase B re-read log slices {gap_slices}"
+    out = {r["doc_id"] for r in LakehouseTable.load(spark, tbl).read().collect()}
+    assert out == {"b/block/0", "b/tx/0"}
 
 
 # --- cascade equality-delete markers (opt-in mode, VERDICT r4 #1) ----

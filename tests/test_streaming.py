@@ -44,102 +44,6 @@ def test_stream_sync_converges(spark, stream_log, tmp_path):
     assert len(table._snap["manifests"]) > 1  # really ran multiple epochs
 
 
-def test_stateful_running_lww(spark, stream_log, tmp_path):
-    """applyInPandasWithState running-winner stream: the last emitted
-    update per key equals the batch LWW fold."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    from dlt_spark.schemas import CHANGE_EVENT_SCHEMA
-    from dlt_spark.streaming.stateful import running_lww_winners
-
-    schema = StructType(
-        list(CHANGE_EVENT_SCHEMA.fields) + [StructField("seq_part", LongType())]
-    )
-    events = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "3")
-        .parquet(stream_log)
-        .drop("seq_part")
-    )
-    q = (
-        running_lww_winners(events)
-        .writeStream.format("memory")
-        .queryName("winners")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    got = {}
-    for r in spark.sql("SELECT * FROM winners").collect():
-        cur = got.get(r["doc_id"])
-        cand = (r["commit_seq"], r["op_rank"])
-        if cur is None or cand > cur:
-            got[r["doc_id"]] = cand
-
-    rank = {"I": 1, "U": 2, "D": 3}
-    exp = {}
-    for r in spark.read.parquet(stream_log).select(
-        "doc_id", "op", "commit_seq"
-    ).collect():
-        cand = (r["commit_seq"], rank[r["op"]])
-        if r["doc_id"] not in exp or cand > exp[r["doc_id"]]:
-            exp[r["doc_id"]] = cand
-    assert got == exp
-
-
-def test_windowed_rollup_stream_matches_batch(spark, tmp_path):
-    """Event-time tumbling windows over the driver's events table:
-    the streaming rollup (availableNow) equals the batch groupBy."""
-    from dlt_spark.streaming.windows import hourly_rollup_stream
-
-    import shutil
-
-    src = "/root/testdata/sf0.001/events.parquet"
-    batch = spark.read.parquet(src)
-    # file-stream sources need a directory
-    stream_dir = tmp_path / "events_dir"
-    stream_dir.mkdir()
-    shutil.copy(src, stream_dir / "events.parquet")
-    stream = spark.readStream.schema(batch.schema).parquet(str(stream_dir))
-    q = (
-        hourly_rollup_stream(stream)
-        .writeStream.format("memory")
-        .queryName("rollup")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        (str(r["window_start"]), r["event_type"]): (r["n"], r["sum_value"])
-        for r in spark.sql("SELECT * FROM rollup").collect()
-    }
-    from pyspark.sql import functions as F
-
-    exp_df = (
-        batch.groupBy(
-            F.window("ts", "1 hour").alias("w"), "event_type"
-        )
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 4).alias("s"))
-        .select(F.col("w.start").alias("ws"), "event_type", "n", "s")
-    )
-    exp = {
-        (str(r["ws"]), r["event_type"]): (r["n"], r["s"])
-        for r in exp_df.collect()
-    }
-    # append mode only emits windows closed by the final watermark; all
-    # emitted windows must match the batch result exactly, and most
-    # windows must have been emitted
-    assert got
-    for k, v in got.items():
-        assert exp[k] == v
-    assert len(got) >= len(exp) - 24  # tail windows may stay open
-
-
 def test_stream_sync_restart_noop(spark, stream_log, tmp_path):
     """Second AvailableNow run over the same checkpoint: nothing new to
     consume, table version unchanged."""
