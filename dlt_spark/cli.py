@@ -26,6 +26,8 @@ import json
 import sys
 import time
 
+from dlt_spark.config import MAX_INFLIGHT
+
 
 def _add_common(p: argparse.ArgumentParser) -> None:
     p.add_argument("--log", default=None, help="change-log parquet root")
@@ -45,9 +47,9 @@ def _add_common(p: argparse.ArgumentParser) -> None:
     p.add_argument("--schema", default="tokens",
                    help="schema adapter: tokens | height | exploded "
                         "(reference loader/setup.go:68-78 switch)")
-    p.add_argument("--max-inflight", type=int, default=4,
+    p.add_argument("--max-inflight", type=int, default=MAX_INFLIGHT,
                    help="concurrent batch preparations (commits stay ordered; "
-                        "4 measured best at the bench point)")
+                        f"{MAX_INFLIGHT} measured best at the bench point)")
     p.add_argument("--events-file", default=None,
                    help="append Sync Started/Finished lifecycle events "
                         "as JSONL here (utils/events.go analog; strictly "
@@ -55,7 +57,7 @@ def _add_common(p: argparse.ArgumentParser) -> None:
     p.add_argument("--master", default=None, help="spark master override")
 
 
-_CONFIG_TEMPLATE = """\
+_CONFIG_TEMPLATE = f"""\
 # --- dlt-spark configuration (utils/config_template.yml analog) ---
 
 # Optional named storage roots: any --log/--table of the form
@@ -91,7 +93,7 @@ connections:
     source: mainlog
     destination: lake
     batch_width: 1000000
-    max_inflight: 4
+    max_inflight: {MAX_INFLIGHT}
     # either a polling interval...
     interval_secs: 5.0
     # ...or a 5-field cron expression (wins over interval when set)
@@ -161,6 +163,7 @@ def main(argv: list[str] | None = None) -> int:
     s.add_argument("--metrics-file", default=None,
                    help="write Prometheus textfile-collector metrics here "
                         "after each round (utils/prometheus.go analog)")
+    s.set_defaults(cascade_mode="eager")  # set by --connection
 
     sd = sub.add_parser(
         "sync-daemon",
@@ -239,8 +242,9 @@ def main(argv: list[str] | None = None) -> int:
 
     mt = sub.add_parser(
         "maintain",
-        help="one-shot maintenance: compact, expire old snapshots, "
-             "vacuum orphans (the cron-able housekeeping tick)",
+        help="one-shot maintenance: materialize cascade markers, "
+             "compact, expire old snapshots, vacuum orphans (the "
+             "cron-able housekeeping tick the sync daemon also runs)",
     )
     mt.add_argument("--table", required=True)
     mt.add_argument("--retain-last", type=int, default=2)
@@ -320,6 +324,7 @@ def main(argv: list[str] | None = None) -> int:
         args.n_buckets = dst.n_buckets
         args.batch_width, args.max_inflight = conn.batch_width, conn.max_inflight
         args.arrow_udf = conn.use_arrow_udf
+        args.cascade_mode = conn.cascade_mode
     if args.cmd in ("load", "sync") and not (args.log and args.table):
         ap.error("provide --log/--table or --config/--connection")
 
@@ -515,6 +520,8 @@ def main(argv: list[str] | None = None) -> int:
                 batch_width=args.batch_width, n_buckets=args.n_buckets,
                 use_arrow_udf=args.arrow_udf, schema=args.schema,
                 log_part_width=args.log_part_width,
+                max_inflight=args.max_inflight,
+                cascade_mode=args.cascade_mode,
                 stop_requested=lambda: stop["n"] > 0,
             )
             if res.batches_applied:
@@ -575,9 +582,7 @@ def main(argv: list[str] | None = None) -> int:
         # cascade-deleted children (marker-mode trade-off, documented on
         # the load side) — surface that to the CDC consumer here too,
         # mirroring the status command.
-        n_markers = sum(
-            e.get("rows") or 0 for e in t._snap.get("markers", [])
-        )
+        n_markers = sum(e["rows"] for e in t._snap["markers"])
         extra = (
             {"pending_cascade_markers": n_markers} if n_markers else {}
         )
@@ -599,16 +604,14 @@ def main(argv: list[str] | None = None) -> int:
             "watermark": t.watermark(),
             "n_buckets": t.n_buckets,
             "rows": rows,
-            "base_rows": t._snap.get("base_rows"),
+            "base_rows": t._snap["base_rows"],
             "pending_rows": pend_rows,
             "pending_commits": len(t._snap["deltas"]),
             "pending_files": len(pend_files),
             "batches_applied": t.applied_count(),
             "manifest_tail": len(t._snap["manifests"]),
-            "manifest_spill_files": len(t._snap.get("manifest_spill", [])),
-            "cascade_markers": sum(
-                e["rows"] or 0 for e in t._snap.get("markers", [])
-            ),
+            "manifest_spill_files": len(t._snap["manifest_spill"]),
+            "cascade_markers": sum(e["rows"] for e in t._snap["markers"]),
             "last_manifest": (t._snap["manifests"] or [None])[-1],
         }, indent=2))
         return 0
@@ -640,17 +643,8 @@ def main(argv: list[str] | None = None) -> int:
         from dlt_spark.lakehouse import LakehouseTable
 
         t = LakehouseTable.load(spark, args.table)
-        v0 = t.version
-        t.compact()
-        expired = t.expire_snapshots(retain_last=args.retain_last)
-        removed = t.vacuum(grace_secs=args.grace_secs)
-        print(json.dumps({
-            "compacted": t.version > v0,
-            "version": t.version,
-            "snapshots_expired": expired.get("snapshots_expired", 0),
-            "files_reclaimed": expired.get("files_removed", 0),
-            "orphans_removed": removed,
-        }))
+        print(json.dumps(t.maintain(retain_last=args.retain_last,
+                                    grace_secs=args.grace_secs)))
         return 0
 
     if args.cmd == "materialize-markers":

@@ -27,7 +27,7 @@ semantics rely on, on plain Parquet:
        streams and resolve touched ∪ pending — base is scanned, never
        exchanged; measured fastest above ~600k base rows (constants in
        the cost-model comment below);
-     tier 3 (small base / unknown metadata / pending >20M keys): the
+     tier 3 (small base / pending >20M keys): the
        plain full resolve — the only tier that shuffles base, chosen
        exactly when that shuffle is cheap or unavoidable.
    At the 10^10-event design point every inter-compaction read was a
@@ -70,7 +70,6 @@ import time
 import uuid
 from datetime import datetime, timezone
 
-from pyspark import StorageLevel  # noqa: F401  (re-export for callers)
 from pyspark.sql import DataFrame, SparkSession
 
 from dlt_spark.adapters import cascade_tombstone_rows, stored_children
@@ -101,6 +100,15 @@ _FILELIST_DIR = "_filelists"
 # Manifest rows retained inline in the snapshot; beyond 2× the tail the
 # oldest spill to a Parquet sidecar (read back via manifests_df).
 MANIFEST_TAIL = 64
+
+# Every key of an on-disk snapshot: exactly what create() writes (the
+# inline buckets/l1 maps are in-memory only, see _commit_snapshot).
+_SNAP_KEYS = (
+    "version", "n_buckets", "bucket_expr", "max_deltas", "base_rows",
+    "deltas", "extra_columns", "renames", "applied", "manifests",
+    "manifest_spill", "superseded", "markers", "watermark",
+    "buckets_ref", "l1_ref",
+)
 
 # Tiered-read thresholds (pending rows, from snapshot metadata — no job
 # runs to choose the plan).  Tier 2 broadcasts only the pending key set
@@ -142,6 +150,34 @@ def _bucket_col(key_expr: str, n_buckets: int):
     co-locate and parent-keyed lookups bucket-prune, the Iceberg
     partition-transform analog)."""
     return F.pmod(F.xxhash64(F.expr(key_expr)), F.lit(n_buckets)).cast("int")
+
+
+def _lww_winner(cols: list[str]):
+    """The LWW resolve rule as an aggregate: the row (as struct ``w``)
+    that is max by (_commit_seq, tombstone-rank, _row_id).  The
+    tombstone rank makes a delete beat a concurrent non-delete at equal
+    seq, matching dedup_lww's D > U/I priority; _row_id is a
+    deterministic final tie-break for byte-identical duplicate
+    deliveries."""
+    ordering = F.struct(
+        F.col("_commit_seq").alias("_s"),
+        F.col("_deleted").cast("int").alias("_d"),
+        F.col("_row_id").alias("_r"),
+    )
+    return F.max_by(F.struct(*[F.col(c) for c in cols]), ordering).alias("w")
+
+
+def _content_hash():
+    """Order-insensitive batch content hash (SURVEY §2.1 S2): the sum
+    of bounded per-row hashes — commutative, overflow-safe up to ~10^9
+    rows per batch.  prepare_delta records it, verify_batch recomputes
+    it from the delta files."""
+    return F.sum(
+        F.pmod(
+            F.xxhash64("doc_id", "_commit_seq", "_row_id", "_deleted"),
+            F.lit(1 << 30),
+        )
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -262,72 +298,27 @@ def _ranges_count(ranges: list) -> int:
     return sum(hi - lo + 1 for lo, hi in ranges)
 
 
-def _normalize_snap(snap: dict) -> dict:
-    """Upgrade pre-round-2 snapshot layouts in place:
-    - deltas: [[paths]] → [{"files": [...], "rows": None}]
-    - l1:     {b: [paths]} → {b: {"files": [...], "rows": None}}
-    - applied: ["job::batch"] → {job: [[lo, hi], ...]}
-    - bucket keys "r" → modulus-qualified "m:r" (m = snapshot n_buckets)
-    Unknown row counts push reads to the conservative full-resolve tier.
-    """
-    m = snap.get("n_buckets", 64)
-    for field_name in ("buckets", "l1"):
-        mp = snap.get(field_name)
-        if mp and any(":" not in k for k in mp):
-            snap[field_name] = {
-                (k if ":" in k else _bkey(m, int(k))): v for k, v in mp.items()
-            }
-    for field_name in ("buckets_ref", "l1_ref"):
-        mp = snap.get(field_name)
-        if mp and any(":" not in k for k in mp):
-            snap[field_name] = {
-                (k if ":" in k else _bkey(m, int(k))): v for k, v in mp.items()
-            }
-    snap.setdefault("manifest_spill", [])
-    # pre-round-5 spill entries are bare rel paths; upgrade to
-    # version-indexed entries so changes_between can prune FILES
-    sp = snap["manifest_spill"]
-    if sp and isinstance(sp[0], str):
-        snap["manifest_spill"] = [
-            {"path": p, "v_min": None, "v_max": None} for p in sp
-        ]
-    snap.setdefault("superseded", {})
-    snap.setdefault("renames", {})
-    snap.setdefault("markers", [])  # cascade equality-delete markers
-    snap.setdefault("base_rows", None)  # legacy: unknown → no cost model
-    # pre-round-3 snapshots carry buckets/l1 lists inline (no refs)
-    snap.setdefault("buckets_ref", None)
-    snap.setdefault("l1_ref", None)
-    deltas = snap.get("deltas", [])
-    if deltas and isinstance(deltas[0], list):
-        snap["deltas"] = [{"files": ps, "rows": None} for ps in deltas]
-    l1 = snap.get("l1", {})
-    if l1 and isinstance(next(iter(l1.values())), list):
-        snap["l1"] = {b: {"files": ps, "rows": None} for b, ps in l1.items()}
-    applied = snap.get("applied", [])
-    if isinstance(applied, list):
-        by_job: dict[str, list] = {}
-        for key in applied:
-            job, _, bid = key.rpartition("::")
-            by_job.setdefault(job, [])
-            by_job[job] = _ranges_add(by_job[job], int(bid))
-        snap["applied"] = by_job
+def _checked(snap: dict, path: str) -> dict:
+    """``snap`` if it carries every key create() writes.  A snapshot
+    file is input from outside the program: a layout this code did not
+    write is refused, not guessed at from its shape (the Iceberg rule
+    for unknown format versions)."""
+    missing = [k for k in _SNAP_KEYS if k not in snap]
+    if missing:
+        raise ValueError(
+            f"snapshot v{snap.get('version')} of table {path} lacks "
+            f"key(s) {', '.join(missing)}"
+        )
     return snap
 
 
-def _resolve_filelists(path: str, snap: dict, fs: MetaFS | None = None) -> dict:
+def _resolve_filelists(path: str, snap: dict, fs: MetaFS) -> dict:
     """Inflate the in-memory ``buckets``/``l1`` maps from their sidecar
-    refs (the on-disk snapshot stores only refs).  Pre-round-3 snapshots
-    carry the lists inline and pass through unchanged.  Cost: one small
-    JSON read per DISTINCT sidecar referenced — bounded by the number of
+    refs (the on-disk snapshot stores only refs).  Cost: one small JSON
+    read per DISTINCT sidecar referenced — bounded by the number of
     compactions whose output is still partially live (typically a
     handful; worst case one per bucket), the same two-level open cost as
     Iceberg's manifest list."""
-    brefs, lrefs = snap.get("buckets_ref"), snap.get("l1_ref")
-    if brefs is None and lrefs is None:
-        return snap
-    if fs is None:
-        fs = LocalMetaFS()
     cache: dict[str, dict] = {}
 
     def side(rel: str) -> dict:
@@ -336,9 +327,9 @@ def _resolve_filelists(path: str, snap: dict, fs: MetaFS | None = None) -> dict:
         return cache[rel]
 
     snap["buckets"] = {
-        b: side(rel)["buckets"][b] for b, rel in (brefs or {}).items()
+        b: side(rel)["buckets"][b] for b, rel in snap["buckets_ref"].items()
     }
-    snap["l1"] = {b: side(rel)["l1"][b] for b, rel in (lrefs or {}).items()}
+    snap["l1"] = {b: side(rel)["l1"][b] for b, rel in snap["l1_ref"].items()}
     return snap
 
 
@@ -352,7 +343,7 @@ class LakehouseTable:
         # control-plane FS (snapshots / sidecars / CAS) — see metafs.py;
         # data files always go through Spark's Hadoop FS layer
         self.fs = meta_fs or LocalMetaFS()
-        self._snap = _resolve_filelists(path, _normalize_snap(snap), self.fs)
+        self._snap = _resolve_filelists(path, _checked(snap, path), self.fs)
 
     # ------------------------------------------------------------------
     # lifecycle
@@ -414,9 +405,14 @@ class LakehouseTable:
             "applied": {},
             "manifests": [],  # retained tail, rows per MANIFEST_SCHEMA
             "manifest_spill": [],  # [{path, v_min, v_max}] spill sidecars
+            # "job::batch" → version of a forced re-apply whose stale
+            # manifest row sits in a spill sidecar
+            "superseded": {},
+            # cascade equality-delete markers: [{"files": [...], "rows": n}]
+            "markers": [],
             "watermark": -1,  # highest seq_to applied
-            # per-bucket file-list sidecar refs ({} = ref-based layout;
-            # the on-disk snapshot never inlines buckets/l1 lists)
+            # per-bucket file-list sidecar refs (the on-disk snapshot
+            # never inlines buckets/l1 lists)
             "buckets_ref": {},
             "l1_ref": {},
         }
@@ -466,14 +462,15 @@ class LakehouseTable:
             names = names[-limit:] if limit > 0 else []
         out = []
         for fn in names:
-            s = _normalize_snap(
-                json.loads(self.fs.read_text(os.path.join(snap_dir, fn)))
+            s = _checked(
+                json.loads(self.fs.read_text(os.path.join(snap_dir, fn))),
+                self.path,
             )
             last = s["manifests"][-1] if s["manifests"] else None
             out.append({
                 "version": s["version"],
                 "watermark": s["watermark"],
-                "base_rows": s.get("base_rows"),
+                "base_rows": s["base_rows"],
                 "pending_commits": len(s["deltas"]),
                 "committed_at": last["committed_at"] if last else None,
                 "job_id": last["job_id"] if last else None,
@@ -534,11 +531,11 @@ class LakehouseTable:
 
     @property
     def bucket_expr(self) -> str:
-        return self._snap.get("bucket_expr", "doc_id")
+        return self._snap["bucket_expr"]
 
     @property
     def max_deltas(self) -> int:
-        return self._snap.get("max_deltas", 8)
+        return self._snap["max_deltas"]
 
     @property
     def version(self) -> int:
@@ -561,12 +558,12 @@ class LakehouseTable:
 
     @property
     def extra_columns(self) -> list:
-        return [tuple(e) for e in self._snap.get("extra_columns", [])]
+        return [tuple(e) for e in self._snap["extra_columns"]]
 
     @property
     def renames(self) -> dict:
         """physical (as-written) column name → current logical name."""
-        return dict(self._snap.get("renames", {}))
+        return dict(self._snap["renames"])
 
     def _raw(self, files: list[str], extras: list | None = None) -> DataFrame:
         """Read data files with the physical schema (delta files carry an
@@ -607,29 +604,17 @@ class LakehouseTable:
 
     @staticmethod
     def _resolve(df: DataFrame) -> DataFrame:
-        """MoR resolve: one winning row per doc_id — max by
-        (_commit_seq, tombstone-rank, _row_id).  The tombstone rank makes
-        a delete beat a concurrent non-delete at equal seq, matching
-        dedup_lww's D > U/I priority; _row_id is a deterministic final
-        tie-break for byte-identical duplicate deliveries."""
-        cols = df.columns
-        ordering = F.struct(
-            F.col("_commit_seq").alias("_s"),
-            F.col("_deleted").cast("int").alias("_d"),
-            F.col("_row_id").alias("_r"),
-        )
-        winner = F.max_by(F.struct(*[F.col(c) for c in cols]), ordering).alias("w")
-        return df.groupBy("doc_id").agg(winner).select("w.*")
+        """MoR resolve: one winning row per doc_id (see _lww_winner)."""
+        return df.groupBy("doc_id").agg(_lww_winner(df.columns)).select("w.*")
 
     @property
     def _l1(self) -> dict:
-        return self._snap.get("l1", {})
+        return self._snap["l1"]
 
     def _pending(
         self, buckets=None, snap: dict | None = None
-    ) -> tuple[list[str], int | None]:
-        """(files, rows) of L0+L1 not yet folded into base.  rows is None
-        when any entry predates row tracking (→ conservative tier 3).
+    ) -> tuple[list[str], int]:
+        """(files, rows) of L0+L1 not yet folded into base.
 
         ``snap`` lets callers pin ONE snapshot dict for the whole read:
         read()/scan_raw() run in pool workers concurrent with the
@@ -640,7 +625,7 @@ class LakehouseTable:
         never run mid-job — so a single reference is race-free."""
         if snap is None:
             snap = self._snap
-        l1 = snap.get("l1", {})
+        l1 = snap["l1"]
         if buckets is None:
             l1_keys = list(l1)
         else:
@@ -650,7 +635,7 @@ class LakehouseTable:
             ]
         entries = [l1[k] for k in l1_keys if l1[k]] + snap["deltas"]
         files = [p for e in entries for p in e["files"]]
-        return files, _sum_rows(e["rows"] for e in entries)
+        return files, sum(e["rows"] for e in entries)
 
     def read(
         self,
@@ -689,7 +674,7 @@ class LakehouseTable:
             keys = [k for k in bm if _key_matches_residues(k, residues)]
         base_files = [p for k in keys for p in bm.get(k, [])]
         pend_files, pend_rows = self._pending(buckets, snap=snap)
-        base_rows = snap.get("base_rows")
+        base_rows = snap["base_rows"]
 
         def _bucket_filter(df: DataFrame) -> DataFrame:
             if buckets is not None:
@@ -704,7 +689,7 @@ class LakehouseTable:
             keep = list(dict.fromkeys(
                 [*columns, "doc_id", "_commit_seq", "_deleted", "_row_id",
                  # marker application joins on parent_doc_id post-resolve
-                 *(["parent_doc_id"] if snap.get("markers") else [])]
+                 *(["parent_doc_id"] if snap["markers"] else [])]
             ))
             return df.select(*[c for c in keep if c in df.columns])
 
@@ -723,9 +708,7 @@ class LakehouseTable:
             out = self._resolve(_bucket_filter(self._raw(self._abs(pend_files))))
         else:
             if tier is None:
-                if pend_rows is None or base_rows is None:
-                    tier = 3  # legacy/unknown metadata: conservative
-                elif (
+                if (
                     base_rows < BASE_OVER_PENDING_MIN * pend_rows
                     or base_rows < BASE_ROWS_MIN_MERGE
                 ):
@@ -817,7 +800,7 @@ class LakehouseTable:
         changes_between) PRUNE whole sidecars by their recorded
         [v_min, v_max] index before any file opens — the caller must
         still row-filter, this only guarantees every in-window row is
-        present.  Legacy entries without a range are always read."""
+        present."""
         tail = self.spark.createDataFrame(self._snap["manifests"], MANIFEST_SCHEMA)
         spilled = self._spilled_manifests_df(from_version, to_version)
         return tail if spilled is None else spilled.unionByName(tail)
@@ -828,23 +811,17 @@ class LakehouseTable:
         """The spilled half of manifests_df (see there): rows of the
         sidecars whose version range may intersect the window, minus
         superseded rows; None when no sidecar qualifies."""
-        spill = self._snap.get("manifest_spill", [])
-        if from_version is not None or to_version is not None:
-            spill = [
-                e for e in spill
-                if e.get("v_min") is None
-                or e.get("v_max") is None
-                or (
-                    (to_version is None or e["v_min"] <= to_version)
-                    and (from_version is None or e["v_max"] > from_version)
-                )
-            ]
+        spill = [
+            e for e in self._snap["manifest_spill"]
+            if (to_version is None or e["v_min"] <= to_version)
+            and (from_version is None or e["v_max"] > from_version)
+        ]
         if not spill:
             return None
         spilled = self.spark.read.schema(MANIFEST_SCHEMA).parquet(
             *self._abs([e["path"] for e in spill])
         )
-        superseded = self._snap.get("superseded", {})
+        superseded = self._snap["superseded"]
         if superseded:
             cond = None
             for key, version in superseded.items():
@@ -865,7 +842,7 @@ class LakehouseTable:
         for m in reversed(self._snap["manifests"]):
             if m["job_id"] == job_id and m["batch_id"] == batch_id:
                 return m
-        if self._snap.get("manifest_spill"):
+        if self._snap["manifest_spill"]:
             rows = (
                 self.manifests_df()
                 .where(
@@ -966,15 +943,7 @@ class LakehouseTable:
             F.max("doc_id").alias("hi"),
             F.min("_commit_seq").alias("smin"),
             F.max("_commit_seq").alias("smax"),
-            # order-insensitive batch content hash (SURVEY §2.1 S2):
-            # sum of bounded per-row hashes — commutative, overflow-safe
-            # up to ~10^9 rows per batch
-            F.sum(
-                F.pmod(
-                    F.xxhash64("doc_id", "_commit_seq", "_row_id", "_deleted"),
-                    F.lit(1 << 30),
-                )
-            ).alias("dh"),
+            _content_hash().alias("dh"),
             *([F.sum("_n_events").alias("ne")] if has_counts else []),
         )
         commit_rel = os.path.join(_DATA_DIR, f"delta-{uuid.uuid4().hex}")
@@ -1050,25 +1019,24 @@ class LakehouseTable:
             return None
         return {"files": _list_parquet_files(absdir, self.path), "rows": n}
 
-    def _marker_map(self, snap: dict) -> DataFrame | None:
-        """(p, _mseq) — max marker seq per parent, or None when the
-        pinned snapshot carries no markers.  A child row is marker-dead
-        iff its WINNING ``_commit_seq`` < the parent's ``_mseq``
+    def _marker_map(self, entries: list) -> DataFrame:
+        """(p, del_seq, del_source) — the newest marker per parent over
+        the given ``markers`` entries.  A child row is marker-dead iff
+        its WINNING ``_commit_seq`` < the parent's ``del_seq``
         (re-inserts after the delete outrank every earlier marker, so
         the per-parent max is exact).  Broadcast below the row bound —
         markers are per parent-DELETE, not per child, so the map stays
         small relative to the table."""
-        entries = snap.get("markers", [])
-        if not entries:
-            return None
         files = [p for e in entries for p in e["files"]]
         mk = (
             self.spark.read.parquet(*self._abs(files))
             .groupBy("p")
-            .agg(F.max("del_seq").alias("_mseq"))
+            .agg(
+                F.max("del_seq").alias("del_seq"),
+                F.max_by("del_source", "del_seq").alias("del_source"),
+            )
         )
-        total = sum(e["rows"] or 0 for e in entries)
-        if total <= MARKER_BROADCAST_ROWS:
+        if sum(e["rows"] for e in entries) <= MARKER_BROADCAST_ROWS:
             mk = F.broadcast(mk)
         return mk
 
@@ -1076,9 +1044,11 @@ class LakehouseTable:
         """Fold the marker set into ``_deleted`` on resolved winners.
         No-op without markers; rows whose table lacks ``parent_doc_id``
         cannot be cascade children and pass through."""
-        mk = self._marker_map(snap)
-        if mk is None or "parent_doc_id" not in out.columns:
+        if not snap["markers"] or "parent_doc_id" not in out.columns:
             return out
+        mk = self._marker_map(snap["markers"]).select(
+            "p", F.col("del_seq").alias("_mseq")
+        )
         return (
             out.join(mk, out["parent_doc_id"] == mk["p"], "left")
             .withColumn(
@@ -1100,21 +1070,10 @@ class LakehouseTable:
         time; the mode's documented trade-off).  Returns the number of
         distinct parents materialized."""
         snap = self._snap  # pin ONE snapshot — see _pending docstring
-        entries = snap.get("markers", [])
+        entries = snap["markers"]
         if not entries:
             return 0
-        files = [p for e in entries for p in e["files"]]
-        mk = (
-            self.spark.read.parquet(*self._abs(files))
-            .groupBy("p")
-            .agg(
-                F.max("del_seq").alias("del_seq"),
-                F.max_by("del_source", "del_seq").alias("del_source"),
-            )
-        )
-        total = sum(e["rows"] or 0 for e in entries)
-        if total <= MARKER_BROADCAST_ROWS:
-            mk = F.broadcast(mk)
+        mk = self._marker_map(entries)
         cand = stored_children(self)
         if cand is None:
             raise ValueError(
@@ -1129,11 +1088,7 @@ class LakehouseTable:
         # committed concurrently survive for the next pass
         prepared["clear_markers"] = [p for e in entries for p in e["files"]]
         self.commit_delta(prepared, "_markers", snap["version"])
-        n = (
-            self.spark.read.parquet(*self._abs(files))
-            .select("p").distinct().count()
-        )
-        return int(n)
+        return mk.count()
 
     @staticmethod
     def merge_prepared(a: dict, b: dict) -> dict:
@@ -1250,9 +1205,7 @@ class LakehouseTable:
                 "clear_markers; these commit paths are mutually exclusive"
             )
         if prepared.get("markers_delta"):
-            markers = (
-                self._snap.get("markers", []) + [prepared["markers_delta"]]
-            )
+            markers = self._snap["markers"] + [prepared["markers_delta"]]
         if prepared.get("clear_markers"):
             # clear ONLY the entries the caller materialized (by path):
             # a marker batch that committed concurrently between the
@@ -1262,7 +1215,7 @@ class LakehouseTable:
             # self._snap, so this subtraction sees the latest list.)
             done = set(prepared["clear_markers"])
             markers = [
-                e for e in self._snap.get("markers", [])
+                e for e in self._snap["markers"]
                 if not set(e["files"]) <= done
             ]
         stats = prepared["stats"]
@@ -1286,7 +1239,7 @@ class LakehouseTable:
         # float→double — old files up-cast at scan, Spark 4 readers);
         # other type changes rejected.  Incoming names are logical
         # (post-rename) names.
-        extra_cols = [list(e) for e in self._snap.get("extra_columns", [])]
+        extra_cols = [list(e) for e in self._snap["extra_columns"]]
         known = {n: d for n, d in extra_cols}
         for n, d in prepared.get("extras", []):
             if n in known:
@@ -1315,14 +1268,12 @@ class LakehouseTable:
         ]
 
         new_extras = [tuple(e) for e in extra_cols]
+        base_rows = self._snap["base_rows"]
         if len(deltas) >= self.max_deltas:
             buckets_map, l1_map, base_rows = self._fold_and_maybe_major(
-                deltas, buckets_map, l1_map, new_extras,
-                self._snap.get("base_rows"),
+                deltas, buckets_map, l1_map, new_extras, base_rows,
             )
             deltas = []
-        else:
-            base_rows = self._snap.get("base_rows")
 
         manifest = {
             "job_id": job_id,
@@ -1340,8 +1291,8 @@ class LakehouseTable:
             "delta_files": prepared["files"],
         }
         self._commit(
-            buckets_map, l1_map, deltas, manifest, extra_cols,
-            base_rows=base_rows, markers=markers,
+            buckets_map, l1_map, deltas, base_rows, manifest,
+            extra_columns=extra_cols, markers=markers,
         )
         return manifest
 
@@ -1361,23 +1312,12 @@ class LakehouseTable:
         files = self._abs(m.get("delta_files") or [])
         if not files or not all(self.fs.exists(f) for f in files):
             return None
-        got = (
-            self._raw(files)
-            .agg(
-                F.sum(
-                    F.pmod(
-                        F.xxhash64("doc_id", "_commit_seq", "_row_id", "_deleted"),
-                        F.lit(1 << 30),
-                    )
-                ).alias("dh")
-            )
-            .collect()[0]["dh"]
-        )
+        got = self._raw(files).agg(_content_hash().alias("dh")).collect()[0]["dh"]
         return int(got or 0) == m["data_hash"]
 
-    def _write_partitions(self, rows: int | None) -> int:
+    def _write_partitions(self, rows: int) -> int:
         """Reduce-partition count for a bucket-clustered write of
-        ``rows`` rows (None = unknown): partitions_for_rows, floored at
+        ``rows`` rows: partitions_for_rows, floored at
         defaultParallelism and capped at 4× the bucket count.  Callers
         pass counts they already hold (snapshot ``rows``, parquet
         footers), so sizing runs no job.  The repartition is explicit,
@@ -1397,15 +1337,14 @@ class LakehouseTable:
         )
 
     def _write_bucketed(
-        self, df: DataFrame, prefix: str, pre_partitioned: bool = False,
-        rows: int | None = None,
+        self, df: DataFrame, prefix: str, rows: int | None = None,
     ) -> dict[str, list[str]]:
         """Write ``df`` partitioned by bucket; returns bucket key →
-        written file paths.  Unless ``df`` is already clustered by
-        bucket, it is repartitioned first, sized by ``rows`` (about how
-        many rows ``df`` holds; None = unknown)."""
+        written file paths.  ``rows`` (about how many rows ``df`` holds)
+        sizes a repartition by bucket first; pass None when ``df`` is
+        already clustered by bucket (_resolve_bucketed output)."""
         commit_abs = os.path.join(self.path, _DATA_DIR, f"{prefix}-{uuid.uuid4().hex}")
-        if not pre_partitioned:
+        if rows is not None:
             df = df.repartition(self._write_partitions(rows), "_bucket")
         (
             df.write.mode("overwrite")
@@ -1418,7 +1357,7 @@ class LakehouseTable:
             for b, ps in _list_bucket_files(commit_abs, self.path).items()
         }
 
-    def _resolve_bucketed(self, df: DataFrame, rows: int | None) -> DataFrame:
+    def _resolve_bucketed(self, df: DataFrame, rows: int) -> DataFrame:
         """Single-shuffle resolve + bucket-cluster (VERDICT r2 next-#8):
         repartition on _bucket (the ONE exchange), then group by
         (_bucket, doc_id).  _bucket is a pure function of the bucket
@@ -1430,19 +1369,12 @@ class LakehouseTable:
         moved the L0 volume over the wire twice; this moves it once.
         Output rows stay physically clustered by _bucket, so the
         partitionBy write that follows emits one file per (task, bucket)
-        with no further movement — pass pre_partitioned=True.  ``rows``
-        (the input row count, None = unknown) sizes the exchange."""
-        cols = df.columns
-        ordering = F.struct(
-            F.col("_commit_seq").alias("_s"),
-            F.col("_deleted").cast("int").alias("_d"),
-            F.col("_row_id").alias("_r"),
-        )
-        winner = F.max_by(F.struct(*[F.col(c) for c in cols]), ordering).alias("w")
+        with no further movement — _write_bucketed(rows=None).  ``rows``
+        (the input row count) sizes the exchange."""
         return (
             df.repartition(self._write_partitions(rows), "_bucket")
             .groupBy("_bucket", "doc_id")
-            .agg(winner)
+            .agg(_lww_winner(df.columns))
             .select("w.*")
         )
 
@@ -1452,8 +1384,8 @@ class LakehouseTable:
         buckets_map: dict,
         l1_map: dict,
         new_extras: list,
-        base_rows: int | None,
-    ) -> tuple[dict, dict, int | None]:
+        base_rows: int,
+    ) -> tuple[dict, dict, int]:
         """L0 → L1 fold + the bucket-local major-compaction check —
         the shared tail of a fold-triggering batch commit and the
         explicit ``fold_pending`` maintenance op.  Mutates and returns
@@ -1472,11 +1404,7 @@ class LakehouseTable:
         for b, entry in folded.items():
             cur = l1_map.setdefault(b, {"files": [], "rows": 0})
             cur["files"] = cur["files"] + entry["files"]
-            cur["rows"] = (
-                None
-                if cur["rows"] is None
-                else cur["rows"] + entry["rows"]
-            )
+            cur["rows"] += entry["rows"]
         over = [
             b for b, e in l1_map.items()
             if len(e["files"]) >= self.max_deltas + (_bkey_parse(b)[1] % 4)
@@ -1516,16 +1444,9 @@ class LakehouseTable:
                         l1_map[b] = {"files": [], "rows": 0}
                     else:
                         del l1_map[b]  # stale-modulus key retired
-            new_rows = _parquet_rows(
+            base_rows += _parquet_rows(
                 self._abs([p for ps in compacted.values() for p in ps])
-            )
-            base_rows = (
-                base_rows - old_rows + new_rows
-                if base_rows is not None
-                else _parquet_rows(
-                    self._abs([p for ps in buckets_map.values() for p in ps])
-                )
-            )
+            ) - old_rows
         return buckets_map, l1_map, base_rows
 
     def fold_pending(self) -> int:
@@ -1549,11 +1470,11 @@ class LakehouseTable:
         deltas = snap["deltas"]
         if not deltas:
             return 0
-        new_extras = [tuple(e) for e in snap.get("extra_columns", [])]
+        new_extras = [tuple(e) for e in snap["extra_columns"]]
         buckets_map = dict(snap["buckets"])
-        l1_map = {k: dict(v) for k, v in snap.get("l1", {}).items()}
+        l1_map = {k: dict(v) for k, v in snap["l1"].items()}
         buckets_map, l1_map, base_rows = self._fold_and_maybe_major(
-            deltas, buckets_map, l1_map, new_extras, snap.get("base_rows"),
+            deltas, buckets_map, l1_map, new_extras, snap["base_rows"],
         )
         new_snap = dict(
             snap,
@@ -1575,9 +1496,9 @@ class LakehouseTable:
         paths = [p for e in deltas for p in e["files"]]
         resolved = self._resolve_bucketed(
             self._raw(self._abs(paths), extras=extras),
-            _sum_rows(e["rows"] for e in deltas),
+            sum(e["rows"] for e in deltas),
         )
-        out = self._write_bucketed(resolved, "l1", pre_partitioned=True)
+        out = self._write_bucketed(resolved, "l1")
         return {
             b: {"files": ps, "rows": _parquet_rows(self._abs(ps))}
             for b, ps in out.items()
@@ -1596,12 +1517,11 @@ class LakehouseTable:
         ``base_rows`` is the row count of those buckets' base files."""
         paths = [p for b in buckets for p in buckets_map.get(b, [])]
         paths += [p for b in buckets for p in l1_map.get(b, {}).get("files", [])]
-        l1_rows = _sum_rows(l1_map[b]["rows"] for b in buckets if b in l1_map)
+        l1_rows = sum(l1_map[b]["rows"] for b in buckets if b in l1_map)
         resolved = self._resolve_bucketed(
-            self._raw(self._abs(paths), extras=extras),
-            None if l1_rows is None else base_rows + l1_rows,
+            self._raw(self._abs(paths), extras=extras), base_rows + l1_rows,
         )
-        return self._write_bucketed(resolved, "base", pre_partitioned=True)
+        return self._write_bucketed(resolved, "base")
 
     def _commit_noop(self, job_id, batch_id, seq_from, seq_to, events_read,
                      markers: list | None = None) -> dict:
@@ -1624,6 +1544,7 @@ class LakehouseTable:
             dict(self._snap["buckets"]),
             {k: dict(v) for k, v in self._l1.items()},
             list(self._snap["deltas"]),
+            self._snap["base_rows"],
             manifest,
             markers=markers,
         )
@@ -1638,7 +1559,7 @@ class LakehouseTable:
         a CDC-out window seek opens only the sidecars that intersect the
         window — O(window), not O(commits), on a long-lived table.
         Returns (retained tail, spill entries)."""
-        spill = list(self._snap.get("manifest_spill", []))
+        spill = list(self._snap["manifest_spill"])
         if len(manifests) <= 2 * MANIFEST_TAIL:
             return manifests, spill
         to_spill, tail = manifests[:-MANIFEST_TAIL], manifests[-MANIFEST_TAIL:]
@@ -1683,9 +1604,8 @@ class LakehouseTable:
         Sidecars are immutable; a crash between sidecar write and
         snapshot link leaves an orphan reclaimed by remove_orphans()."""
         old = self._snap
-        old_b, old_l1 = old.get("buckets", {}), old.get("l1", {})
-        old_brefs = old.get("buckets_ref") or {}
-        old_lrefs = old.get("l1_ref") or {}
+        old_b, old_l1 = old["buckets"], old["l1"]
+        old_brefs, old_lrefs = old["buckets_ref"], old["l1_ref"]
         nb, nl = new_snap["buckets"], new_snap["l1"]
         changed_b = {
             b: fs
@@ -1730,12 +1650,14 @@ class LakehouseTable:
         buckets_map: dict,
         l1_map: dict,
         deltas: list,
+        base_rows: int,
         manifest: dict,
         extra_columns: list | None = None,
-        renames: dict | None = None,
-        base_rows: int | None = None,
         markers: list | None = None,
     ) -> None:
+        """Publish the next snapshot: the given table state plus
+        ``manifest`` recorded as applied.  ``extra_columns``/``markers``
+        default to the current snapshot's."""
         job, bid = manifest["job_id"], manifest["batch_id"]
         applied = {k: list(v) for k, v in self._snap["applied"].items()}
         was_applied = _ranges_contains(applied.get(job, []), int(bid))
@@ -1749,11 +1671,11 @@ class LakehouseTable:
             for m in self._snap["manifests"]
             if not (m["job_id"] == job and m["batch_id"] == bid)
         ] + [manifest]
-        superseded = dict(self._snap.get("superseded", {}))
+        superseded = dict(self._snap["superseded"])
         if (
             was_applied
             and len(manifests) > len(self._snap["manifests"])
-            and self._snap.get("manifest_spill")
+            and self._snap["manifest_spill"]
         ):
             # the stale row was NOT in the inline tail, so it sits in an
             # immutable spill sidecar: record the supersession so
@@ -1761,36 +1683,23 @@ class LakehouseTable:
             # Bounded: grows only on forced re-applies of spilled batches.
             superseded[f"{job}::{bid}"] = manifest["snapshot_version"]
         manifests, spill = self._spill_manifests(manifests)
-        new_snap = {
-            "version": self.version + 1,
-            "n_buckets": self.n_buckets,
-            "bucket_expr": self.bucket_expr,
-            "max_deltas": self.max_deltas,
-            "buckets": buckets_map,
-            "base_rows": (
-                base_rows if base_rows is not None
-                else self._snap.get("base_rows")
-            ),
-            "l1": l1_map,
-            "deltas": deltas,
-            "extra_columns": (
-                extra_columns
-                if extra_columns is not None
-                else self._snap.get("extra_columns", [])
-            ),
-            "renames": (
-                renames if renames is not None else self._snap.get("renames", {})
-            ),
-            "applied": applied,
-            "manifests": manifests,
-            "manifest_spill": spill,
-            "superseded": superseded,
-            "markers": (
-                markers if markers is not None
-                else self._snap.get("markers", [])
-            ),
-            "watermark": max(self._snap["watermark"], manifest["seq_to"]),
-        }
+        new_snap = dict(
+            self._snap,
+            version=self.version + 1,
+            buckets=buckets_map,
+            base_rows=base_rows,
+            l1=l1_map,
+            deltas=deltas,
+            applied=applied,
+            manifests=manifests,
+            manifest_spill=spill,
+            superseded=superseded,
+            watermark=max(self._snap["watermark"], manifest["seq_to"]),
+        )
+        if extra_columns is not None:
+            new_snap["extra_columns"] = extra_columns
+        if markers is not None:
+            new_snap["markers"] = markers
         self._publish(new_snap)
 
     # ------------------------------------------------------------------
@@ -1801,7 +1710,7 @@ class LakehouseTable:
         logical name changes in the snapshot, existing files keep the
         physical name, reads coalesce(new, old).  Restricted to evolved
         (extra) columns; core TARGET columns are the engine contract."""
-        extras = [list(e) for e in self._snap.get("extra_columns", [])]
+        extras = [list(e) for e in self._snap["extra_columns"]]
         names = {e[0] for e in extras}
         if old not in names:
             raise ValueError(f"unknown evolved column {old!r} (have {sorted(names)})")
@@ -1810,7 +1719,7 @@ class LakehouseTable:
         for e in extras:
             if e[0] == old:
                 e[0] = new
-        renames = dict(self._snap.get("renames", {}))
+        renames = dict(self._snap["renames"])
         # chain-collapse: if old was itself a rename target, repoint the
         # original physical name at the newest logical name
         for phys, logical in list(renames.items()):
@@ -1897,7 +1806,7 @@ class LakehouseTable:
         paths += pend_files
         resolved = self._resolve(self._raw(self._abs(paths)))
         buckets_map = self._write_bucketed(
-            resolved, "base", rows=_sum_rows([snap.get("base_rows"), pend_rows])
+            resolved, "base", rows=snap["base_rows"] + pend_rows
         )
         new_snap = dict(
             snap,
@@ -1932,7 +1841,7 @@ class LakehouseTable:
         ).where(~purge)
         buckets_map = self._write_bucketed(
             kept, "base",
-            rows=_sum_rows([snap.get("base_rows"), self._pending(snap=snap)[1]]),
+            rows=snap["base_rows"] + self._pending(snap=snap)[1],
         )
         n_purged = int(obs.get["n_purged"] or 0)
         if n_purged == 0:
@@ -1972,25 +1881,23 @@ class LakehouseTable:
         data directory.  ``tolerant`` skips sidecars that are already
         gone (expired snapshots being torn down)."""
         snap_file = os.path.join(self.path, _SNAP_DIR, _snap_name(version))
-        s = _normalize_snap(json.loads(self.fs.read_text(snap_file)))
-        aux = {e["path"] for e in s.get("manifest_spill", [])}
-        aux |= set((s.get("buckets_ref") or {}).values())
-        aux |= set((s.get("l1_ref") or {}).values())
+        s = _checked(json.loads(self.fs.read_text(snap_file)), self.path)
+        aux = {e["path"] for e in s["manifest_spill"]}
+        aux |= set(s["buckets_ref"].values()) | set(s["l1_ref"].values())
         try:
             _resolve_filelists(self.path, s, self.fs)
         except FileNotFoundError:
             if not tolerant:
                 raise
-            s.setdefault("buckets", {})
-            s.setdefault("l1", {})
+            s["buckets"], s["l1"] = {}, {}
         data = set()
-        for ps in s.get("buckets", {}).values():
+        for ps in s["buckets"].values():
             data.update(ps)
-        for e in s.get("l1", {}).values():
+        for e in s["l1"].values():
             data.update(e["files"])
-        for e in s.get("deltas", []):
+        for e in s["deltas"]:
             data.update(e["files"])
-        for e in s.get("markers", []):
+        for e in s["markers"]:
             data.update(e["files"])
         # NOTE: manifest rows' delta_files are deliberately NOT refs —
         # once compaction supersedes a commit's delta AND every snapshot
@@ -2088,13 +1995,35 @@ class LakehouseTable:
                     os.rmdir(dirpath)
         return removed
 
+    def maintain(self, retain_last: int = 2, grace_secs: float = 3600.0) -> dict:
+        """One housekeeping tick — the sequence both the `maintain` CLI
+        and the sync daemon's scheduled tick run.  Cascade markers are
+        materialized FIRST, so the compaction folds their tombstones in
+        the same tick: this is where a markers-mode table converges
+        back to physical deletes.  Then compact, expire snapshots
+        beyond ``retain_last`` and vacuum orphans older than
+        ``grace_secs``.  Returns what each step did."""
+        parents = self.materialize_markers()
+        v0 = self.version
+        self.compact()
+        compacted = self.version > v0
+        expired = self.expire_snapshots(retain_last=retain_last)
+        return {
+            "parents_materialized": parents,
+            "compacted": compacted,
+            "version": self.version,
+            "snapshots_expired": expired["snapshots_expired"],
+            "files_reclaimed": expired["files_removed"],
+            "orphans_removed": self.vacuum(grace_secs=grace_secs),
+        }
+
     def _live_files(self) -> list[str]:
         out = [p for ps in self._snap["buckets"].values() for p in ps]
         for e in self._l1.values():
             out.extend(e["files"])
         for e in self._snap["deltas"]:
             out.extend(e["files"])
-        for e in self._snap.get("markers", []):
+        for e in self._snap["markers"]:
             out.extend(e["files"])
         return out
 
@@ -2106,12 +2035,6 @@ class SnapshotConflict(RuntimeError):
 # ---------------------------------------------------------------------------
 # snapshot file helpers
 # ---------------------------------------------------------------------------
-def _sum_rows(counts) -> int | None:
-    """Sum of row counts; None when any count is unknown."""
-    counts = list(counts)
-    return None if None in counts else sum(counts)
-
-
 def _parquet_rows(paths: list[str]) -> int:
     """Exact row count from parquet footers — driver-side metadata read,
     no Spark job (the footer is O(KB) regardless of file size)."""
@@ -2162,11 +2085,9 @@ def _commit_snapshot(
     their store's conditional put)."""
     fs = fs or LocalMetaFS()
     final = os.path.join(snap_dir, _snap_name(snap["version"]))
-    to_write = snap
-    if snap.get("buckets_ref") is not None or snap.get("l1_ref") is not None:
-        # ref-based layout: the inline buckets/l1 maps are in-memory
-        # working state only — the durable form is the sidecar refs
-        to_write = {k: v for k, v in snap.items() if k not in ("buckets", "l1")}
+    # the inline buckets/l1 maps are in-memory working state only —
+    # the durable form is the sidecar refs
+    to_write = {k: v for k, v in snap.items() if k not in ("buckets", "l1")}
     try:
         fs.create_exclusive(final, json.dumps(to_write))
     except FileExistsError as e:

@@ -48,7 +48,7 @@ class MetricsWriter:
             "watermark": table.watermark(),
             "snapshot_version": table.version,
             "pending_delta_commits": len(table._snap["deltas"]),
-            "base_rows": table._snap.get("base_rows") or 0,
+            "base_rows": table._snap["base_rows"],
             "last_run_seconds": round(res.wall_secs, 3),
             "last_run_events_per_sec": round(res.events_per_sec, 1),
         }

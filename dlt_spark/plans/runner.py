@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dlt_spark.adapters import MASS_DELETE, cascade_tombstone_rows, get_adapter
+from dlt_spark.config import MAX_INFLIGHT
 from dlt_spark.lakehouse import LakehouseTable
 from dlt_spark.operators.dedup import dedup_lww
 from dlt_spark.operators.salt import salted_repartition
@@ -196,7 +197,7 @@ def run_incremental(
     # fresh sessions 3-vs-4 is inside environment noise (±15%); 5+ is
     # reliably worse (queued preparations contend with the in-flight
     # batch's own stages).
-    max_inflight: int = 4,
+    max_inflight: int = MAX_INFLIGHT,
     log_part_width: int = 100_000,
     fail_after_batches: int | None = None,
     stop_requested=None,

@@ -207,24 +207,18 @@ def run_sync_daemon(
                 log_part_width=src.log_part_width,
                 max_inflight=c.max_inflight,
                 stop_requested=stop_requested,
-                cascade_mode=getattr(c, "cascade_mode", "eager"),
+                cascade_mode=c.cascade_mode,
             )
             _mark_ran(conn, st)
             st.runs += 1
             st.events_read += res.events_read
             ran_any = True
-            every = getattr(c, "maintain_every_runs", 0)
+            every = c.maintain_every_runs
             if every and st.runs % every == 0:
                 # Scheduled maintenance tick (still single-flight: runs
-                # inside the serial loop).  Markers FIRST so compaction
-                # folds the materialized tombstones in the same tick —
-                # this is where marker-mode tables get their periodic
-                # convergence back to physical deletes.
-                t = LakehouseTable.load(spark, dst.table)
-                t.materialize_markers()
-                t.compact()
-                t.expire_snapshots(retain_last=2)
-                t.vacuum(grace_secs=3600.0)
+                # inside the serial loop) — the same sequence as the
+                # `maintain` CLI, see LakehouseTable.maintain.
+                LakehouseTable.load(spark, dst.table).maintain()
             if res.batches_applied:
                 ev.sync_finished(res, connection=conn.name, round=st.runs)
             if conn.name in metrics:

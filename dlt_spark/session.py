@@ -87,14 +87,11 @@ _BASE_CONF: dict[str, str] = {
 ROWS_PER_PARTITION = 16_000
 
 
-def partitions_for_rows(rows: int | None, floor: int, ceiling: int) -> int:
+def partitions_for_rows(rows: int, floor: int, ceiling: int) -> int:
     """Reduce-partition count for an exchange over ``rows`` rows: about
     ROWS_PER_PARTITION rows per partition, doubled up from ``floor``
     (a power-of-two multiple of the floor keeps reduce waves dividing
-    the cores evenly) and capped at ``ceiling``.  Unknown ``rows`` gets
-    the ceiling."""
-    if rows is None:
-        return ceiling
+    the cores evenly) and capped at ``ceiling``."""
     p = max(1, floor)
     while p < rows // ROWS_PER_PARTITION + 1 and p < ceiling:
         p *= 2

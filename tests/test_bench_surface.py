@@ -1,0 +1,83 @@
+"""The private LakehouseTable surface the frozen benchmark scripts use.
+
+``bench.py`` (the MoR-read leaf) and ``bench_extra.py`` (the tiered-read
+leaves) reach past the public API: they count ``_snap["deltas"]``, list
+base files from ``_snap["buckets"]``, take ``(files, rows)`` from
+``_pending()`` and rebuild the tier-3 plan from ``_resolve``, ``_raw``
+and ``_abs``.  Those files stay byte-identical, so a refactor of the
+table format must keep this surface; this test fails first if it does
+not.  It also byte-compiles every benchmark script."""
+
+from __future__ import annotations
+
+import glob
+import os
+import py_compile
+
+from pyspark.sql import functions as F
+
+from dlt_spark.functions.normalize import normalize_events
+from dlt_spark.lakehouse import LakehouseTable
+from dlt_spark.operators.dedup import dedup_lww
+from dlt_spark.sources.generator import generate_change_log
+
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def test_bench_scripts_compile(tmp_path):
+    scripts = [os.path.join(_ROOT, "bench.py"),
+               os.path.join(_ROOT, "bench_extra.py")]
+    scripts += sorted(glob.glob(os.path.join(_ROOT, "bench", "*.py")))
+    for i, path in enumerate(scripts):
+        py_compile.compile(path, cfile=str(tmp_path / f"{i}.pyc"),
+                           doraise=True)
+
+
+def test_private_table_surface_used_by_bench(spark, tmp_path):
+    log = generate_change_log(spark, 2_000, n_keys=200, seed=5)
+
+    def batch(lo, hi):
+        return dedup_lww(
+            normalize_events(log.where(F.col("commit_seq").between(lo, hi))),
+            with_counts=True,
+        )
+
+    path = str(tmp_path / "t")
+    t = LakehouseTable.create(spark, path, n_buckets=4)
+    t.merge(batch(0, 999), "job", 0)
+    t.compact()  # base materialized, L0/L1 empty
+    for b, lo in enumerate(range(1_000, 2_000, 500), start=1):
+        t.merge(batch(lo, lo + 499), "job", b)
+    t2 = t.refresh()
+
+    # _snap holds the inflated maps, not the on-disk sidecar refs
+    deltas = t2._snap["deltas"]
+    assert len(deltas) == 2
+    assert all(isinstance(e["files"], list) and e["rows"] > 0 for e in deltas)
+    buckets = t2._snap["buckets"]
+    base_files = [p for ps in buckets.values() for p in ps]
+    assert base_files and all(p.endswith(".parquet") for p in base_files)
+
+    pend_files, pend_rows = t2._pending()
+    assert sorted(pend_files) == sorted(p for e in deltas for p in e["files"])
+    assert pend_rows == sum(e["rows"] for e in deltas)
+
+    # bench.py's tier-3 comparison plan equals the table's own read
+    full = t2._resolve(t2._raw(t2._abs(base_files + pend_files))).where(
+        "NOT _deleted"
+    )
+
+    def key(df):
+        return sorted(
+            (r["doc_id"], r["_commit_seq"])
+            for r in df.select("doc_id", "_commit_seq").collect()
+        )
+
+    expected = key(t2.read())
+    assert key(full) == expected
+    for tier in (None, 2, 3):  # bench_extra.py's mor_read_tier* leaves
+        assert key(t2.read(tier=tier)) == expected
+
+    t2.compact()
+    assert t2._snap["deltas"] == [] and t2._pending() == ([], 0)
+    assert key(t2.read()) == expected

@@ -1,0 +1,110 @@
+"""CLI wiring: `maintain` runs the daemon's maintenance sequence, and
+named-connection / flag settings reach run_incremental."""
+
+from __future__ import annotations
+
+import json
+import signal
+
+import pytest
+from pyspark.sql import functions as F
+
+from dlt_spark.cli import main
+from dlt_spark.config import MAX_INFLIGHT, ConnectionCfg
+from dlt_spark.lakehouse import LakehouseTable
+from dlt_spark.plans.runner import RunResult, run_incremental
+from dlt_spark.sources.changelog import write_change_log
+from dlt_spark.sources.generator import generate_change_log
+
+
+def _exploded_cascade_log(spark, path):
+    ev = generate_change_log(spark, 1_200, n_keys=80, seed=21,
+                             version_mix=(1.0, 0.0, 0.0))
+    exp = ev.withColumn(
+        "payload",
+        F.when(F.col("op") != "D", F.to_json(F.struct(
+            F.slice(F.col("tokens"), 1, 3).alias("block"),
+            F.array(F.slice(F.col("tokens"), 4, 4)).alias("txs"),
+        ))),
+    ).withColumn("tokens", F.lit(None).cast("array<int>"))
+    write_change_log(exp, path, part_width=300)
+
+
+def test_cli_maintain_materializes_markers(spark, tmp_path, capsys):
+    """CLI `maintain` on a markers-mode table converges it: no pending
+    markers afterwards, and the state equals an eager-mode load."""
+    log = str(tmp_path / "log")
+    _exploded_cascade_log(spark, log)
+    kw = dict(schema="exploded_cascade", batch_width=300, n_buckets=8,
+              log_part_width=300)
+    tbl, eager = str(tmp_path / "tbl"), str(tmp_path / "eager")
+    run_incremental(spark, log, tbl, cascade_mode="markers", **kw)
+    assert LakehouseTable.load(spark, tbl)._snap["markers"]
+    run_incremental(spark, log, eager, **kw)
+
+    assert main(["maintain", "--table", tbl, "--grace-secs", "0"]) == 0
+    assert LakehouseTable.load(spark, tbl)._snap["markers"] == []
+
+    def state(p):
+        return sorted(
+            (r["doc_id"], r["_commit_seq"], tuple(r["tokens"] or []))
+            for r in LakehouseTable.load(spark, p).read().collect()
+        )
+
+    assert state(tbl) == state(eager)
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out["parents_materialized"] > 0 and out["compacted"] is True
+
+
+@pytest.fixture
+def captured_runs(monkeypatch):
+    """Replace run_incremental with a recorder of its kwargs; restore
+    the signal handlers `sync` installs."""
+    import dlt_spark.plans.runner as runner
+
+    calls = []
+
+    def fake(spark, log, table, **kw):
+        calls.append(kw)
+        return RunResult(kw.get("job_id", "dlt"), 0, 0, 0, 0, 0, 0, 0.0)
+
+    monkeypatch.setattr(runner, "run_incremental", fake)
+    handlers = {s: signal.getsignal(s) for s in (signal.SIGINT, signal.SIGTERM)}
+    yield calls
+    for s, h in handlers.items():
+        signal.signal(s, h)
+
+
+def test_cli_connection_settings_reach_run_incremental(
+    spark, tmp_path, captured_runs
+):
+    cfg = tmp_path / "dlt.json"
+    cfg.write_text(json.dumps({
+        "sources": [{"name": "s", "log": str(tmp_path / "log")}],
+        "destinations": [{"name": "d", "table": str(tmp_path / "tbl")}],
+        "connections": [{"name": "c", "source": "s", "destination": "d",
+                         "max_inflight": 2, "cascade_mode": "markers"}],
+    }))
+    conn = ["--config", str(cfg), "--connection", "c"]
+    assert main(["load", *conn]) == 0
+    assert main(["sync", *conn, "--max-rounds", "1"]) == 0
+    assert len(captured_runs) == 2
+    for kw in captured_runs:
+        assert kw["max_inflight"] == 2
+        assert kw["cascade_mode"] == "markers"
+
+    captured_runs.clear()
+    paths = ["--log", str(tmp_path / "log"), "--table", str(tmp_path / "tbl")]
+    assert main(["sync", *paths, "--max-inflight", "3",
+                 "--max-rounds", "1"]) == 0
+    assert main(["sync", *paths, "--max-rounds", "1"]) == 0
+    assert [kw["max_inflight"] for kw in captured_runs] == [3, MAX_INFLIGHT]
+    assert all(kw["cascade_mode"] == "eager" for kw in captured_runs)
+
+
+def test_one_max_inflight_default():
+    import inspect
+
+    assert ConnectionCfg("c", "s", "d").max_inflight == MAX_INFLIGHT
+    default = inspect.signature(run_incremental).parameters["max_inflight"]
+    assert default.default == MAX_INFLIGHT

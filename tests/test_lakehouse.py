@@ -435,12 +435,6 @@ def test_manifest_spill_version_index_prunes_files(spark, tmp_path):
     ch = t.changes_between(9_990, 10_000)
     assert ch.count() == 10 * t._snap["deltas"][0]["rows"]
 
-    # legacy (un-indexed) entries are still read — no silent row loss
-    t._snap["manifest_spill"] = [
-        {"path": e["path"], "v_min": None, "v_max": None} for e in spill
-    ]
-    assert set(t.manifests_df(9_900, 10_000).inputFiles()) == all_files
-
 
 def test_fold_pending_state_equivalent_and_bounded(spark, tmp_path):
     """Round-6 overlapped fold: fold_pending() is the commit-path
@@ -473,14 +467,13 @@ def test_fold_pending_state_equivalent_and_bounded(spark, tmp_path):
 def test_write_partitions_sized_from_rows(spark, tmp_path):
     """The bucket-clustered write exchange is sized from the rows it
     writes: defaultParallelism for a small write, doubled per ~16k
-    rows, 4× n_buckets as the ceiling and for unknown row counts."""
+    rows, 4× n_buckets as the ceiling."""
     from dlt_spark.session import ROWS_PER_PARTITION, partitions_for_rows
 
     dp = spark.sparkContext.defaultParallelism
     t = LakehouseTable.create(spark, str(tmp_path / "t"), n_buckets=16)
     assert t._write_partitions(0) == dp
     assert t._write_partitions(dp * ROWS_PER_PARTITION) == 2 * dp
-    assert t._write_partitions(None) == 64
     assert t._write_partitions(10**9) == 64
     # the floor never lifts the count above the ceiling
     t1 = LakehouseTable.create(spark, str(tmp_path / "t1"), n_buckets=1)
@@ -640,3 +633,29 @@ def test_bulk_run_ends_fully_folded(spark, tmp_path):
         for r in t2.read().select("doc_id", "_commit_seq", "_row_id").collect()
     )
     assert rows_a == rows_b
+
+
+def test_load_rejects_snapshot_missing_a_create_key(spark, tmp_path):
+    """Only the layout create() writes is readable: a snapshot lacking
+    any of its keys is refused with a ValueError naming the key, never
+    upgraded by guessing from its shape."""
+    import json
+    import os
+
+    from dlt_spark.lakehouse import _SNAP_KEYS
+
+    path = str(tmp_path / "t")
+    LakehouseTable.create(spark, path, n_buckets=4)
+    snap_dir = os.path.join(path, "_snapshots")
+    (v0,) = os.listdir(snap_dir)
+    with open(os.path.join(snap_dir, v0)) as f:
+        snap = json.load(f)
+    assert set(snap) == set(_SNAP_KEYS)  # the guard checks what create writes
+    for key in _SNAP_KEYS:
+        broken = {k: v for k, v in dict(snap, version=1).items() if k != key}
+        with open(os.path.join(snap_dir, "v000000000001.json"), "w") as f:
+            json.dump(broken, f)
+        with pytest.raises(ValueError, match=rf"lacks key\(s\) {key}$"):
+            LakehouseTable.load(spark, path)
+    os.remove(os.path.join(snap_dir, "v000000000001.json"))
+    assert LakehouseTable.load(spark, path).version == 0
