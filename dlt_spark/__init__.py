@@ -15,8 +15,8 @@ shuffle and retry.  What this package adds on top of stock PySpark:
                    (reference: schema/base.go, schema/height.go).
 - ``sources``    — change-log readers: commit_seq range scans with
                    partition pruning (reference: loader/collector/).
-- ``operators``  — LWW dedup, tombstone resolution, salted repartition,
-                   MERGE upsert (reference gap-closures, SURVEY §2.5/2.7).
+- ``operators``  — LWW dedup and tombstone resolution (reference
+                   gap-closures, SURVEY §2.5/2.7).
 - ``functions``  — vectorized pandas/Arrow UDFs + column builders: token
                    payload normalization, deterministic row ids, text
                    dedup/quality/fingerprint functions.

@@ -27,13 +27,6 @@ from pyspark.sql import functions as F
 
 from dlt_spark.functions.normalize import normalize_events
 
-# Sentinel for ``ExplodedAdapter.expand_deletes(del_rows=...)``: the
-# batch's delete-parent set is too large to collect to the driver —
-# derive it DISTRIBUTED from the batch itself and keep it as a
-# DataFrame end to end (VERDICT r3 wrong-#1: a GDPR-style purge with
-# millions of parents must never materialize them driver-side).
-MASS_DELETE = object()
-
 
 class SchemaAdapter(Protocol):
     """SURVEY §1.2's SchemaAdapter protocol (DataSource analog)."""
@@ -109,9 +102,10 @@ class ExplodedAdapter:
     # parent set instead of scanning the table (VERDICT r2 #3).
     bucket_expr = "substring_index(doc_id, '/', 1)"
 
-    # Above this many distinct delete-parents in one batch, skip the
-    # driver-side residue computation and read the whole table (a bulk
-    # delete of >64k parents touches most buckets anyway).
+    # Above this many distinct delete-parents in one batch, the runner's
+    # prefetch keeps them a DataFrame instead of collecting them, and
+    # the cascade lookup reads the whole table (a bulk delete of >64k
+    # parents touches most buckets anyway).
     MAX_PRUNED_PARENTS = 65_536
 
     def __init__(self, cascade_deletes: bool = False):
@@ -202,17 +196,16 @@ class ExplodedAdapter:
 
         ``del_rows`` is the batch's parent deletes as the runner's
         delete prefetch found them (``runner.prefetch_deletes``, the one
-        capped collect): either the collected (p, del_seq, del_source, b)
-        rows or ``MASS_DELETE``.
+        capped collect), used as given: (p, del_seq, del_source, b)
+        collected rows or, above ``MAX_PRUNED_PARENTS``, a DataFrame.
 
         - Collected rows are broadcast, and the table lookup is
           BUCKET-PRUNED to their residues ``b`` (the table buckets child
           rows by parent via ``bucket_expr``).
-        - ``MASS_DELETE`` never touches the driver: the parent set is
-          derived from ``normalized`` and stays a DataFrame, the lookup
-          reads the whole table (a purge of >64k parents touches most
-          buckets anyway) and the join is a plain shuffle join (VERDICT
-          r3 wrong-#1).
+        - A DataFrame never touches the driver: the lookup reads the
+          whole table (a purge of >64k parents touches most buckets
+          anyway) and the join is a plain shuffle join (VERDICT r3
+          wrong-#1).
 
         The lookup is the RESOLVE-FREE, column-projected ``scan_raw``
         (key + provenance only; token arrays never leave the parquet
@@ -225,33 +218,20 @@ class ExplodedAdapter:
         double-covered keys settle at read-resolve by (_commit_seq,
         D-rank, _row_id).
 
-        ``normalized`` feeds several subtrees (in-batch candidates, the
-        mass-delete parent set, the caller's own use); callers should
-        pass a materialized DataFrame or the normalize re-executes per
-        consumer."""
+        ``normalized`` feeds two subtrees (in-batch candidates and the
+        caller's own use); callers should pass a materialized DataFrame
+        or the normalize re-executes per consumer."""
         if not self.cascade_deletes or not del_rows:
             return None
         in_batch = normalized.where(F.col("op") != "D").select(
             "doc_id", "kind", "array_index", "parent_doc_id",
             F.col("commit_seq").alias("child_seq"),
         )
-        if del_rows is MASS_DELETE:
-            dels = (
-                normalized.where(F.col("op") == "D")
-                .select(
-                    F.col("parent_doc_id").alias("p"),
-                    F.col("commit_seq").alias("del_seq"),
-                    F.col("source").alias("del_source"),
-                )
-                .distinct()
-            )
-            buckets = None
-        else:
-            dels = del_rows
-            buckets = (
-                sorted({int(r["b"]) % table.n_buckets for r in del_rows})
-                if table.bucket_expr == self.bucket_expr else None
-            )
+        buckets = (
+            sorted({int(r["b"]) % table.n_buckets for r in del_rows})
+            if not isinstance(del_rows, DataFrame)
+            and table.bucket_expr == self.bucket_expr else None
+        )
         stored = stored_children(table, buckets)
         cand = in_batch if stored is None else stored.unionByName(in_batch)
         # NO dropDuplicates/dedup here: duplicate or rival tombstones for
@@ -261,7 +241,7 @@ class ExplodedAdapter:
         # delete batch's _n_events counts candidate multiplicity (every
         # stored version / in-flight copy of a child yields one synthetic
         # tombstone row); final state is unaffected.
-        return cascade_tombstone_rows(cand, dels)
+        return cascade_tombstone_rows(cand, del_rows)
 
 
 def stored_children(table, buckets=None) -> DataFrame | None:

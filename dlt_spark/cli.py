@@ -23,10 +23,38 @@ from __future__ import annotations
 
 import argparse
 import json
+import signal
 import sys
 import time
+from contextlib import contextmanager
 
 from dlt_spark.config import MAX_INFLIGHT
+
+
+@contextmanager
+def _graceful_stop():
+    """SIGINT-graceful shutdown (cmd/dlt/commands/load.go:62-86,
+    sync.go:150-170): the first SIGINT/SIGTERM asks the loop to finish
+    the in-flight batch and stop at a committed boundary; a second one
+    force-exits.  Yields the stop probe; the previous handlers are
+    restored on exit."""
+    stop = {"n": 0}
+
+    def _on_signal(_sig, _frm):
+        stop["n"] += 1
+        if stop["n"] >= 2:
+            print(json.dumps({"shutdown": "forced"}), flush=True)
+            raise KeyboardInterrupt
+        print(json.dumps({"shutdown": "graceful-after-batch"}), flush=True)
+
+    prev = {s: signal.getsignal(s) for s in (signal.SIGINT, signal.SIGTERM)}
+    for s in prev:
+        signal.signal(s, _on_signal)
+    try:
+        yield lambda: stop["n"] > 0
+    finally:
+        for s, h in prev.items():
+            signal.signal(s, h)
 
 
 def _add_common(p: argparse.ArgumentParser) -> None:
@@ -429,22 +457,8 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "sync-daemon":
-        import signal
-
         from dlt_spark.config import load_config
         from dlt_spark.scheduler import run_sync_daemon
-
-        stop = {"n": 0}
-
-        def _sig(_s, _f):
-            stop["n"] += 1
-            if stop["n"] >= 2:
-                print(json.dumps({"shutdown": "forced"}), flush=True)
-                raise KeyboardInterrupt
-            print(json.dumps({"shutdown": "graceful-after-batch"}), flush=True)
-
-        signal.signal(signal.SIGINT, _sig)
-        signal.signal(signal.SIGTERM, _sig)
 
         def _print_round(name, res):
             print(json.dumps({
@@ -464,16 +478,17 @@ def main(argv: list[str] | None = None) -> int:
                 {"metrics_endpoint": f"http://127.0.0.1:{port}/metrics"}),
                 flush=True)
         try:
-            summary = run_sync_daemon(
-                spark, load_config(args.config),
-                connection_names=args.connection or None,
-                stop_requested=lambda: stop["n"] > 0,
-                max_runs_per_connection=args.max_rounds,
-                events_file=args.events_file,
-                metrics_dir=args.metrics_dir,
-                metrics_server=server,
-                on_round=_print_round,
-            )
+            with _graceful_stop() as stopped:
+                summary = run_sync_daemon(
+                    spark, load_config(args.config),
+                    connection_names=args.connection or None,
+                    stop_requested=stopped,
+                    max_runs_per_connection=args.max_rounds,
+                    events_file=args.events_file,
+                    metrics_dir=args.metrics_dir,
+                    metrics_server=server,
+                    on_round=_print_round,
+                )
         finally:
             if server is not None:
                 server.stop()
@@ -482,25 +497,8 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "sync":
-        import signal
-
         from dlt_spark.lakehouse import LakehouseTable
         from dlt_spark.plans.runner import run_incremental
-
-        # SIGINT-graceful daemon shutdown (cmd/dlt/commands/load.go:62-86,
-        # sync.go:150-170): first signal finishes the in-flight batch and
-        # exits at a committed boundary; a second signal force-exits.
-        stop = {"n": 0}
-
-        def _sigint(_sig, _frm):
-            stop["n"] += 1
-            if stop["n"] >= 2:
-                print(json.dumps({"shutdown": "forced"}), flush=True)
-                raise KeyboardInterrupt
-            print(json.dumps({"shutdown": "graceful-after-batch"}), flush=True)
-
-        signal.signal(signal.SIGINT, _sigint)
-        signal.signal(signal.SIGTERM, _sigint)
 
         metrics = None
         if args.metrics_file:
@@ -513,35 +511,36 @@ def main(argv: list[str] | None = None) -> int:
         ev.sync_started(args.schema, args.table, None, None,
                         interval_secs=args.interval_secs)
 
-        rounds = 0
-        while True:
-            res = run_incremental(
-                spark, args.log, args.table, job_id=args.job_id,
-                batch_width=args.batch_width, n_buckets=args.n_buckets,
-                use_arrow_udf=args.arrow_udf, schema=args.schema,
-                log_part_width=args.log_part_width,
-                max_inflight=args.max_inflight,
-                cascade_mode=args.cascade_mode,
-                stop_requested=lambda: stop["n"] > 0,
-            )
-            if res.batches_applied:
-                ev.sync_finished(res, round=rounds)
-            if metrics:
-                metrics.record_run(res, LakehouseTable.load(spark, args.table))
-            print(json.dumps({
-                "round": rounds,
-                "batches_applied": res.batches_applied,
-                "events_read": res.events_read,
-                "events_per_sec": round(res.events_per_sec, 1),
-            }), flush=True)
-            rounds += 1
-            if stop["n"]:
-                print(json.dumps({"shutdown": "clean", "rounds": rounds}),
-                      flush=True)
-                return 0
-            if args.max_rounds and rounds >= args.max_rounds:
-                return 0
-            time.sleep(args.interval_secs)
+        with _graceful_stop() as stopped:
+            rounds = 0
+            while True:
+                res = run_incremental(
+                    spark, args.log, args.table, job_id=args.job_id,
+                    batch_width=args.batch_width, n_buckets=args.n_buckets,
+                    use_arrow_udf=args.arrow_udf, schema=args.schema,
+                    log_part_width=args.log_part_width,
+                    max_inflight=args.max_inflight,
+                    cascade_mode=args.cascade_mode,
+                    stop_requested=stopped,
+                )
+                if res.batches_applied:
+                    ev.sync_finished(res, round=rounds)
+                if metrics:
+                    metrics.record_run(res, LakehouseTable.load(spark, args.table))
+                print(json.dumps({
+                    "round": rounds,
+                    "batches_applied": res.batches_applied,
+                    "events_read": res.events_read,
+                    "events_per_sec": round(res.events_per_sec, 1),
+                }), flush=True)
+                rounds += 1
+                if stopped():
+                    print(json.dumps({"shutdown": "clean", "rounds": rounds}),
+                          flush=True)
+                    return 0
+                if args.max_rounds and rounds >= args.max_rounds:
+                    return 0
+                time.sleep(args.interval_secs)
 
     if args.cmd == "history":
         from dlt_spark.lakehouse import LakehouseTable
@@ -678,15 +677,17 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "verify":
+        from pyspark.sql import functions as F
+
         from dlt_spark.lakehouse import LakehouseTable
 
         t = LakehouseTable.load(spark, args.table)
         results = {"ok": 0, "failed": 0, "window_closed": 0}
         bad = []
-        for m in t._snap["manifests"]:
-            if m["job_id"] != args.job_id:
-                continue
-            r = t.verify_batch(m["job_id"], m["batch_id"])
+        # every manifest row of the job, spilled sidecars included
+        for m in (t.manifests_df().where(F.col("job_id") == args.job_id)
+                  .select("batch_id").orderBy("batch_id").collect()):
+            r = t.verify_batch(args.job_id, m["batch_id"])
             if r is True:
                 results["ok"] += 1
             elif r is None:

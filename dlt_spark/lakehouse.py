@@ -970,13 +970,14 @@ class LakehouseTable:
         alternative to eager child tombstones (BENCH/BASELINE.md r4:
         markers move the candidate join off the ingest path at the cost
         of the CDC-out feed no longer carrying cascade-deleted children;
-        that trade-off is why the mode is opt-in).  ``dels`` is
-        (p, del_seq, del_source): a LIST of tuples (the runner's
-        collected sparse path — written driver-side via pyarrow, ZERO
-        Spark jobs, like the manifest spill) or a DataFrame (the
-        MASS_DELETE path — distributed write; no coalesce: a single
-        serial task re-evaluating a driver-parallelized parent costs
-        seconds, measured 4.5 s vs 1.5 s for 5k rows).  Stateless like
+        that trade-off is why the mode is opt-in).  ``dels`` is the
+        batch's parent deletes as ``runner.prefetch_deletes`` returns
+        them, read by the field names p, del_seq, del_source: collected
+        rows (written driver-side via pyarrow, ZERO Spark jobs, like the
+        manifest spill) or a DataFrame (a mass delete — distributed
+        write; no coalesce: a single serial task re-evaluating a
+        driver-parallelized parent costs seconds, measured 4.5 s vs
+        1.5 s for 5k rows).  Stateless like
         prepare_delta; the returned {"files", "rows"} entry rides a
         prepared dict as ``markers_delta`` into the batch's atomic
         commit.  Returns None for a delete-free batch."""
@@ -991,11 +992,12 @@ class LakehouseTable:
 
             os.makedirs(absdir, exist_ok=True)
             tbl = pa.table({
-                "p": pa.array([str(r[0]) for r in rows], pa.string()),
-                "del_seq": pa.array([int(r[1]) for r in rows], pa.int64()),
+                "p": pa.array([str(r["p"]) for r in rows], pa.string()),
+                "del_seq": pa.array(
+                    [int(r["del_seq"]) for r in rows], pa.int64()
+                ),
                 "del_source": pa.array(
-                    [None if r[2] is None else str(r[2]) for r in rows],
-                    pa.string(),
+                    [r["del_source"] for r in rows], pa.string()
                 ),
             })
             f = os.path.join(absdir, "markers.parquet")
@@ -1275,21 +1277,15 @@ class LakehouseTable:
             )
             deltas = []
 
-        manifest = {
-            "job_id": job_id,
-            "batch_id": int(batch_id),
-            "seq_from": int(seq_from),
-            "seq_to": int(seq_to),
-            "events_read": int(events_read),
-            "events_applied": int(stats["n"]),
-            "deletes_applied": int(stats["d"] or 0),
-            "min_doc_id": stats["lo"],
-            "max_doc_id": stats["hi"],
-            "committed_at": datetime.now(timezone.utc).isoformat(),
-            "snapshot_version": self.version + 1,
-            "data_hash": int(stats["dh"] or 0),
-            "delta_files": prepared["files"],
-        }
+        manifest = self._manifest_row(
+            job_id, batch_id, seq_from, seq_to, events_read,
+            events_applied=int(stats["n"]),
+            deletes_applied=int(stats["d"] or 0),
+            min_doc_id=stats["lo"],
+            max_doc_id=stats["hi"],
+            data_hash=int(stats["dh"] or 0),
+            delta_files=prepared["files"],
+        )
         self._commit(
             buckets_map, l1_map, deltas, base_rows, manifest,
             extra_columns=extra_cols, markers=markers,
@@ -1523,14 +1519,17 @@ class LakehouseTable:
         )
         return self._write_bucketed(resolved, "base")
 
-    def _commit_noop(self, job_id, batch_id, seq_from, seq_to, events_read,
-                     markers: list | None = None) -> dict:
-        manifest = {
+    def _manifest_row(self, job_id, batch_id, seq_from, seq_to, events_read,
+                      **applied) -> dict:
+        """The manifest row (MANIFEST_SCHEMA) of the next snapshot.
+        ``applied`` overrides the no-op defaults: nothing applied, no
+        content hash, no delta files."""
+        return {
             "job_id": job_id,
             "batch_id": int(batch_id),
-            "seq_from": int(seq_from if seq_from is not None else -1),
-            "seq_to": int(seq_to if seq_to is not None else -1),
-            "events_read": int(events_read or 0),
+            "seq_from": int(seq_from),
+            "seq_to": int(seq_to),
+            "events_read": int(events_read),
             "events_applied": 0,
             "deletes_applied": 0,
             "min_doc_id": None,
@@ -1539,7 +1538,17 @@ class LakehouseTable:
             "snapshot_version": self.version + 1,
             "data_hash": None,
             "delta_files": None,
+            **applied,
         }
+
+    def _commit_noop(self, job_id, batch_id, seq_from, seq_to, events_read,
+                     markers: list | None = None) -> dict:
+        manifest = self._manifest_row(
+            job_id, batch_id,
+            -1 if seq_from is None else seq_from,
+            -1 if seq_to is None else seq_to,
+            events_read or 0,
+        )
         self._commit(
             dict(self._snap["buckets"]),
             {k: dict(v) for k, v in self._l1.items()},
@@ -1565,31 +1574,16 @@ class LakehouseTable:
         to_spill, tail = manifests[:-MANIFEST_TAIL], manifests[-MANIFEST_TAIL:]
         import pyarrow as pa
         import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
 
         os.makedirs(os.path.join(self.path, _MANIFEST_DIR), exist_ok=True)
         rel = os.path.join(_MANIFEST_DIR, f"m-{uuid.uuid4().hex}.parquet")
         cols = {
-            f.name: [m.get(f.name) for m in to_spill] for f in MANIFEST_SCHEMA.fields
+            f.name: [m[f.name] for m in to_spill] for f in MANIFEST_SCHEMA.fields
         }
-        schema = pa.schema(
-            [
-                ("job_id", pa.string()),
-                ("batch_id", pa.int64()),
-                ("seq_from", pa.int64()),
-                ("seq_to", pa.int64()),
-                ("events_read", pa.int64()),
-                ("events_applied", pa.int64()),
-                ("deletes_applied", pa.int64()),
-                ("min_doc_id", pa.string()),
-                ("max_doc_id", pa.string()),
-                ("committed_at", pa.string()),
-                ("snapshot_version", pa.int64()),
-                ("data_hash", pa.int64()),
-                ("delta_files", pa.list_(pa.string())),
-            ]
-        )
         pq.write_table(
-            pa.table(cols, schema=schema), os.path.join(self.path, rel)
+            pa.table(cols, schema=to_arrow_schema(MANIFEST_SCHEMA)),
+            os.path.join(self.path, rel),
         )
         vs = [int(m["snapshot_version"]) for m in to_spill]
         return tail, spill + [

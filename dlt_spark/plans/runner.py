@@ -2,8 +2,7 @@
 lifecycle (loader/service.go:18-105, SURVEY §3.1):
 
   watermark resolution → batch plan by commit_seq range → per batch:
-  range scan → normalize → salted repartition → LWW dedup → MERGE →
-  manifest commit.
+  range scan → normalize → LWW dedup → MERGE → manifest commit.
 
 The reference's pipeline machinery (collector goroutine, bounded
 channels, worker pools, memory governor — loader/service.go:82-97,
@@ -24,11 +23,10 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dlt_spark.adapters import MASS_DELETE, cascade_tombstone_rows, get_adapter
+from dlt_spark.adapters import cascade_tombstone_rows, get_adapter
 from dlt_spark.config import MAX_INFLIGHT
 from dlt_spark.lakehouse import LakehouseTable
 from dlt_spark.operators.dedup import dedup_lww
-from dlt_spark.operators.salt import salted_repartition
 from dlt_spark.session import partitions_for_rows
 from dlt_spark.sources.changelog import open_change_log, slice_change_log
 
@@ -94,23 +92,31 @@ def _parent_deletes(
     )
 
 
+def _collect_cap(adapter) -> int:
+    """Most distinct parent deletes of one batch collected to the
+    driver; above it the batch's parents stay a DataFrame."""
+    return getattr(adapter, "MAX_PRUNED_PARENTS", 65_536)
+
+
 def prefetch_deletes(events: DataFrame, adapter, table: LakehouseTable,
                      batch_width: int | None = None):
     """Delete prefetch for a ONE-batch slice (the steady-tick and
     streaming-epoch shape): a single cap-guarded collect decides
     small-vs-mass directly, with no per-batch count job.  Returns the
-    collected parent-delete rows, ``MASS_DELETE`` above the adapter's
-    ``MAX_PRUNED_PARENTS``, or None when the adapter does not cascade
-    or the slice has no deletes — the ``del_rows`` of prepare_batch."""
+    collected parent-delete rows; above the adapter's
+    ``MAX_PRUNED_PARENTS`` the lazy ``_parent_deletes`` DataFrame of
+    ``events`` instead (a mass purge never materializes driver-side);
+    None when the adapter does not cascade or the slice has no deletes
+    — the ``del_rows`` of prepare_batch."""
     if not getattr(adapter, "cascade_deletes", False):
         return None
-    cap = getattr(adapter, "MAX_PRUNED_PARENTS", 65_536)
+    cap = _collect_cap(adapter)
     rows = (
         _parent_deletes(events, table.n_buckets, batch_width)
         .limit(cap + 1).collect()
     )
     if len(rows) > cap:
-        return MASS_DELETE
+        return _parent_deletes(events, table.n_buckets)
     return rows or None
 
 
@@ -124,8 +130,6 @@ def prepare_batch(
     cascade_mode: str = "eager",
     use_arrow_udf: bool = False,
     materialize: bool = False,
-    salt: bool = False,
-    salt_partitions: int | None = None,
 ) -> dict:
     """The per-batch ingest core shared by ``run_incremental`` (one call
     per planned batch) and streaming sync (one per epoch): normalize →
@@ -133,9 +137,9 @@ def prepare_batch(
     delta for ``table.commit_delta``; touches no table state.
 
     ``del_rows`` is the batch's prefetched parent deletes: None (no
-    deletes, or a non-cascading adapter), the collected rows, or
-    ``MASS_DELETE`` (too many to collect — derived from ``events`` as a
-    DataFrame).  ``materialize`` passes through to ``expand_deletes``
+    deletes, or a non-cascading adapter), the collected (p, del_seq,
+    del_source, b) rows, or the same columns as a DataFrame (too many
+    to collect).  ``materialize`` passes through to ``expand_deletes``
     (eager mode only)."""
     normalized = adapter.normalize(events, use_arrow_udf=use_arrow_udf)
     markers_delta = None
@@ -143,13 +147,7 @@ def prepare_batch(
         # Equality-delete markers (opt-in): ONE tiny parquet write of
         # (parent, del_seq, source) rides the batch's atomic commit; no
         # candidate scan, no tombstone rows, no phase B.
-        if del_rows is MASS_DELETE:
-            dels = _parent_deletes(events, table.n_buckets)
-        else:
-            # collected sparse path: hand the rows straight to the
-            # driver-side pyarrow writer — zero Spark jobs
-            dels = [(r["p"], r["del_seq"], r["del_source"]) for r in del_rows]
-        markers_delta = table.prepare_markers(dels)
+        markers_delta = table.prepare_markers(del_rows)
     elif del_rows is not None:
         # Eager cascade: tombstones for the table's and this batch's own
         # children are unioned into the batch, riding the dedup + write
@@ -157,20 +155,11 @@ def prepare_batch(
         normalized = adapter.expand_deletes(
             normalized, table, del_rows=del_rows, materialize=materialize,
         )
-    # Salting is OFF by default: the LWW dedup is a hash aggregate
-    # with map-side partial aggregation, which already collapses a
-    # hot key inside each map task before the shuffle — the classic
-    # "hot key floods one reducer" failure mode does not apply.
-    # salt=True adds an explicit spreading shuffle for stages that
-    # DO need balanced key-local work (e.g. order-dependent grouped
-    # UDFs); it costs one extra shuffle per batch (SURVEY §2.7 X4).
-    spread = (
-        salted_repartition(normalized, num_partitions=salt_partitions)
-        if salt
-        else normalized
-    )
+    # Hot keys need no spreading step: dedup_lww's map-side partial
+    # aggregate collapses a key to one row per map task before its
+    # shuffle (SURVEY §2.7 X4).
     prepared = table.prepare_delta(
-        dedup_lww(spread, with_counts=True), job_id, batch_id
+        dedup_lww(normalized, with_counts=True), job_id, batch_id
     )
     if markers_delta is not None:
         prepared["markers_delta"] = markers_delta
@@ -189,8 +178,6 @@ def run_incremental(
     force: bool = False,
     use_arrow_udf: bool = False,
     schema: str = "tokens",
-    salt: bool = False,
-    salt_partitions: int | None = None,
     # pipelining depth swept at the sf0.1 bench point (3.15M events, 8
     # batches, local[32]; within-session, interleaved, median of 3 with
     # tmpfs kept flat): 3→131k, 4→166k, 5→138k, 6→109k ev/s.  Across
@@ -340,7 +327,6 @@ def run_incremental(
                 # concurrent-prepare shape iff the gap is non-empty —
                 # the materialization A/B in expand_deletes
                 materialize=eager and wm0 + 1 <= lo - 1,
-                salt=salt, salt_partitions=salt_partitions,
             )
             if eager:
                 prepared["_cascade_ctx"] = (wm0,)
@@ -431,18 +417,11 @@ def run_incremental(
             cand = parts[0]
             for p in parts[1:]:
                 cand = cand.unionByName(p)
-            # delete parents of THIS batch: the prefetched rows (broadcast,
-            # no log re-scan); a mass delete derives them from the raw log
-            # slice and stays a shuffle join
-            dels = del_batches[batch_id]
-            if dels is MASS_DELETE:
-                dels = _parent_deletes(
-                    slice_change_log(log_df, lo, hi, log_part_width),
-                    table.n_buckets,
-                )
-            # counts column so the merged commit keeps exact events_read
-            # semantics without an LWW pass here
-            tombs = cascade_tombstone_rows(cand, dels).withColumn(
+            # delete parents of THIS batch as prefetched: collected rows
+            # (broadcast, no log re-scan) or a mass delete's DataFrame
+            # over the raw log slice (a shuffle join).  The counts column
+            # keeps exact events_read semantics without an LWW pass here.
+            tombs = cascade_tombstone_rows(cand, del_batches[batch_id]).withColumn(
                 "_n_events", F.lit(1).cast("long")
             )
             # coalesce keeps the slim delta at a few files instead of one
@@ -470,10 +449,11 @@ def run_incremental(
         # per-batch collect, no residue job); the candidate lookup is
         # handed its pruning set.  Driver memory is CAPPED (VERDICT r3
         # wrong-#1): a per-batch count runs first, and any batch above
-        # ``mass_delete_parents`` distinct delete rows is marked
-        # MASS_DELETE instead of collected — its parent set then stays a
-        # DataFrame end to end (adapter + phase-B join), so a GDPR-style
-        # purge of millions of parents never materializes driver-side.
+        # the adapter's MAX_PRUNED_PARENTS distinct delete rows gets the
+        # lazy _parent_deletes DataFrame of its own log slice instead of
+        # collected rows — its parent set then stays a DataFrame end to
+        # end (adapter + phase-B join), so a GDPR-style purge of
+        # millions of parents never materializes driver-side.
         # Delete batches don't barrier: blanket tombstones are
         # LWW-idempotent, so the lookup reads stale table state and the
         # gap is settled by phase B at commit (see _gap_tombstones).
@@ -491,16 +471,19 @@ def run_incremental(
                 if rows is not None:
                     del_batches[work[0][0]] = rows
             else:
-                mass_delete_parents = getattr(adapter, "MAX_PRUNED_PARENTS", 65_536)
+                cap = _collect_cap(adapter)
                 d = _parent_deletes(rng, table.n_buckets, batch_width)
                 counts = {
                     int(r["bid"]): r["c"]
                     for r in d.groupBy("bid").agg(F.count("*").alias("c")).collect()
                 }
-                small = [b for b, c in counts.items() if c <= mass_delete_parents]
-                for b, c in counts.items():
-                    if c > mass_delete_parents:
-                        del_batches[b] = MASS_DELETE
+                small = [b for b, c in counts.items() if c <= cap]
+                for b, lo, hi in work:
+                    if counts.get(b, 0) > cap:
+                        del_batches[b] = _parent_deletes(
+                            slice_change_log(log_df, lo, hi, log_part_width),
+                            table.n_buckets,
+                        )
                 if small:
                     for r in d.where(F.col("bid").isin(small)).collect():
                         del_batches.setdefault(int(r["bid"]), []).append(r)

@@ -102,6 +102,36 @@ def test_cli_connection_settings_reach_run_incremental(
     assert all(kw["cascade_mode"] == "eager" for kw in captured_runs)
 
 
+def test_cli_sync_restores_signal_handlers(spark, tmp_path, captured_runs):
+    """`sync` installs its graceful-stop handlers only for the loop: an
+    in-process caller gets its own SIGINT/SIGTERM handlers back."""
+    before = {s: signal.getsignal(s) for s in (signal.SIGINT, signal.SIGTERM)}
+    assert main(["sync", "--log", str(tmp_path / "log"),
+                 "--table", str(tmp_path / "tbl"), "--max-rounds", "1"]) == 0
+    assert len(captured_runs) == 1
+    after = {s: signal.getsignal(s) for s in (signal.SIGINT, signal.SIGTERM)}
+    assert after == before
+
+
+def test_cli_verify_counts_spilled_batches(spark, tmp_path, monkeypatch, capsys):
+    """`verify` checks every batch of the job, including those whose
+    manifest rows spilled out of the snapshot to sidecars."""
+    import dlt_spark.lakehouse as lakehouse
+
+    monkeypatch.setattr(lakehouse, "MANIFEST_TAIL", 3)
+    log, tbl = str(tmp_path / "log"), str(tmp_path / "tbl")
+    write_change_log(generate_change_log(spark, 800, n_keys=60, seed=5),
+                     log, part_width=100)
+    res = run_incremental(spark, log, tbl, batch_width=100, n_buckets=4,
+                          log_part_width=100)
+    assert res.batches_applied == 8
+    assert LakehouseTable.load(spark, tbl)._snap["manifest_spill"]
+
+    assert main(["verify", "--table", tbl]) == 0
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out["ok"] + out["failed"] + out["window_closed"] == 8
+
+
 def test_one_max_inflight_default():
     import inspect
 

@@ -1,6 +1,6 @@
 """Unit tests per operator (SURVEY §5): LWW tie-breaking incl.
-tombstone ordering, batch planning, normalizer edge cases, salted
-repartition determinism, deterministic ids."""
+tombstone ordering, the hot-key plan of the dedup, batch planning,
+normalizer edge cases, deterministic ids."""
 
 from __future__ import annotations
 
@@ -12,7 +12,6 @@ from pyspark.sql import Row
 from dlt_spark.functions.ids import deterministic_row_id
 from dlt_spark.functions.normalize import normalize_events
 from dlt_spark.operators.dedup import dedup_lww
-from dlt_spark.operators.salt import salted_repartition
 from dlt_spark.plans.runner import plan_batches
 from dlt_spark.schemas import CHANGE_EVENT_SCHEMA
 
@@ -67,6 +66,28 @@ def test_lww_multiple_keys_independent(spark):
     assert out["a"]["op"] == "D" and out["b"]["op"] == "I"
 
 
+def test_lww_hot_key_collapses_map_side(spark):
+    """X4 (hot keys): the dedup aggregates partially inside each map
+    task before its one shuffle on doc_id, so a key holding half the
+    rows reaches the reducer as at most one row per map task.  No other
+    exchange (a spreading shuffle) is planned."""
+    rows = [_ev(i, "hot" if i % 2 else f"k{i}", "U", [i]) for i in range(400)]
+    out = dedup_lww(_events_df(spark, rows))
+    hot = [r for r in out.collect() if r["doc_id"] == "hot"]
+    assert len(hot) == 1 and hot[0]["commit_seq"] == 399
+
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    plan = plan.split("== Initial Plan ==")[0].splitlines()
+    exchanges = [i for i, line in enumerate(plan) if "Exchange " in line]
+    assert len(exchanges) == 1
+    assert "hashpartitioning(doc_id" in plan[exchanges[0]]
+    # the tree prints children below parents: the partial aggregate
+    # feeds the exchange
+    partial = [i for i, line in enumerate(plan) if "partial_max_by" in line]
+    assert partial and min(partial) > exchanges[0]
+
+
 # ---------------------------------------------------------------------------
 # P2/L2: batch planning
 # ---------------------------------------------------------------------------
@@ -104,26 +125,6 @@ def test_normalizer_native_and_arrow_agree(spark):
         assert list(rows["c"]["tokens"]) == [7] and rows["c"]["n_tok"] == 1
         assert rows["d"]["tokens"] is None and rows["d"]["n_tok"] is None
         assert list(rows["e"]["tokens"]) == [] and rows["e"]["n_tok"] == 0
-
-
-# ---------------------------------------------------------------------------
-# X4: salted repartition
-# ---------------------------------------------------------------------------
-
-def test_salted_repartition_preserves_rows_and_is_deterministic(spark):
-    df = _events_df(spark, [_ev(i, "hot", "I", [i]) for i in range(100)])
-    a = salted_repartition(df, num_partitions=8, salt_buckets=4)
-    assert a.count() == 100
-    # hot key spread over >1 partition
-    parts = a.withColumn("p", F.spark_partition_id()).select("p").distinct().count()
-    assert parts > 1
-    # deterministic: same rows land in same partitions on recompute
-    m1 = {r["commit_seq"]: r["p"] for r in
-          a.withColumn("p", F.spark_partition_id()).collect()}
-    m2 = {r["commit_seq"]: r["p"] for r in
-          salted_repartition(df, num_partitions=8, salt_buckets=4)
-          .withColumn("p", F.spark_partition_id()).collect()}
-    assert m1 == m2
 
 
 # ---------------------------------------------------------------------------
