@@ -77,7 +77,13 @@ from dlt_spark.metafs import LocalMetaFS, MetaFS
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
-from dlt_spark.schemas import MANIFEST_SCHEMA, TARGET_SCHEMA
+from dlt_spark.schemas import (
+    DELETE_PARENTS_SCHEMA,
+    MANIFEST_SCHEMA,
+    TARGET_SCHEMA,
+    local_frame,
+    rows_to_arrow,
+)
 from dlt_spark.session import partitions_for_rows
 
 _SNAP_DIR = "_snapshots"
@@ -149,7 +155,16 @@ def _bucket_col(key_expr: str, n_buckets: int):
     schema buckets child rows by their PARENT id so whole documents
     co-locate and parent-keyed lookups bucket-prune, the Iceberg
     partition-transform analog)."""
-    return F.pmod(F.xxhash64(F.expr(key_expr)), F.lit(n_buckets)).cast("int")
+    return F.expr(f"CAST(pmod(xxhash64({key_expr}), {int(n_buckets)}) AS INT)")
+
+
+def _bucket_in(buckets):
+    """``_bucket IN (…)`` as ONE SQL expression: ``Column.isin`` builds
+    one literal Column per bucket, each a driver→JVM round trip."""
+    ids = sorted({int(b) for b in buckets})
+    if not ids:
+        return F.lit(False)
+    return F.expr(f"_bucket IN ({', '.join(map(str, ids))})")
 
 
 def _lww_winner(cols: list[str]):
@@ -578,7 +593,7 @@ class LakehouseTable:
             schema = _read_schema(extras=extras).add(
                 StructField("_bucket", IntegerType(), False)
             )
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         # physical read schema: logical extras + any renamed-away
         # physical columns (same ddl as their logical target)
         ddl_of = dict(extras)
@@ -678,9 +693,7 @@ class LakehouseTable:
 
         def _bucket_filter(df: DataFrame) -> DataFrame:
             if buckets is not None:
-                df = df.where(
-                    F.col("_bucket").isin([int(b) for b in buckets])
-                )
+                df = df.where(_bucket_in(buckets))
             return _project(df)
 
         def _project(df: DataFrame) -> DataFrame:
@@ -764,7 +777,7 @@ class LakehouseTable:
         if buckets is not None:
             # prunes sibling residues in coarser-modulus base entries
             # and the unbucketed L0 rows
-            df = df.where(F.col("_bucket").isin([int(b) for b in buckets]))
+            df = df.where(_bucket_in(buckets))
         if columns is not None:
             keep = list(dict.fromkeys(
                 [*columns, "doc_id", "_commit_seq", "_deleted", "_row_id"]
@@ -801,7 +814,7 @@ class LakehouseTable:
         [v_min, v_max] index before any file opens — the caller must
         still row-filter, this only guarantees every in-window row is
         present."""
-        tail = self.spark.createDataFrame(self._snap["manifests"], MANIFEST_SCHEMA)
+        tail = local_frame(self.spark, self._snap["manifests"], MANIFEST_SCHEMA)
         spilled = self._spilled_manifests_df(from_version, to_version)
         return tail if spilled is None else spilled.unionByName(tail)
 
@@ -987,21 +1000,11 @@ class LakehouseTable:
             rows = list(dels)
             if not rows:
                 return None
-            import pyarrow as pa
             import pyarrow.parquet as pq
 
             os.makedirs(absdir, exist_ok=True)
-            tbl = pa.table({
-                "p": pa.array([str(r["p"]) for r in rows], pa.string()),
-                "del_seq": pa.array(
-                    [int(r["del_seq"]) for r in rows], pa.int64()
-                ),
-                "del_source": pa.array(
-                    [r["del_source"] for r in rows], pa.string()
-                ),
-            })
             f = os.path.join(absdir, "markers.parquet")
-            pq.write_table(tbl, f)
+            pq.write_table(rows_to_arrow(rows, DELETE_PARENTS_SCHEMA), f)
             return {"files": [os.path.relpath(f, self.path)],
                     "rows": len(rows)}
         from pyspark.sql import Observation
@@ -1572,17 +1575,12 @@ class LakehouseTable:
         if len(manifests) <= 2 * MANIFEST_TAIL:
             return manifests, spill
         to_spill, tail = manifests[:-MANIFEST_TAIL], manifests[-MANIFEST_TAIL:]
-        import pyarrow as pa
         import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
 
         os.makedirs(os.path.join(self.path, _MANIFEST_DIR), exist_ok=True)
         rel = os.path.join(_MANIFEST_DIR, f"m-{uuid.uuid4().hex}.parquet")
-        cols = {
-            f.name: [m[f.name] for m in to_spill] for f in MANIFEST_SCHEMA.fields
-        }
         pq.write_table(
-            pa.table(cols, schema=to_arrow_schema(MANIFEST_SCHEMA)),
+            rows_to_arrow(to_spill, MANIFEST_SCHEMA),
             os.path.join(self.path, rel),
         )
         vs = [int(m["snapshot_version"]) for m in to_spill]

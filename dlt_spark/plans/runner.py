@@ -20,6 +20,7 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -69,32 +70,36 @@ def check_cascade_mode(cascade_mode: str) -> None:
         )
 
 
-def _parent_deletes(
+def _delete_rows(
     events: DataFrame, n_buckets: int, batch_width: int | None = None
 ) -> DataFrame:
-    """Distinct parent deletes of a raw events slice as (p, del_seq,
-    del_source, b) rows — ``b`` is the parent's bucket residue, and with
-    ``batch_width`` a leading ``bid`` column names the batch."""
+    """Parent deletes of a raw events slice as (p, del_seq, del_source,
+    b) rows, duplicate deliveries included — ``b`` is the parent's
+    bucket residue, and with ``batch_width`` a leading ``bid`` column
+    names the batch."""
     bid = (
         [F.floor(F.col("commit_seq") / batch_width).cast("long").alias("bid")]
         if batch_width is not None else []
     )
-    return (
-        events.where(F.col("op") == "D")
-        .select(
-            *bid,
-            F.col("doc_id").alias("p"),
-            F.col("commit_seq").alias("del_seq"),
-            F.col("source").alias("del_source"),
-            F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int").alias("b"),
-        )
-        .distinct()
+    return events.where(F.col("op") == "D").select(
+        *bid,
+        F.col("doc_id").alias("p"),
+        F.col("commit_seq").alias("del_seq"),
+        F.col("source").alias("del_source"),
+        F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).cast("int").alias("b"),
     )
 
 
+def _parent_deletes(
+    events: DataFrame, n_buckets: int, batch_width: int | None = None
+) -> DataFrame:
+    """The distinct ``_delete_rows`` of a raw events slice."""
+    return _delete_rows(events, n_buckets, batch_width).distinct()
+
+
 def _collect_cap(adapter) -> int:
-    """Most distinct parent deletes of one batch collected to the
-    driver; above it the batch's parents stay a DataFrame."""
+    """Most parent-delete rows of one batch collected to the driver;
+    above it the batch's parents stay a DataFrame."""
     return getattr(adapter, "MAX_PRUNED_PARENTS", 65_536)
 
 
@@ -103,21 +108,27 @@ def prefetch_deletes(events: DataFrame, adapter, table: LakehouseTable,
     """Delete prefetch for a ONE-batch slice (the steady-tick and
     streaming-epoch shape): a single cap-guarded collect decides
     small-vs-mass directly, with no per-batch count job.  Returns the
-    collected parent-delete rows; above the adapter's
-    ``MAX_PRUNED_PARENTS`` the lazy ``_parent_deletes`` DataFrame of
-    ``events`` instead (a mass purge never materializes driver-side);
-    None when the adapter does not cascade or the slice has no deletes
-    — the ``del_rows`` of prepare_batch."""
+    collected parent-delete rows, deduplicated on the driver; above the
+    adapter's ``MAX_PRUNED_PARENTS`` delete rows the lazy
+    ``_parent_deletes`` DataFrame of ``events`` instead (a mass purge
+    never materializes driver-side); None when the adapter does not
+    cascade or the slice has no deletes — the ``del_rows`` of
+    prepare_batch.
+
+    The collect is shuffle-free: a ``distinct()`` before the limit is an
+    exchange, i.e. two jobs under AQE.  The cap therefore counts the
+    delete rows actually collected, duplicate deliveries included —
+    the driver memory it exists to bound."""
     if not getattr(adapter, "cascade_deletes", False):
         return None
     cap = _collect_cap(adapter)
     rows = (
-        _parent_deletes(events, table.n_buckets, batch_width)
+        _delete_rows(events, table.n_buckets, batch_width)
         .limit(cap + 1).collect()
     )
     if len(rows) > cap:
         return _parent_deletes(events, table.n_buckets)
-    return rows or None
+    return list(dict.fromkeys(rows)) or None
 
 
 def prepare_batch(
@@ -555,10 +566,19 @@ def run_incremental(
         gap_futs: dict = {}
         with ThreadPoolExecutor(max_workers=max(1, max_inflight)) as pool, \
                 ThreadPoolExecutor(max_workers=max(2, max_inflight)) as gap_pool:
+            # Each task carries the caller's job tags and local
+            # properties (job group, description) into its pool thread,
+            # so cancelJobGroup stops the batch's write jobs and the UI
+            # attributes them.  One wrap per task: a wrap's property
+            # copy is shared by every thread that runs it, and Spark
+            # records each running query's execution id in it.
+            def inherit(f):
+                return inheritable_thread_target(spark)(f)
+
             for b, lo, hi in work:
-                futs[b] = pool.submit(_prepare, b, lo, hi)
+                futs[b] = pool.submit(inherit(_prepare), b, lo, hi)
                 if b in del_batches and cascade_mode != "markers":
-                    gap_futs[b] = gap_pool.submit(_gap_task, b, lo, hi)
+                    gap_futs[b] = gap_pool.submit(inherit(_gap_task), b, lo, hi)
             try:
                 for i, (batch_id, lo, hi) in enumerate(work):
                     if fail_after_batches is not None and i >= fail_after_batches:

@@ -12,6 +12,7 @@ Payload (BASELINE.json input_hint): pre-tokenized training sequences
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -110,3 +111,37 @@ MANIFEST_SCHEMA = StructType(
         StructField("delta_files", ArrayType(StringType()), True),
     ]
 )
+
+# A batch's parent deletes as the cascade consumes them: collected by
+# ``runner.prefetch_deletes``, broadcast by
+# ``adapters.cascade_tombstone_rows``, written as equality-delete
+# markers by ``LakehouseTable.prepare_markers``.
+DELETE_PARENTS_SCHEMA = StructType(
+    [
+        StructField("p", StringType(), True),
+        StructField("del_seq", LongType(), True),
+        StructField("del_source", StringType(), True),
+    ]
+)
+
+
+def rows_to_arrow(rows, schema: StructType):
+    """Driver-side rows (anything indexed by field name: ``Row``,
+    dict) as a pyarrow table of ``schema``; fields outside the schema
+    are dropped."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return pa.table(
+        {f.name: [r[f.name] for r in rows] for f in schema.fields},
+        schema=to_arrow_schema(schema),
+    )
+
+
+def local_frame(spark: SparkSession, rows, schema: StructType) -> DataFrame:
+    """Driver-side rows as a DataFrame through Arrow.  The plan is a
+    JVM ``LocalTableScan`` (zero partitions when ``rows`` is empty);
+    ``createDataFrame`` on a Python list instead pickles the rows into
+    a ``PythonRDD`` that starts one Python worker per default-parallelism
+    partition whenever it executes, even for no rows."""
+    return spark.createDataFrame(rows_to_arrow(rows, schema), schema)

@@ -70,6 +70,19 @@ _BASE_CONF: dict[str, str] = {
     # a user adding a wide-payload single-field query can re-enable via
     # extra_conf.
     "spark.sql.optimizer.enableJsonExpressionOptimization": "false",
+    # DataFrame debugging off: with it on, PySpark 4.1 wraps every
+    # Column/functions call to capture its Python call site — an active
+    # session lookup, a conf read and a JVM origin set/clear, each a
+    # driver→JVM round trip.  Measured on perfbench cascade_sync ticks
+    # (2k events, 4-vCPU VM, local[4], median of 6): together with
+    # Arrow-built delete parents and one-expression bucket filters,
+    # Py4J calls per tick fell 2,729 → 1,121.  What it gives up:
+    # analysis-error messages no longer carry the DataFrame query
+    # context (the Python line that built the failing expression).
+    # Re-enable through get_spark(extra_conf={"spark.python.sql.
+    # dataFrameDebugging.enabled": "true"}); PySpark reads the flag
+    # once per process, from the first active session.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
     # Shuffle/broadcast/spill codec: measured per core count — zstd wins
     # at low parallelism (bandwidth-bound: 13.8s vs lz4 15.8s at
     # local[8]) but loses badly once cores saturate (22.2s vs 15.6s at

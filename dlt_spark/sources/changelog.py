@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
-from dlt_spark.schemas import CHANGE_EVENT_SCHEMA
+from dlt_spark.schemas import CHANGE_EVENT_SCHEMA, local_frame
 
 DEFAULT_PART_WIDTH = 100_000
 
@@ -79,7 +79,7 @@ def open_change_log(
                 if p in have
             ]
             if not dirs:
-                return spark.createDataFrame([], _LOG_SCHEMA)
+                return local_frame(spark, [], _LOG_SCHEMA)
             return (
                 spark.read.schema(_LOG_SCHEMA)
                 .option("basePath", path)
