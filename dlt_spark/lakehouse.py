@@ -33,9 +33,20 @@ semantics rely on, on plain Parquet:
    At the 10^10-event design point every inter-compaction read was a
    ~100 TB Exchange before this; now the base never crosses the wire.
 4. **Amortized leveled compaction** — L0 (per-commit, unbucketed) folds
-   into bucket-pure L1 every ``max_deltas`` commits (cost O(L0));
-   buckets whose L1 count hits a staggered cap fold into fresh bases
-   (cost O(bucket), never O(table)).  (Iceberg: rewrite_data_files.)
+   into L1 every ``max_deltas`` commits (cost O(L0)).  A fold writes
+   row-sized entries: one file per residue class under the modulus its
+   row count justifies (about one file per ROWS_PER_PARTITION rows,
+   capped at ``n_buckets``), so a small fold writes one or a few files,
+   not one per bucket.  An L1 key whose file count hits a staggered cap
+   is compacted alone: a key coarser than ``n_buckets`` is re-resolved
+   from its own files, in place or split to the finer modulus its rows
+   justify, without reading base (cost O(key)); a full-modulus key
+   folds with its base into a fresh base (cost O(bucket), never
+   O(table)).  Invariant: base entries are disjoint and one-row-per-
+   key; L1 and L0 are a pending multiset of any moduli, resolved at
+   read — LWW is order-independent, so compacting any subset of the
+   pending files, alone or into base, leaves the read unchanged.
+   (Iceberg: rewrite_data_files.)
 5. **Idempotent commit manifests** — each snapshot carries the applied
    ``(job_id, batch_id)`` set as compressed ID RANGES plus per-batch
    lineage/metrics rows (SURVEY §2.5 M4).  Replaying an applied batch
@@ -65,6 +76,7 @@ from __future__ import annotations
 
 import bisect
 import json
+import math
 import os
 import time
 import uuid
@@ -218,6 +230,14 @@ def _key_matches_residues(key: str, residues: set[int]) -> bool:
     CURRENT modulus?  (m divides the current modulus by construction.)"""
     m, r = _bkey_parse(key)
     return any(b % m == r for b in residues)
+
+
+def _row_modulus(rows: int, ceiling: int) -> int:
+    """Modulus for writing ``rows`` rows of one residue class split
+    ``ceiling`` ways at most: about one class per ROWS_PER_PARTITION
+    rows (partitions_for_rows), kept a divisor of ``ceiling`` so the
+    written classes nest in the table's buckets."""
+    return math.gcd(partitions_for_rows(rows, 1, ceiling), ceiling)
 
 
 def _keys_overlap(k1: str, k2: str) -> bool:
@@ -400,13 +420,14 @@ class LakehouseTable:
             #     per ingest commit, UNBUCKETED (written straight out of
             #     the dedup shuffle: zero extra shuffle on the hot path);
             #     "rows" feeds the tiered-read plan choice
-            #   L1 "l1":      bucket(str) → {"files": [...], "rows": n} —
-            #     bucket-pure, resolved folds of L0 (cost O(L0) every
+            #   L1 "l1":      "m:r" key → {"files": [...], "rows": n} —
+            #     resolved folds of L0, one file per residue class under
+            #     a row-sized modulus m | n_buckets (cost O(L0) every
             #     max_deltas commits, independent of table size)
             #   base "buckets": bucket(str) → [rel paths] — bucket-pure,
-            #     fully resolved; rebuilt bucket-locally when a bucket's
-            #     L1 count hits its (staggered) cap — cost O(bucket),
-            #     never O(table)
+            #     fully resolved; rebuilt bucket-locally when a full-
+            #     modulus L1 key hits its (staggered) cap — cost
+            #     O(bucket), never O(table)
             "buckets": {},
             "base_rows": 0,  # exact base row count (parquet footers)
             "l1": {},
@@ -1314,10 +1335,11 @@ class LakehouseTable:
         got = self._raw(files).agg(_content_hash().alias("dh")).collect()[0]["dh"]
         return int(got or 0) == m["data_hash"]
 
-    def _write_partitions(self, rows: int) -> int:
+    def _write_partitions(self, rows: int, modulus: int | None = None) -> int:
         """Reduce-partition count for a bucket-clustered write of
-        ``rows`` rows: partitions_for_rows, floored at
-        defaultParallelism and capped at 4× the bucket count.  Callers
+        ``rows`` rows into ``modulus`` residue classes (default: the
+        table's ``n_buckets``): partitions_for_rows, floored at
+        defaultParallelism and capped at 4× the class count.  Callers
         pass counts they already hold (snapshot ``rows``, parquet
         footers), so sizing runs no job.  The repartition is explicit,
         so AQE cannot coalesce it: every reduce task is scheduled even
@@ -1327,24 +1349,28 @@ class LakehouseTable:
         colliding buckets on one reducer (B=64, p=32: 5 buckets on one
         task), 4× keeps the expected max load ≈2 (sf0.1 L0 fold at
         local[32], medians of 3: p=32 3.02 s / 64 2.86 / 128 2.78 / 256
-        2.75).  The layout is the same at any count: a bucket never
-        splits across reducers, so each write stays bucket-pure with one
-        file per bucket, and per-task memory stays bounded by bucket
-        size."""
+        2.75).  The layout is the same at any count: a class never
+        splits across reducers, so each write emits one file per class,
+        and per-task memory stays bounded by class size."""
         return partitions_for_rows(
-            rows, self.spark.sparkContext.defaultParallelism, 4 * self.n_buckets
+            rows, self.spark.sparkContext.defaultParallelism,
+            4 * (modulus or self.n_buckets),
         )
 
     def _write_bucketed(
         self, df: DataFrame, prefix: str, rows: int | None = None,
+        modulus: int | None = None,
     ) -> dict[str, list[str]]:
-        """Write ``df`` partitioned by bucket; returns bucket key →
+        """Write ``df`` partitioned by residue class under ``modulus``
+        (default ``n_buckets``); returns ``"modulus:class"`` key →
         written file paths.  ``rows`` (about how many rows ``df`` holds)
         sizes a repartition by bucket first; pass None when ``df`` is
-        already clustered by bucket (_resolve_bucketed output)."""
+        already clustered by class (_resolve_bucketed output, whose
+        ``_bucket`` is already reduced to ``modulus``)."""
+        m = modulus or self.n_buckets
         commit_abs = os.path.join(self.path, _DATA_DIR, f"{prefix}-{uuid.uuid4().hex}")
         if rows is not None:
-            df = df.repartition(self._write_partitions(rows), "_bucket")
+            df = df.repartition(self._write_partitions(rows, m), "_bucket")
         (
             df.write.mode("overwrite")
             .option("parquet.enable.dictionary", "false")
@@ -1352,12 +1378,14 @@ class LakehouseTable:
             .parquet(commit_abs)
         )
         return {
-            _bkey(self.n_buckets, int(b)): ps
+            _bkey(m, int(b)): ps
             for b, ps in _list_bucket_files(commit_abs, self.path).items()
         }
 
-    def _resolve_bucketed(self, df: DataFrame, rows: int) -> DataFrame:
-        """Single-shuffle resolve + bucket-cluster (VERDICT r2 next-#8):
+    def _resolve_bucketed(
+        self, df: DataFrame, rows: int, modulus: int | None = None,
+    ) -> DataFrame:
+        """Single-shuffle resolve + class-cluster (VERDICT r2 next-#8):
         repartition on _bucket (the ONE exchange), then group by
         (_bucket, doc_id).  _bucket is a pure function of the bucket
         expr, so the groups are identical to _resolve's — and because
@@ -1367,15 +1395,25 @@ class LakehouseTable:
         shape (groupBy doc_id, then repartition _bucket for the write)
         moved the L0 volume over the wire twice; this moves it once.
         Output rows stay physically clustered by _bucket, so the
-        partitionBy write that follows emits one file per (task, bucket)
-        with no further movement — _write_bucketed(rows=None).  ``rows``
-        (the input row count) sizes the exchange."""
+        partitionBy write that follows emits one file per class with no
+        further movement — _write_bucketed(rows=None) at the same
+        ``modulus`` (default ``n_buckets``; a divisor reduces _bucket to
+        its residue first).  ``rows`` (the input row count) sizes the
+        exchange."""
+        if modulus not in (None, self.n_buckets):
+            df = df.withColumn("_bucket", F.col("_bucket") % modulus)
         return (
-            df.repartition(self._write_partitions(rows), "_bucket")
+            df.repartition(self._write_partitions(rows, modulus), "_bucket")
             .groupBy("_bucket", "doc_id")
             .agg(_lww_winner(df.columns))
             .select("w.*")
         )
+
+    def _over_cap(self, key: str, entry: dict) -> bool:
+        """Has L1 entry ``key`` reached its file cap?  The cap is
+        staggered by residue (r % 4) so compactions spread over fold
+        points instead of one global spike."""
+        return len(entry["files"]) >= self.max_deltas + _bkey_parse(key)[1] % 4
 
     def _fold_and_maybe_major(
         self,
@@ -1385,40 +1423,62 @@ class LakehouseTable:
         new_extras: list,
         base_rows: int,
     ) -> tuple[dict, dict, int]:
-        """L0 → L1 fold + the bucket-local major-compaction check —
-        the shared tail of a fold-triggering batch commit and the
-        explicit ``fold_pending`` maintenance op.  Mutates and returns
-        (buckets_map, l1_map, base_rows); the caller owns publishing.
+        """L0 → L1 fold + the L1 compaction check — the shared tail of a
+        fold-triggering batch commit and the explicit ``fold_pending``
+        maintenance op.  Mutates and returns (buckets_map, l1_map,
+        base_rows); the caller owns publishing.
 
-        Fold: resolve + bucket the pending commits.  Cost O(sum of L0),
-        independent of table size.  Per-bucket row counts come from the
-        written parquet footers (driver-side, no extra job) and keep
-        the tiered read's metadata exact.
+        Fold: resolve the pending commits into row-sized L1 entries
+        (_fold_l0).  Cost O(sum of L0), independent of table size.  Row
+        counts come from the written parquet footers (driver-side, no
+        extra job) and keep the tiered read's metadata exact.
 
-        Major: rebuild base for buckets whose L1 count hits a
-        per-bucket STAGGERED cap (b % 4 jitter spreads majors over fold
-        points instead of one global O(table) spike).  Cost O(selected
-        buckets)."""
-        folded = self._fold_l0(deltas, extras=new_extras)
-        for b, entry in folded.items():
-            cur = l1_map.setdefault(b, {"files": [], "rows": 0})
-            cur["files"] = cur["files"] + entry["files"]
-            cur["rows"] += entry["rows"]
+        Compaction of keys at their staggered file cap (_over_cap):
+        - a key coarser than ``n_buckets`` is re-resolved ALONE from its
+          own files (_rewrite_l1), in place or split to the finer
+          modulus its rows justify.  It never reads base: base entries
+          stay disjoint and one-row-per-key, and L1 is a pending
+          multiset resolved at read, so any subset of it may be
+          resolved on its own.  Coarsest first, each key at most once
+          per call — a split appends a file to finer keys, which may
+          cross their own cap in the same call;
+        - a full-modulus key folds with its base into a fresh base
+          (_major_compact).  Cost O(selected buckets), never O(table):
+          a coarse L1 key never joins a major, since one over every
+          bucket would make it rewrite the whole table."""
+        n = self.n_buckets
+        _add_l1(l1_map, self._fold_l0(deltas, extras=new_extras))
+        done: set[str] = set()
+        while True:
+            coarse = sorted(
+                (
+                    k for k, e in l1_map.items()
+                    if k not in done and _bkey_parse(k)[0] < n
+                    and self._over_cap(k, e)
+                ),
+                key=_bkey_parse,
+            )
+            if not coarse:
+                break
+            done.add(coarse[0])
+            entry = l1_map.pop(coarse[0])
+            _add_l1(l1_map, self._rewrite_l1(coarse[0], entry, new_extras))
         over = [
             b for b, e in l1_map.items()
-            if len(e["files"]) >= self.max_deltas + (_bkey_parse(b)[1] % 4)
+            if _bkey_parse(b)[0] == n and self._over_cap(b, e)
         ]
         if over:
-            # After a split_buckets() the maps hold entries at mixed
-            # moduli; a rewrite of residue class X must include every
-            # entry whose class INTERSECTS X (classes are
-            # hierarchical, so this is the connected component).
-            # Pulling in a coarser pre-split base entry rewrites it
-            # at the current modulus as a side effect — splits are
-            # realized lazily, one touched component at a time.
+            # After a split_buckets() base holds entries at mixed moduli;
+            # a rewrite of residue class X must include every base entry
+            # whose class INTERSECTS X (classes are hierarchical, so
+            # this is the connected component) to keep base disjoint.
+            # Pulling in a coarser pre-split base entry rewrites it at
+            # the current modulus as a side effect — splits are realized
+            # lazily, one touched component at a time.
             comp = set(over)
             pool = set(buckets_map) | {
-                k for k, e in l1_map.items() if e["files"]
+                k for k, e in l1_map.items()
+                if e["files"] and _bkey_parse(k)[0] == n
             }
             grew = True
             while grew:
@@ -1438,11 +1498,7 @@ class LakehouseTable:
                 del buckets_map[b]
             buckets_map.update(compacted)
             for b in comp:
-                if b in l1_map:
-                    if _bkey_parse(b)[0] == self.n_buckets:
-                        l1_map[b] = {"files": [], "rows": 0}
-                    else:
-                        del l1_map[b]  # stale-modulus key retired
+                l1_map.pop(b, None)
             base_rows += _parquet_rows(
                 self._abs([p for ps in compacted.values() for p in ps])
             ) - old_rows
@@ -1456,10 +1512,10 @@ class LakehouseTable:
         half-``max_deltas`` point of a bulk run so the fold's Spark job
         backfills cores idled by the remaining batches' prepare
         stragglers, instead of the whole fold landing serialized at the
-        run's last commit (measured: the fold is ~3.5 s of a ~10.8 s
-        8-batch replay when paid at the end).  Includes the same
-        staggered major-compaction check as the commit-path fold, so
-        L1 growth stays bounded no matter which path folds.  Pins ONE
+        run's last commit (see the runner's early-fold comment for
+        what the folds cost).  Includes the same L1 compaction check
+        as the commit-path fold, so L1 growth stays bounded no matter
+        which path folds.  Pins ONE
         snapshot (same torn-view rule as compact()); a concurrent
         commit surfaces as SnapshotConflict at publish — callers treat
         the fold as opportunistic and retry or skip.  State-equivalent:
@@ -1488,16 +1544,41 @@ class LakehouseTable:
 
     def _fold_l0(self, deltas: list, extras: list | None = None) -> dict[str, dict]:
         """L0 → L1: resolve the pending unbucketed commits among
-        themselves and write them bucket-pure.  O(L0 volume), ONE
-        exchange (see _resolve_bucketed).  Returns bucket → {"files":
-        [...], "rows": n} with exact row counts read from the parquet
-        footers (driver-side metadata, no Spark job)."""
+        themselves and write them row-sized: one file per residue class
+        under the modulus their row count justifies (_row_modulus —
+        about one class per ROWS_PER_PARTITION rows, at most
+        ``n_buckets``, which folds of ≥ n_buckets × ROWS_PER_PARTITION
+        rows reach).  O(L0 volume), ONE exchange (see
+        _resolve_bucketed).  Returns ``"m:r"`` key → {"files": [...],
+        "rows": n} with exact row counts read from the parquet footers
+        (driver-side metadata, no Spark job)."""
         paths = [p for e in deltas for p in e["files"]]
-        resolved = self._resolve_bucketed(
-            self._raw(self._abs(paths), extras=extras),
-            sum(e["rows"] for e in deltas),
+        rows = sum(e["rows"] for e in deltas)
+        return self._write_l1(
+            self._raw(self._abs(paths), extras=extras), rows,
+            _row_modulus(rows, self.n_buckets),
         )
-        out = self._write_bucketed(resolved, "l1")
+
+    def _rewrite_l1(self, key: str, entry: dict, extras: list | None) -> dict[str, dict]:
+        """Compact ONE coarse L1 entry ``"m:r"`` alone: resolve its own
+        files and write them at the modulus its rows justify — ``m``
+        again (in place, one file) or finer, splitting the class into
+        about rows / ROWS_PER_PARTITION children.  Reads no base and no
+        other L1 key: the entry is part of the pending multiset, which
+        read() resolves whole, so resolving a subset of it early cannot
+        change any winner.  O(entry)."""
+        m, _ = _bkey_parse(key)
+        return self._write_l1(
+            self._raw(self._abs(entry["files"]), extras=extras),
+            entry["rows"], m * _row_modulus(entry["rows"], self.n_buckets // m),
+        )
+
+    def _write_l1(self, df: DataFrame, rows: int, modulus: int) -> dict[str, dict]:
+        """Resolve ``df`` (about ``rows`` rows) and write it as L1
+        entries at ``modulus``, one file per class."""
+        out = self._write_bucketed(
+            self._resolve_bucketed(df, rows, modulus), "l1", modulus=modulus
+        )
         return {
             b: {"files": ps, "rows": _parquet_rows(self._abs(ps))}
             for b, ps in out.items()
@@ -2033,6 +2114,14 @@ def _parquet_rows(paths: list[str]) -> int:
     import pyarrow.parquet as pq
 
     return sum(pq.ParquetFile(p).metadata.num_rows for p in paths)
+
+
+def _add_l1(l1_map: dict, entries: dict[str, dict]) -> None:
+    """Append freshly written L1 ``entries`` to ``l1_map`` in place."""
+    for b, entry in entries.items():
+        cur = l1_map.setdefault(b, {"files": [], "rows": 0})
+        cur["files"] = cur["files"] + entry["files"]
+        cur["rows"] += entry["rows"]
 
 
 def _list_bucket_files(commit_abs: str, table_root: str) -> dict[str, list[str]]:

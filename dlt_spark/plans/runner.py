@@ -539,13 +539,16 @@ def run_incremental(
         # gap jobs overlap each other and the main pipeline instead of
         # chaining through the prepare futures.
         # Overlapped L0→L1 folds (round 6, guide §2.6): on a bulk run
-        # the commit-path fold lands at the run's LAST commit — ~3.5 s
-        # of a ~10.8 s 8-batch replay spent serialized while the
-        # prepare pool sits idle.  Instead, once enough commits have
-        # landed that a fold is inevitable this run (d + remaining ≥
-        # max_deltas), fold at the half-max_deltas point: the fold's
-        # Spark job runs beside the remaining batches' prepares instead
-        # of after them.  It does NOT yield to them: a prepare runs
+        # the commit-path fold lands at the run's LAST commit, spent
+        # serialized while the prepare pool sits idle (traced perfbench
+        # backfill, 40k events, 4-vCPU VM at local[4]: the replay's two
+        # folds take 1.7 s against a ~6.3 s replay; 3.1 s before folds
+        # wrote row-sized L1 entries instead of one file per bucket).
+        # Instead, once enough commits have landed that a fold is
+        # inevitable this run (d + remaining ≥ max_deltas), fold at
+        # the half-max_deltas point: the fold's Spark job runs beside
+        # the remaining batches' prepares instead of after them.  It
+        # does NOT yield to them: a prepare runs
         # several jobs, and under FIFO scheduling every job submitted
         # after the fold's queues behind it, so a fold stage can hold
         # every core while prepare stages wait; sizing the fold's

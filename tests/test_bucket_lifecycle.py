@@ -95,11 +95,14 @@ def test_split_bucket_eager_rewrite(spark, tmp_path):
     assert _state(LakehouseTable.load(spark, path)) == expected
 
 
-def test_mixed_modulus_converges_through_compaction(spark, tmp_path):
+def test_mixed_modulus_converges_through_compaction(spark, tmp_path, monkeypatch):
     """Ingest keeps running across a split: folds write at the new
     modulus, majors pull in the coarse pre-split base entries (closure)
     and retire them — the table converges to the new modulus with state
-    identical to an oracle LWW fold."""
+    identical to an oracle LWW fold.  ROWS_PER_PARTITION is lowered so
+    these small folds are row-sized at the full modulus, the layout of
+    a fold of ≥ n_buckets × ROWS_PER_PARTITION rows."""
+    monkeypatch.setattr("dlt_spark.session.ROWS_PER_PARTITION", 10)
     path = str(tmp_path / "t")
     t = LakehouseTable.create(spark, path, n_buckets=4, max_deltas=2)
     t.merge(_updates(spark, 0, 999), "j", 0, 0, 999)
@@ -122,6 +125,8 @@ def test_mixed_modulus_converges_through_compaction(spark, tmp_path):
         .collect()
     }
     assert _state(t) == oracle and oracle
+    # majors ran at the new modulus (through the pre-split closure)
+    assert any(_bkey_parse(k)[0] == 8 for k in t._snap["buckets"])
     # and a full compact() retires every stale-modulus entry
     t.compact()
     assert all(_bkey_parse(k)[0] == 8 for k in t._snap["buckets"] if t._snap["buckets"][k])

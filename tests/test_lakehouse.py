@@ -483,37 +483,155 @@ def test_write_partitions_sized_from_rows(spark, tmp_path):
     assert partitions_for_rows(394_000, 32 // 4, 128) == 32
 
 
-def test_small_fold_exchange_and_one_l1_file_per_bucket(spark, tmp_path, monkeypatch):
-    """A small L0→L1 fold plans hashpartitioning(_bucket,
-    defaultParallelism), not 4× n_buckets, and the layout is unchanged:
-    each fold adds exactly one L1 file to every bucket it touches."""
-    import re
+def test_fold_writes_row_sized_l1_entries(spark, tmp_path, monkeypatch):
+    """An L0→L1 fold of r rows writes at most partitions_for_rows(r, 1,
+    n_buckets) files, keyed at that modulus — a small fold writes one
+    file, not one per bucket.  A fold of ≥ n_buckets ×
+    ROWS_PER_PARTITION rows keeps the full layout: one file per bucket
+    under the table's modulus.  The read is unchanged by either."""
+    from dlt_spark.lakehouse import _bkey_parse
+    from dlt_spark.session import partitions_for_rows
 
-    dp = spark.sparkContext.defaultParallelism
-    path = str(tmp_path / "t")
-    t = LakehouseTable.create(spark, path, n_buckets=16)
-    plans = []
-    write_bucketed = LakehouseTable._write_bucketed
-
-    def spy(self, df, *a, **kw):
-        plans.append(df._jdf.queryExecution().executedPlan().toString())
-        return write_bucketed(self, df, *a, **kw)
-
-    monkeypatch.setattr(LakehouseTable, "_write_bucketed", spy)
-    for fold in range(2):
+    def fold(t, first_batch):
         for b in range(3):
-            lo = (fold * 3 + b) * 300
-            t.merge(_updates(spark, lo, lo + 299), "job", fold * 3 + b)
+            lo = (first_batch + b) * 300
+            t.merge(_updates(spark, lo, lo + 299), "job", first_batch + b)
         t = t.refresh()
+        rows = sum(e["rows"] for e in t._snap["deltas"])
+        before = sorted(map(tuple, t.read().select("doc_id", "_commit_seq").collect()))
+        l1_before = {k: list(e["files"]) for k, e in t._snap["l1"].items()}
         assert t.fold_pending() == 3
         t = t.refresh()
-        counts = {len(e["files"]) for e in t._snap["l1"].values() if e["files"]}
-        assert counts == {fold + 1}, counts
-    assert len(plans) == 2
-    for plan in plans:
-        assert re.findall(r"hashpartitioning\(_bucket#\d+, (\d+)\)", plan) == [
-            str(dp)
-        ], plan
+        new = {
+            k: [p for p in e["files"] if p not in l1_before.get(k, [])]
+            for k, e in t._snap["l1"].items()
+        }
+        new = {k: ps for k, ps in new.items() if ps}
+        after = sorted(map(tuple, t.read().select("doc_id", "_commit_seq").collect()))
+        assert after == before
+        return t, rows, new
+
+    t = LakehouseTable.create(spark, str(tmp_path / "small"), n_buckets=16)
+    t, rows, new = fold(t, 0)
+    m = partitions_for_rows(rows, 1, 16)
+    assert m < 16
+    assert {_bkey_parse(k)[0] for k in new} == {m}
+    assert sum(len(ps) for ps in new.values()) <= m
+    assert all(len(ps) == 1 for ps in new.values())
+
+    # a fold of ≥ n_buckets × ROWS_PER_PARTITION rows: one file per bucket
+    monkeypatch.setattr("dlt_spark.session.ROWS_PER_PARTITION", 10)
+    t = LakehouseTable.create(spark, str(tmp_path / "large"), n_buckets=16)
+    t, rows, new = fold(t, 0)
+    assert rows >= 16 * 10
+    assert {_bkey_parse(k)[0] for k in new} == {16}
+    assert len(new) == 16 and all(len(ps) == 1 for ps in new.values())
+
+
+def _lww_live(rows):
+    """Independent LWW fold of deduped update rows (one per doc_id per
+    batch, batches over disjoint seq ranges): the newest row per key
+    wins; deletes remove the key.  Returns {(doc_id, commit_seq)}."""
+    win = {}
+    for r in rows:
+        cur = win.get(r["doc_id"])
+        if cur is None or r["commit_seq"] > cur["commit_seq"]:
+            win[r["doc_id"]] = r
+    return {(d, r["commit_seq"]) for d, r in win.items() if r["op"] != "D"}
+
+
+def _fold_run(spark, t, seen, folds, monkeypatch):
+    """Run ``folds`` commit-path folds of max_deltas small merges each
+    into ``t`` (seq 1000 on; ``seen`` holds the update rows already
+    applied), checking after every fold that read() equals an
+    independent LWW fold of every update so far and that no L1 key
+    exceeds max_deltas + 4 files.  Returns (table, the ``buckets``
+    argument of every _major_compact call, the key of every coarse L1
+    rewrite)."""
+    majors, rewrites = [], []
+    major, rewrite = LakehouseTable._major_compact, LakehouseTable._rewrite_l1
+
+    def major_spy(self, buckets_map, l1_map, buckets, *a, **kw):
+        majors.append(list(buckets))
+        return major(self, buckets_map, l1_map, buckets, *a, **kw)
+
+    def rewrite_spy(self, key, *a, **kw):
+        rewrites.append(key)
+        return rewrite(self, key, *a, **kw)
+
+    monkeypatch.setattr(LakehouseTable, "_major_compact", major_spy)
+    monkeypatch.setattr(LakehouseTable, "_rewrite_l1", rewrite_spy)
+    log = generate_change_log(spark, 1000 + 200 * folds * t.max_deltas,
+                              n_keys=400, seed=17)
+    from dlt_spark.functions.normalize import normalize_events
+
+    seen = list(seen)
+    batch = 0
+    for _ in range(folds):
+        for _ in range(t.max_deltas):
+            lo = 1000 + batch * 200
+            upd = dedup_lww(
+                normalize_events(log.where(F.col("commit_seq").between(lo, lo + 199))),
+                with_counts=True,
+            )
+            seen += upd.select("doc_id", "op", "commit_seq").collect()
+            t.merge(upd, "job", batch)
+            batch += 1
+        t = t.refresh()
+        assert t._snap["deltas"] == []  # the commit folded
+        got = {tuple(r) for r in t.read().select("doc_id", "_commit_seq").collect()}
+        assert got == _lww_live(seen)
+        assert max(len(e["files"]) for e in t._snap["l1"].values()) <= t.max_deltas + 4
+    return t, majors, rewrites
+
+
+def test_small_folds_compact_coarse_l1_without_base_rewrite(spark, tmp_path, monkeypatch):
+    """Long run of small folds over a base compacted at the full
+    modulus: each fold lands in the coarse key "1:0", which is
+    compacted alone every time it reaches its file cap.  No coarse key
+    ever joins a major, so base is never rewritten, read() stays equal
+    to an independent LWW fold and L1 stays bounded."""
+    from dlt_spark.lakehouse import _bkey_parse
+
+    t = LakehouseTable.create(spark, str(tmp_path / "t"), n_buckets=4, max_deltas=2)
+    seed = _updates(spark, 0, 999)
+    seen = seed.select("doc_id", "op", "commit_seq").collect()
+    t.merge(seed, "seed", 0)
+    t.compact()
+    base0 = dict(t._snap["buckets"])
+    assert base0 and {_bkey_parse(k)[0] for k in base0} == {4}
+    cap = t.max_deltas + 0  # the staggered cap of "1:0"
+    folds = 4 * cap
+    t, majors, rewrites = _fold_run(spark, t, seen, folds, monkeypatch)
+    assert majors == []
+    assert t._snap["buckets"] == base0
+    assert set(t._snap["l1"]) == {"1:0"}
+    assert rewrites and set(rewrites) == {"1:0"}
+    assert len(t._snap["l1"]["1:0"]["files"]) <= cap
+
+
+def test_coarse_l1_splits_then_majors_only_full_modulus(spark, tmp_path, monkeypatch):
+    """A coarse L1 key whose rows justify a finer modulus is rewritten
+    alone at it; only keys at the full modulus major into base, and a
+    major reads no coarse L1 key.  (ROWS_PER_PARTITION is lowered so
+    small folds exercise the row thresholds.)"""
+    from dlt_spark.lakehouse import _bkey_parse
+
+    monkeypatch.setattr("dlt_spark.session.ROWS_PER_PARTITION", 150)
+    t = LakehouseTable.create(spark, str(tmp_path / "t"), n_buckets=4, max_deltas=2)
+    seed = _updates(spark, 0, 999)
+    seen = seed.select("doc_id", "op", "commit_seq").collect()
+    t.merge(seed, "seed", 0)
+    t.compact()
+    assert {_bkey_parse(k)[0] for k in t._snap["buckets"]} == {4}
+    t, majors, rewrites = _fold_run(spark, t, seen, 4, monkeypatch)
+    moduli = {_bkey_parse(k)[0] for k in rewrites}
+    assert moduli and max(moduli) < 4
+    # the folds write at modulus 2, so full-modulus L1 keys come only
+    # from splits of the coarse keys
+    assert majors, "no full-modulus key reached its cap"
+    for comp in majors:
+        assert {_bkey_parse(k)[0] for k in comp} == {4}, comp
 
 
 def _jobs_started(spark, build, action):
@@ -588,12 +706,15 @@ def test_fold_pending_runs_major_compaction_check(spark, tmp_path):
     path = str(tmp_path / "t")
     t = LakehouseTable.create(spark, path, n_buckets=2, max_deltas=2)
     # 12 single-batch merges, folding by hand every 2 — L1 file counts
-    # cross the staggered cap (max_deltas + b%4) only via fold_pending
+    # cross the staggered cap (max_deltas + r%4) only via fold_pending
     for b in range(12):
         t.merge(_updates(spark, b * 150, b * 150 + 149), "job", b)
         if len(t._snap["deltas"]) >= 2:
             t.fold_pending()
-    assert t._snap["buckets"], "major compaction never ran"
+    # 6 folds without compaction would leave ≥ 6 L1 files
+    assert sum(len(e["files"]) for e in t._snap["l1"].values()) < 6, (
+        "L1 compaction never ran"
+    )
     for b, e in t._snap["l1"].items():
         cap = t.max_deltas + (int(b.split(":")[1]) % 4)
         assert len(e["files"]) < cap + 2
