@@ -5,9 +5,13 @@ What it proves: commit latency stays FLAT as table history grows —
 MANIFEST_TAIL spills to parquet sidecars and the applied set compresses
 to batch-id ranges; (b) per-epoch write cost stays O(batch) because the
 leveled compaction amortizes (L0 folds every max_deltas epochs, majors
-are bucket-local and staggered).
+are bucket-local and staggered); (c) read latency stays flat — every
+``--read-every`` epochs it times open + ``read()`` to a noop sink (the
+median of 3), and reports the least-squares slope of read seconds per
+100 epochs.
 
 Usage:  python bench/endurance.py [--epochs 500] [--events-per-epoch 2000]
+                                  [--read-every 25]
 Prints one JSON line; --write-md appends the summary to BENCH/ENDURANCE.md.
 """
 
@@ -28,6 +32,7 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--epochs", type=int, default=500)
     ap.add_argument("--events-per-epoch", type=int, default=2_000)
+    ap.add_argument("--read-every", type=int, default=25)
     ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "8"))
     ap.add_argument("--write-md", action="store_true")
     args = ap.parse_args()
@@ -50,6 +55,7 @@ def main() -> int:
     write_change_log(events, log_path, part_width=max(args.events_per_epoch, 50_000))
 
     lat = []
+    reads = []  # (epochs applied, open + read() seconds)
     snap_sizes = []  # per-epoch latest-snapshot size (flatness evidence)
     snap_dir = os.path.join(tbl_path, "_snapshots")
     for e in range(args.epochs):
@@ -64,6 +70,14 @@ def main() -> int:
         lat.append(time.monotonic() - t0)
         latest = sorted(os.listdir(snap_dir))[-1]
         snap_sizes.append(os.path.getsize(os.path.join(snap_dir, latest)))
+        if (e + 1) % args.read_every == 0:
+            took = []
+            for _ in range(3):
+                t0 = time.monotonic()
+                LakehouseTable.load(spark, tbl_path).read().write.format(
+                    "noop").mode("overwrite").save()
+                took.append(time.monotonic() - t0)
+            reads.append((e + 1, sorted(took)[1]))
 
     t = LakehouseTable.load(spark, tbl_path)
     snap_path = os.path.join(
@@ -77,6 +91,13 @@ def main() -> int:
         return xs[min(len(xs) - 1, int(p * len(xs)))]
 
     fifths = [lat[i : i + args.epochs // 5] for i in range(0, args.epochs, args.epochs // 5)]
+    read_slope = None
+    if len(reads) >= 2:
+        mx = statistics.mean(x for x, _ in reads)
+        my = statistics.mean(y for _, y in reads)
+        read_slope = 100 * sum((x - mx) * (y - my) for x, y in reads) / sum(
+            (x - mx) ** 2 for x, _ in reads
+        )
     out = {
         "metric": "endurance_commit_latency",
         "epochs": args.epochs,
@@ -86,6 +107,12 @@ def main() -> int:
         "max_sec": round(max(lat), 3),
         "median_by_fifth": [round(statistics.median(f), 3) for f in fifths if f],
         "snapshot_kb": round(snap_kb, 1),
+        "read_sec_by_epoch": [[x, round(y, 3)] for x, y in reads],
+        "read_slope_sec_per_100_epochs": (
+            None if read_slope is None else round(read_slope, 4)
+        ),
+        "pending_rows": t._pending()[1],
+        "base_rows": t._snap["base_rows"],
         # VERDICT r2 #1 evidence: snapshot stays O(n_buckets + tail)
         # while live base/L1 data files keep growing — the file LISTS
         # live in per-bucket sidecars, only touched buckets rewrite

@@ -32,21 +32,27 @@ semantics rely on, on plain Parquet:
        exactly when that shuffle is cheap or unavoidable.
    At the 10^10-event design point every inter-compaction read was a
    ~100 TB Exchange before this; now the base never crosses the wire.
-4. **Amortized leveled compaction** — L0 (per-commit, unbucketed) folds
-   into L1 every ``max_deltas`` commits (cost O(L0)).  A fold writes
-   row-sized entries: one file per residue class under the modulus its
-   row count justifies (about one file per ROWS_PER_PARTITION rows,
-   capped at ``n_buckets``), so a small fold writes one or a few files,
-   not one per bucket.  An L1 key whose file count hits a staggered cap
-   is compacted alone: a key coarser than ``n_buckets`` is re-resolved
-   from its own files, in place or split to the finer modulus its rows
-   justify, without reading base (cost O(key)); a full-modulus key
-   folds with its base into a fresh base (cost O(bucket), never
-   O(table)).  Invariant: base entries are disjoint and one-row-per-
-   key; L1 and L0 are a pending multiset of any moduli, resolved at
-   read — LWW is order-independent, so compacting any subset of the
-   pending files, alone or into base, leaves the read unchanged.
-   (Iceberg: rewrite_data_files.)
+4. **Amortized leveled compaction** — every ``max_deltas`` commits the
+   pending L0 (per-commit, unbucketed) folds, cost O(L0).  Every write
+   is row-sized: one file per residue class under the modulus its row
+   count justifies (about one file per ROWS_PER_PARTITION rows, capped
+   at ``n_buckets``), so a small table is a file or a few, not one per
+   bucket.  Ratio rule: when base and L1 together hold at most
+   BASE_OVER_PENDING_MIN × the fold's L0 rows, the fold resolves L0 ∪
+   L1 ∪ base into a fresh base and nothing stays pending — a fold reads
+   at most (1 + BASE_OVER_PENDING_MIN) × its own rows, and a caught-up
+   small table reads as a plain scan.  Otherwise L0 folds into L1.  An
+   L1 key whose file count hits a staggered cap is compacted: a key
+   coarser than ``n_buckets`` majors into the base entries it overlaps
+   under the same ratio (cost O(key)), or else is re-resolved from its
+   own files, in place or split to the finer modulus its rows justify;
+   a full-modulus key folds with its base into a fresh base (cost
+   O(bucket), never O(table)).  ``compact()`` is the fold's major
+   without the ratio test.  Invariant: base entries are disjoint
+   classes, one row per key; L1 and L0 are a pending multiset of any
+   moduli, resolved at read — LWW is order-independent, so compacting
+   any subset of the pending files, alone or into the base entries it
+   overlaps, leaves the read unchanged.  (Iceberg: rewrite_data_files.)
 5. **Idempotent commit manifests** — each snapshot carries the applied
    ``(job_id, batch_id)`` set as compressed ID RANGES plus per-batch
    lineage/metrics rows (SURVEY §2.5 M4).  Replaying an applied batch
@@ -209,12 +215,11 @@ def _content_hash():
 
 # ---------------------------------------------------------------------------
 # bucket keys are MODULUS-QUALIFIED: "m:r" = hash residue r under modulus
-# m.  n_buckets is the CURRENT write modulus; split_buckets() raises it
-# (Iceberg partition-spec-evolution analog), and because every historical
-# modulus divides the current one, an old entry (m, r) is exactly the
-# union of current residues {r, r+m, r+2m, …} — old files stay readable
-# and prunable without any rewrite; compaction rewrites them at the
-# current modulus as it touches them.
+# m.  n_buckets is the finest modulus; every write picks the modulus its
+# rows justify (_row_modulus), a divisor of n_buckets, so an entry (m, r)
+# is exactly the union of bucket residues {r, r+m, r+2m, …} — entries
+# of any modulus stay readable and prunable, and compaction
+# re-granulates them as their rows grow.
 # ---------------------------------------------------------------------------
 def _bkey(m: int, r: int) -> str:
     return f"{m}:{r}"
@@ -226,8 +231,8 @@ def _bkey_parse(key: str) -> tuple[int, int]:
 
 
 def _key_matches_residues(key: str, residues: set[int]) -> bool:
-    """Does entry (m, r) contain any of the given residues under the
-    CURRENT modulus?  (m divides the current modulus by construction.)"""
+    """Does entry (m, r) contain any of the given residues under
+    ``n_buckets``?  (m divides ``n_buckets`` by construction.)"""
     m, r = _bkey_parse(key)
     return any(b % m == r for b in residues)
 
@@ -241,9 +246,10 @@ def _row_modulus(rows: int, ceiling: int) -> int:
 
 
 def _keys_overlap(k1: str, k2: str) -> bool:
-    """Do two modulus-qualified residue classes intersect?  With all
-    moduli dividing the current one, classes are hierarchical: they
-    intersect iff the finer is congruent to the coarser."""
+    """Do two modulus-qualified residue classes intersect?  Row-sized
+    moduli form a divisor chain of ``n_buckets``, so classes are
+    hierarchical: they intersect iff the finer is congruent to the
+    coarser."""
     m1, r1 = _bkey_parse(k1)
     m2, r2 = _bkey_parse(k2)
     if m1 <= m2:
@@ -260,10 +266,10 @@ def suggest_n_buckets(
     so a fully-compacted bucket lands near ``target_bucket_bytes`` (2 GB
     default — large enough that bucket-local compaction amortizes, small
     enough that a major rewrite or a touched-bucket resolve is never a
-    multi-TB spike).  Rounded up to a power of two so later
-    ``split_buckets`` doublings keep every historical modulus dividing
-    the current one.  At the 10^10-event design point (~300 B/row → 3 TB
-    live) this gives 2048 buckets; a 100 TB table gets 65536."""
+    multi-TB spike).  Rounded up to a power of two, so the row-sized
+    moduli below it (powers of two) all divide it.  At the 10^10-event
+    design point (~300 B/row → 3 TB live) this gives 2048 buckets; a
+    100 TB table gets 65536."""
     want = max(1, (expected_rows * bytes_per_row) // target_bucket_bytes)
     n = 8
     while n < want and n < (1 << 20):
@@ -396,9 +402,10 @@ class LakehouseTable:
     ) -> "LakehouseTable":
         """CREATE TABLE IF NOT EXISTS (SURVEY §2.1 S6).  Pass
         ``expected_rows`` (with ``n_buckets=None``) to size the bucket
-        count from expected volume via ``suggest_n_buckets`` — under-
-        sized tables can later be re-granulated with ``split_buckets``
-        without rewriting data."""
+        count from expected volume via ``suggest_n_buckets``.
+        ``n_buckets`` is the finest modulus a write may use: entries
+        are written at the modulus their rows justify, so a small
+        table stays a few files whatever the bucket count."""
         if n_buckets is None:
             n_buckets = (
                 suggest_n_buckets(expected_rows) if expected_rows else 64
@@ -423,11 +430,13 @@ class LakehouseTable:
             #   L1 "l1":      "m:r" key → {"files": [...], "rows": n} —
             #     resolved folds of L0, one file per residue class under
             #     a row-sized modulus m | n_buckets (cost O(L0) every
-            #     max_deltas commits, independent of table size)
-            #   base "buckets": bucket(str) → [rel paths] — bucket-pure,
-            #     fully resolved; rebuilt bucket-locally when a full-
-            #     modulus L1 key hits its (staggered) cap — cost
-            #     O(bucket), never O(table)
+            #     max_deltas commits, independent of table size); empty
+            #     after a fold that majored into base
+            #   base "buckets": "m:r" key → [rel paths] — disjoint
+            #     classes at row-sized moduli, fully resolved; rebuilt by
+            #     a fold whose L0 outweighs base + L1 (ratio rule), or
+            #     class-locally when an L1 key hits its (staggered)
+            #     cap — cost O(L0) or O(class), never O(table)
             "buckets": {},
             "base_rows": 0,  # exact base row count (parquet footers)
             "l1": {},
@@ -681,12 +690,16 @@ class LakehouseTable:
         columns: list[str] | None = None,
     ) -> DataFrame:
         """Current table state (optionally restricted to buckets) —
-        tiered MoR resolve, see the module docstring §3.  Base files are
-        bucket-pure and one-row-per-key on disk; the pending (L0+L1) and
-        base row counts in the snapshot pick the plan without running a
-        job: the merge tiers only pay off when base ≫ pending (cost
-        model above BASE_OVER_PENDING_MIN) — on a small or delta-heavy
-        table the plain resolve is both simpler and faster.  ``tier``
+        tiered MoR resolve, see the module docstring §3.  Base entries
+        are disjoint residue classes, one row per key on disk; with
+        nothing pending the read is a plain base scan, no exchange —
+        the state every fold leaves on a table whose base is at most
+        BASE_OVER_PENDING_MIN × the fold's rows (module docstring §4).
+        Otherwise the pending (L0+L1) and base row counts in the
+        snapshot pick the plan without running a job: the merge tiers
+        only pay off when base ≫ pending (cost model above
+        BASE_OVER_PENDING_MIN) — on a small or delta-heavy table the
+        plain resolve is both simpler and faster.  ``tier``
         (2 or 3) overrides the choice (diagnostics/tests).  Tombstones
         filtered unless ``include_deleted``.
 
@@ -727,9 +740,9 @@ class LakehouseTable:
             ))
             return df.select(*[c for c in keep if c in df.columns])
 
-        # base entries written under an older (coarser) modulus contain
-        # sibling residues too — filter them out; entries at the current
-        # modulus are bucket-pure and skip the predicate entirely
+        # row-sized base entries coarser than n_buckets contain sibling
+        # residues too — filter them out; entries at the full modulus
+        # are bucket-pure and skip the predicate entirely
         mixed = any(_bkey_parse(k)[0] != snap["n_buckets"] for k in keys)
 
         def _base_filter(df: DataFrame) -> DataFrame:
@@ -1358,19 +1371,14 @@ class LakehouseTable:
         )
 
     def _write_bucketed(
-        self, df: DataFrame, prefix: str, rows: int | None = None,
-        modulus: int | None = None,
+        self, df: DataFrame, prefix: str, modulus: int | None = None,
     ) -> dict[str, list[str]]:
-        """Write ``df`` partitioned by residue class under ``modulus``
-        (default ``n_buckets``); returns ``"modulus:class"`` key →
-        written file paths.  ``rows`` (about how many rows ``df`` holds)
-        sizes a repartition by bucket first; pass None when ``df`` is
-        already clustered by class (_resolve_bucketed output, whose
-        ``_bucket`` is already reduced to ``modulus``)."""
+        """Write ``df``, already clustered by residue class under
+        ``modulus`` (default ``n_buckets``; _resolve_bucketed output,
+        whose ``_bucket`` is reduced to ``modulus``), partitioned by
+        class; returns ``"modulus:class"`` key → written file paths."""
         m = modulus or self.n_buckets
         commit_abs = os.path.join(self.path, _DATA_DIR, f"{prefix}-{uuid.uuid4().hex}")
-        if rows is not None:
-            df = df.repartition(self._write_partitions(rows, m), "_bucket")
         (
             df.write.mode("overwrite")
             .option("parquet.enable.dictionary", "false")
@@ -1396,10 +1404,9 @@ class LakehouseTable:
         moved the L0 volume over the wire twice; this moves it once.
         Output rows stay physically clustered by _bucket, so the
         partitionBy write that follows emits one file per class with no
-        further movement — _write_bucketed(rows=None) at the same
-        ``modulus`` (default ``n_buckets``; a divisor reduces _bucket to
-        its residue first).  ``rows`` (the input row count) sizes the
-        exchange."""
+        further movement — _write_bucketed at the same ``modulus``
+        (default ``n_buckets``; a divisor reduces _bucket to its residue
+        first).  ``rows`` (the input row count) sizes the exchange."""
         if modulus not in (None, self.n_buckets):
             df = df.withColumn("_bucket", F.col("_bucket") % modulus)
         return (
@@ -1428,26 +1435,68 @@ class LakehouseTable:
         maintenance op.  Mutates and returns (buckets_map, l1_map,
         base_rows); the caller owns publishing.
 
-        Fold: resolve the pending commits into row-sized L1 entries
-        (_fold_l0).  Cost O(sum of L0), independent of table size.  Row
-        counts come from the written parquet footers (driver-side, no
-        extra job) and keep the tiered read's metadata exact.
+        Fold into base: when base and L1 together hold at most
+        BASE_OVER_PENDING_MIN × the L0 rows, L0 ∪ L1 ∪ base resolve
+        once into a fresh row-sized base (_major_compact) and nothing
+        stays pending.  L0 rows are unbucketed, so a fold overlaps all
+        of base and L1; the ratio caps what it reads at (1 +
+        BASE_OVER_PENDING_MIN) × its own rows — O(L0), never O(table).
+        It is read()'s tier-3 cut: below it every read shuffles all of
+        base anyway, so rewriting base once at fold time costs about
+        one read, and the reads after it are plain scans.
 
-        Compaction of keys at their staggered file cap (_over_cap):
-        - a key coarser than ``n_buckets`` is re-resolved ALONE from its
-          own files (_rewrite_l1), in place or split to the finer
-          modulus its rows justify.  It never reads base: base entries
-          stay disjoint and one-row-per-key, and L1 is a pending
-          multiset resolved at read, so any subset of it may be
-          resolved on its own.  Coarsest first, each key at most once
-          per call — a split appends a file to finer keys, which may
-          cross their own cap in the same call;
-        - a full-modulus key folds with its base into a fresh base
-          (_major_compact).  Cost O(selected buckets), never O(table):
-          a coarse L1 key never joins a major, since one over every
-          bucket would make it rewrite the whole table."""
+        Otherwise fold into L1: resolve the pending commits into
+        row-sized L1 entries (_fold_l0).  Cost O(sum of L0).  Row counts
+        come from the written parquet footers (driver-side, no extra
+        job) and keep the tiered read's metadata exact.  Then compact
+        the L1 keys at their staggered file cap (_over_cap):
+        - a key coarser than ``n_buckets`` majors into the base entries
+          it overlaps when those hold at most BASE_OVER_PENDING_MIN ×
+          its rows (cost O(key)); over a larger base it is re-resolved
+          ALONE from its own files (_rewrite_l1), in place or split to
+          the finer modulus its rows justify.  Coarsest first, each key
+          at most once per call — a split appends a file to finer keys,
+          which may cross their own cap in the same call;
+        - the full-modulus keys major together with the base entries
+          they overlap (cost O(selected buckets), never O(table)).
+        Base entries stay disjoint and one-row-per-key; L1 is a pending
+        multiset resolved at read, so any subset of it may be resolved
+        alone or into the base entries it overlaps."""
         n = self.n_buckets
+        l1_rows = sum(e["rows"] for e in l1_map.values())
+        if base_rows + l1_rows <= BASE_OVER_PENDING_MIN * sum(e["rows"] for e in deltas):
+            buckets_map, base_rows = self._major_compact(
+                buckets_map, base_rows, list(l1_map.values()) + deltas, new_extras,
+            )
+            return buckets_map, {}, base_rows
         _add_l1(l1_map, self._fold_l0(deltas, extras=new_extras))
+
+        def compact_keys(keys: list[str], floor: int) -> None:
+            """Major ``keys`` into the base entries they overlap, at a
+            modulus no coarser than ``floor`` — or, for one coarse key
+            over a larger base, rewrite it alone."""
+            nonlocal base_rows
+            old = {b: ps for b, ps in buckets_map.items()
+                   if any(_keys_overlap(b, k) for k in keys)}
+            old_rows = _parquet_rows(self._abs([p for ps in old.values() for p in ps]))
+            if floor < n:  # one coarse key
+                if old_rows > BASE_OVER_PENDING_MIN * l1_map[keys[0]]["rows"]:
+                    _add_l1(l1_map, self._rewrite_l1(
+                        keys[0], l1_map.pop(keys[0]), new_extras))
+                    return
+                # base entries are disjoint classes, so the ones a key
+                # overlaps either all lie inside it or are one class
+                # holding it: writing no coarser than the coarsest of
+                # them keeps the new entries inside what they replace
+                floor = min([floor, *(_bkey_parse(b)[0] for b in old)])
+            new, new_rows = self._major_compact(
+                old, old_rows, [l1_map.pop(k) for k in keys], new_extras, floor,
+            )
+            for b in old:
+                del buckets_map[b]
+            buckets_map.update(new)
+            base_rows += new_rows - old_rows
+
         done: set[str] = set()
         while True:
             coarse = sorted(
@@ -1461,47 +1510,13 @@ class LakehouseTable:
             if not coarse:
                 break
             done.add(coarse[0])
-            entry = l1_map.pop(coarse[0])
-            _add_l1(l1_map, self._rewrite_l1(coarse[0], entry, new_extras))
+            compact_keys([coarse[0]], _bkey_parse(coarse[0])[0])
         over = [
             b for b, e in l1_map.items()
             if _bkey_parse(b)[0] == n and self._over_cap(b, e)
         ]
         if over:
-            # After a split_buckets() base holds entries at mixed moduli;
-            # a rewrite of residue class X must include every base entry
-            # whose class INTERSECTS X (classes are hierarchical, so
-            # this is the connected component) to keep base disjoint.
-            # Pulling in a coarser pre-split base entry rewrites it at
-            # the current modulus as a side effect — splits are realized
-            # lazily, one touched component at a time.
-            comp = set(over)
-            pool = set(buckets_map) | {
-                k for k, e in l1_map.items()
-                if e["files"] and _bkey_parse(k)[0] == n
-            }
-            grew = True
-            while grew:
-                grew = False
-                for k in pool - comp:
-                    if any(_keys_overlap(k, c) for c in comp):
-                        comp.add(k)
-                        grew = True
-            old_base = [k for k in comp if k in buckets_map]
-            old_rows = _parquet_rows(
-                self._abs([p for b in old_base for p in buckets_map[b]])
-            )
-            compacted = self._major_compact(
-                buckets_map, l1_map, sorted(comp), old_rows, extras=new_extras
-            )
-            for b in old_base:
-                del buckets_map[b]
-            buckets_map.update(compacted)
-            for b in comp:
-                l1_map.pop(b, None)
-            base_rows += _parquet_rows(
-                self._abs([p for ps in compacted.values() for p in ps])
-            ) - old_rows
+            compact_keys(over, n)
         return buckets_map, l1_map, base_rows
 
     def fold_pending(self) -> int:
@@ -1519,8 +1534,9 @@ class LakehouseTable:
         snapshot (same torn-view rule as compact()); a concurrent
         commit surfaces as SnapshotConflict at publish — callers treat
         the fold as opportunistic and retry or skip.  State-equivalent:
-        read() before == read() after (fold only moves rows L0 → L1).
-        Returns the number of L0 commits folded (0 = nothing pending)."""
+        read() before == read() after (fold only moves rows L0 → L1
+        or base).  Returns the number of L0 commits folded (0 = nothing
+        pending)."""
         snap = self._snap  # pin ONE snapshot — see _pending docstring
         deltas = snap["deltas"]
         if not deltas:
@@ -1550,13 +1566,12 @@ class LakehouseTable:
         ``n_buckets``, which folds of ≥ n_buckets × ROWS_PER_PARTITION
         rows reach).  O(L0 volume), ONE exchange (see
         _resolve_bucketed).  Returns ``"m:r"`` key → {"files": [...],
-        "rows": n} with exact row counts read from the parquet footers
-        (driver-side metadata, no Spark job)."""
+        "rows": n} (see _write_resolved)."""
         paths = [p for e in deltas for p in e["files"]]
         rows = sum(e["rows"] for e in deltas)
-        return self._write_l1(
+        return self._write_resolved(
             self._raw(self._abs(paths), extras=extras), rows,
-            _row_modulus(rows, self.n_buckets),
+            _row_modulus(rows, self.n_buckets), "l1",
         )
 
     def _rewrite_l1(self, key: str, entry: dict, extras: list | None) -> dict[str, dict]:
@@ -1568,40 +1583,54 @@ class LakehouseTable:
         read() resolves whole, so resolving a subset of it early cannot
         change any winner.  O(entry)."""
         m, _ = _bkey_parse(key)
-        return self._write_l1(
+        return self._write_resolved(
             self._raw(self._abs(entry["files"]), extras=extras),
             entry["rows"], m * _row_modulus(entry["rows"], self.n_buckets // m),
+            "l1",
         )
 
-    def _write_l1(self, df: DataFrame, rows: int, modulus: int) -> dict[str, dict]:
-        """Resolve ``df`` (about ``rows`` rows) and write it as L1
-        entries at ``modulus``, one file per class."""
-        out = self._write_bucketed(
-            self._resolve_bucketed(df, rows, modulus), "l1", modulus=modulus
-        )
+    def _write_resolved(
+        self, df: DataFrame, rows: int, modulus: int, prefix: str, keep=None,
+    ) -> dict[str, dict]:
+        """Resolve ``df`` (about ``rows`` rows), filter the winners
+        through ``keep`` if given, and write them at ``modulus``, one
+        file per class.  Returns ``"m:r"`` key → {"files": [...],
+        "rows": n} with exact row counts read from the parquet footers
+        (driver-side metadata, no Spark job)."""
+        resolved = self._resolve_bucketed(df, rows, modulus)
+        if keep is not None:
+            resolved = keep(resolved)
+        out = self._write_bucketed(resolved, prefix, modulus=modulus)
         return {
             b: {"files": ps, "rows": _parquet_rows(self._abs(ps))}
             for b, ps in out.items()
         }
 
     def _major_compact(
-        self, buckets_map: dict, l1_map: dict, buckets: list[str],
-        base_rows: int, extras: list | None = None,
-    ) -> dict[str, list[str]]:
-        """Bucket-local major compaction: fold base+L1 of ONLY the given
-        bucket entries into fresh bases at the CURRENT modulus.
-        O(selected component), never O(table), one exchange.  Caller
-        passes a closed set (every entry whose residue class intersects
-        the set is in it) and must have folded L0 first (L0 rows are
-        unbucketed and could otherwise supersede rows of these buckets).
-        ``base_rows`` is the row count of those buckets' base files."""
-        paths = [p for b in buckets for p in buckets_map.get(b, [])]
-        paths += [p for b in buckets for p in l1_map.get(b, {}).get("files", [])]
-        l1_rows = sum(l1_map[b]["rows"] for b in buckets if b in l1_map)
-        resolved = self._resolve_bucketed(
-            self._raw(self._abs(paths), extras=extras), base_rows + l1_rows,
+        self, base: dict, base_rows: int, pending: list[dict],
+        extras: list | None = None, floor: int = 1, keep=None,
+    ) -> tuple[dict[str, list[str]], int]:
+        """Major compaction: resolve the base entries ``base`` (holding
+        ``base_rows`` rows) with the ``pending`` entries (L1 or L0, each
+        {"files", "rows"}) into fresh base entries, ONE exchange, cost
+        O(rows read).  The write is row-sized: at _row_modulus of the
+        rows read, and no coarser than ``floor``, the coarsest class
+        the new entries replace.  ``base`` must hold every base entry
+        whose class meets the rows written (L0 is unbucketed: a major
+        that consumes L0 takes all of base), so base stays disjoint.
+        ``keep`` filters the resolved rows before the write.  Returns
+        (new base entries, their exact row count)."""
+        rows = base_rows + sum(e["rows"] for e in pending)
+        paths = [p for ps in base.values() for p in ps]
+        paths += [p for e in pending for p in e["files"]]
+        out = self._write_resolved(
+            self._raw(self._abs(paths), extras=extras), rows,
+            max(_row_modulus(rows, self.n_buckets), floor), "base", keep,
         )
-        return self._write_bucketed(resolved, "base")
+        return (
+            {b: e["files"] for b, e in out.items()},
+            sum(e["rows"] for e in out.values()),
+        )
 
     def _manifest_row(self, job_id, batch_id, seq_from, seq_to, events_read,
                       **applied) -> dict:
@@ -1808,90 +1837,38 @@ class LakehouseTable:
         self._publish(new_snap)
 
     # ------------------------------------------------------------------
-    # bucket lifecycle (VERDICT r2 #2: fixed n_buckets made 1.6 TB
-    # buckets inevitable at 100 TB; splitting keeps compaction spikes
-    # and touched-bucket resolves bounded as the table grows)
-    # ------------------------------------------------------------------
-    def split_buckets(self, factor: int = 2) -> None:
-        """Raise the bucket modulus — METADATA-ONLY (Iceberg
-        partition-spec-evolution analog).  Existing entries keep their
-        write-time modulus and stay readable/prunable (an old entry
-        (m, r) is exactly the union of current residues {r, r+m, …});
-        new folds and majors write at the new modulus, so the split is
-        realized lazily, component by component, with zero immediate
-        I/O.  ``factor`` must be a power of two so every historical
-        modulus divides the current one."""
-        if factor < 2 or (factor & (factor - 1)):
-            raise ValueError("factor must be a power of two >= 2")
-        snap = self._snap  # pin ONE snapshot — see _pending docstring
-        new_snap = dict(
-            snap,
-            version=snap["version"] + 1,
-            n_buckets=snap["n_buckets"] * factor,
-        )
-        self._publish(new_snap)
-
-    def split_bucket(self, key: str) -> list[str]:
-        """Eagerly rewrite ONE pre-split base entry into its children at
-        the current modulus (``key`` is a modulus-qualified snapshot
-        bucket key, e.g. ``"64:3"``).  Cost O(that bucket); no resolve
-        needed — base entries are one-row-per-key, the rewrite only
-        re-partitions them.  Pending L1/L0 rows over the same keys are
-        untouched: read-time resolve handles them regardless of the
-        base's modulus.  Returns the new entry keys."""
-        snap = self._snap  # pin ONE snapshot — see _pending docstring
-        bm = dict(snap["buckets"])
-        files = bm.get(key)
-        if not files:
-            raise ValueError(f"unknown or empty bucket entry {key!r}")
-        m, _r = _bkey_parse(key)
-        if m == snap["n_buckets"]:
-            raise ValueError(
-                f"bucket {key!r} is already at the current modulus "
-                f"{snap['n_buckets']}; call split_buckets() first"
-            )
-        out = self._write_bucketed(
-            self._raw(self._abs(files)), "base",
-            rows=_parquet_rows(self._abs(files)),
-        )
-        del bm[key]
-        bm.update(out)
-        new_snap = dict(snap, version=snap["version"] + 1, buckets=bm)
-        self._publish(new_snap)
-        return sorted(out)
-
-    # ------------------------------------------------------------------
     # maintenance
     # ------------------------------------------------------------------
-    def compact(self) -> None:
-        """Full maintenance compaction: fold L0+L1+base into fresh
-        bucket-pure bases (the explicit, all-at-once form of what the
-        ingest path does incrementally).  Pins ONE snapshot for the
-        whole operation (same torn-view rule as read()/scan_raw()): a
-        concurrent commit between the pending-file listing and the
-        final snapshot build must surface as a version conflict at
-        _publish, never as a base built from a MIX of two snapshots."""
-        snap = self._snap  # pin ONE snapshot — see _pending docstring
-        pend_files, pend_rows = self._pending(snap=snap)
-        if not pend_files:
-            return
-        paths = [p for ps in snap["buckets"].values() for p in ps]
-        paths += pend_files
-        resolved = self._resolve(self._raw(self._abs(paths)))
-        buckets_map = self._write_bucketed(
-            resolved, "base", rows=snap["base_rows"] + pend_rows
+    def _major_all(self, snap: dict, keep=None) -> dict:
+        """The next snapshot after resolving all of ``snap`` — L0 ∪ L1
+        ∪ base — into a fresh row-sized base (_major_compact, the fold's
+        major without its ratio test); nothing stays pending."""
+        buckets_map, base_rows = self._major_compact(
+            snap["buckets"], snap["base_rows"],
+            list(snap["l1"].values()) + snap["deltas"],
+            [tuple(e) for e in snap["extra_columns"]], keep=keep,
         )
-        new_snap = dict(
+        return dict(
             snap,
             version=snap["version"] + 1,
             buckets=buckets_map,
-            base_rows=_parquet_rows(
-                self._abs([p for ps in buckets_map.values() for p in ps])
-            ),
+            base_rows=base_rows,
             l1={},
             deltas=[],
         )
-        self._publish(new_snap)
+
+    def compact(self) -> None:
+        """Full maintenance compaction: fold L0+L1+base into a fresh
+        base written at the modulus its rows justify (_major_all) —
+        the explicit, all-at-once form of what the ingest path does
+        incrementally.  Pins ONE snapshot for the whole operation (same
+        torn-view rule as read()/scan_raw()): a concurrent commit
+        between the pending-file listing and the final snapshot build
+        must surface as a version conflict at _publish, never as a base
+        built from a MIX of two snapshots."""
+        snap = self._snap  # pin ONE snapshot — see _pending docstring
+        if self._pending(snap=snap)[0]:
+            self._publish(self._major_all(snap))
 
     def purge_tombstones(self, horizon_seq: int) -> int:
         """Physically drop tombstones with ``_commit_seq <= horizon_seq``.
@@ -1899,23 +1876,24 @@ class LakehouseTable:
         Contract (same shape as Iceberg/Delta vacuum horizons): after
         purging at H, forced replays of ranges ending at or below H are
         no longer resurrection-safe.  Normal watermark-resumed ingest is
-        unaffected.  Returns the number of tombstones purged.  One pass:
-        the purge count rides the rewrite job via Observation instead of
-        a separate count() job.
+        unaffected.  The purge is a full compaction (_major_all) that
+        drops those tombstones from the resolved rows before the write.
+        Returns the number of tombstones purged.  One pass: the purge
+        count rides the rewrite job via Observation instead of a
+        separate count() job.
         """
         from pyspark.sql import Observation
 
         snap = self._snap  # pin ONE snapshot — see _pending docstring
-        all_rows = self.read(include_deleted=True)
         purge = F.col("_deleted") & (F.col("_commit_seq") <= horizon_seq)
         obs = Observation(f"purge-{uuid.uuid4().hex[:8]}")
-        kept = all_rows.observe(
+        # Built from the PINNED snap: a concurrent commit between the
+        # read and the publish surfaces as a SnapshotConflict at
+        # _publish (version CAS), never as a snapshot that silently
+        # drops the deltas the rewrite didn't fold in.
+        new_snap = self._major_all(snap, keep=lambda df: df.observe(
             obs, F.sum(purge.cast("long")).alias("n_purged")
-        ).where(~purge)
-        buckets_map = self._write_bucketed(
-            kept, "base",
-            rows=snap["base_rows"] + self._pending(snap=snap)[1],
-        )
+        ).where(~purge))
         n_purged = int(obs.get["n_purged"] or 0)
         if n_purged == 0:
             # nothing purged: drop the just-written redundant base copy
@@ -1923,26 +1901,12 @@ class LakehouseTable:
 
             dirs = {
                 os.path.dirname(os.path.dirname(self._abs([p])[0]))
-                for ps in buckets_map.values()
+                for ps in new_snap["buckets"].values()
                 for p in ps
             }
             for d in dirs:
                 shutil.rmtree(d, ignore_errors=True)
             return 0
-        # Build from the PINNED snap: a concurrent commit between the
-        # read and here surfaces as a SnapshotConflict at _publish
-        # (version CAS), never as a snapshot that silently drops the
-        # deltas the read didn't fold in.
-        new_snap = dict(
-            snap,
-            version=snap["version"] + 1,
-            buckets=buckets_map,
-            base_rows=_parquet_rows(
-                self._abs([p for ps in buckets_map.values() for p in ps])
-            ),
-            l1={},
-            deltas=[],
-        )
         self._publish(new_snap)
         return n_purged
 

@@ -542,8 +542,12 @@ def run_incremental(
         # the commit-path fold lands at the run's LAST commit, spent
         # serialized while the prepare pool sits idle (traced perfbench
         # backfill, 40k events, 4-vCPU VM at local[4]: the replay's two
-        # folds take 1.7 s against a ~6.3 s replay; 3.1 s before folds
-        # wrote row-sized L1 entries instead of one file per bucket).
+        # folds take ~1.3 s against a ~3.6 s replay — 2.61 s over two
+        # traced replays, against 2.11 s when the final fold wrote L1
+        # instead of majoring the early fold's base into a fresh base,
+        # the major that leaves the caught-up table a plain scan to
+        # read; the two folds took 3.1 s when they wrote one file per
+        # bucket).
         # Instead, once enough commits have landed that a fold is
         # inevitable this run (d + remaining ≥ max_deltas), fold at
         # the half-max_deltas point: the fold's Spark job runs beside

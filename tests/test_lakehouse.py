@@ -438,9 +438,10 @@ def test_manifest_spill_version_index_prunes_files(spark, tmp_path):
 
 def test_fold_pending_state_equivalent_and_bounded(spark, tmp_path):
     """Round-6 overlapped fold: fold_pending() is the commit-path
-    L0→L1 fold as a standalone maintenance commit — state before ==
-    state after, L0 empties into L1, re-fold is a no-op, and lineage
-    (watermark, manifests, applied ranges) is untouched."""
+    fold as a standalone maintenance commit — state before == state
+    after, L0 empties (here into base: the table has no base to
+    outweigh the fold), re-fold is a no-op, and lineage (watermark,
+    manifests, applied ranges) is untouched."""
     path = str(tmp_path / "t")
     t = LakehouseTable.create(spark, path, n_buckets=8)
     for b in range(4):
@@ -454,7 +455,7 @@ def test_fold_pending_state_equivalent_and_bounded(spark, tmp_path):
 
     assert t.fold_pending() == 4
     assert t._snap["deltas"] == []
-    assert any(e["files"] for e in t._snap["l1"].values())
+    assert t._snap["l1"] == {} and t._snap["buckets"]
     after = sorted(
         tuple(r) for r in t.read().select("doc_id", "_commit_seq").collect()
     )
@@ -483,12 +484,30 @@ def test_write_partitions_sized_from_rows(spark, tmp_path):
     assert partitions_for_rows(394_000, 32 // 4, 128) == 32
 
 
+def _seed_base(spark, t, n=12_000):
+    """Merge a seed of ``n`` events over ``n`` keys (about n / 2
+    distinct doc_ids) and compact it: a base that outweighs the small
+    folds run over it, so they fold into L1.  Returns the seed's update
+    rows (doc_id, op, commit_seq)."""
+    from dlt_spark.functions.normalize import normalize_events
+
+    upd = dedup_lww(
+        normalize_events(generate_change_log(spark, n, n_keys=n, seed=3)),
+        with_counts=True,
+    )
+    t.merge(upd, "seed", 0)
+    t.compact()
+    return upd.select("doc_id", "op", "commit_seq").collect()
+
+
 def test_fold_writes_row_sized_l1_entries(spark, tmp_path, monkeypatch):
     """An L0→L1 fold of r rows writes at most partitions_for_rows(r, 1,
     n_buckets) files, keyed at that modulus — a small fold writes one
     file, not one per bucket.  A fold of ≥ n_buckets ×
     ROWS_PER_PARTITION rows keeps the full layout: one file per bucket
-    under the table's modulus.  The read is unchanged by either."""
+    under the table's modulus.  The read is unchanged by either.  (Each
+    table gets a seed base more than BASE_OVER_PENDING_MIN × the fold,
+    so the fold lands in L1 instead of majoring into base.)"""
     from dlt_spark.lakehouse import _bkey_parse
     from dlt_spark.session import partitions_for_rows
 
@@ -512,6 +531,7 @@ def test_fold_writes_row_sized_l1_entries(spark, tmp_path, monkeypatch):
         return t, rows, new
 
     t = LakehouseTable.create(spark, str(tmp_path / "small"), n_buckets=16)
+    _seed_base(spark, t)
     t, rows, new = fold(t, 0)
     m = partitions_for_rows(rows, 1, 16)
     assert m < 16
@@ -522,6 +542,7 @@ def test_fold_writes_row_sized_l1_entries(spark, tmp_path, monkeypatch):
     # a fold of ≥ n_buckets × ROWS_PER_PARTITION rows: one file per bucket
     monkeypatch.setattr("dlt_spark.session.ROWS_PER_PARTITION", 10)
     t = LakehouseTable.create(spark, str(tmp_path / "large"), n_buckets=16)
+    _seed_base(spark, t)
     t, rows, new = fold(t, 0)
     assert rows >= 16 * 10
     assert {_bkey_parse(k)[0] for k in new} == {16}
@@ -540,20 +561,26 @@ def _lww_live(rows):
     return {(d, r["commit_seq"]) for d, r in win.items() if r["op"] != "D"}
 
 
-def _fold_run(spark, t, seen, folds, monkeypatch):
+def _fold_run(spark, t, seen, folds, monkeypatch, start=1000, max_pending=None):
     """Run ``folds`` commit-path folds of max_deltas small merges each
-    into ``t`` (seq 1000 on; ``seen`` holds the update rows already
+    into ``t`` (seq ``start`` on; ``seen`` holds the update rows already
     applied), checking after every fold that read() equals an
-    independent LWW fold of every update so far and that no L1 key
-    exceeds max_deltas + 4 files.  Returns (table, the ``buckets``
-    argument of every _major_compact call, the key of every coarse L1
-    rewrite)."""
+    independent LWW fold of every update so far, that no L1 key exceeds
+    max_deltas + 4 files and, if given, that fewer than
+    ``max_pending`` rows are pending.  Returns (table, one record per
+    _major_compact call — the base keys it replaced, the base rows and
+    pending rows it read, its modulus floor — and the key of every
+    coarse L1 rewrite)."""
     majors, rewrites = [], []
     major, rewrite = LakehouseTable._major_compact, LakehouseTable._rewrite_l1
 
-    def major_spy(self, buckets_map, l1_map, buckets, *a, **kw):
-        majors.append(list(buckets))
-        return major(self, buckets_map, l1_map, buckets, *a, **kw)
+    def major_spy(self, base, base_rows, pending, *a, **kw):
+        majors.append({
+            "base": sorted(base), "base_rows": base_rows,
+            "pending_rows": sum(e["rows"] for e in pending),
+            "floor": a[1] if len(a) > 1 else kw.get("floor", 1),
+        })
+        return major(self, base, base_rows, pending, *a, **kw)
 
     def rewrite_spy(self, key, *a, **kw):
         rewrites.append(key)
@@ -561,7 +588,7 @@ def _fold_run(spark, t, seen, folds, monkeypatch):
 
     monkeypatch.setattr(LakehouseTable, "_major_compact", major_spy)
     monkeypatch.setattr(LakehouseTable, "_rewrite_l1", rewrite_spy)
-    log = generate_change_log(spark, 1000 + 200 * folds * t.max_deltas,
+    log = generate_change_log(spark, start + 200 * folds * t.max_deltas,
                               n_keys=400, seed=17)
     from dlt_spark.functions.normalize import normalize_events
 
@@ -569,7 +596,7 @@ def _fold_run(spark, t, seen, folds, monkeypatch):
     batch = 0
     for _ in range(folds):
         for _ in range(t.max_deltas):
-            lo = 1000 + batch * 200
+            lo = start + batch * 200
             upd = dedup_lww(
                 normalize_events(log.where(F.col("commit_seq").between(lo, lo + 199))),
                 with_counts=True,
@@ -581,28 +608,33 @@ def _fold_run(spark, t, seen, folds, monkeypatch):
         assert t._snap["deltas"] == []  # the commit folded
         got = {tuple(r) for r in t.read().select("doc_id", "_commit_seq").collect()}
         assert got == _lww_live(seen)
-        assert max(len(e["files"]) for e in t._snap["l1"].values()) <= t.max_deltas + 4
+        assert max(
+            (len(e["files"]) for e in t._snap["l1"].values()), default=0
+        ) <= t.max_deltas + 4
+        if max_pending is not None:
+            assert t._pending()[1] < max_pending
     return t, majors, rewrites
 
 
 def test_small_folds_compact_coarse_l1_without_base_rewrite(spark, tmp_path, monkeypatch):
-    """Long run of small folds over a base compacted at the full
-    modulus: each fold lands in the coarse key "1:0", which is
-    compacted alone every time it reaches its file cap.  No coarse key
-    ever joins a major, so base is never rewritten, read() stays equal
-    to an independent LWW fold and L1 stays bounded."""
+    """Long run of small folds over a base more than
+    BASE_OVER_PENDING_MIN × the pending rows: each fold lands in the
+    coarse key "1:0", which is compacted alone every time it reaches its
+    file cap.  Over so large a base no coarse key joins a major, so base
+    is never rewritten, read() stays equal to an independent LWW fold
+    and L1 stays bounded."""
     from dlt_spark.lakehouse import _bkey_parse
 
     t = LakehouseTable.create(spark, str(tmp_path / "t"), n_buckets=4, max_deltas=2)
-    seed = _updates(spark, 0, 999)
-    seen = seed.select("doc_id", "op", "commit_seq").collect()
-    t.merge(seed, "seed", 0)
-    t.compact()
+    seen = _seed_base(spark, t)
     base0 = dict(t._snap["buckets"])
-    assert base0 and {_bkey_parse(k)[0] for k in base0} == {4}
+    # the compaction wrote the seed at the modulus its rows justify
+    assert base0 and {_bkey_parse(k)[0] for k in base0} == {1}
     cap = t.max_deltas + 0  # the staggered cap of "1:0"
     folds = 4 * cap
-    t, majors, rewrites = _fold_run(spark, t, seen, folds, monkeypatch)
+    t, majors, rewrites = _fold_run(
+        spark, t, seen, folds, monkeypatch, start=20_000
+    )
     assert majors == []
     assert t._snap["buckets"] == base0
     assert set(t._snap["l1"]) == {"1:0"}
@@ -611,27 +643,60 @@ def test_small_folds_compact_coarse_l1_without_base_rewrite(spark, tmp_path, mon
 
 
 def test_coarse_l1_splits_then_majors_only_full_modulus(spark, tmp_path, monkeypatch):
-    """A coarse L1 key whose rows justify a finer modulus is rewritten
-    alone at it; only keys at the full modulus major into base, and a
-    major reads no coarse L1 key.  (ROWS_PER_PARTITION is lowered so
-    small folds exercise the row thresholds.)"""
+    """A coarse L1 key whose rows justify a finer modulus, over a base
+    more than BASE_OVER_PENDING_MIN × its rows, is rewritten alone at
+    the finer modulus; only keys at the full modulus major into that
+    base, and such a major reads no coarse L1 key.
+    (ROWS_PER_PARTITION is lowered so small folds exercise the row
+    thresholds.)"""
     from dlt_spark.lakehouse import _bkey_parse
 
     monkeypatch.setattr("dlt_spark.session.ROWS_PER_PARTITION", 150)
     t = LakehouseTable.create(spark, str(tmp_path / "t"), n_buckets=4, max_deltas=2)
-    seed = _updates(spark, 0, 999)
-    seen = seed.select("doc_id", "op", "commit_seq").collect()
-    t.merge(seed, "seed", 0)
-    t.compact()
+    seen = _seed_base(spark, t)
     assert {_bkey_parse(k)[0] for k in t._snap["buckets"]} == {4}
-    t, majors, rewrites = _fold_run(spark, t, seen, 4, monkeypatch)
+    t, majors, rewrites = _fold_run(
+        spark, t, seen, 4, monkeypatch, start=20_000
+    )
     moduli = {_bkey_parse(k)[0] for k in rewrites}
     assert moduli and max(moduli) < 4
     # the folds write at modulus 2, so full-modulus L1 keys come only
     # from splits of the coarse keys
     assert majors, "no full-modulus key reached its cap"
-    for comp in majors:
-        assert {_bkey_parse(k)[0] for k in comp} == {4}, comp
+    for m in majors:
+        assert m["floor"] == 4 and {_bkey_parse(k)[0] for k in m["base"]} == {4}, m
+
+
+def test_small_folds_major_coarse_l1_into_small_base(spark, tmp_path, monkeypatch):
+    """Long run (8× the cap of "1:0") of small folds over a compacted
+    base that outweighs each fold but not the coarse L1 key's rows at
+    its cap: the key majors into the base entries it overlaps, so base
+    is refreshed and pending stays bounded.  After every fold read()
+    equals an independent LWW fold and no L1 key holds more than
+    max_deltas + 4 files; pending rows stay under ROWS_PER_PARTITION
+    (lowered to 1000: the seed base then spans two classes the major
+    must keep disjoint); every major reads at most (1 +
+    BASE_OVER_PENDING_MIN) × the pending rows it consumes."""
+    from dlt_spark.lakehouse import BASE_OVER_PENDING_MIN, _bkey_parse, _keys_overlap
+
+    monkeypatch.setattr("dlt_spark.session.ROWS_PER_PARTITION", 1000)
+    t = LakehouseTable.create(spark, str(tmp_path / "t"), n_buckets=4, max_deltas=2)
+    seen = _seed_base(spark, t, n=3_000)
+    base0 = dict(t._snap["buckets"])
+    assert {_bkey_parse(k)[0] for k in base0} == {2}
+    cap = t.max_deltas + 0  # the staggered cap of "1:0"
+    t, majors, rewrites = _fold_run(
+        spark, t, seen, 8 * cap, monkeypatch, start=20_000, max_pending=1000,
+    )
+    assert majors, "base never refreshed"
+    assert t._snap["buckets"] != base0
+    for m in majors:
+        assert m["base_rows"] <= BASE_OVER_PENDING_MIN * m["pending_rows"], m
+    # the majors kept base entries disjoint classes
+    keys = sorted(t._snap["buckets"])
+    assert not any(
+        _keys_overlap(a, b) for i, a in enumerate(keys) for b in keys[i + 1:]
+    ), keys
 
 
 def _jobs_started(spark, build, action):
@@ -666,10 +731,10 @@ def test_read_over_many_files_starts_no_listing_job(spark, tmp_path):
     """read() hands Spark exact data-file paths from the snapshot, so
     building it over more than 32 files (Spark's parallel-listing
     threshold by default) starts no Spark job before the action."""
-    t = LakehouseTable.create(spark, str(tmp_path / "t"), n_buckets=64)
-    t.merge(_updates(spark, 0, 999), "job", 0)
-    t.compact()
-    t.merge(_updates(spark, 1_000, 1_999), "job", 1)
+    t = LakehouseTable.create(spark, str(tmp_path / "t"), n_buckets=64,
+                              max_deltas=64)
+    for b in range(33):
+        t.merge(_updates(spark, b * 50, b * 50 + 49), "job", b)
     t = t.refresh()
     files, _ = t._pending()
     files += [p for ps in t._snap["buckets"].values() for p in ps]
@@ -679,6 +744,55 @@ def test_read_over_many_files_starts_no_listing_job(spark, tmp_path):
     )
     assert action_jobs > 0
     assert build_jobs == 0
+
+
+def test_compact_small_table_writes_row_sized_base(spark, tmp_path):
+    """compact() and purge_tombstones() write base at the modulus the
+    rows justify: a 1,000-row table at 64 buckets compacts into at most
+    2 base files, not one per bucket, and its read is unchanged."""
+    from dlt_spark.functions.normalize import normalize_events
+
+    t = LakehouseTable.create(spark, str(tmp_path / "t"), n_buckets=64)
+    upd = dedup_lww(normalize_events(
+        generate_change_log(spark, 2_500, n_keys=2_500, seed=11)
+    ), with_counts=True)
+    t.merge(upd, "job", 0)
+    t = t.refresh()
+    assert 900 <= t._snap["deltas"][0]["rows"] <= 1_500
+    before = sorted(map(tuple, t.read(include_deleted=True).select(
+        "doc_id", "_commit_seq", "_deleted").collect()))
+    t.compact()
+    assert not t._pending()[0]
+    assert sum(len(ps) for ps in t._snap["buckets"].values()) <= 2
+    after = sorted(map(tuple, t.read(include_deleted=True).select(
+        "doc_id", "_commit_seq", "_deleted").collect()))
+    assert after == before
+    assert t.purge_tombstones(horizon_seq=10**9) == sum(1 for r in before if r[2])
+    assert sum(len(ps) for ps in t._snap["buckets"].values()) <= 2
+    assert sorted(map(tuple, t.read().select(
+        "doc_id", "_commit_seq", "_deleted").collect())) == [
+            r for r in before if not r[2]]
+
+
+def test_caught_up_read_is_a_plain_scan(spark, tmp_path):
+    """A bulk run whose folds find base no larger than
+    BASE_OVER_PENDING_MIN × their rows ends with nothing pending: the
+    final fold majors into base, and read() runs as a parquet scan with
+    no Exchange."""
+    from dlt_spark.plans.runner import run_incremental
+    from dlt_spark.sources.changelog import write_change_log
+
+    log = str(tmp_path / "log")
+    write_change_log(generate_change_log(spark, 8_000, seed=7), log, 1_000)
+    path = str(tmp_path / "t")
+    run_incremental(spark, log, path, batch_width=1_000, n_buckets=8,
+                    log_part_width=1_000)
+    t = LakehouseTable.load(spark, path)
+    assert t._snap["deltas"] == [] and t._snap["l1"] == {}
+    df = t.read()
+    assert df.count() > 0
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
 
 
 def test_changes_between_tail_window_starts_no_job(spark, tmp_path):
