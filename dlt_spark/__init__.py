@@ -28,9 +28,11 @@ shuffle and retry.  What this package adds on top of stock PySpark:
 - ``plans``      — the batch runner: watermark resolution, batch planning
                    by commit_seq range, replay/resume (reference:
                    loader/service.go:18-105 lifecycle).
-- ``streaming``  — Structured Streaming wrapper (Trigger.AvailableNow +
-                   foreachBatch apply) for the `sync` daemon analog
+- ``scheduler``  — the `sync` daemon analog: per-connection schedules
+                   polling the runner under one single-flight loop
                    (reference: cmd/dlt/commands/sync.go).
+- ``streaming``  — the CDC-out tail: committed change windows of the
+                   table streamed to a downstream consumer.
 """
 
 __version__ = "0.1.0"

@@ -33,15 +33,22 @@ from dlt_spark.operators.components import connected_components
 # shared SQL fragments (sp=Spark SQL, dk=DuckDB SQL)
 # ---------------------------------------------------------------------------
 
-_EVENTS_SP = """
+def _tokens_sp(seq: str) -> str:
+    """Spark SQL for the tokens of the event at sequence ``seq`` (module
+    docstring): the one form of the derivation, shared by _EVENTS_SP and
+    the winner-only regeneration in q_cdc_lww_final_state."""
+    return (f"transform(sequence(0, cast({seq} % 97 + 7 AS int)),"
+            f" i -> ({seq} * (i + 7)) % 1000)")
+
+
+_EVENTS_SP = f"""
 SELECT o_orderkey AS commit_seq,
        'doc_' || lpad(cast(o_custkey % 300 AS string), 4, '0') AS doc_id,
        CASE WHEN o_orderkey % 10 = 9 THEN 'D'
             WHEN o_orderkey % 10 >= 6 THEN 'U' ELSE 'I' END AS op,
        cast(o_orderkey % 97 + 8 AS bigint) AS n_tok,
        o_orderpriority AS source,
-       transform(sequence(0, cast(o_orderkey % 97 + 7 AS int)),
-                 i -> (o_orderkey * (i + 7)) % 1000) AS tokens
+       {_tokens_sp("o_orderkey")} AS tokens
 FROM orders
 """
 
@@ -102,10 +109,7 @@ def q_cdc_lww_final_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     _views(spark, sf_dir, "orders")
     events = spark.sql(_EVENTS_SP).drop("tokens")
     final = dedup_lww(events).where(F.col("op") != "D")
-    tokens = F.expr(
-        "transform(sequence(0, cast(commit_seq % 97 + 7 AS int)),"
-        " i -> (commit_seq * (i + 7)) % 1000)"
-    )
+    tokens = F.expr(_tokens_sp("commit_seq"))
     return final.select(
         "doc_id",
         F.col("commit_seq").alias("last_seq"),

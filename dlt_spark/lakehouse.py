@@ -61,7 +61,7 @@ semantics rely on, on plain Parquet:
    chunks; big_query.go:256 WriteAppend duplicates on replay).
    Manifest history beyond a retained tail spills to Parquet sidecars
    (``_manifests/``), so snapshot JSON stays O(tail), not O(commits) —
-   a long-lived streaming job's commit latency is flat.
+   a long-lived sync daemon's commit latency is flat.
 6. **Tombstone retention** — deletes persist as ``_deleted`` rows (the
    resolve needs the delete's _commit_seq to reject stale re-inserts
    from forced replays of older ranges); reads filter them;
@@ -1261,8 +1261,9 @@ class LakehouseTable:
         if stats is None or stats["n"] == 0:
             return self._commit_noop(job_id, batch_id, seq_from, seq_to,
                                      events_read, markers=markers)
-        # Streaming epochs don't know their seq range up front — derive
-        # it from the delta's observed min/max (no extra job).
+        # A commit without a planned range (merge() callers,
+        # materialize_markers) derives it from the delta's observed
+        # min/max (no extra job).
         if seq_from is None:
             seq_from = int(stats["smin"])
         if seq_to is None:
@@ -1430,10 +1431,11 @@ class LakehouseTable:
         new_extras: list,
         base_rows: int,
     ) -> tuple[dict, dict, int]:
-        """L0 → L1 fold + the L1 compaction check — the shared tail of a
-        fold-triggering batch commit and the explicit ``fold_pending``
-        maintenance op.  Mutates and returns (buckets_map, l1_map,
-        base_rows); the caller owns publishing.
+        """L0 → L1 fold + the L1 compaction check, run by the batch
+        commit that brings L0 to ``max_deltas`` commits (the one fold
+        trigger) inside that commit's snapshot swap.  Mutates and
+        returns (buckets_map, l1_map, base_rows); _commit_delta_once
+        publishes them.
 
         Fold into base: when base and L1 together hold at most
         BASE_OVER_PENDING_MIN × the L0 rows, L0 ∪ L1 ∪ base resolve
@@ -1518,45 +1520,6 @@ class LakehouseTable:
         if over:
             compact_keys(over, n)
         return buckets_map, l1_map, base_rows
-
-    def fold_pending(self) -> int:
-        """Explicit L0 → L1 maintenance fold — exactly the fold a batch
-        commit performs when the L0 count reaches ``max_deltas``, as a
-        standalone snapshot commit (round 6, guide §2.6 overlap-
-        independent-jobs): the incremental runner fires it at the
-        half-``max_deltas`` point of a bulk run so the fold's Spark job
-        backfills cores idled by the remaining batches' prepare
-        stragglers, instead of the whole fold landing serialized at the
-        run's last commit (see the runner's early-fold comment for
-        what the folds cost).  Includes the same L1 compaction check
-        as the commit-path fold, so L1 growth stays bounded no matter
-        which path folds.  Pins ONE
-        snapshot (same torn-view rule as compact()); a concurrent
-        commit surfaces as SnapshotConflict at publish — callers treat
-        the fold as opportunistic and retry or skip.  State-equivalent:
-        read() before == read() after (fold only moves rows L0 → L1
-        or base).  Returns the number of L0 commits folded (0 = nothing
-        pending)."""
-        snap = self._snap  # pin ONE snapshot — see _pending docstring
-        deltas = snap["deltas"]
-        if not deltas:
-            return 0
-        new_extras = [tuple(e) for e in snap["extra_columns"]]
-        buckets_map = dict(snap["buckets"])
-        l1_map = {k: dict(v) for k, v in snap["l1"].items()}
-        buckets_map, l1_map, base_rows = self._fold_and_maybe_major(
-            deltas, buckets_map, l1_map, new_extras, snap["base_rows"],
-        )
-        new_snap = dict(
-            snap,
-            version=snap["version"] + 1,
-            buckets=buckets_map,
-            l1=l1_map,
-            deltas=[],
-            base_rows=base_rows,
-        )
-        self._publish(new_snap)
-        return len(deltas)
 
     def _fold_l0(self, deltas: list, extras: list | None = None) -> dict[str, dict]:
         """L0 → L1: resolve the pending unbucketed commits among

@@ -63,13 +63,6 @@ def plan_batches(seq_from: int, seq_to: int, batch_width: int) -> list[tuple[int
     return out
 
 
-def check_cascade_mode(cascade_mode: str) -> None:
-    if cascade_mode not in ("eager", "markers"):
-        raise ValueError(
-            f"cascade_mode must be 'eager' or 'markers', got {cascade_mode!r}"
-        )
-
-
 def _delete_rows(
     events: DataFrame, n_buckets: int, batch_width: int | None = None
 ) -> DataFrame:
@@ -104,16 +97,15 @@ def _collect_cap(adapter) -> int:
 
 
 def prefetch_deletes(events: DataFrame, adapter, table: LakehouseTable,
-                     batch_width: int | None = None):
-    """Delete prefetch for a ONE-batch slice (the steady-tick and
-    streaming-epoch shape): a single cap-guarded collect decides
-    small-vs-mass directly, with no per-batch count job.  Returns the
-    collected parent-delete rows, deduplicated on the driver; above the
-    adapter's ``MAX_PRUNED_PARENTS`` delete rows the lazy
-    ``_parent_deletes`` DataFrame of ``events`` instead (a mass purge
-    never materializes driver-side); None when the adapter does not
-    cascade or the slice has no deletes — the ``del_rows`` of
-    prepare_batch.
+                     batch_width: int):
+    """Delete prefetch for a ONE-batch slice (the steady-tick shape): a
+    single cap-guarded collect decides small-vs-mass directly, with no
+    per-batch count job.  Returns the collected parent-delete rows,
+    deduplicated on the driver; above the adapter's
+    ``MAX_PRUNED_PARENTS`` delete rows the lazy ``_parent_deletes``
+    DataFrame of ``events`` instead (a mass purge never materializes
+    driver-side); None when the adapter does not cascade or the slice
+    has no deletes — the batch's ``del_rows``.
 
     The collect is shuffle-free: a ``distinct()`` before the limit is an
     exchange, i.e. two jobs under AQE.  The cap therefore counts the
@@ -129,52 +121,6 @@ def prefetch_deletes(events: DataFrame, adapter, table: LakehouseTable,
     if len(rows) > cap:
         return _parent_deletes(events, table.n_buckets)
     return list(dict.fromkeys(rows)) or None
-
-
-def prepare_batch(
-    events: DataFrame,
-    adapter,
-    table: LakehouseTable,
-    job_id: str,
-    batch_id: int,
-    del_rows=None,
-    cascade_mode: str = "eager",
-    use_arrow_udf: bool = False,
-    materialize: bool = False,
-) -> dict:
-    """The per-batch ingest core shared by ``run_incremental`` (one call
-    per planned batch) and streaming sync (one per epoch): normalize →
-    cascade deletes → LWW dedup → delta write.  Returns the prepared
-    delta for ``table.commit_delta``; touches no table state.
-
-    ``del_rows`` is the batch's prefetched parent deletes: None (no
-    deletes, or a non-cascading adapter), the collected (p, del_seq,
-    del_source, b) rows, or the same columns as a DataFrame (too many
-    to collect).  ``materialize`` passes through to ``expand_deletes``
-    (eager mode only)."""
-    normalized = adapter.normalize(events, use_arrow_udf=use_arrow_udf)
-    markers_delta = None
-    if del_rows is not None and cascade_mode == "markers":
-        # Equality-delete markers (opt-in): ONE tiny parquet write of
-        # (parent, del_seq, source) rides the batch's atomic commit; no
-        # candidate scan, no tombstone rows, no phase B.
-        markers_delta = table.prepare_markers(del_rows)
-    elif del_rows is not None:
-        # Eager cascade: tombstones for the table's and this batch's own
-        # children are unioned into the batch, riding the dedup + write
-        # job (the runner adds its phase-B gap delta at commit).
-        normalized = adapter.expand_deletes(
-            normalized, table, del_rows=del_rows, materialize=materialize,
-        )
-    # Hot keys need no spreading step: dedup_lww's map-side partial
-    # aggregate collapses a key to one row per map task before its
-    # shuffle (SURVEY §2.7 X4).
-    prepared = table.prepare_delta(
-        dedup_lww(normalized, with_counts=True), job_id, batch_id
-    )
-    if markers_delta is not None:
-        prepared["markers_delta"] = markers_delta
-    return prepared
 
 
 def run_incremental(
@@ -225,8 +171,18 @@ def run_incremental(
       finishes the in-flight work then exits (cmd/dlt/commands/
       load.go:62-86); here a stop leaves the table at a committed batch
       boundary and the next run resumes from the watermark.
+
+    The runner never folds: the commit path is the one fold trigger
+    (every ``max_deltas``-th L0 commit folds, see
+    ``LakehouseTable.commit_delta``).  A run of 8 batches into a fresh
+    table at the default cap ends drained; a run of 9-15 ends with the
+    commits past the 8th pending in L0, the state a tick-fed table is
+    always in.  Reads stay exact either way: they resolve L0.
     """
-    check_cascade_mode(cascade_mode)
+    if cascade_mode not in ("eager", "markers"):
+        raise ValueError(
+            f"cascade_mode must be 'eager' or 'markers', got {cascade_mode!r}"
+        )
     adapter = get_adapter(schema)
     table = LakehouseTable.create(
         spark, table_path, n_buckets=n_buckets,
@@ -307,11 +263,18 @@ def run_incremental(
             raise last  # type: ignore[misc]
 
         def _prepare_once(batch_id: int, lo: int, hi: int) -> dict:
+            """The per-batch ingest core: normalize → cascade deletes →
+            LWW dedup → delta write.  Returns the prepared delta for
+            ``table.commit_delta``; touches no table state.  The batch's
+            prefetched parent deletes (``del_batches``) are None (no
+            deletes, or a non-cascading adapter), the collected (p,
+            del_seq, del_source, b) rows, or the same columns as a
+            DataFrame (too many to collect)."""
             del_rows = del_batches.get(batch_id)
             eager = del_rows is not None and cascade_mode == "eager"
             wm0 = None
             if eager:
-                # TWO-PHASE cascade (VERDICT r3 next-#2).  Phase A (prepare_batch):
+                # TWO-PHASE cascade (VERDICT r3 next-#2).  Phase A (here):
                 # expand_deletes unions tombstones for the table snapshot +
                 # this batch's own children into the batch — riding the
                 # already-running dedup+write job.  Phase B (gap pool):
@@ -331,14 +294,31 @@ def run_incremental(
                 # write job 15.0s (skipping the shuffle writes candidate
                 # multiplicity raw — the dedup collapse pays for itself).
                 wm0 = table.watermark()
-            prepared = prepare_batch(
+            normalized = adapter.normalize(
                 slice_change_log(log_df, lo, hi, log_part_width),
-                adapter, table, job_id, batch_id, del_rows,
-                cascade_mode=cascade_mode, use_arrow_udf=use_arrow_udf,
-                # concurrent-prepare shape iff the gap is non-empty —
-                # the materialization A/B in expand_deletes
-                materialize=eager and wm0 + 1 <= lo - 1,
+                use_arrow_udf=use_arrow_udf,
             )
+            markers_delta = None
+            if eager:
+                normalized = adapter.expand_deletes(
+                    normalized, table, del_rows=del_rows,
+                    # concurrent-prepare shape iff the gap is non-empty —
+                    # the materialization A/B in expand_deletes
+                    materialize=wm0 + 1 <= lo - 1,
+                )
+            elif del_rows is not None:
+                # Equality-delete markers (opt-in): ONE tiny parquet write
+                # of (parent, del_seq, source) rides the batch's atomic
+                # commit; no candidate scan, no tombstone rows, no phase B.
+                markers_delta = table.prepare_markers(del_rows)
+            # Hot keys need no spreading step: dedup_lww's map-side partial
+            # aggregate collapses a key to one row per map task before its
+            # shuffle (SURVEY §2.7 X4).
+            prepared = table.prepare_delta(
+                dedup_lww(normalized, with_counts=True), job_id, batch_id
+            )
+            if markers_delta is not None:
+                prepared["markers_delta"] = markers_delta
             if eager:
                 prepared["_cascade_ctx"] = (wm0,)
             return prepared
@@ -538,37 +518,6 @@ def run_incremental(
         # acyclic — no deadlock at any pool size — while delete batches'
         # gap jobs overlap each other and the main pipeline instead of
         # chaining through the prepare futures.
-        # Overlapped L0→L1 folds (round 6, guide §2.6): on a bulk run
-        # the commit-path fold lands at the run's LAST commit, spent
-        # serialized while the prepare pool sits idle (traced perfbench
-        # backfill, 40k events, 4-vCPU VM at local[4]: the replay's two
-        # folds take ~1.3 s against a ~3.6 s replay — 2.61 s over two
-        # traced replays, against 2.11 s when the final fold wrote L1
-        # instead of majoring the early fold's base into a fresh base,
-        # the major that leaves the caught-up table a plain scan to
-        # read; the two folds took 3.1 s when they wrote one file per
-        # bucket).
-        # Instead, once enough commits have landed that a fold is
-        # inevitable this run (d + remaining ≥ max_deltas), fold at
-        # the half-max_deltas point: the fold's Spark job runs beside
-        # the remaining batches' prepares instead of after them.  It
-        # does NOT yield to them: a prepare runs
-        # several jobs, and under FIFO scheduling every job submitted
-        # after the fold's queues behind it, so a fold stage can hold
-        # every core while prepare stages wait; sizing the fold's
-        # exchange to its rows (_write_partitions) keeps that stall to
-        # a few task waves.  A final fold after the last commit
-        # leaves the run fully folded (L0 empty — same end state a
-        # fold-at-max run would reach, reached cheaper).  Steady
-        # single-batch ticks never trigger this (remaining = 0), so the
-        # deployment hot path is untouched; folds are opportunistic (a
-        # SnapshotConflict from a concurrent writer skips the fold — the
-        # commit-path trigger still bounds L0 at max_deltas regardless).
-        from dlt_spark.lakehouse import SnapshotConflict
-
-        fold_at = max(1, table.max_deltas // 2)
-        did_early_fold = False
-
         futs: dict = {}
         gap_futs: dict = {}
         with ThreadPoolExecutor(max_workers=max(1, max_inflight)) as pool, \
@@ -593,30 +542,11 @@ def run_incremental(
                     if stop_requested is not None and stop_requested():
                         break  # graceful: last commit is the resume point
                     _commit_one(batch_id, lo, hi, futs[batch_id].result())
-                    rem = len(work) - i - 1
-                    if rem > 0:
-                        d = len(table._snap["deltas"])
-                        # (a "fold the rest behind the last prepare"
-                        # tail fire was tried and measured WORSE —
-                        # 9.68 vs 9.30 s medians — the last prepare is
-                        # nearly done by then, so the extra fold just
-                        # serializes; keep the single mid-run fire)
-                        if d >= fold_at and d + rem >= table.max_deltas:
-                            try:
-                                table.fold_pending()
-                                did_early_fold = True
-                            except SnapshotConflict:
-                                pass  # a rival writer folds/commits; skip
             finally:
                 for f in futs.values():
                     f.cancel()
                 for f in gap_futs.values():
                     f.cancel()
-        if did_early_fold and table._snap["deltas"]:
-            try:
-                table.fold_pending()
-            except SnapshotConflict:
-                pass
 
         wall = time.monotonic() - t0
         return RunResult(

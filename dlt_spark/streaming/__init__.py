@@ -1,1 +1,2 @@
-"""Structured Streaming front-end (the `dlt sync` daemon analog)."""
+"""CDC-out tail: stream the table's committed change windows
+(``changes.stream_changes``, CLI ``changes --follow``)."""

@@ -437,32 +437,33 @@ def test_manifest_spill_version_index_prunes_files(spark, tmp_path):
 
 
 def test_fold_pending_state_equivalent_and_bounded(spark, tmp_path):
-    """Round-6 overlapped fold: fold_pending() is the commit-path
-    fold as a standalone maintenance commit — state before == state
-    after, L0 empties (here into base: the table has no base to
-    outweigh the fold), re-fold is a no-op, and lineage (watermark,
-    manifests, applied ranges) is untouched."""
-    path = str(tmp_path / "t")
-    t = LakehouseTable.create(spark, path, n_buckets=8)
+    """The commit-path fold of the pending L0 commits, inside the
+    commit that brings L0 to max_deltas: state equals a non-folding
+    twin's, L0 empties (here into base: the table has no base to
+    outweigh the fold), and lineage (watermark, manifests, applied
+    ranges) and the snapshot count match the twin's — the fold rides
+    the batch's own snapshot swap."""
+    t = LakehouseTable.create(spark, str(tmp_path / "t"), n_buckets=8, max_deltas=4)
+    twin = LakehouseTable.create(spark, str(tmp_path / "twin"), n_buckets=8,
+                                 max_deltas=100)
     for b in range(4):
-        t.merge(_updates(spark, b * 500, b * 500 + 499), "job", b)
-    t = t.refresh()
-    assert len(t._snap["deltas"]) == 4
-    before = sorted(
-        tuple(r) for r in t.read().select("doc_id", "_commit_seq").collect()
-    )
-    wm, n_manifests = t.watermark(), len(t._snap["manifests"])
+        for tbl in (t, twin):
+            tbl.merge(_updates(spark, b * 500, b * 500 + 499), "job", b)
+    t, twin = t.refresh(), twin.refresh()
+    assert len(twin._snap["deltas"]) == 4
 
-    assert t.fold_pending() == 4
     assert t._snap["deltas"] == []
     assert t._snap["l1"] == {} and t._snap["buckets"]
-    after = sorted(
-        tuple(r) for r in t.read().select("doc_id", "_commit_seq").collect()
-    )
-    assert after == before
-    assert t.watermark() == wm
-    assert len(t._snap["manifests"]) == n_manifests
-    assert t.fold_pending() == 0  # nothing pending → no new snapshot
+
+    def state(tbl):
+        return sorted(
+            tuple(r) for r in tbl.read().select("doc_id", "_commit_seq").collect()
+        )
+
+    assert state(t) == state(twin)
+    assert t.watermark() == twin.watermark()
+    assert len(t._snap["manifests"]) == len(twin._snap["manifests"])
+    assert t.version == twin.version
 
 
 def test_write_partitions_sized_from_rows(spark, tmp_path):
@@ -511,28 +512,32 @@ def test_fold_writes_row_sized_l1_entries(spark, tmp_path, monkeypatch):
     from dlt_spark.lakehouse import _bkey_parse
     from dlt_spark.session import partitions_for_rows
 
-    def fold(t, first_batch):
+    def fold(name):
+        """Seed ``name`` and a non-folding twin, then merge 3 batches
+        into both: the third merge brings ``name``'s L0 to max_deltas
+        = 3 and folds.  Returns (table, rows folded, the L1 entries the
+        fold wrote)."""
+        t = LakehouseTable.create(spark, str(tmp_path / name), n_buckets=16,
+                                  max_deltas=3)
+        twin = LakehouseTable.create(spark, str(tmp_path / f"{name}_twin"),
+                                     n_buckets=16, max_deltas=100)
+        for tbl in (t, twin):
+            _seed_base(spark, tbl)
+        assert t._snap["l1"] == {}
         for b in range(3):
-            lo = (first_batch + b) * 300
-            t.merge(_updates(spark, lo, lo + 299), "job", first_batch + b)
-        t = t.refresh()
-        rows = sum(e["rows"] for e in t._snap["deltas"])
-        before = sorted(map(tuple, t.read().select("doc_id", "_commit_seq").collect()))
-        l1_before = {k: list(e["files"]) for k, e in t._snap["l1"].items()}
-        assert t.fold_pending() == 3
-        t = t.refresh()
-        new = {
-            k: [p for p in e["files"] if p not in l1_before.get(k, [])]
-            for k, e in t._snap["l1"].items()
-        }
-        new = {k: ps for k, ps in new.items() if ps}
-        after = sorted(map(tuple, t.read().select("doc_id", "_commit_seq").collect()))
-        assert after == before
-        return t, rows, new
+            for tbl in (t, twin):
+                tbl.merge(_updates(spark, b * 300, b * 300 + 299), "job", b)
+        t, twin = t.refresh(), twin.refresh()
+        assert t._snap["deltas"] == [] and len(twin._snap["deltas"]) == 3
+        rows = sum(e["rows"] for e in twin._snap["deltas"])
+        got, want = (
+            sorted(map(tuple, tbl.read().select("doc_id", "_commit_seq").collect()))
+            for tbl in (t, twin)
+        )
+        assert got == want
+        return t, rows, {k: e["files"] for k, e in t._snap["l1"].items()}
 
-    t = LakehouseTable.create(spark, str(tmp_path / "small"), n_buckets=16)
-    _seed_base(spark, t)
-    t, rows, new = fold(t, 0)
+    t, rows, new = fold("small")
     m = partitions_for_rows(rows, 1, 16)
     assert m < 16
     assert {_bkey_parse(k)[0] for k in new} == {m}
@@ -541,9 +546,7 @@ def test_fold_writes_row_sized_l1_entries(spark, tmp_path, monkeypatch):
 
     # a fold of ≥ n_buckets × ROWS_PER_PARTITION rows: one file per bucket
     monkeypatch.setattr("dlt_spark.session.ROWS_PER_PARTITION", 10)
-    t = LakehouseTable.create(spark, str(tmp_path / "large"), n_buckets=16)
-    _seed_base(spark, t)
-    t, rows, new = fold(t, 0)
+    t, rows, new = fold("large")
     assert rows >= 16 * 10
     assert {_bkey_parse(k)[0] for k in new} == {16}
     assert len(new) == 16 and all(len(ps) == 1 for ps in new.values())
@@ -813,32 +816,11 @@ def test_changes_between_tail_window_starts_no_job(spark, tmp_path):
     assert t.changes_between(v0 + 1).count() == expected
 
 
-def test_fold_pending_runs_major_compaction_check(spark, tmp_path):
-    """fold_pending() must include the commit-path's staggered major
-    check — a scheduler folding via fold_pending alone (no commit ever
-    reaching max_deltas) would otherwise grow L1 unboundedly."""
-    path = str(tmp_path / "t")
-    t = LakehouseTable.create(spark, path, n_buckets=2, max_deltas=2)
-    # 12 single-batch merges, folding by hand every 2 — L1 file counts
-    # cross the staggered cap (max_deltas + r%4) only via fold_pending
-    for b in range(12):
-        t.merge(_updates(spark, b * 150, b * 150 + 149), "job", b)
-        if len(t._snap["deltas"]) >= 2:
-            t.fold_pending()
-    # 6 folds without compaction would leave ≥ 6 L1 files
-    assert sum(len(e["files"]) for e in t._snap["l1"].values()) < 6, (
-        "L1 compaction never ran"
-    )
-    for b, e in t._snap["l1"].items():
-        cap = t.max_deltas + (int(b.split(":")[1]) % 4)
-        assert len(e["files"]) < cap + 2
-
-
-def test_bulk_run_ends_fully_folded(spark, tmp_path):
-    """A bulk run of ≥ max_deltas batches overlaps its folds and ends
-    with L0 empty — same final table state as tick-by-tick ingest."""
-    import os
-
+def test_bulk_run_ends_fully_folded(spark, tmp_path, monkeypatch):
+    """A bulk run of max_deltas batches into a fresh table folds once,
+    in its last commit (the commit path is the one fold trigger), and
+    ends with L0 and L1 empty — same final table state as tick-by-tick
+    ingest."""
     from dlt_spark.plans.runner import run_incremental
     from dlt_spark.sources.changelog import write_change_log
 
@@ -847,11 +829,20 @@ def test_bulk_run_ends_fully_folded(spark, tmp_path):
     write_change_log(
         generate_change_log(spark, n, seed=7, dup_frac=0.05), log, 2_000
     )
+    folds = []
+    fold = LakehouseTable._fold_and_maybe_major
+
+    def fold_spy(self, *a, **kw):
+        folds.append(len(a[0]))  # L0 commits folded
+        return fold(self, *a, **kw)
+
+    monkeypatch.setattr(LakehouseTable, "_fold_and_maybe_major", fold_spy)
     ta = str(tmp_path / "ta")
     run_incremental(spark, log, ta, batch_width=2_000, n_buckets=8,
                     log_part_width=2_000)
     t = LakehouseTable.load(spark, ta)
-    assert t._snap["deltas"] == []  # early + final folds drained L0
+    assert folds == [t.max_deltas] == [8]  # the 8th commit folded all 8
+    assert t._snap["deltas"] == [] and t._snap["l1"] == {}
 
     tb = str(tmp_path / "tb")
     for b in range(8):
