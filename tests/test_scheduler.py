@@ -17,6 +17,8 @@ from dlt_spark.config import (
 )
 from dlt_spark.scheduler import cron_matches, run_sync_daemon
 
+from tests.growing_log import cascade_log, growing_log_daemon
+
 
 def test_cron_matches_fields():
     t = time.struct_time((2026, 8, 17, 14, 30, 0, 6, 229, -1))  # Sun 14:30
@@ -292,145 +294,6 @@ def test_daemon_scheduled_maintenance_with_markers(spark, tmp_path):
     assert state(tbl) == state(eager)
 
 
-def _growing_log_daemon(spark, staged, tmp_path, per_run=1, schema="tokens",
-                        part_width=500, batch_width=500, n_buckets=8,
-                        cascade_mode="eager"):
-    """A one-connection daemon over a log that grows while it runs: the
-    ``seq_part`` directories of the ``staged`` log are copied into the
-    live log ``per_run`` at a time, the first group before the daemon
-    starts and each next one from its ``on_round`` hook, so every run
-    picks up exactly one new group.  Returns (config, table)."""
-    import shutil
-
-    from dlt_spark.lakehouse import LakehouseTable
-
-    parts = sorted(
-        (p for p in os.listdir(staged) if p.startswith("seq_part=")),
-        key=lambda p: int(p.split("=", 1)[1]),
-    )
-    groups = [parts[i:i + per_run] for i in range(0, len(parts), per_run)]
-    log, tbl = str(tmp_path / "live_log"), str(tmp_path / "tbl")
-    os.makedirs(log)
-
-    def publish(k):
-        for p in groups[k]:
-            shutil.copytree(os.path.join(staged, p), os.path.join(log, p))
-
-    runs = []
-
-    def on_round(name, res):
-        runs.append(res)
-        if len(runs) < len(groups):
-            publish(len(runs))
-
-    publish(0)
-    cfg = Config(
-        sources=[SourceCfg(name="s", log=log, schema=schema,
-                           log_part_width=part_width)],
-        destinations=[DestinationCfg(name="d", table=tbl, n_buckets=n_buckets)],
-        connections=[ConnectionCfg(name="c", source="s", destination="d",
-                                   batch_width=batch_width, interval_secs=0.0,
-                                   cascade_mode=cascade_mode)],
-    )
-    summary = run_sync_daemon(spark, cfg, max_runs_per_connection=len(groups),
-                              on_round=on_round)
-    assert summary["c"]["runs"] == len(groups)
-    assert all(r.batches_applied for r in runs)  # each run took a new group
-    return cfg, LakehouseTable.load(spark, tbl)
-
-
-def _cascade_log(spark, path, ops, part_width, first_seq):
-    """Write an exploded_cascade log of (doc_id, op, payload) events at
-    commit_seq = first_seq + list index."""
-    from pyspark.sql import Row
-
-    from dlt_spark.schemas import CHANGE_EVENT_SCHEMA
-    from dlt_spark.sources.changelog import write_change_log
-
-    rows = [
-        Row(commit_seq=first_seq + i, doc_id=d, op=op, tokens=None, payload=pl,
-            payload_version=1, source="s", extracted_at=None)
-        for i, (d, op, pl) in enumerate(ops)
-    ]
-    write_change_log(spark.createDataFrame(rows, CHANGE_EVENT_SCHEMA), path,
-                     part_width=part_width)
-
-
-def test_daemon_growing_log_converges_and_restart_is_noop(spark, tmp_path):
-    """The sync daemon tails a growing log in multi-batch runs and
-    converges to the pure-pandas fold of the whole log; a restarted
-    daemon over the same table finds nothing new and leaves the table
-    version unchanged (the manifest watermark is the checkpoint)."""
-    from dlt_spark.sources.changelog import write_change_log
-    from dlt_spark.sources.generator import generate_change_log
-
-    from tests.oracle import assert_table_matches, fold_expected_state
-
-    staged = str(tmp_path / "staged")
-    write_change_log(
-        generate_change_log(spark, 3_000, n_keys=300, seed=7, dup_frac=0.05,
-                            version_mix=(0.5, 0.3, 0.2)),
-        staged, part_width=500,
-    )
-    cfg, table = _growing_log_daemon(spark, staged, tmp_path, per_run=2,
-                                     n_buckets=16)
-    expected = fold_expected_state(
-        spark.read.parquet(staged).drop("seq_part").toPandas()
-    )
-    actual = table.read().select(
-        "doc_id", "tokens", "n_tok", "source", "_commit_seq"
-    ).toPandas()
-    assert_table_matches(actual, expected)
-    assert len(table._snap["manifests"]) == 6  # 3 runs of 2 batches
-
-    v = table.version
-    summary = run_sync_daemon(spark, cfg, max_runs_per_connection=1)
-    assert summary["c"] == {"runs": 1, "events_read": 0}
-    assert table.refresh().version == v
-
-
-def test_daemon_cascade_deletes_eager_and_markers(spark, tmp_path):
-    """exploded_cascade through the daemon, in both cascade modes: the
-    parent delete arrives in a later run than the parent's children,
-    so the lookup runs against the committed table; the table is
-    parent-bucketed (bucket_expr).  Eager mode tombstones the children;
-    markers mode records the delete as a marker delta riding the run's
-    commit, reads the same live state, and materialize_markers
-    converges it to physical tombstones."""
-    ops = [
-        ("p", "I", '{"block": [1], "txs": [[10], [20]]}'),
-        ("q", "I", '{"block": [5], "txs": [[50]]}'),
-        ("p", "D", None),
-        ("p", "I", '{"block": [9], "txs": [[11]]}'),
-    ]
-    expected = {"p/block/0": (9,), "p/tx/0": (11,),
-                "q/block/0": (5,), "q/tx/0": (50,)}
-
-    def state(t):
-        return {
-            r["doc_id"]: tuple(r["tokens"] or []) for r in t.read().collect()
-        }
-
-    for mode in ("eager", "markers"):
-        staged = str(tmp_path / mode / "staged")
-        # seq 1 | 2-3 | 4: one part, and one batch, per run
-        _cascade_log(spark, staged, ops, part_width=2, first_seq=1)
-        _, table = _growing_log_daemon(
-            spark, staged, tmp_path / mode, schema="exploded_cascade",
-            part_width=2, batch_width=2, cascade_mode=mode,
-        )
-        assert table.bucket_expr == "substring_index(doc_id, '/', 1)"
-        assert len(table._snap["manifests"]) == 3
-        assert state(table) == expected, mode
-        if mode == "markers":
-            assert table._snap["markers"], "marker mode recorded none"
-            table.materialize_markers()
-            assert table._snap["markers"] == []
-            assert state(table) == expected
-        else:
-            assert table._snap["markers"] == []
-
-
 def test_daemon_matches_bulk_runner_under_cascade(spark, tmp_path):
     """One run per log part through the daemon and one pipelined bulk
     run_incremental over the whole exploded_cascade log (parent deletes
@@ -470,11 +333,11 @@ def test_daemon_matches_bulk_runner_under_cascade(spark, tmp_path):
         ("c", "U", '{"block": [9], "txs": [[90]]}'),
     ]
     staged = str(tmp_path / "staged")
-    _cascade_log(spark, staged, ops, part_width=4, first_seq=0)
+    cascade_log(spark, staged, ops, part_width=4, first_seq=0)
     bulk = str(tmp_path / "bulk")
     run_incremental(spark, staged, bulk, schema="exploded_cascade",
                     batch_width=4, n_buckets=8, log_part_width=4)
-    _, dt = _growing_log_daemon(spark, staged, tmp_path,
+    _, dt = growing_log_daemon(spark, staged, tmp_path,
                                 schema="exploded_cascade", part_width=4,
                                 batch_width=4)
 
