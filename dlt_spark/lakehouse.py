@@ -23,7 +23,7 @@ semantics rely on, on plain Parquet:
    large base.  Pending (L0+L1) and base row counts are tracked in
    snapshot metadata, so the reader picks a plan WITHOUT running a job:
      tier 2 (default merge path, base ≫ pending): broadcast the pending
-       KEY SET, split base into untouched (anti) / touched (semi)
+       keys, split base into untouched (anti) / touched (semi)
        streams and resolve touched ∪ pending — base is scanned, never
        exchanged; measured fastest above ~600k base rows (constants in
        the cost-model comment below);
@@ -32,6 +32,11 @@ semantics rely on, on plain Parquet:
        exactly when that shuffle is cheap or unavoidable.
    At the 10^10-event design point every inter-compaction read was a
    ~100 TB Exchange before this; now the base never crosses the wire.
+   Every resolve (tier 2's, tier 3's, a base-less table's) runs ONE
+   doc_id exchange sized from the same snapshot row counts — pending
+   rows, base + pending, or about 2 × pending for tier 2 — by the rule
+   the runner and the fold use (partitions_for_rows, capped at the
+   configured shuffle partitions), then one sort and the LWW aggregate.
 4. **Amortized leveled compaction** — every ``max_deltas`` commits the
    pending L0 (per-commit, unbucketed) folds, cost O(L0).  Every write
    is row-sized: one file per residue class under the modulus its row
@@ -93,7 +98,7 @@ from pyspark.sql import DataFrame, SparkSession
 from dlt_spark.adapters import cascade_tombstone_rows, stored_children
 from dlt_spark.metafs import LocalMetaFS, MetaFS
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, LongType, StructField, StructType
+from pyspark.sql.types import _parse_datatype_string
 
 from dlt_spark.schemas import (
     DELETE_PARENTS_SCHEMA,
@@ -144,6 +149,10 @@ BROADCAST_KEYS_T2 = 20_000_000
 #   base 122k rows: full resolve 1.15s, key-split 1.56s  → resolve wins
 #   base 450k rows: 1.92s vs 2.01s                       → break-even
 #   base 686k rows: 2.95s vs 2.66s                       → key-split wins
+# Those crossovers were measured against the unsized 128-partition
+# tier-3 resolve (map-side sort and partial aggregate, then a second
+# sort).  Every resolve now runs behind one exchange sized from snapshot
+# rows; the crossovers are not re-measured for that plan.
 # On a real cluster the gap widens with base size: the full resolve
 # ships the whole base over the network every read, the merge tiers
 # never do.  Below BOTH floors the plain resolve is simply the faster
@@ -167,13 +176,13 @@ _WIDEN_OK = {
 }
 
 
-def _bucket_col(key_expr: str, n_buckets: int):
-    """Bucket id of a row: hash of the bucket-key EXPRESSION (usually
-    the key column; tables may declare a transform — e.g. the exploded
-    schema buckets child rows by their PARENT id so whole documents
-    co-locate and parent-keyed lookups bucket-prune, the Iceberg
-    partition-transform analog)."""
-    return F.expr(f"CAST(pmod(xxhash64({key_expr}), {int(n_buckets)}) AS INT)")
+def _bucket_sql(key_expr: str, n_buckets: int) -> str:
+    """Bucket id of a row, as SQL: hash of the bucket-key EXPRESSION
+    (usually the key column; tables may declare a transform — e.g. the
+    exploded schema buckets child rows by their PARENT id so whole
+    documents co-locate and parent-keyed lookups bucket-prune, the
+    Iceberg partition-transform analog)."""
+    return f"CAST(pmod(xxhash64({key_expr}), {int(n_buckets)}) AS INT)"
 
 
 def _bucket_in(buckets):
@@ -191,13 +200,13 @@ def _lww_winner(cols: list[str]):
     tombstone rank makes a delete beat a concurrent non-delete at equal
     seq, matching dedup_lww's D > U/I priority; _row_id is a
     deterministic final tie-break for byte-identical duplicate
-    deliveries."""
-    ordering = F.struct(
-        F.col("_commit_seq").alias("_s"),
-        F.col("_deleted").cast("int").alias("_d"),
-        F.col("_row_id").alias("_r"),
+    deliveries.  Built from one SQL string: a Column per field would be
+    a driver→JVM round trip each."""
+    row = ", ".join(f"'{c}', `{c}`" for c in cols)
+    return F.expr(
+        f"max_by(named_struct({row}), named_struct('_s', _commit_seq,"
+        " '_d', CAST(_deleted AS INT), '_r', _row_id)) AS w"
     )
-    return F.max_by(F.struct(*[F.col(c) for c in cols]), ordering).alias("w")
 
 
 def _content_hash():
@@ -277,23 +286,16 @@ def suggest_n_buckets(
     return n
 
 
-def _read_schema(
-    extra_n_events: bool = False, extras: list | None = None
-) -> StructType:
-    """Physical read schema: core TARGET columns + evolved extras
-    (+ the delta-only _n_events).  Files written before a column was
-    added simply lack it — Spark backfills nulls, which IS the
-    evolution semantics (Iceberg add-column analog).  Files written
-    before a widen carry the narrower physical type — Spark 4 Parquet
-    readers up-cast int→long / float→double at scan time."""
-    from pyspark.sql.types import _parse_datatype_string
-
-    fields = list(TARGET_SCHEMA.fields)
-    for name, ddl in extras or []:
-        fields.append(StructField(name, _parse_datatype_string(ddl), True))
-    if extra_n_events:
-        fields.append(StructField("_n_events", LongType(), True))
-    return StructType(fields)
+def _read_ddl(extras: list) -> str:
+    """Physical read schema as one DDL string: core TARGET columns +
+    evolved extras.  Files written before a column was added simply
+    lack it — Spark backfills nulls, which IS the evolution semantics
+    (Iceberg add-column analog).  Files written before a widen carry
+    the narrower physical type — Spark 4 Parquet readers up-cast
+    int→long / float→double at scan time.  Columns a file has beyond
+    the schema (the delta-only _n_events) are not read."""
+    cols = [(f.name, f.dataType.simpleString()) for f in TARGET_SCHEMA.fields]
+    return ", ".join(f"`{n}` {ddl}" for n, ddl in [*cols, *extras])
 
 
 # columns of the change-event envelope that are NOT value payload
@@ -615,14 +617,14 @@ class LakehouseTable:
         extra _n_events column; base files don't — permissive schema;
         files older than an evolved column backfill nulls; files written
         under a pre-rename physical name coalesce into the logical
-        column; files with a pre-widen narrower type up-cast at scan)."""
+        column; files with a pre-widen narrower type up-cast at scan).
+        The schema and the projection are each one SQL string, so the
+        plan costs a few driver→JVM round trips, not a few per column."""
         if extras is None:
             extras = self.extra_columns
         renames = self.renames
         if not files:
-            schema = _read_schema(extras=extras).add(
-                StructField("_bucket", IntegerType(), False)
-            )
+            schema = _parse_datatype_string(f"{_read_ddl(extras)}, _bucket int")
             return local_frame(self.spark, [], schema)
         # physical read schema: logical extras + any renamed-away
         # physical columns (same ddl as their logical target)
@@ -630,27 +632,41 @@ class LakehouseTable:
         phys_extras = list(extras) + [
             (old, ddl_of[new]) for old, new in renames.items() if new in ddl_of
         ]
-        cols = [F.col(f.name) for f in TARGET_SCHEMA.fields]
+        cols = [f"`{f.name}`" for f in TARGET_SCHEMA.fields]
         for n, _ in extras:
             olds = sorted(o for o, nn in renames.items() if nn == n)
-            cols.append(
-                F.coalesce(F.col(n), *[F.col(o) for o in olds]).alias(n)
-                if olds
-                else F.col(n)
-            )
+            names = ", ".join(f"`{c}`" for c in [n, *olds])
+            cols.append(f"coalesce({names}) AS `{n}`" if olds else f"`{n}`")
+        cols.append(f"{_bucket_sql(self.bucket_expr, self.n_buckets)} AS _bucket")
         return (
-            self.spark.read.schema(
-                _read_schema(extra_n_events=True, extras=phys_extras)
-            )
+            self.spark.read.schema(_read_ddl(phys_extras))
             .parquet(*files)
-            .select(*cols)
-            .withColumn("_bucket", _bucket_col(self.bucket_expr, self.n_buckets))
+            .selectExpr(*cols)
         )
 
     @staticmethod
     def _resolve(df: DataFrame) -> DataFrame:
-        """MoR resolve: one winning row per doc_id (see _lww_winner)."""
+        """MoR resolve: one winning row per doc_id (see _lww_winner).
+        Callers size the exchange: read() passes ``df`` repartitioned on
+        doc_id (``_read_partitions``), which already satisfies the
+        aggregate's distribution — one Exchange, one Sort, then the
+        partial + final aggregate.  Left unsized, Spark sorts and
+        partially aggregates before an Exchange at the configured
+        shuffle partitions, which collapses nothing here (base rows are
+        unique per key), and sorts again after it."""
         return df.groupBy("doc_id").agg(_lww_winner(df.columns)).select("w.*")
+
+    def _read_partitions(self, rows: int) -> int:
+        """Reduce-partition count for a read-side exchange over ``rows``
+        rows: partitions_for_rows (the runner's and the fold's rule),
+        floored at defaultParallelism and capped at the configured
+        ``spark.sql.shuffle.partitions``.  ``rows`` come from the pinned
+        snapshot, so sizing runs no job.  The repartition is explicit,
+        so AQE does not coalesce it."""
+        return partitions_for_rows(
+            rows, self.spark.sparkContext.defaultParallelism,
+            int(self.spark.conf.get("spark.sql.shuffle.partitions")),
+        )
 
     @property
     def _l1(self) -> dict:
@@ -748,11 +764,18 @@ class LakehouseTable:
         def _base_filter(df: DataFrame) -> DataFrame:
             return _bucket_filter(df) if mixed else _project(df)
 
+        def _resolve(df: DataFrame, rows: int) -> DataFrame:
+            return self._resolve(
+                df.repartition(self._read_partitions(rows), "doc_id")
+            )
+
         if not pend_files:
             # base is one-row-per-key on disk already
             out = _base_filter(self._raw(self._abs(base_files)))
         elif not base_files:
-            out = self._resolve(_bucket_filter(self._raw(self._abs(pend_files))))
+            out = _resolve(
+                _bucket_filter(self._raw(self._abs(pend_files))), pend_rows
+            )
         else:
             if tier is None:
                 if (
@@ -765,23 +788,34 @@ class LakehouseTable:
                 else:
                     tier = 3  # writer outran compaction by >20M keys
             if tier == 2:
-                out = self._read_merge_t2(
-                    _base_filter(self._raw(self._abs(base_files))),
-                    _bucket_filter(self._raw(self._abs(pend_files))),
-                )
+                # broadcast the pending keys; base splits into untouched
+                # (anti) / touched (semi) streams — two full-width base
+                # scans, zero base exchange.  The resolve shuffles only
+                # touched ∪ pending, at most about 2 × pend_rows rows.
+                # The key side is not deduplicated: a semi/anti join only
+                # tests existence, and pend_rows ≤ BROADCAST_KEYS_T2
+                # bounds it either way.
+                base = _base_filter(self._raw(self._abs(base_files)))
+                pending = _bucket_filter(self._raw(self._abs(pend_files)))
+                pkeys = F.broadcast(pending.select("doc_id"))
+                untouched = base.join(pkeys, "doc_id", "left_anti")
+                touched = base.join(pkeys, "doc_id", "left_semi")
+                winners = _resolve(touched.unionByName(pending), 2 * pend_rows)
+                out = untouched.unionByName(winners.select(*untouched.columns))
             else:
                 # one combined parquet relation (not a union of two):
                 # ~20% faster scan; the bucket filter is a no-op on the
                 # path-pruned base rows and prunes unbucketed L0 rows
-                out = self._resolve(
-                    _bucket_filter(self._raw(self._abs(base_files + pend_files)))
+                out = _resolve(
+                    _bucket_filter(self._raw(self._abs(base_files + pend_files))),
+                    base_rows + pend_rows,
                 )
         # cascade equality-delete markers (opt-in mode): fold the marker
         # set into _deleted on the resolved winners — a no-op join-free
         # pass-through when the snapshot carries no markers (default)
         out = self._apply_markers(out, snap)
         if not include_deleted:
-            out = out.where(~F.col("_deleted"))
+            out = out.where("NOT _deleted")
         return out
 
     def scan_raw(
@@ -818,17 +852,6 @@ class LakehouseTable:
             ))
             df = df.select(*[c for c in keep if c in df.columns])
         return df
-
-    def _read_merge_t2(self, base: DataFrame, pending: DataFrame) -> DataFrame:
-        """Tier-2 read: broadcast only the pending KEY SET; base splits
-        into untouched (anti) / touched (semi) streams — two full-width
-        base scans, zero base exchange; the resolve shuffles only
-        touched ∪ pending = O(pending)."""
-        pkeys = F.broadcast(pending.select("doc_id").distinct())
-        untouched = base.join(pkeys, "doc_id", "left_anti")
-        touched = base.join(pkeys, "doc_id", "left_semi")
-        winners = self._resolve(touched.unionByName(pending))
-        return untouched.unionByName(winners.select(*untouched.columns))
 
     def manifests_df(
         self,
@@ -1065,17 +1088,20 @@ class LakehouseTable:
         (re-inserts after the delete outrank every earlier marker, so
         the per-parent max is exact).  Broadcast below the row bound —
         markers are per parent-DELETE, not per child, so the map stays
-        small relative to the table."""
+        small relative to the table.  The per-parent exchange is sized
+        from the entries' snapshot ``rows`` (``_read_partitions``)."""
         files = [p for e in entries for p in e["files"]]
+        rows = sum(e["rows"] for e in entries)
         mk = (
             self.spark.read.parquet(*self._abs(files))
+            .repartition(self._read_partitions(rows), "p")
             .groupBy("p")
             .agg(
                 F.max("del_seq").alias("del_seq"),
                 F.max_by("del_source", "del_seq").alias("del_source"),
             )
         )
-        if sum(e["rows"] for e in entries) <= MARKER_BROADCAST_ROWS:
+        if rows <= MARKER_BROADCAST_ROWS:
             mk = F.broadcast(mk)
         return mk
 

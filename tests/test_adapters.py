@@ -779,10 +779,14 @@ def test_marker_read_plan_is_one_broadcast_join(spark, tmp_path):
     """Plan lock: below MARKER_BROADCAST_ROWS the read-time marker
     application is exactly ONE BroadcastHashJoin (LeftOuter, build on
     the tiny max-marker-per-parent map) — never a sort-merge join, so
-    the 100 TB read plan gains no table-sized shuffle from markers."""
+    the 100 TB read plan gains no table-sized shuffle from markers.  The
+    map's per-parent exchange is sized from the marker entries' rows,
+    not run at the configured shuffle partitions (64 here)."""
+    import re
+
     from dlt_spark.lakehouse import LakehouseTable
     from dlt_spark.plans.runner import run_incremental
-    from dlt_spark.sources.changelog import write_change_log
+    from dlt_spark.session import partitions_for_rows
 
     log = _cascade_log(spark, tmp_path, n=1_500, seed=13)
     tbl = str(tmp_path / "t")
@@ -791,10 +795,19 @@ def test_marker_read_plan_is_one_broadcast_join(spark, tmp_path):
                     cascade_mode="markers")
     t = LakehouseTable.load(spark, tbl)
     assert t._snap["markers"]
-    plan = t.read()._jdf.queryExecution().executedPlan().toString()
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "64")
+    try:
+        plan = t.read()._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
     assert "SortMergeJoin" not in plan
     assert plan.count("BroadcastHashJoin") == 1
     assert "LeftOuter" in plan
+    rows = sum(e["rows"] for e in t._snap["markers"])
+    want = partitions_for_rows(rows, spark.sparkContext.defaultParallelism, 64)
+    assert re.findall(r"Exchange hashpartitioning\(p#\d+, (\d+)\)", plan) == [
+        str(want)], plan
 
 
 def test_marker_read_above_broadcast_gate_same_rows(spark, tmp_path, monkeypatch):

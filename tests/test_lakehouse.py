@@ -104,6 +104,61 @@ def test_tiered_read_plan_no_base_shuffle(spark, tmp_path):
             t.read(tier=bad)
 
 
+def test_read_resolve_exchange_sized_from_snapshot_rows(spark, tmp_path, monkeypatch):
+    """Every resolve read() plans runs one doc_id Exchange sized from the
+    pinned snapshot's rows (partitions_for_rows, floored at
+    defaultParallelism, capped at the configured shuffle partitions),
+    then one Sort under the partial + final aggregate, and returns the
+    rows of the unsized _resolve over the same files.  Three shapes: no
+    base (pending rows), tier 3 (base + pending rows) and tier 2 (about
+    2 × pending rows: touched ∪ pending).  ROWS_PER_PARTITION is shrunk
+    so these small tables size above the floor; the configured count is
+    64, not the 8 the test session pins."""
+    import re
+
+    import dlt_spark.session as session
+    from dlt_spark.session import partitions_for_rows
+
+    monkeypatch.setattr(session, "ROWS_PER_PARTITION", 40)
+    dp = spark.sparkContext.defaultParallelism
+    sizes = []
+
+    def check(t, tier, rows):
+        df = t.read(tier=tier)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        want = partitions_for_rows(rows, dp, 64)
+        got = re.findall(r"Exchange hashpartitioning\(doc_id#\d+, (\d+)\)", plan)
+        assert got and {int(n) for n in got} == {want}, (tier, want, plan)
+        assert len(re.findall(r"\bSort \[", plan)) == 1, plan
+        assert "partial_max_by" in plan, plan
+        files = t._pending()[0] + [
+            p for ps in t._snap["buckets"].values() for p in ps]
+        full = t._resolve(t._raw(t._abs(files))).where("NOT _deleted")
+        assert sorted(df.collect()) == sorted(full.select(*df.columns).collect())
+        sizes.append(want)
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "64")
+    try:
+        t = LakehouseTable.create(spark, str(tmp_path / "t"), n_buckets=8,
+                                  max_deltas=8)
+        for b in range(3):
+            t.merge(_updates(spark, b * 500, b * 500 + 499), "j", b)
+        t = t.refresh()
+        assert not t._snap["buckets"]
+        check(t, None, t._pending()[1])
+        t.compact()
+        t.merge(_updates(spark, 1500, 1999), "j", 3)
+        t = t.refresh()
+        base_rows, pend_rows = t._snap["base_rows"], t._pending()[1]
+        assert base_rows and pend_rows
+        check(t, None, base_rows + pend_rows)
+        check(t, 2, 2 * pend_rows)
+        assert dp < max(sizes) and max(sizes) < 64
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
 def test_compaction_preserves_state_and_prunes_files(spark, tmp_path):
     path = str(tmp_path / "t")
     t = LakehouseTable.create(spark, path, n_buckets=8, max_deltas=100)

@@ -4,11 +4,13 @@ one-batch ``exploded_cascade`` tick takes, and what it costs to plan.
 A tick of a few thousand events is dominated by fixed costs on the
 Spark driver's Python/JVM boundary, so these tests lock the boundary itself:
 no pickled-rows DataFrame (it starts Python workers when it executes),
-a Py4J round-trip budget for building one tick's plan, and the
-caller's job group on every job the tick starts."""
+a Py4J round-trip budget for building one tick's plan and the read
+that follows it, and the caller's job group on every job the tick
+starts."""
 
 from __future__ import annotations
 
+import contextlib
 import threading
 
 import py4j.clientserver
@@ -96,14 +98,34 @@ def test_empty_frames_start_no_tasks(spark, cascade_table):
     assert t.manifests_df().schema == MANIFEST_SCHEMA
 
 
-def test_tick_plan_build_py4j_budget(spark, cascade_table, monkeypatch):
-    """Driver→JVM round trips (``ClientServerConnection.send_command``
-    calls) to BUILD, without executing, one tick's plan: normalize, the
-    cascade expansion with collected parents, and the LWW dedup.  The
-    bound is ~1.25x the 689 counted when it was set.  Before that, the
-    same plan took 1,779: call-site capture on every Column call, one
-    literal Column per pruned bucket and a pickled-rows broadcast side
-    (PySpark 4.1.2)."""
+@contextlib.contextmanager
+def _py4j_calls():
+    """Count this thread's driver→JVM round trips
+    (``ClientServerConnection.send_command`` calls) inside the block."""
+    counted = {"calls": 0}
+    me = threading.get_ident()
+    send = py4j.clientserver.ClientServerConnection.send_command
+
+    def counting(self, command):
+        # py4j's finalizer thread releases garbage-collected JVM
+        # references ("m" commands) at GC-dependent times: not counted
+        if threading.get_ident() == me and not command.startswith("m\n"):
+            counted["calls"] += 1
+        return send(self, command)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(py4j.clientserver.ClientServerConnection, "send_command",
+                   counting)
+        yield counted
+
+
+def test_tick_plan_build_py4j_budget(spark, cascade_table):
+    """Driver→JVM round trips to BUILD, without executing, one tick's
+    plan: normalize, the cascade expansion with collected parents, and
+    the LWW dedup.  The bound is ~1.25x the 689 counted when it was set.
+    Before that, the same plan took 1,779: call-site capture on every
+    Column call, one literal Column per pruned bucket and a pickled-rows
+    broadcast side (PySpark 4.1.2)."""
     log, tbl = cascade_table
     table = LakehouseTable.load(spark, tbl)
     events = slice_change_log(
@@ -113,28 +135,31 @@ def test_tick_plan_build_py4j_budget(spark, cascade_table, monkeypatch):
     assert len({r["b"] for r in del_rows}) > 4  # a real bucket prune set
     adapter = get_adapter("exploded_cascade")
 
-    calls = 0
-    me = threading.get_ident()
-    send = py4j.clientserver.ClientServerConnection.send_command
-
-    def counting(self, command):
-        # py4j's finalizer thread releases garbage-collected JVM
-        # references ("m" commands) at GC-dependent times: not counted
-        nonlocal calls
-        if threading.get_ident() == me and not command.startswith("m\n"):
-            calls += 1
-        return send(self, command)
-
-    monkeypatch.setattr(py4j.clientserver.ClientServerConnection,
-                        "send_command", counting)
-    normalized = adapter.normalize(events)
-    out = dedup_lww(
-        adapter.expand_deletes(normalized, table, del_rows=del_rows),
-        with_counts=True,
-    )
-    monkeypatch.undo()
+    with _py4j_calls() as n:
+        normalized = adapter.normalize(events)
+        out = dedup_lww(
+            adapter.expand_deletes(normalized, table, del_rows=del_rows),
+            with_counts=True,
+        )
     assert "doc_id" in out.columns
-    assert calls <= 860, f"{calls} Py4J round trips to plan one tick"
+    assert n["calls"] <= 860, f"{n['calls']} Py4J round trips to plan one tick"
+
+
+def test_read_plan_build_py4j_budget(spark, cascade_table):
+    """Driver→JVM round trips to BUILD, without executing, one read() of
+    the tick-fed table: the LWW resolve of its pending L0 deltas behind
+    the exchange sized from their rows.  The projection, the LWW struct
+    and the tombstone filter are SQL strings; the bound is ~1.25x the
+    71 counted when it was set.  Before that, the same plan took 183: a
+    Column per projected column and per LWW struct field, and a JVM
+    parse per evolved column's type (PySpark 4.1.2)."""
+    _, tbl = cascade_table
+    table = LakehouseTable.load(spark, tbl)
+    assert table._pending()[0] and not table._snap["buckets"]
+    with _py4j_calls() as n:
+        df = table.read()
+    assert "doc_id" in df.columns
+    assert n["calls"] <= 90, f"{n['calls']} Py4J round trips to plan one read"
 
 
 def test_tick_jobs_carry_the_callers_job_group(spark, cascade_table):
