@@ -47,7 +47,7 @@ def main() -> int:
 
     from pyspark.sql import functions as F
 
-    from dlt_spark.lakehouse import LakehouseTable, _bucket_col
+    from dlt_spark.lakehouse import LakehouseTable
     from dlt_spark.plans.runner import run_incremental
     from dlt_spark.session import get_spark
     from dlt_spark.sources.changelog import write_change_log

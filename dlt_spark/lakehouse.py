@@ -23,7 +23,7 @@ semantics rely on, on plain Parquet:
    large base.  Pending (L0+L1) and base row counts are tracked in
    snapshot metadata, so the reader picks a plan WITHOUT running a job:
      tier 2 (default merge path, base ≫ pending): broadcast the pending
-       keys, split base into untouched (anti) / touched (semi)
+       KEY SET, split base into untouched (anti) / touched (semi)
        streams and resolve touched ∪ pending — base is scanned, never
        exchanged; measured fastest above ~600k base rows (constants in
        the cost-model comment below);
@@ -37,6 +37,7 @@ semantics rely on, on plain Parquet:
    rows, base + pending, or about 2 × pending for tier 2 — by the rule
    the runner and the fold use (partitions_for_rows, capped at the
    configured shuffle partitions), then one sort and the LWW aggregate.
+   (Tier 2's key-set distinct keeps its own, unsized exchange of keys.)
 4. **Amortized leveled compaction** — every ``max_deltas`` commits the
    pending L0 (per-commit, unbucketed) folds, cost O(L0).  Every write
    is row-sized: one file per residue class under the modulus its row
@@ -152,7 +153,9 @@ BROADCAST_KEYS_T2 = 20_000_000
 # Those crossovers were measured against the unsized 128-partition
 # tier-3 resolve (map-side sort and partial aggregate, then a second
 # sort).  Every resolve now runs behind one exchange sized from snapshot
-# rows; the crossovers are not re-measured for that plan.
+# rows; the crossovers are not re-measured for that plan, and tier 3
+# got cheaper, so the automatic tier-2/tier-3 choice is unverified until
+# they are.
 # On a real cluster the gap widens with base size: the full resolve
 # ships the whole base over the network every read, the merge tiers
 # never do.  Below BOTH floors the plain resolve is simply the faster
@@ -174,6 +177,13 @@ _WIDEN_OK = {
     "float": {"double"},
     "smallint": {"int", "bigint", "double"},
 }
+
+
+def _ident(name: str) -> str:
+    """``name`` as a quoted SQL identifier: evolved column names come
+    from batch schemas and renames unchecked, so any character —
+    a quote, a backtick — must survive SQL parsing."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def _bucket_sql(key_expr: str, n_buckets: int) -> str:
@@ -201,10 +211,11 @@ def _lww_winner(cols: list[str]):
     seq, matching dedup_lww's D > U/I priority; _row_id is a
     deterministic final tie-break for byte-identical duplicate
     deliveries.  Built from one SQL string: a Column per field would be
-    a driver→JVM round trip each."""
-    row = ", ".join(f"'{c}', `{c}`" for c in cols)
+    a driver→JVM round trip each.  ``struct`` names each field after its
+    column, so no name is ever written as a string literal."""
+    row = ", ".join(_ident(c) for c in cols)
     return F.expr(
-        f"max_by(named_struct({row}), named_struct('_s', _commit_seq,"
+        f"max_by(struct({row}), named_struct('_s', _commit_seq,"
         " '_d', CAST(_deleted AS INT), '_r', _row_id)) AS w"
     )
 
@@ -295,7 +306,7 @@ def _read_ddl(extras: list) -> str:
     int→long / float→double at scan time.  Columns a file has beyond
     the schema (the delta-only _n_events) are not read."""
     cols = [(f.name, f.dataType.simpleString()) for f in TARGET_SCHEMA.fields]
-    return ", ".join(f"`{n}` {ddl}" for n, ddl in [*cols, *extras])
+    return ", ".join(f"{_ident(n)} {ddl}" for n, ddl in [*cols, *extras])
 
 
 # columns of the change-event envelope that are NOT value payload
@@ -632,11 +643,11 @@ class LakehouseTable:
         phys_extras = list(extras) + [
             (old, ddl_of[new]) for old, new in renames.items() if new in ddl_of
         ]
-        cols = [f"`{f.name}`" for f in TARGET_SCHEMA.fields]
+        cols = [_ident(f.name) for f in TARGET_SCHEMA.fields]
         for n, _ in extras:
             olds = sorted(o for o, nn in renames.items() if nn == n)
-            names = ", ".join(f"`{c}`" for c in [n, *olds])
-            cols.append(f"coalesce({names}) AS `{n}`" if olds else f"`{n}`")
+            names = ", ".join(map(_ident, [n, *olds]))
+            cols.append(f"coalesce({names}) AS {_ident(n)}" if olds else _ident(n))
         cols.append(f"{_bucket_sql(self.bucket_expr, self.n_buckets)} AS _bucket")
         return (
             self.spark.read.schema(_read_ddl(phys_extras))
@@ -788,16 +799,14 @@ class LakehouseTable:
                 else:
                     tier = 3  # writer outran compaction by >20M keys
             if tier == 2:
-                # broadcast the pending keys; base splits into untouched
-                # (anti) / touched (semi) streams — two full-width base
-                # scans, zero base exchange.  The resolve shuffles only
-                # touched ∪ pending, at most about 2 × pend_rows rows.
-                # The key side is not deduplicated: a semi/anti join only
-                # tests existence, and pend_rows ≤ BROADCAST_KEYS_T2
-                # bounds it either way.
+                # broadcast only the pending KEY SET; base splits into
+                # untouched (anti) / touched (semi) streams — two
+                # full-width base scans, zero base exchange.  The resolve
+                # shuffles only touched ∪ pending, at most about
+                # 2 × pend_rows rows.
                 base = _base_filter(self._raw(self._abs(base_files)))
                 pending = _bucket_filter(self._raw(self._abs(pend_files)))
-                pkeys = F.broadcast(pending.select("doc_id"))
+                pkeys = F.broadcast(pending.select("doc_id").distinct())
                 untouched = base.join(pkeys, "doc_id", "left_anti")
                 touched = base.join(pkeys, "doc_id", "left_semi")
                 winners = _resolve(touched.unionByName(pending), 2 * pend_rows)

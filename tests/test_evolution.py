@@ -129,7 +129,8 @@ def test_type_widening_int_to_long_float_to_double(spark, tmp_path):
 def test_rename_column_mapping(spark, tmp_path):
     """Rename evolution: metadata-only — old files keep the physical
     name, reads coalesce it into the new logical column; post-rename
-    batches write the new name; chains (a→b→c) collapse."""
+    batches write the new name; chains (a→b→c) collapse; a name may
+    hold a quote."""
     import pytest
     from pyspark.sql import Row
 
@@ -166,6 +167,18 @@ def test_rename_column_mapping(spark, tmp_path):
         t.rename_column("nope", "x")
     with pytest.raises(ValueError, match="already exists"):
         t.rename_column("locale", "doc_id")
+
+    # a name holding a quote survives every path that puts column names
+    # into SQL text: read schema, rename coalesce, LWW resolve (read and
+    # fold) and the change feed
+    t.rename_column("locale", "o'k")
+    v = t.version
+    t.merge(_mk_ev(spark, [row(3, "a")], extra=("o'k", F.lit("de"))), "j", 2, 3, 3)
+    out = {r["doc_id"]: r["o'k"] for r in t.read().collect()}
+    assert out == {"a": "de", "b": "fr"}
+    assert [r["o'k"] for r in t.changes_between(v).collect()] == ["de"]
+    t.compact()
+    assert {r["doc_id"]: r["o'k"] for r in t.read().collect()} == out
 
 
 def test_payload_versions_over_time(spark, tmp_path):
