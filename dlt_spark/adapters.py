@@ -162,38 +162,13 @@ class ExplodedAdapter:
         self, normalized: DataFrame, table, del_rows,
         materialize: bool = False,
     ) -> DataFrame:
-        """Cascade expansion as ONE DataFrame: ``normalized`` ∪ the
-        tombstones of cascade_tombstones (table snapshot + this batch's
-        own children).  This is phase A of the eager cascade in
-        ``runner.prepare_batch``; the tombstones ride the batch's dedup
-        and write job.  ``del_rows`` is as in cascade_tombstones."""
-        if not self.cascade_deletes:
-            return normalized
-        # The batch feeds both the output union and the candidate
-        # subtree.  ``materialize`` trades one eager localCheckpoint
-        # job against evaluating the normalize twice inside the write
-        # job: A/B'd per shape (tick harness, medians of 3) — with
-        # CONCURRENT prepares (runner catch-up, gap non-empty) the
-        # double normalize competes for saturated cores and the
-        # checkpoint wins (bulk 14.0 vs 15.5 s); solo (steady ticks,
-        # serialized streaming epochs) the recompute parallelizes into
-        # idle cores while the extra job serializes — skip it
-        # (ticks 20.0 vs 22.4 s).  The runner passes gap-nonempty.
-        if materialize:
-            normalized = normalized.localCheckpoint(eager=True)
-        tombs = self.cascade_tombstones(normalized, table, del_rows)
-        if tombs is None:
-            return normalized
-        return normalized.unionByName(tombs)
-
-    def cascade_tombstones(
-        self, normalized: DataFrame, table, del_rows
-    ) -> DataFrame | None:
-        """Phase A of the eager cascade: for each of the batch's parent
-        deletes, one tombstone per candidate child key — every child the
-        table has stored plus the batch's own children — built by
-        ``cascade_tombstone_rows``.  None when the adapter does not
-        cascade or ``del_rows`` is empty (zero table I/O).
+        """Phase A of the eager cascade, as ONE DataFrame: ``normalized``
+        ∪ one tombstone per candidate child key of each of the batch's
+        parent deletes — every child the table has stored plus the
+        batch's own children — built by ``cascade_tombstone_rows``.  The
+        tombstones ride the batch's dedup and write job (the runner's
+        per-batch prepare).  ``normalized`` as given when the adapter
+        does not cascade or ``del_rows`` is empty (zero table I/O).
 
         ``del_rows`` is the batch's parent deletes as the runner's
         delete prefetch found them (``runner.prefetch_deletes``, the one
@@ -217,13 +192,21 @@ class ExplodedAdapter:
         needs no current table state: delete batches pipeline, the
         runner's phase-B gap delta covers batches still in flight, and
         double-covered keys settle at read-resolve by (_commit_seq,
-        D-rank, _row_id).
-
-        ``normalized`` feeds two subtrees (in-batch candidates and the
-        caller's own use); callers should pass a materialized DataFrame
-        or the normalize re-executes per consumer."""
+        D-rank, _row_id)."""
         if not self.cascade_deletes or not del_rows:
-            return None
+            return normalized
+        # The batch feeds both the output union and the candidate
+        # subtree.  ``materialize`` trades one eager localCheckpoint
+        # job against evaluating the normalize twice inside the write
+        # job: A/B'd per shape (tick harness, medians of 3) — with
+        # CONCURRENT prepares (runner catch-up, gap non-empty) the
+        # double normalize competes for saturated cores and the
+        # checkpoint wins (bulk 14.0 vs 15.5 s); solo (steady ticks,
+        # serialized streaming epochs) the recompute parallelizes into
+        # idle cores while the extra job serializes — skip it
+        # (ticks 20.0 vs 22.4 s).  The runner passes gap-nonempty.
+        if materialize:
+            normalized = normalized.localCheckpoint(eager=True)
         in_batch = normalized.where(F.col("op") != "D").select(
             "doc_id", "kind", "array_index", "parent_doc_id",
             F.col("commit_seq").alias("child_seq"),
@@ -242,7 +225,7 @@ class ExplodedAdapter:
         # delete batch's _n_events counts candidate multiplicity (every
         # stored version / in-flight copy of a child yields one synthetic
         # tombstone row); final state is unaffected.
-        return cascade_tombstone_rows(cand, del_rows)
+        return normalized.unionByName(cascade_tombstone_rows(cand, del_rows))
 
 
 def stored_children(table, buckets=None) -> DataFrame | None:

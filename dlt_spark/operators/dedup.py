@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from dlt_spark.schemas import quote_ident
+
 # D=3, U=2, I=1 — shared with oracle SQL builders.
 OP_RANK_EXPR = "CASE op WHEN 'D' THEN 3 WHEN 'U' THEN 2 ELSE 1 END"
 
@@ -52,13 +54,13 @@ def dedup_lww(
     the manifest's ``events_read`` comes out of this same aggregation —
     no second scan of the batch (SURVEY §2.4 A2 running counters).
     """
-    cols = df.columns
+    cols = [F.col(quote_ident(c)) for c in df.columns]
     ordering = F.struct(
         F.col(seq).alias("_s"),
         _op_rank(F.col("op")).alias("_r"),
-        F.xxhash64(*[F.col(c) for c in cols]).alias("_h"),
+        F.xxhash64(*cols).alias("_h"),
     )
-    winner = F.max_by(F.struct(*[F.col(c) for c in cols]), ordering).alias("w")
+    winner = F.max_by(F.struct(*cols), ordering).alias("w")
     aggs = [winner]
     if with_counts:
         aggs.append(F.count("*").alias("_n_events"))

@@ -63,19 +63,11 @@ def plan_batches(seq_from: int, seq_to: int, batch_width: int) -> list[tuple[int
     return out
 
 
-def _delete_rows(
-    events: DataFrame, n_buckets: int, batch_width: int | None = None
-) -> DataFrame:
+def _delete_rows(events: DataFrame, n_buckets: int) -> DataFrame:
     """Parent deletes of a raw events slice as (p, del_seq, del_source,
     b) rows, duplicate deliveries included — ``b`` is the parent's
-    bucket residue, and with ``batch_width`` a leading ``bid`` column
-    names the batch."""
-    bid = (
-        [F.floor(F.col("commit_seq") / batch_width).cast("long").alias("bid")]
-        if batch_width is not None else []
-    )
+    bucket residue."""
     return events.where(F.col("op") == "D").select(
-        *bid,
         F.col("doc_id").alias("p"),
         F.col("commit_seq").alias("del_seq"),
         F.col("source").alias("del_source"),
@@ -83,29 +75,20 @@ def _delete_rows(
     )
 
 
-def _parent_deletes(
-    events: DataFrame, n_buckets: int, batch_width: int | None = None
-) -> DataFrame:
+def _parent_deletes(events: DataFrame, n_buckets: int) -> DataFrame:
     """The distinct ``_delete_rows`` of a raw events slice."""
-    return _delete_rows(events, n_buckets, batch_width).distinct()
+    return _delete_rows(events, n_buckets).distinct()
 
 
-def _collect_cap(adapter) -> int:
-    """Most parent-delete rows of one batch collected to the driver;
-    above it the batch's parents stay a DataFrame."""
-    return getattr(adapter, "MAX_PRUNED_PARENTS", 65_536)
-
-
-def prefetch_deletes(events: DataFrame, adapter, table: LakehouseTable,
-                     batch_width: int):
-    """Delete prefetch for a ONE-batch slice (the steady-tick shape): a
-    single cap-guarded collect decides small-vs-mass directly, with no
-    per-batch count job.  Returns the collected parent-delete rows,
-    deduplicated on the driver; above the adapter's
-    ``MAX_PRUNED_PARENTS`` delete rows the lazy ``_parent_deletes``
-    DataFrame of ``events`` instead (a mass purge never materializes
-    driver-side); None when the adapter does not cascade or the slice
-    has no deletes — the batch's ``del_rows``.
+def prefetch_deletes(events: DataFrame, adapter, table: LakehouseTable):
+    """Delete prefetch for one batch's log slice, run inside that
+    batch's prepare whatever the run's shape: a single cap-guarded
+    collect decides small-vs-mass directly, with no count job.  Returns
+    the collected parent-delete rows, deduplicated on the driver; above
+    the adapter's ``MAX_PRUNED_PARENTS`` delete rows the lazy
+    ``_parent_deletes`` DataFrame of ``events`` instead (a mass purge
+    never materializes driver-side); None when the adapter does not
+    cascade or the slice has no deletes.
 
     The collect is shuffle-free: a ``distinct()`` before the limit is an
     exchange, i.e. two jobs under AQE.  The cap therefore counts the
@@ -113,11 +96,8 @@ def prefetch_deletes(events: DataFrame, adapter, table: LakehouseTable,
     the driver memory it exists to bound."""
     if not getattr(adapter, "cascade_deletes", False):
         return None
-    cap = _collect_cap(adapter)
-    rows = (
-        _delete_rows(events, table.n_buckets, batch_width)
-        .limit(cap + 1).collect()
-    )
+    cap = getattr(adapter, "MAX_PRUNED_PARENTS", 65_536)
+    rows = _delete_rows(events, table.n_buckets).limit(cap + 1).collect()
     if len(rows) > cap:
         return _parent_deletes(events, table.n_buckets)
     return list(dict.fromkeys(rows)) or None
@@ -246,7 +226,7 @@ def run_incremental(
         applied = skipped = ev_read = ev_applied = dels = 0
         manifests: list[dict] = []
 
-        def _prepare(batch_id: int, lo: int, hi: int, _attempts: int = 2) -> dict:
+        def _prepare(batch_id: int, lo: int, hi: int, _attempts: int = 2) -> tuple:
             """Bounded retry (SURVEY §2.7 X5 — replaces the reference's
             unbounded 1s·2^k loop, utils/tools.go:66-75): Spark already
             retries tasks; this covers whole-job failures.  The job is
@@ -262,42 +242,43 @@ def run_incremental(
                         time.sleep(1.0 * (attempt + 1))
             raise last  # type: ignore[misc]
 
-        def _prepare_once(batch_id: int, lo: int, hi: int) -> dict:
-            """The per-batch ingest core: normalize → cascade deletes →
-            LWW dedup → delta write.  Returns the prepared delta for
-            ``table.commit_delta``; touches no table state.  The batch's
-            prefetched parent deletes (``del_batches``) are None (no
-            deletes, or a non-cascading adapter), the collected (p,
-            del_seq, del_source, b) rows, or the same columns as a
-            DataFrame (too many to collect)."""
-            del_rows = del_batches.get(batch_id)
+        def _prepare_once(batch_id: int, lo: int, hi: int) -> tuple:
+            """The per-batch ingest core: delete prefetch → normalize →
+            cascade deletes → LWW dedup → delta write.  Touches no table
+            state.  Returns (prepared, cascade): the prepared delta for
+            ``table.commit_delta``, and for an eager delete batch the
+            (watermark, parent deletes) phase B needs, else None.  The
+            parent deletes are ``prefetch_deletes`` of the batch's own
+            slice: collected (p, del_seq, del_source, b) rows, or the
+            same columns as a DataFrame (too many to collect).
+
+            Delete batches don't barrier: blanket tombstones are
+            LWW-idempotent, so the lookup reads stale table state and
+            the gap is settled by phase B at commit."""
+            # TWO-PHASE cascade (VERDICT r3 next-#2).  Phase A (here):
+            # expand_deletes unions tombstones for the table snapshot +
+            # this batch's own children into the batch — riding the
+            # already-running dedup+write job.  Phase B (gap pool):
+            # tombstones for the (watermark, batch-start) gap, built
+            # from the in-flight batches' prepared delta FILES and
+            # merged into this batch's atomic commit — the gap is never
+            # re-normalized.  Capture the committed watermark FIRST (a
+            # commit landing between this read and the snapshot-backed
+            # scan inside expand_deletes only widens the overlap, never
+            # opens a gap — blanket tombstones are LWW-idempotent,
+            # double-cover is free).  A/B'd alternatives (4-round
+            # interleaved medians, sf0.1 all-delete bulk shape): r3's
+            # gap-re-normalize-per-prepare 15.5s; this form 14.0s;
+            # fully-detached side job for ALL tombstones 17.2s (a third
+            # standalone job per batch loses to riding the main write);
+            # unioning phase-A tombstones AFTER dedup_lww in the same
+            # write job 15.0s (skipping the shuffle writes candidate
+            # multiplicity raw — the dedup collapse pays for itself).
+            wm0 = table.watermark()
+            events = slice_change_log(log_df, lo, hi, log_part_width)
+            del_rows = prefetch_deletes(events, adapter, table)
             eager = del_rows is not None and cascade_mode == "eager"
-            wm0 = None
-            if eager:
-                # TWO-PHASE cascade (VERDICT r3 next-#2).  Phase A (here):
-                # expand_deletes unions tombstones for the table snapshot +
-                # this batch's own children into the batch — riding the
-                # already-running dedup+write job.  Phase B (gap pool):
-                # tombstones for the (watermark, batch-start) gap, built
-                # from the in-flight batches' prepared delta FILES and
-                # merged into this batch's atomic commit — the gap is never
-                # re-normalized.  Capture the committed watermark FIRST (a
-                # commit landing between this read and the snapshot-backed
-                # scan inside expand_deletes only widens the overlap, never
-                # opens a gap — blanket tombstones are LWW-idempotent,
-                # double-cover is free).  A/B'd alternatives (4-round
-                # interleaved medians, sf0.1 all-delete bulk shape): r3's
-                # gap-re-normalize-per-prepare 15.5s; this form 14.0s;
-                # fully-detached side job for ALL tombstones 17.2s (a third
-                # standalone job per batch loses to riding the main write);
-                # unioning phase-A tombstones AFTER dedup_lww in the same
-                # write job 15.0s (skipping the shuffle writes candidate
-                # multiplicity raw — the dedup collapse pays for itself).
-                wm0 = table.watermark()
-            normalized = adapter.normalize(
-                slice_change_log(log_df, lo, hi, log_part_width),
-                use_arrow_udf=use_arrow_udf,
-            )
+            normalized = adapter.normalize(events, use_arrow_udf=use_arrow_udf)
             markers_delta = None
             if eager:
                 normalized = adapter.expand_deletes(
@@ -319,33 +300,25 @@ def run_incremental(
             )
             if markers_delta is not None:
                 prepared["markers_delta"] = markers_delta
-            if eager:
-                prepared["_cascade_ctx"] = (wm0,)
-            return prepared
+            return prepared, ((wm0, del_rows) if eager else None)
 
-        def _gap_task(batch_id: int, lo: int, hi: int):
-            """Cascade side-job wrapper running in the SEPARATE gap pool:
-            waits on the batch's own phase-A future (for the captured
-            watermark + materialized batch), then builds the tombstone
-            delta.  Gap-pool tasks wait only on MAIN-pool futures, and
-            main-pool tasks never wait on anything — so the wait graph is
-            bipartite and acyclic (no deadlock at any pool size), and the
-            side jobs of different delete batches run concurrently instead
-            of chaining through prepare futures."""
-            ctx = futs[batch_id].result().get("_cascade_ctx")
-            if ctx is None:
-                return None
-            return _gap_tombstones(batch_id, lo, hi, ctx[0])
+        def _gap_tombstones(batch_id: int, lo: int, hi: int):
+            """Phase B of the two-phase cascade delete, run in the
+            SEPARATE gap pool: a slim tombstone delta for children in the
+            (wm, lo) gap — the batches that were still in flight when
+            phase A captured its table snapshot (phase A's expand_deletes
+            covers the table + the batch's own children inside the main
+            prepare).  Waits first on the batch's own prepare future for
+            its cascade context (watermark, parent deletes), then on the
+            gap batches' prepare futures (their PREPARES, not commits).
+            Gap-pool tasks wait only on MAIN-pool futures, and main-pool
+            tasks never wait on anything — so the wait graph is bipartite
+            and acyclic (no deadlock at any pool size), and the side jobs
+            of different delete batches run concurrently instead of
+            chaining through prepare futures.
 
-        def _gap_tombstones(batch_id: int, lo: int, hi: int, wm: int):
-            """Phase B of the two-phase cascade delete: a slim tombstone
-            delta for children in the (wm, lo) gap — the batches that were
-            still in flight when phase A captured its table snapshot
-            (phase A's expand_deletes covers the table + the batch's own
-            children inside the main prepare).  Waits for the gap batches'
-            phase-A futures (their PREPARES, not commits): the finished
-            prepares' delta FILES are the candidate source — already
-            normalized, exploded and LWW-deduped — so phase B is a
+            The finished prepares' delta FILES are the candidate source —
+            already normalized, exploded and LWW-deduped — so phase B is a
             projected parquet scan of ≲ max_inflight batches + one join
             against the delete parents + one small delta write, never a
             re-normalize.  (The r3 design re-normalized the gap inside
@@ -356,9 +329,14 @@ def run_incremental(
             sources.  The log-slice fallback below covers only a range not
             prepared by this run (force/overlap replays) or whose prepare
             failed.  Returns a prepared-delta dict that commit merges into
-            the batch's atomic commit unit, or None when the gap is empty.
+            the batch's atomic commit unit, or None — without a Spark job
+            — when the batch has no eager deletes or the gap is empty.
             Tombstones skip LWW entirely (shuffle-free): duplicates settle
             at read-resolve by (_commit_seq, D-rank, _row_id)."""
+            cascade = futs[batch_id].result()[1]
+            if cascade is None:
+                return None
+            wm, del_rows = cascade
             if wm + 1 > lo - 1:
                 return None
             reused: list[str] = []
@@ -372,7 +350,7 @@ def run_incremental(
                 prep = None
                 if f is not None:
                     try:
-                        prep = f.result()  # blocks on phase A only
+                        prep = f.result()[0]  # blocks on phase A only
                     except Exception:  # noqa: BLE001 — its own path raised
                         prep = None
                 if prep is not None:
@@ -412,7 +390,7 @@ def run_incremental(
             # (broadcast, no log re-scan) or a mass delete's DataFrame
             # over the raw log slice (a shuffle join).  The counts column
             # keeps exact events_read semantics without an LWW pass here.
-            tombs = cascade_tombstone_rows(cand, del_batches[batch_id]).withColumn(
+            tombs = cascade_tombstone_rows(cand, del_rows).withColumn(
                 "_n_events", F.lit(1).cast("long")
             )
             # coalesce keeps the slim delta at a few files instead of one
@@ -432,69 +410,20 @@ def run_incremental(
             if force or not table.is_applied(job_id, batch_id)
         ]
         skipped = len(batches) - len(work)
-
-        # Cascade deletes (VERDICT r2 #3): ONE pushed-predicate scan of the
-        # planned range finds the delete batches AND prefetches each
-        # delete's (parent, seq, source) plus the parent's bucket residue —
-        # a delete-batch's prepare then runs zero extra driver jobs (no
-        # per-batch collect, no residue job); the candidate lookup is
-        # handed its pruning set.  Driver memory is CAPPED (VERDICT r3
-        # wrong-#1): a per-batch count runs first, and any batch above
-        # the adapter's MAX_PRUNED_PARENTS distinct delete rows gets the
-        # lazy _parent_deletes DataFrame of its own log slice instead of
-        # collected rows — its parent set then stays a DataFrame end to
-        # end (adapter + phase-B join), so a GDPR-style purge of
-        # millions of parents never materializes driver-side.
-        # Delete batches don't barrier: blanket tombstones are
-        # LWW-idempotent, so the lookup reads stale table state and the
-        # gap is settled by phase B at commit (see _gap_tombstones).
-        del_batches: dict[int, object] = {}
-        if getattr(adapter, "cascade_deletes", False) and work:
-            rng = slice_change_log(
-                log_df, min(w[1] for w in work), max(w[2] for w in work),
-                log_part_width,
-            )
-            if len(work) == 1:
-                # single-batch run (the steady-tick shape): skip the
-                # per-batch count job, halving the prefetch's driver
-                # jobs on the latency-sensitive path
-                rows = prefetch_deletes(rng, adapter, table, batch_width)
-                if rows is not None:
-                    del_batches[work[0][0]] = rows
-            else:
-                cap = _collect_cap(adapter)
-                d = _parent_deletes(rng, table.n_buckets, batch_width)
-                counts = {
-                    int(r["bid"]): r["c"]
-                    for r in d.groupBy("bid").agg(F.count("*").alias("c")).collect()
-                }
-                small = [b for b, c in counts.items() if c <= cap]
-                for b, lo, hi in work:
-                    if counts.get(b, 0) > cap:
-                        del_batches[b] = _parent_deletes(
-                            slice_change_log(log_df, lo, hi, log_part_width),
-                            table.n_buckets,
-                        )
-                if small:
-                    for r in d.where(F.col("bid").isin(small)).collect():
-                        del_batches.setdefault(int(r["bid"]), []).append(r)
+        # which batches delete is known only inside their prepares, so an
+        # eager cascade run gives every batch a gap task
+        gap_tasks = (cascade_mode == "eager"
+                     and getattr(adapter, "cascade_deletes", False))
 
         from concurrent.futures import ThreadPoolExecutor
 
         def _commit_one(batch_id: int, lo: int, hi: int, prepared: dict) -> None:
             nonlocal applied, ev_read, ev_applied, dels
-            # "_cascade_ctx" must stay in `prepared` until the gap task has
-            # read it (it waits on this batch's phase-A future concurrently)
-            # — but it is runner-internal, so strip it from the copy handed
-            # to commit_delta rather than relying on unknown-key tolerance.
             gf = gap_futs.get(batch_id)
             if gf is not None:
                 supp = gf.result()
                 if supp is not None:
                     prepared = LakehouseTable.merge_prepared(prepared, supp)
-            if "_cascade_ctx" in prepared:
-                prepared = {k: v for k, v in prepared.items()
-                            if k != "_cascade_ctx"}
             m = table.commit_delta(
                 prepared, job_id, batch_id, seq_from=lo, seq_to=hi, force=force
             )
@@ -510,14 +439,10 @@ def run_incremental(
                     f"snapshot=v{m['snapshot_version']}"
                 )
 
-        # futs is CLOSED OVER by _gap_tombstones/_gap_task, so the dict
-        # must exist before the first submit — fill it incrementally, never
-        # via a comprehension assigned after.  Phase-B (gap) tasks live in
-        # their OWN pool: they block on main-pool futures, and main-pool
-        # tasks block on nothing, so the wait graph is bipartite and
-        # acyclic — no deadlock at any pool size — while delete batches'
-        # gap jobs overlap each other and the main pipeline instead of
-        # chaining through the prepare futures.
+        # futs is CLOSED OVER by _gap_tombstones, so the dict must exist
+        # before the first submit — fill it incrementally, never via a
+        # comprehension assigned after.  Phase-B (gap) tasks live in
+        # their OWN pool (see _gap_tombstones for the wait graph).
         futs: dict = {}
         gap_futs: dict = {}
         with ThreadPoolExecutor(max_workers=max(1, max_inflight)) as pool, \
@@ -533,15 +458,17 @@ def run_incremental(
 
             for b, lo, hi in work:
                 futs[b] = pool.submit(inherit(_prepare), b, lo, hi)
-                if b in del_batches and cascade_mode != "markers":
-                    gap_futs[b] = gap_pool.submit(inherit(_gap_task), b, lo, hi)
+                if gap_tasks:
+                    gap_futs[b] = gap_pool.submit(
+                        inherit(_gap_tombstones), b, lo, hi
+                    )
             try:
                 for i, (batch_id, lo, hi) in enumerate(work):
                     if fail_after_batches is not None and i >= fail_after_batches:
                         raise RuntimeError(f"injected crash before batch {batch_id}")
                     if stop_requested is not None and stop_requested():
                         break  # graceful: last commit is the resume point
-                    _commit_one(batch_id, lo, hi, futs[batch_id].result())
+                    _commit_one(batch_id, lo, hi, futs[batch_id].result()[0])
             finally:
                 for f in futs.values():
                     f.cancel()

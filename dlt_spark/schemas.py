@@ -125,6 +125,14 @@ DELETE_PARENTS_SCHEMA = StructType(
 )
 
 
+def quote_ident(name: str) -> str:
+    """``name`` as a quoted SQL identifier, for SQL text and ``F.col``
+    alike: evolved column names come from batch schemas and renames
+    unchecked, so any character — a quote, a backtick — must survive
+    parsing."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def rows_to_arrow(rows, schema: StructType):
     """Driver-side rows (anything indexed by field name: ``Row``,
     dict) as a pyarrow table of ``schema``; fields outside the schema

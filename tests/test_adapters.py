@@ -388,6 +388,63 @@ def test_mass_delete_through_runner_equals_collected_path(spark, tmp_path, monke
     assert state(mass) == state(collected)
 
 
+def test_tick_and_bulk_batch_take_the_same_delete_path(spark, tmp_path, monkeypatch):
+    """A batch's delete path depends on the batch alone, not on the
+    run's shape: the cap counts the delete rows its prefetch collects,
+    duplicate deliveries included, whether the batch runs as a tick or
+    inside a bulk run.  With a cap of 1 and one parent delete delivered
+    twice, both take the DataFrame path — a whole-table lookup, where
+    collected parents would bucket-prune it."""
+    from dlt_spark.lakehouse import LakehouseTable
+    from dlt_spark.plans.runner import run_incremental
+    from dlt_spark.sources.changelog import write_change_log
+
+    def ev(seq, doc, op="I", payload=None):
+        return Row(commit_seq=seq, doc_id=doc, op=op, tokens=None,
+                   payload=payload, payload_version=1, source="s",
+                   extracted_at=None)
+
+    delete = ev(2, "a", op="D")
+    rows = [ev(0, "a", payload='{"block": [1], "txs": [[10]]}'),
+            ev(1, "b", payload='{"block": [2]}'),
+            delete, delete,  # batch 1: one parent delete, delivered twice
+            ev(3, "c", payload='{"block": [3]}')]
+    log = str(tmp_path / "log")
+    write_change_log(_ev(spark, rows), log, part_width=2)
+
+    lookups = []
+    orig_scan = LakehouseTable.scan_raw
+
+    def spy_scan(self, buckets=None, **kw):
+        lookups.append(buckets)
+        return orig_scan(self, buckets=buckets, **kw)
+
+    monkeypatch.setattr(LakehouseTable, "scan_raw", spy_scan)
+    monkeypatch.setattr(
+        type(ADAPTERS["exploded_cascade"]), "MAX_PRUNED_PARENTS", 1
+    )
+    kw = dict(schema="exploded_cascade", batch_width=2, n_buckets=4,
+              log_part_width=2)
+    ticks = str(tmp_path / "ticks")
+    for lo in (0, 2):
+        run_incremental(spark, log, ticks, seq_from=lo, seq_to=lo + 1, **kw)
+    tick_lookups, lookups[:] = list(lookups), []
+    bulk = str(tmp_path / "bulk")
+    run_incremental(spark, log, bulk, seq_from=0, seq_to=3, **kw)
+    monkeypatch.undo()
+
+    assert tick_lookups == [None]
+    assert lookups == tick_lookups
+
+    def state(tbl):
+        return sorted(
+            (r["doc_id"], r["_commit_seq"])
+            for r in LakehouseTable.load(spark, tbl).read().collect()
+        )
+
+    assert state(bulk) == state(ticks) == [("b/block/0", 1), ("c/block/0", 3)]
+
+
 def test_merge_prepared_zero_row_delta_is_empty(spark, tmp_path):
     """ADVICE r4 (high): Spark writes a schema-only parquet part for an
     empty DataFrame, so prepare_delta returns files non-empty with

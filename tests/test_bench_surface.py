@@ -6,11 +6,14 @@ base files from ``_snap["buckets"]``, take ``(files, rows)`` from
 ``_pending()`` and rebuild the tier-3 plan from ``_resolve``, ``_raw``
 and ``_abs``.  Those files stay byte-identical, so a refactor of the
 table format must keep this surface; this test fails first if it does
-not.  It also byte-compiles every benchmark script."""
+not.  It also byte-compiles every benchmark script and resolves the
+names each one imports from ``dlt_spark``."""
 
 from __future__ import annotations
 
+import ast
 import glob
+import importlib
 import os
 import py_compile
 
@@ -25,12 +28,31 @@ _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_bench_scripts_compile(tmp_path):
+    """Every benchmark script byte-compiles, and every name it imports
+    from ``dlt_spark`` — at module level or inside a function — still
+    exists, so deleting or renaming an engine name a script uses fails
+    here rather than when the script first runs."""
     scripts = [os.path.join(_ROOT, "bench.py"),
                os.path.join(_ROOT, "bench_extra.py")]
-    scripts += sorted(glob.glob(os.path.join(_ROOT, "bench", "*.py")))
+    for d in ("bench", "perfbench"):
+        scripts += sorted(glob.glob(os.path.join(_ROOT, d, "*.py")))
+    missing = []
     for i, path in enumerate(scripts):
         py_compile.compile(path, cfile=str(tmp_path / f"{i}.pyc"),
                            doraise=True)
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        for node in ast.walk(tree):
+            if not (isinstance(node, ast.ImportFrom) and node.level == 0
+                    and node.module.split(".")[0] == "dlt_spark"):
+                continue
+            mod = importlib.import_module(node.module)
+            missing += [
+                f"{os.path.relpath(path, _ROOT)}:{node.lineno} "
+                f"{node.module}.{a.name}"
+                for a in node.names if not hasattr(mod, a.name)
+            ]
+    assert not missing, f"unresolved dlt_spark imports: {missing}"
 
 
 def test_private_table_surface_used_by_bench(spark, tmp_path):

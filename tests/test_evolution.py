@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from dlt_spark.lakehouse import LakehouseTable
+from dlt_spark.operators.dedup import dedup_lww
 from dlt_spark.plans.runner import run_incremental
 from dlt_spark.sources.changelog import write_change_log
 from dlt_spark.sources.generator import generate_change_log
@@ -130,7 +131,7 @@ def test_rename_column_mapping(spark, tmp_path):
     """Rename evolution: metadata-only — old files keep the physical
     name, reads coalesce it into the new logical column; post-rename
     batches write the new name; chains (a→b→c) collapse; a name may
-    hold a quote."""
+    hold a quote or a backtick."""
     import pytest
     from pyspark.sql import Row
 
@@ -179,6 +180,18 @@ def test_rename_column_mapping(spark, tmp_path):
     assert [r["o'k"] for r in t.changes_between(v).collect()] == ["de"]
     t.compact()
     assert {r["doc_id"]: r["o'k"] for r in t.read().collect()} == out
+
+    # a backtick too, written through the LWW dedup of the ingest path
+    # (its struct and hash) and the delta write's evolved projection
+    t.rename_column("o'k", "a`b")
+    v = t.version
+    t.merge(dedup_lww(_mk_ev(spark, [row(4, "b")], extra=("a`b", F.lit("it")))),
+            "j", 3, 4, 4)
+    out = {r["doc_id"]: r["a`b"] for r in t.read().collect()}
+    assert out == {"a": "de", "b": "it"}
+    assert [r["a`b"] for r in t.changes_between(v).collect()] == ["it"]
+    t.compact()
+    assert {r["doc_id"]: r["a`b"] for r in t.read().collect()} == out
 
 
 def test_payload_versions_over_time(spark, tmp_path):
