@@ -120,7 +120,7 @@ def main() -> int:
             round(s / 1024, 1)
             for s in snap_sizes[len(snap_sizes) // 5 - 1 :: len(snap_sizes) // 5]
         ],
-        "live_data_files": len(t._live_files()),
+        "live_data_files": len(t._snapshot_file_refs(t.version)[0]),
         "filelist_sidecars": len(
             set((t._snap.get("buckets_ref") or {}).values())
             | set((t._snap.get("l1_ref") or {}).values())

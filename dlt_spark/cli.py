@@ -7,7 +7,9 @@ Subcommands mirror the reference's entry points (SURVEY §3):
   load   — one-shot catch-up / bounded replay
            (cmd/dlt/commands/load.go:42-105; --from/--to/--force)
   sync   — supervised incremental loop
-           (cmd/dlt/commands/sync.go:33-174; interval polling)
+           (cmd/dlt/commands/sync.go:33-174; interval polling): the
+           sync daemon over one connection named by --job-id
+  sync-daemon — every configured connection on its own schedule
   status — table + manifest inspection (watermark, lineage, metrics)
   expire — expire old snapshots + files only they reference
            (metadata diff; never lists the data directory)
@@ -25,10 +27,19 @@ import argparse
 import json
 import signal
 import sys
-import time
 from contextlib import contextmanager
+from dataclasses import replace
 
-from dlt_spark.config import MAX_INFLIGHT
+from dlt_spark.config import (
+    MAX_INFLIGHT,
+    Config,
+    ConnectionCfg,
+    DestinationCfg,
+    SourceCfg,
+    all_connections,
+    get_connection_details,
+    load_config,
+)
 
 
 @contextmanager
@@ -55,6 +66,38 @@ def _graceful_stop():
     finally:
         for s, h in prev.items():
             signal.signal(s, h)
+
+
+def _connection(
+    args: argparse.Namespace,
+) -> tuple[SourceCfg, DestinationCfg, ConnectionCfg]:
+    """The (source, destination, connection) triple a ``load`` or
+    ``sync`` runs: the named ``--connection`` of ``--config``, or else
+    the CLI's flags.  The connection is named by ``--job-id`` and polls
+    every ``--interval-secs``; it takes no cron or maintenance setting."""
+    interval = getattr(args, "interval_secs", 5.0)
+    if args.connection:
+        src, dst, c = get_connection_details(
+            load_config(args.config), args.connection
+        )
+        return src, dst, replace(c, name=args.job_id, interval_secs=interval,
+                                 cron=None, maintain_every_runs=0)
+    src = SourceCfg("log", args.log, args.schema, args.log_part_width)
+    dst = DestinationCfg("table", args.table, args.n_buckets)
+    return src, dst, ConnectionCfg(
+        args.job_id, src.name, dst.name, args.batch_width, args.max_inflight,
+        args.arrow_udf, interval, cascade_mode=args.cascade_mode,
+    )
+
+
+def _print_round(res, **head) -> None:
+    """One JSON line per sync round, after ``head``'s keys."""
+    print(json.dumps({
+        **head,
+        "batches_applied": res.batches_applied,
+        "events_read": res.events_read,
+        "events_per_sec": round(res.events_per_sec, 1),
+    }), flush=True)
 
 
 def _add_common(p: argparse.ArgumentParser) -> None:
@@ -338,23 +381,14 @@ def main(argv: list[str] | None = None) -> int:
         with open(args.config) as f:
             storage.load_providers((yaml.safe_load(f) or {}).get("providers", []))
 
-    # resolve named connection → source/destination/run knobs
-    if getattr(args, "connection", None):
-        from dlt_spark.config import get_connection_details, load_config
-
-        if not args.config:
+    # a load or sync runs one (source, destination, connection) triple
+    triple = None
+    if args.cmd in ("load", "sync"):
+        if args.connection and not args.config:
             ap.error("--connection requires --config")
-        src, dst, conn = get_connection_details(
-            load_config(args.config), args.connection
-        )
-        args.log, args.table = src.log, dst.table
-        args.schema, args.log_part_width = src.schema, src.log_part_width
-        args.n_buckets = dst.n_buckets
-        args.batch_width, args.max_inflight = conn.batch_width, conn.max_inflight
-        args.arrow_udf = conn.use_arrow_udf
-        args.cascade_mode = conn.cascade_mode
-    if args.cmd in ("load", "sync") and not (args.log and args.table):
-        ap.error("provide --log/--table or --config/--connection")
+        if not (args.connection or (args.log and args.table)):
+            ap.error("provide --log/--table or --config/--connection")
+        triple = _connection(args)
 
     if args.cmd == "init":
         import os as _os
@@ -370,8 +404,6 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "conn":
-        from dlt_spark.config import all_connections, load_config
-
         cfg = load_config(args.config)
         for c in all_connections(cfg):
             print(json.dumps({
@@ -384,13 +416,16 @@ def main(argv: list[str] | None = None) -> int:
 
     spark = get_spark(
         f"dlt-{args.cmd}", master=args.master,
-        batch_width=getattr(args, "batch_width", None),
+        batch_width=triple[2].batch_width if triple else None,
     )
 
-    for attr in ("log", "table", "out"):
-        val = getattr(args, attr, None)
-        if isinstance(val, str):
-            setattr(args, attr, storage.resolve(val, spark))
+    if triple is None:  # a load/sync resolves in run_connection
+        for attr in ("table", "out"):
+            val = getattr(args, attr, None)
+            if isinstance(val, str):
+                setattr(args, attr, storage.resolve(val, spark))
+
+    from dlt_spark.lakehouse import LakehouseTable
 
     if args.cmd == "gen":
         from dlt_spark.sources.changelog import write_change_log
@@ -407,7 +442,9 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.cmd == "load":
         from dlt_spark.events import EventLog
-        from dlt_spark.plans.runner import run_incremental
+        from dlt_spark.scheduler import run_connection
+
+        src, dst, conn = triple
 
         if args.force and not args.yes:
             # the reference gates replays behind an interactive confirm
@@ -420,7 +457,7 @@ def main(argv: list[str] | None = None) -> int:
                    f", {args.to_seq if args.to_seq is not None else 'end'}]")
             if sys.stdin.isatty():
                 answer = input(
-                    f"[dlt] force re-apply {rng} of {args.table}? [y/N]: "
+                    f"[dlt] force re-apply {rng} of {dst.table}? [y/N]: "
                 )
                 if answer.strip().lower() != "y":
                     print(json.dumps({"aborted": True}))
@@ -431,16 +468,11 @@ def main(argv: list[str] | None = None) -> int:
                                f"re-applying {rng}"}), file=sys.stderr)
 
         ev = EventLog(args.events_file)
-        ev.sync_started(args.schema, args.table, args.from_seq, args.to_seq,
+        ev.sync_started(src.schema, dst.table, args.from_seq, args.to_seq,
                         force=args.force)
-        res = run_incremental(
-            spark, args.log, args.table, job_id=args.job_id,
-            seq_from=args.from_seq, seq_to=args.to_seq,
-            batch_width=args.batch_width, n_buckets=args.n_buckets,
-            force=args.force, use_arrow_udf=args.arrow_udf,
-            schema=args.schema,
-            log_part_width=args.log_part_width, verbose=args.verbose,
-            max_inflight=args.max_inflight, cascade_mode=args.cascade_mode,
+        res, _ = run_connection(
+            spark, src, dst, conn, seq_from=args.from_seq,
+            seq_to=args.to_seq, force=args.force, verbose=args.verbose,
         )
         ev.sync_finished(res)
         print(json.dumps({
@@ -457,16 +489,7 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "sync-daemon":
-        from dlt_spark.config import load_config
         from dlt_spark.scheduler import run_sync_daemon
-
-        def _print_round(name, res):
-            print(json.dumps({
-                "connection": name,
-                "batches_applied": res.batches_applied,
-                "events_read": res.events_read,
-                "events_per_sec": round(res.events_per_sec, 1),
-            }), flush=True)
 
         server = None
         if args.metrics_port is not None:
@@ -487,7 +510,8 @@ def main(argv: list[str] | None = None) -> int:
                     events_file=args.events_file,
                     metrics_dir=args.metrics_dir,
                     metrics_server=server,
-                    on_round=_print_round,
+                    on_round=lambda name, res, _: _print_round(
+                        res, connection=name),
                 )
         finally:
             if server is not None:
@@ -497,54 +521,33 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "sync":
-        from dlt_spark.lakehouse import LakehouseTable
-        from dlt_spark.plans.runner import run_incremental
+        from dlt_spark.metrics import MetricsWriter
+        from dlt_spark.scheduler import run_sync_daemon
 
-        metrics = None
-        if args.metrics_file:
-            from dlt_spark.metrics import MetricsWriter
+        src, dst, conn = triple
+        metrics = (MetricsWriter(args.metrics_file, job_id=conn.name)
+                   if args.metrics_file else None)
+        rounds = 0
 
-            metrics = MetricsWriter(args.metrics_file, job_id=args.job_id)
-        from dlt_spark.events import EventLog
-
-        ev = EventLog(args.events_file)
-        ev.sync_started(args.schema, args.table, None, None,
-                        interval_secs=args.interval_secs)
+        def _on_round(_name, res, table):
+            nonlocal rounds
+            if metrics:
+                metrics.record_run(res, LakehouseTable.load(spark, table))
+            _print_round(res, round=rounds)
+            rounds += 1
 
         with _graceful_stop() as stopped:
-            rounds = 0
-            while True:
-                res = run_incremental(
-                    spark, args.log, args.table, job_id=args.job_id,
-                    batch_width=args.batch_width, n_buckets=args.n_buckets,
-                    use_arrow_udf=args.arrow_udf, schema=args.schema,
-                    log_part_width=args.log_part_width,
-                    max_inflight=args.max_inflight,
-                    cascade_mode=args.cascade_mode,
-                    stop_requested=stopped,
-                )
-                if res.batches_applied:
-                    ev.sync_finished(res, round=rounds)
-                if metrics:
-                    metrics.record_run(res, LakehouseTable.load(spark, args.table))
-                print(json.dumps({
-                    "round": rounds,
-                    "batches_applied": res.batches_applied,
-                    "events_read": res.events_read,
-                    "events_per_sec": round(res.events_per_sec, 1),
-                }), flush=True)
-                rounds += 1
-                if stopped():
-                    print(json.dumps({"shutdown": "clean", "rounds": rounds}),
-                          flush=True)
-                    return 0
-                if args.max_rounds and rounds >= args.max_rounds:
-                    return 0
-                time.sleep(args.interval_secs)
+            run_sync_daemon(
+                spark, Config([src], [dst], [conn]), stop_requested=stopped,
+                max_runs_per_connection=args.max_rounds,
+                events_file=args.events_file, on_round=_on_round,
+            )
+            if stopped():
+                print(json.dumps({"shutdown": "clean", "rounds": rounds}),
+                      flush=True)
+        return 0
 
     if args.cmd == "history":
-        from dlt_spark.lakehouse import LakehouseTable
-
         t = LakehouseTable.load(spark, args.table)
         for row in t.history(limit=args.limit):
             print(json.dumps(row))
@@ -573,8 +576,6 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "changes":
-        from dlt_spark.lakehouse import LakehouseTable
-
         t = LakehouseTable.load(spark, args.table)
         df = t.changes_between(args.from_version, args.to_version)
         # ADVICE r5: with cascade markers pending, the feed omits
@@ -593,8 +594,6 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "status":
-        from dlt_spark.lakehouse import LakehouseTable
-
         t = LakehouseTable.load(spark, args.table, version=args.at_version)
         rows = t.read().count()
         pend_files, pend_rows = t._pending()
@@ -616,22 +615,16 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "vacuum":
-        from dlt_spark.lakehouse import LakehouseTable
-
         t = LakehouseTable.load(spark, args.table)
         print(json.dumps({"removed_files": t.vacuum(grace_secs=args.grace_secs)}))
         return 0
 
     if args.cmd == "expire":
-        from dlt_spark.lakehouse import LakehouseTable
-
         t = LakehouseTable.load(spark, args.table)
         print(json.dumps(t.expire_snapshots(retain_last=args.retain_last)))
         return 0
 
     if args.cmd == "compact":
-        from dlt_spark.lakehouse import LakehouseTable
-
         t = LakehouseTable.load(spark, args.table)
         v0 = t.version
         t.compact()
@@ -639,24 +632,18 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "maintain":
-        from dlt_spark.lakehouse import LakehouseTable
-
         t = LakehouseTable.load(spark, args.table)
         print(json.dumps(t.maintain(retain_last=args.retain_last,
                                     grace_secs=args.grace_secs)))
         return 0
 
     if args.cmd == "materialize-markers":
-        from dlt_spark.lakehouse import LakehouseTable
-
         t = LakehouseTable.load(spark, args.table)
         n = t.materialize_markers()
         print(json.dumps({"parents_materialized": n, "version": t.version}))
         return 0
 
     if args.cmd == "purge":
-        from dlt_spark.lakehouse import LakehouseTable
-
         t = LakehouseTable.load(spark, args.table)
         n = t.purge_tombstones(args.horizon_seq)
         print(json.dumps({"tombstones_purged": n, "version": t.version}))
@@ -664,8 +651,6 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.cmd == "export":
         from dlt_spark.destinations import export_table
-        from dlt_spark.lakehouse import LakehouseTable
-
         t = LakehouseTable.load(spark, args.table, version=args.at_version)
         jdbc_opts = dict(kv.split("=", 1) for kv in args.jdbc_option)
         n = export_table(t, args.out, fmt=args.format,
@@ -678,8 +663,6 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.cmd == "verify":
         from pyspark.sql import functions as F
-
-        from dlt_spark.lakehouse import LakehouseTable
 
         t = LakehouseTable.load(spark, args.table)
         results = {"ok": 0, "failed": 0, "window_closed": 0}

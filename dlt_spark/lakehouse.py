@@ -97,6 +97,7 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, SparkSession
 
 from dlt_spark.adapters import cascade_tombstone_rows, stored_children
+from dlt_spark.functions.ids import deterministic_row_id
 from dlt_spark.metafs import LocalMetaFS, MetaFS
 from pyspark.sql import functions as F
 from pyspark.sql.types import _parse_datatype_string
@@ -271,26 +272,6 @@ def _keys_overlap(k1: str, k2: str) -> bool:
     return m1 % m2 == 0 and r1 % m2 == r2
 
 
-def suggest_n_buckets(
-    expected_rows: int,
-    bytes_per_row: int = 300,
-    target_bucket_bytes: int = 2 << 30,
-) -> int:
-    """Creation-time sizing rule (VERDICT r2 #2): pick the bucket count
-    so a fully-compacted bucket lands near ``target_bucket_bytes`` (2 GB
-    default — large enough that bucket-local compaction amortizes, small
-    enough that a major rewrite or a touched-bucket resolve is never a
-    multi-TB spike).  Rounded up to a power of two, so the row-sized
-    moduli below it (powers of two) all divide it.  At the 10^10-event
-    design point (~300 B/row → 3 TB live) this gives 2048 buckets; a
-    100 TB table gets 65536."""
-    want = max(1, (expected_rows * bytes_per_row) // target_bucket_bytes)
-    n = 8
-    while n < want and n < (1 << 20):
-        n <<= 1
-    return n
-
-
 def _read_ddl(extras: list) -> str:
     """Physical read schema as one DDL string: core TARGET columns +
     evolved extras.  Files written before a column was added simply
@@ -401,22 +382,17 @@ class LakehouseTable:
         cls,
         spark: SparkSession,
         path: str,
-        n_buckets: int | None = 64,
+        n_buckets: int = 64,
         max_deltas: int = 8,
-        expected_rows: int | None = None,
         bucket_expr: str = "doc_id",
         meta_fs: MetaFS | None = None,
     ) -> "LakehouseTable":
-        """CREATE TABLE IF NOT EXISTS (SURVEY §2.1 S6).  Pass
-        ``expected_rows`` (with ``n_buckets=None``) to size the bucket
-        count from expected volume via ``suggest_n_buckets``.
-        ``n_buckets`` is the finest modulus a write may use: entries
-        are written at the modulus their rows justify, so a small
-        table stays a few files whatever the bucket count."""
-        if n_buckets is None:
-            n_buckets = (
-                suggest_n_buckets(expected_rows) if expected_rows else 64
-            )
+        """CREATE TABLE IF NOT EXISTS (SURVEY §2.1 S6).  ``n_buckets``
+        is the finest modulus a write may use: entries are written at
+        the modulus their rows justify, so a small table stays a few
+        files whatever the bucket count.  Size it so a fully compacted
+        bucket holds about 2 GB, rounded up to a power of two (2048 at
+        ~3 TB live)."""
         fs = meta_fs or LocalMetaFS()
         snap_dir = os.path.join(path, _SNAP_DIR)
         if _latest_version(snap_dir, fs) is not None:
@@ -502,20 +478,19 @@ class LakehouseTable:
         is names-only; JSON reads are O(limit), so a 10^5-commit table
         answers `history --limit 20` without reading 10^5 files)."""
         snap_dir = os.path.join(self.path, _SNAP_DIR)
-        names = sorted(
-            fn for fn in self.fs.listdir(snap_dir)
-            if fn.startswith("v") and fn.endswith(".json")
-        )
+        versions = _snapshot_versions(snap_dir, self.fs)
         if limit is not None:
-            if limit < 0:  # ADVICE r5: names[-limit:] would DROP the
+            if limit < 0:  # ADVICE r5: versions[-limit:] would DROP the
                 raise ValueError(  # |limit| oldest instead of newest N
                     f"history limit must be >= 0, got {limit}"
                 )
-            names = names[-limit:] if limit > 0 else []
+            versions = versions[-limit:] if limit > 0 else []
         out = []
-        for fn in names:
+        for v in versions:
             s = _checked(
-                json.loads(self.fs.read_text(os.path.join(snap_dir, fn))),
+                json.loads(
+                    self.fs.read_text(os.path.join(snap_dir, _snap_name(v)))
+                ),
                 self.path,
             )
             last = s["manifests"][-1] if s["manifests"] else None
@@ -990,12 +965,8 @@ class LakehouseTable:
             F.when(~is_del, F.col("source")).alias("source"),
             *[F.when(~is_del, F.col(quote_ident(n))).alias(n) for n, _ in extras],
             F.col("commit_seq").cast("long").alias("_commit_seq"),
-            # Deterministic surrogate key (SURVEY §2.3 E2 — replaces the
-            # reference's uuid.New at schema/base.go:28).
-            F.sha2(
-                F.concat_ws("|", F.col("doc_id"), F.col("commit_seq").cast("string")),
-                256,
-            ).alias("_row_id"),
+            deterministic_row_id(F.col("doc_id"), F.col("commit_seq"))
+            .alias("_row_id"),
             is_del.alias("_deleted"),
             *([F.col("_n_events").cast("long")] if has_counts else []),
         )
@@ -1947,11 +1918,7 @@ class LakehouseTable:
         of a mid-scan parquet FileNotFound (ADVICE.md).  The current
         snapshot is always retained.  Returns removal counts."""
         snap_dir = os.path.join(self.path, _SNAP_DIR)
-        versions = sorted(
-            int(f[1:-5])
-            for f in self.fs.listdir(snap_dir)
-            if f.startswith("v") and f.endswith(".json")
-        )
+        versions = _snapshot_versions(snap_dir, self.fs)
         retain_last = max(1, retain_last)
         retained = set(versions[-retain_last:]) | {self.version}
         expired = [v for v in versions if v not in retained]
@@ -1998,10 +1965,9 @@ class LakehouseTable:
         be active."""
         snap_dir = os.path.join(self.path, _SNAP_DIR)
         live: set[str] = set()
-        for fn in self.fs.listdir(snap_dir):
-            if fn.startswith("v") and fn.endswith(".json"):
-                data, aux = self._snapshot_file_refs(int(fn[1:-5]))
-                live |= data | aux
+        for v in _snapshot_versions(snap_dir, self.fs):
+            data, aux = self._snapshot_file_refs(v)
+            live |= data | aux
         live = {os.path.join(self.path, rel) for rel in live}
         now = time.time()
         removed = 0
@@ -2046,16 +2012,6 @@ class LakehouseTable:
             "files_reclaimed": expired["files_removed"],
             "orphans_removed": self.vacuum(grace_secs=grace_secs),
         }
-
-    def _live_files(self) -> list[str]:
-        out = [p for ps in self._snap["buckets"].values() for p in ps]
-        for e in self._l1.values():
-            out.extend(e["files"])
-        for e in self._snap["deltas"]:
-            out.extend(e["files"])
-        for e in self._snap["markers"]:
-            out.extend(e["files"])
-        return out
 
 
 class SnapshotConflict(RuntimeError):
@@ -2105,13 +2061,17 @@ def _snap_name(v: int) -> str:
     return f"v{v:012d}.json"
 
 
-def _latest_version(snap_dir: str, fs: MetaFS | None = None) -> int | None:
-    fs = fs or LocalMetaFS()
-    versions = [
+def _snapshot_versions(snap_dir: str, fs: MetaFS) -> list[int]:
+    """Versions of the ``v*.json`` snapshots in ``snap_dir``, ascending."""
+    return sorted(
         int(f[1:-5]) for f in fs.listdir(snap_dir)
         if f.startswith("v") and f.endswith(".json")
-    ]
-    return max(versions) if versions else None
+    )
+
+
+def _latest_version(snap_dir: str, fs: MetaFS) -> int | None:
+    versions = _snapshot_versions(snap_dir, fs)
+    return versions[-1] if versions else None
 
 
 def _commit_snapshot(

@@ -29,17 +29,13 @@ by batch size, never table size.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dlt_spark.schemas import quote_ident
 
 # D=3, U=2, I=1 — shared with oracle SQL builders.
 OP_RANK_EXPR = "CASE op WHEN 'D' THEN 3 WHEN 'U' THEN 2 ELSE 1 END"
-
-
-def _op_rank(op: Column) -> Column:
-    return F.when(op == "D", 3).when(op == "U", 2).otherwise(1)
 
 
 def dedup_lww(
@@ -57,7 +53,7 @@ def dedup_lww(
     cols = [F.col(quote_ident(c)) for c in df.columns]
     ordering = F.struct(
         F.col(seq).alias("_s"),
-        _op_rank(F.col("op")).alias("_r"),
+        F.expr(OP_RANK_EXPR).alias("_r"),
         F.xxhash64(*cols).alias("_h"),
     )
     winner = F.max_by(F.struct(*cols), ordering).alias("w")

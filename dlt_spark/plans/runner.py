@@ -123,7 +123,6 @@ def run_incremental(
     # batch's own stages).
     max_inflight: int = MAX_INFLIGHT,
     log_part_width: int = 100_000,
-    fail_after_batches: int | None = None,
     stop_requested=None,
     verbose: bool = False,
     # "eager" (default): cascade deletes tombstone every child at ingest
@@ -141,8 +140,6 @@ def run_incremental(
     - ``force=True`` re-applies a range even below the watermark — safe
       here (idempotent MERGE + manifest guard), unlike the reference
       where --force duplicates rows (loader/service.go:30-36).
-    - ``fail_after_batches`` injects a crash between batch commits for
-      the resume test (SURVEY §5).
     - ``schema`` selects the SchemaAdapter (the reference's config-string
       schema switch, loader/setup.go:68-78); an adapter object is also
       accepted.
@@ -150,7 +147,9 @@ def run_incremental(
       checked at each batch boundary — the reference's SIGINT handling
       finishes the in-flight work then exits (cmd/dlt/commands/
       load.go:62-86); here a stop leaves the table at a committed batch
-      boundary and the next run resumes from the watermark.
+      boundary and the next run resumes from the watermark.  A probe
+      that raises instead crashes the run between commits (the
+      crash-resume tests, SURVEY §5).
 
     The runner never folds: the commit path is the one fold trigger
     (every ``max_deltas``-th L0 commit folds, see
@@ -327,8 +326,10 @@ def run_incremental(
             is safe because this batch COMMITS only after those batches do
             (ordered commits), so its tombstones never outlive their
             sources.  The log-slice fallback below covers only a range not
-            prepared by this run (force/overlap replays) or whose prepare
-            failed.  Returns a prepared-delta dict that commit merges into
+            prepared by this run (force/overlap replays); a failed gap
+            prepare fails this task too, and the batch never commits,
+            because its commit re-raises that earlier failure first.
+            Returns a prepared-delta dict that commit merges into
             the batch's atomic commit unit, or None — without a Spark job
             — when the batch has no eager deletes or the gap is empty.
             Tombstones skip LWW entirely (shuffle-free): duplicates settle
@@ -347,19 +348,12 @@ def run_incremental(
                 if b_hi < b_lo:
                     continue
                 f = futs.get(b)
-                prep = None
-                if f is not None:
-                    try:
-                        prep = f.result()[0]  # blocks on phase A only
-                    except Exception:  # noqa: BLE001 — its own path raised
-                        prep = None
-                if prep is not None:
-                    reused.extend(table._abs(prep["files"]))
+                if f is not None:  # blocks on phase A only
+                    reused.extend(table._abs(f.result()[0]["files"]))
+                elif pend_ranges and pend_ranges[-1][1] + 1 == b_lo:
+                    pend_ranges[-1] = (pend_ranges[-1][0], b_hi)
                 else:
-                    if pend_ranges and pend_ranges[-1][1] + 1 == b_lo:
-                        pend_ranges[-1] = (pend_ranges[-1][0], b_hi)
-                    else:
-                        pend_ranges.append((b_lo, b_hi))
+                    pend_ranges.append((b_lo, b_hi))
             parts = []
             if reused:
                 d = spark.read.parquet(*reused)
@@ -463,9 +457,7 @@ def run_incremental(
                         inherit(_gap_tombstones), b, lo, hi
                     )
             try:
-                for i, (batch_id, lo, hi) in enumerate(work):
-                    if fail_after_batches is not None and i >= fail_after_batches:
-                        raise RuntimeError(f"injected crash before batch {batch_id}")
+                for batch_id, lo, hi in work:
                     if stop_requested is not None and stop_requested():
                         break  # graceful: last commit is the resume point
                     _commit_one(batch_id, lo, hi, futs[batch_id].result()[0])

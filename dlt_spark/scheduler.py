@@ -11,8 +11,8 @@ A connection that is due while another run is in progress simply runs
 next (single-flight means deferred, never skipped-forever: due-ness is
 re-evaluated every tick).  Per-connection job_id = the connection name,
 so each table's manifest watermark/replay-guard is independent and the
-daemon is crash-safe exactly like single-connection sync: on restart
-every connection resumes from its own watermark.
+daemon is crash-safe: on restart every connection resumes from its own
+watermark.
 
 Cron support is the standard 5-field subset (minute hour day-of-month
 month day-of-week; ``*``, ``*/n``, ``a-b``, lists), evaluated at
@@ -22,18 +22,30 @@ run holds the loop is fired late (one coalesced catch-up run for the
 whole missed span), so cron schedules get the same deferred-never-
 skipped guarantee as interval schedules.  An ``interval_secs``
 schedule needs no wall-clock alignment and is what the tests use.
+
+Every run — the daemon's and the CLI's ``load`` — is ``run_connection``
+of one (source, destination, connection) triple.  The CLI's ``sync`` is
+this daemon over a one-connection config.
 """
 
 from __future__ import annotations
 
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
-from dlt_spark.config import Config, all_connections, get_connection_details
+from dlt_spark import storage
+from dlt_spark.config import (
+    Config,
+    ConnectionCfg,
+    DestinationCfg,
+    SourceCfg,
+    all_connections,
+    get_connection_details,
+)
 from dlt_spark.events import EventLog
-from dlt_spark.plans.runner import run_incremental
+from dlt_spark.plans.runner import RunResult, run_incremental
 
 
 def _cron_field_matches(spec: str, value: int) -> bool:
@@ -100,6 +112,27 @@ def mark_cron_ran(st: "_ConnState", now: float) -> None:
     st.last_cron_check = int(now // 60)
 
 
+def run_connection(
+    spark: SparkSession, src: SourceCfg, dst: DestinationCfg,
+    conn: ConnectionCfg, **run_kw,
+) -> tuple[RunResult, str]:
+    """One run of a connection, ``job_id`` = its name: resolve the log
+    and table through the storage providers (their Hadoop conf lands on
+    the session) and map the triple onto ``run_incremental``.
+    ``run_kw`` carries further ``run_incremental`` keywords (a replay's
+    bounds, ``force``, the stop probe).  Returns the run's result and
+    the resolved table path."""
+    table = storage.resolve(dst.table, spark)
+    res = run_incremental(
+        spark, storage.resolve(src.log, spark), table, job_id=conn.name,
+        batch_width=conn.batch_width, n_buckets=dst.n_buckets,
+        use_arrow_udf=conn.use_arrow_udf, schema=src.schema,
+        log_part_width=src.log_part_width, max_inflight=conn.max_inflight,
+        cascade_mode=conn.cascade_mode, **run_kw,
+    )
+    return res, table
+
+
 @dataclass
 class _ConnState:
     next_due: float = 0.0  # monotonic seconds (interval schedule)
@@ -133,8 +166,9 @@ def run_sync_daemon(
       daemon registers one writer per connection on it, so ``GET
       /metrics`` serves live counters (utils/prometheus.go analog).
       Composes with ``metrics_dir`` (same writers publish both ways).
-    - ``on_round`` (callable(name, RunResult)): per-run hook (the CLI
-      prints a JSON line from it).
+    - ``on_round`` (callable(name, RunResult, table path)): per-run
+      hook (the CLI prints a JSON line from it; ``sync`` also records
+      its metrics file).
 
     Returns per-connection summary counters.
     """
@@ -167,18 +201,15 @@ def run_sync_daemon(
     ev = EventLog(events_file)
 
     def _due(conn, st: _ConnState) -> bool:
-        cron = getattr(conn, "cron", None)
-        if cron:
-            return cron_due(cron, st, time.time())
+        if conn.cron:
+            return cron_due(conn.cron, st, time.time())
         return time.monotonic() >= st.next_due
 
     def _mark_ran(conn, st: _ConnState) -> None:
-        if getattr(conn, "cron", None):
+        if conn.cron:
             mark_cron_ran(st, time.time())
         else:
-            st.next_due = time.monotonic() + float(
-                getattr(conn, "interval_secs", 5.0)
-            )
+            st.next_due = time.monotonic() + float(conn.interval_secs)
 
     ev.sync_started(
         "daemon", ",".join(c.name for c in conns), None, None,
@@ -194,39 +225,30 @@ def run_sync_daemon(
                 continue
             if not _due(conn, st):
                 continue
-            src, dst, c = get_connection_details(cfg, conn.name)
             # SINGLE-FLIGHT: this loop is the only place runs start, and
             # it runs them serially — the reference's global mutex.
-            res = run_incremental(
-                spark, src.log, dst.table,
-                job_id=conn.name,
-                batch_width=c.batch_width,
-                n_buckets=dst.n_buckets,
-                use_arrow_udf=c.use_arrow_udf,
-                schema=src.schema,
-                log_part_width=src.log_part_width,
-                max_inflight=c.max_inflight,
+            res, table = run_connection(
+                spark, *get_connection_details(cfg, conn.name),
                 stop_requested=stop_requested,
-                cascade_mode=c.cascade_mode,
             )
             _mark_ran(conn, st)
             st.runs += 1
             st.events_read += res.events_read
             ran_any = True
-            every = c.maintain_every_runs
+            every = conn.maintain_every_runs
             if every and st.runs % every == 0:
                 # Scheduled maintenance tick (still single-flight: runs
                 # inside the serial loop) — the same sequence as the
                 # `maintain` CLI, see LakehouseTable.maintain.
-                LakehouseTable.load(spark, dst.table).maintain()
+                LakehouseTable.load(spark, table).maintain()
             if res.batches_applied:
                 ev.sync_finished(res, connection=conn.name, round=st.runs)
             if conn.name in metrics:
                 metrics[conn.name].record_run(
-                    res, LakehouseTable.load(spark, dst.table)
+                    res, LakehouseTable.load(spark, table)
                 )
             if on_round is not None:
-                on_round(conn.name, res)
+                on_round(conn.name, res, table)
         if max_runs_per_connection and all(
             s.runs >= max_runs_per_connection for s in state.values()
         ):

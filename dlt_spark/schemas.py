@@ -24,14 +24,6 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-# Operation codes in the change log.  The reference's log is append-only
-# inserts (SURVEY §2.5 M3: tombstones absent); a CDC engine needs all
-# three.  Conflict priority at equal commit_seq: D > U > I.
-OP_INSERT = "I"
-OP_UPDATE = "U"
-OP_DELETE = "D"
-OP_PRIORITY = {OP_INSERT: 1, OP_UPDATE: 2, OP_DELETE: 3}
-
 # ---------------------------------------------------------------------------
 # Change-event log (the source).  ``commit_seq`` is the log position —
 # the analog of the reference's monotonically increasing bundle ``Id``
@@ -78,11 +70,6 @@ TARGET_SCHEMA = StructType(
         StructField("_deleted", BooleanType(), False),
     ]
 )
-
-# Columns MERGE carries from the deduped update set into the target.
-MERGE_VALUE_COLUMNS = ["tokens", "n_tok", "source"]
-MERGE_KEY = "doc_id"
-MERGE_SEQ = "_commit_seq"
 
 # ---------------------------------------------------------------------------
 # Commit-manifest rows (SURVEY §2.5 M4): one row per applied batch,

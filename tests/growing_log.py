@@ -40,7 +40,7 @@ def growing_log_daemon(spark, staged, tmp_path, per_run=1, schema="tokens",
 
     runs = []
 
-    def on_round(name, res):
+    def on_round(name, res, table):
         runs.append(res)
         if len(runs) < len(groups):
             publish(len(runs))

@@ -131,12 +131,14 @@ def test_exploded_through_engine_lww(spark, tmp_path):
     assert list(out["p/tx/1"]["tokens"]) == [20]     # stale survivor (doc'd)
 
 
-def test_cascade_lookup_bucket_pruned_and_pipelined(spark, tmp_path, monkeypatch):
+def test_cascade_lookup_bucket_pruned_and_pipelined(
+    spark, tmp_path, monkeypatch, crash_after
+):
     """VERDICT r2 #3: (a) the cascade candidate lookup reads only the
     delete-parents' buckets (table is parent-bucketed via bucket_expr);
-    (b) delete-free batches never read the table in prepare; (c)
-    fail_after_batches crash injection applies on the cascade path too
-    (ADVICE.md) and the resumed run converges."""
+    (b) delete-free batches never read the table in prepare; (c) a
+    crash between commits applies on the cascade path too (ADVICE.md)
+    and the resumed run converges."""
     from dlt_spark.lakehouse import LakehouseTable
     from dlt_spark.plans.runner import run_incremental
     from dlt_spark.sources.changelog import write_change_log
@@ -172,7 +174,7 @@ def test_cascade_lookup_bucket_pruned_and_pipelined(spark, tmp_path, monkeypatch
     with pytest.raises(RuntimeError, match="injected crash"):
         run_incremental(spark, log, tbl, schema="exploded_cascade",
                         batch_width=2, n_buckets=8, log_part_width=2,
-                        fail_after_batches=3)
+                        stop_requested=crash_after(3))
     run_incremental(spark, log, tbl, schema="exploded_cascade",
                     batch_width=2, n_buckets=8, log_part_width=2)
     # only the single delete-batch looks up the table — once per run

@@ -6,14 +6,16 @@ base files from ``_snap["buckets"]``, take ``(files, rows)`` from
 ``_pending()`` and rebuild the tier-3 plan from ``_resolve``, ``_raw``
 and ``_abs``.  Those files stay byte-identical, so a refactor of the
 table format must keep this surface; this test fails first if it does
-not.  It also byte-compiles every benchmark script and resolves the
-names each one imports from ``dlt_spark``."""
+not.  It also byte-compiles every benchmark script, resolves the
+names each one imports from ``dlt_spark`` and checks the keywords each
+one passes to the engine's entry points."""
 
 from __future__ import annotations
 
 import ast
 import glob
 import importlib
+import inspect
 import os
 import py_compile
 
@@ -22,21 +24,67 @@ from pyspark.sql import functions as F
 from dlt_spark.functions.normalize import normalize_events
 from dlt_spark.lakehouse import LakehouseTable
 from dlt_spark.operators.dedup import dedup_lww
+from dlt_spark.plans.runner import run_incremental
+from dlt_spark.session import get_spark
 from dlt_spark.sources.generator import generate_change_log
 
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
+# Engine entry points the benchmark scripts call, by the name at the
+# call site: (receiver name or None for any, callee).
+_ENTRY_POINTS = {
+    "run_incremental": (None, run_incremental),
+    "get_spark": (None, get_spark),
+    "create": ("LakehouseTable", LakehouseTable.create),
+    "load": ("LakehouseTable", LakehouseTable.load),
+    "read": (None, LakehouseTable.read),
+    "changes_between": (None, LakehouseTable.changes_between),
+}
+
+
+def _unknown_keywords(path: str) -> list[str]:
+    """Keywords ``path`` passes to an engine entry point that name no
+    parameter of it.  A call matches by its function or method name
+    (``read`` and ``changes_between`` on any receiver, ``create`` and
+    ``load`` on ``LakehouseTable``)."""
+    with open(path) as f:
+        tree = ast.parse(f.read(), path)
+    bad = []
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call):
+            continue
+        fn = node.func
+        name = fn.id if isinstance(fn, ast.Name) else getattr(fn, "attr", None)
+        if name not in _ENTRY_POINTS:
+            continue
+        receiver, callee = _ENTRY_POINTS[name]
+        if receiver is not None and not (
+            isinstance(fn, ast.Attribute) and isinstance(fn.value, ast.Name)
+            and fn.value.id == receiver
+        ):
+            continue
+        params = inspect.signature(callee).parameters
+        bad += [
+            f"{os.path.relpath(path, _ROOT)}:{node.lineno} {name}({k.arg}=)"
+            for k in node.keywords
+            if k.arg is not None and k.arg not in params
+        ]
+    return bad
+
 
 def test_bench_scripts_compile(tmp_path):
-    """Every benchmark script byte-compiles, and every name it imports
-    from ``dlt_spark`` — at module level or inside a function — still
-    exists, so deleting or renaming an engine name a script uses fails
-    here rather than when the script first runs."""
+    """Every benchmark script byte-compiles, every name it imports from
+    ``dlt_spark`` — at module level or inside a function — still exists,
+    and every keyword it passes to an engine entry point
+    (``_ENTRY_POINTS``) names a parameter of it, so deleting or renaming
+    an engine name or parameter a script uses fails here rather than
+    when the script first runs."""
     scripts = [os.path.join(_ROOT, "bench.py"),
                os.path.join(_ROOT, "bench_extra.py")]
     for d in ("bench", "perfbench"):
         scripts += sorted(glob.glob(os.path.join(_ROOT, d, "*.py")))
     missing = []
+    bad_keywords = []
     for i, path in enumerate(scripts):
         py_compile.compile(path, cfile=str(tmp_path / f"{i}.pyc"),
                            doraise=True)
@@ -52,7 +100,9 @@ def test_bench_scripts_compile(tmp_path):
                 f"{node.module}.{a.name}"
                 for a in node.names if not hasattr(mod, a.name)
             ]
+        bad_keywords += _unknown_keywords(path)
     assert not missing, f"unresolved dlt_spark imports: {missing}"
+    assert not bad_keywords, f"unknown engine keywords: {bad_keywords}"
 
 
 def test_private_table_surface_used_by_bench(spark, tmp_path):

@@ -1,12 +1,12 @@
-"""Bucket lifecycle (VERDICT r2 #2): creation-time sizing, and base
-entries at the modulus their rows justify — mixed moduli in one base,
-read correctly and re-granulated by compaction."""
+"""Bucket lifecycle (VERDICT r2 #2): base entries at the modulus their
+rows justify — mixed moduli in one base, read correctly and
+re-granulated by compaction."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from dlt_spark.lakehouse import LakehouseTable, _bkey_parse, suggest_n_buckets
+from dlt_spark.lakehouse import LakehouseTable, _bkey_parse
 from dlt_spark.operators.dedup import dedup_lww
 from dlt_spark.sources.generator import generate_change_log
 
@@ -16,15 +16,6 @@ def _state(t, **kw):
         tuple(r)
         for r in t.read(**kw).select("doc_id", "_commit_seq").collect()
     }
-
-
-def test_suggest_n_buckets_sizing_rule():
-    # 10^10 events × 300 B ≈ 3 TB → 2 GB buckets → 2048 (power of two)
-    assert suggest_n_buckets(10_000_000_000) == 2048
-    # 100 TB-ish corpus
-    assert suggest_n_buckets(400_000_000_000) == 65536
-    assert suggest_n_buckets(1_000) == 8  # floor
-    assert suggest_n_buckets(10**15) == 1 << 20  # ceiling
 
 
 def _mixed_modulus_table(spark, tmp_path, monkeypatch):
@@ -75,8 +66,8 @@ def test_split_buckets_metadata_only_reads_stay_green(spark, tmp_path, monkeypat
     modulus beside an unsplit one: every read tier, and a
     bucket-restricted read, agrees with the plain full resolve, and
     reading writes nothing."""
-    t, _, oracle = _mixed_modulus_table(spark, tmp_path, monkeypatch)
-    before_files = sorted(t._live_files())
+    t, path, oracle = _mixed_modulus_table(spark, tmp_path, monkeypatch)
+    before = t._snapshot_file_refs(t.version)[0]
     assert _state(t) == oracle
     assert _state(t, tier=2) == oracle and _state(t, tier=3) == oracle
     # a bucket-restricted read returns exactly the rows hashing to
@@ -92,7 +83,9 @@ def test_split_buckets_metadata_only_reads_stay_green(spark, tmp_path, monkeypat
             .collect()
         }
         assert _state(t, buckets=residues) == want and want
-    assert sorted(t._live_files()) == before_files, "a read moved data"
+    after = LakehouseTable.load(spark, path)
+    assert after.version == t.version, "a read committed"
+    assert after._snapshot_file_refs(after.version)[0] == before
 
 
 def test_mixed_modulus_converges_through_compaction(spark, tmp_path, monkeypatch):

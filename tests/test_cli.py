@@ -1,5 +1,6 @@
-"""CLI wiring: `maintain` runs the daemon's maintenance sequence, and
-named-connection / flag settings reach run_incremental."""
+"""CLI wiring: `maintain` runs the daemon's maintenance sequence,
+named-connection / flag settings reach run_incremental, and `sync` runs
+through the sync daemon."""
 
 from __future__ import annotations
 
@@ -58,9 +59,10 @@ def test_cli_maintain_materializes_markers(spark, tmp_path, capsys):
 
 @pytest.fixture
 def captured_runs(monkeypatch):
-    """Replace run_incremental with a recorder of its kwargs; restore
-    the signal handlers `sync` installs."""
-    import dlt_spark.plans.runner as runner
+    """Replace the run_incremental that scheduler.run_connection calls
+    with a recorder of its kwargs; restore the signal handlers `sync`
+    installs."""
+    import dlt_spark.scheduler as scheduler
 
     calls = []
 
@@ -68,7 +70,7 @@ def captured_runs(monkeypatch):
         calls.append(kw)
         return RunResult(kw.get("job_id", "dlt"), 0, 0, 0, 0, 0, 0, 0.0)
 
-    monkeypatch.setattr(runner, "run_incremental", fake)
+    monkeypatch.setattr(scheduler, "run_incremental", fake)
     handlers = {s: signal.getsignal(s) for s in (signal.SIGINT, signal.SIGTERM)}
     yield calls
     for s, h in handlers.items():
@@ -89,9 +91,12 @@ def test_cli_connection_settings_reach_run_incremental(
     assert main(["load", *conn]) == 0
     assert main(["sync", *conn, "--max-rounds", "1"]) == 0
     assert len(captured_runs) == 2
+    assert main(["sync-daemon", *conn, "--max-rounds", "1"]) == 0
     for kw in captured_runs:
         assert kw["max_inflight"] == 2
         assert kw["cascade_mode"] == "markers"
+    # load and sync run under --job-id, the daemon under the name
+    assert [kw["job_id"] for kw in captured_runs] == ["dlt", "dlt", "c"]
 
     captured_runs.clear()
     paths = ["--log", str(tmp_path / "log"), "--table", str(tmp_path / "tbl")]
@@ -111,6 +116,29 @@ def test_cli_sync_restores_signal_handlers(spark, tmp_path, captured_runs):
     assert len(captured_runs) == 1
     after = {s: signal.getsignal(s) for s in (signal.SIGINT, signal.SIGTERM)}
     assert after == before
+
+
+def test_cli_sync_rounds_metrics_and_events(spark, tmp_path, capsys):
+    """`sync` over a real log runs its rounds through the sync daemon:
+    one JSON line per round, the metrics file counts the rounds, and
+    the events file holds the daemon's Sync Started and the first
+    round's Sync Finished."""
+    log, tbl = str(tmp_path / "log"), str(tmp_path / "tbl")
+    write_change_log(generate_change_log(spark, 400, n_keys=50, seed=3),
+                     log, part_width=200)
+    metrics, events = str(tmp_path / "dlt.prom"), str(tmp_path / "ev.jsonl")
+    assert main(["sync", "--log", log, "--table", tbl, "--batch-width", "200",
+                 "--n-buckets", "4", "--log-part-width", "200",
+                 "--max-rounds", "2", "--interval-secs", "0",
+                 "--metrics-file", metrics, "--events-file", events]) == 0
+    lines = [json.loads(line)
+             for line in capsys.readouterr().out.strip().splitlines()]
+    assert [r["round"] for r in lines] == [0, 1]
+    assert lines[0]["batches_applied"] == 2
+    assert lines[1]["batches_applied"] == 0
+    assert 'dlt_rounds_total{job_id="dlt"} 2' in open(metrics).read()
+    evs = [json.loads(line)["event"] for line in open(events)]
+    assert evs == ["Sync Started", "Sync Finished"]
 
 
 def test_cli_verify_counts_spilled_batches(spark, tmp_path, monkeypatch, capsys):

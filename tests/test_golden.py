@@ -153,12 +153,12 @@ def test_purge_tombstones(spark, log_path, expected, tmp_path):
     assert_table_matches(actual, expected)
 
 
-def test_crash_resume(spark, log_path, expected, tmp_path):
+def test_crash_resume(spark, log_path, expected, tmp_path, crash_after):
     """Kill between batches, restart from the manifest watermark, end
     state identical and no duplicate manifest rows (SURVEY §5)."""
     table_path = str(tmp_path / "target")
     with pytest.raises(RuntimeError, match="injected crash"):
-        _run(spark, log_path, table_path, fail_after_batches=2)
+        _run(spark, log_path, table_path, stop_requested=crash_after(2))
 
     table = LakehouseTable.load(spark, table_path)
     assert table.watermark() == 2 * 1_000 - 1

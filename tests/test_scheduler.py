@@ -146,7 +146,7 @@ def test_daemon_cron_connection_fires_and_stop(spark, tmp_path):
     ran = []
     stop = {"n": 0}
 
-    def on_round(name, res):
+    def on_round(name, res, table):
         ran.append(res.events_read)
         stop["n"] += 1  # stop after the first run completes
 

@@ -53,8 +53,11 @@ def test_load_providers_from_config_section():
 
 
 def test_cli_provider_end_to_end(spark, tmp_path, capsys):
-    """gen → load → status, all addressed through a provider URI."""
+    """gen → load → status, all addressed through a provider URI; then
+    a sync-daemon whose config's providers: section, source and
+    destination use the same provider reaches the load's state."""
     from dlt_spark.cli import main
+    from dlt_spark.lakehouse import LakehouseTable
 
     root = str(tmp_path)
     assert main([
@@ -77,6 +80,28 @@ def test_cli_provider_end_to_end(spark, tmp_path, capsys):
     ]) == 0
     st = json.loads(capsys.readouterr().out)  # status pretty-prints JSON
     assert st["watermark"] == 1999
+
+    storage.clear_providers()  # the daemon leg registers from its config
+    cfg = tmp_path / "dlt.json"
+    cfg.write_text(json.dumps({
+        "providers": [{"name": "store", "root": root}],
+        "sources": [{"name": "s", "log": "store://log",
+                     "log_part_width": 1000}],
+        "destinations": [{"name": "d", "table": "store://daemon_tbl",
+                          "n_buckets": 8}],
+        "connections": [{"name": "c", "source": "s", "destination": "d",
+                         "batch_width": 1000}],
+    }))
+    assert main(["sync-daemon", "--config", str(cfg), "--max-rounds", "1"]) == 0
+
+    def state(rel):
+        t = LakehouseTable.load(spark, f"{root}/{rel}")
+        return sorted(
+            (r["doc_id"], r["_commit_seq"], tuple(r["tokens"] or []))
+            for r in t.read().collect()
+        )
+
+    assert state("daemon_tbl") == state("tbl")
 
 
 def test_cli_init_writes_loadable_template(tmp_path, capsys):
